@@ -18,11 +18,18 @@ import org.apache.spark.sql.functions.{col, hash, sum}
   * lines and written to target/bench_full.json for humans.
   *
   * Execution model: a one-time fixture pre-pass (`fixtures_s`) and one
-  * UNTIMED full warmup pass (`warmup_s`) absorb codegen/JIT/native-init
-  * cold costs, then the two timed passes measure steady-state execution —
+  * UNTIMED full warmup pass (`warmup_s`) absorb JIT/native-init cold
+  * costs, then the two timed passes measure steady-state execution —
   * their walls ride the line as wall_pass1/wall_pass2 and are the two-run
-  * reproducibility evidence. Queries run CONCURRENTLY over a small worker
-  * pool (FAIR scheduler, one isolated `newSession()` per worker). At bench SF
+  * reproducibility evidence. The warmup absorbs codegen too, but only
+  * because MemoryDiscipline's codegen policy lets Spark's generated-class
+  * cache hold the suite's plan working set across sessions: under Spark's
+  * 100-entry default, and with one executor classloader per session, every
+  * pass recompiled its plans. `cg_n`/`cg_ms`/`jit_mb` on the line (warmup,
+  * pass 1, pass 2) show whether that still holds.
+  *
+  * Queries run CONCURRENTLY over a small worker pool (FAIR scheduler, one
+  * isolated `newSession()` per worker). At bench SF
   * the suite's cost is dominated by the per-query analysis/scheduling
   * floor (~0.5-0.9s x 162 queries), not compute — local[32] sits mostly
   * idle under serial submission. Parallel submission overlaps that floor;
@@ -69,7 +76,8 @@ object Bench {
       heapGb: Option[Double] = None,
       fixtureErrs: Option[Int] = None,
       localDir: Option[String] = None,
-      qhash: Option[String] = None): String = {
+      qhash: Option[String] = None,
+      codegen: Seq[PassCodegen] = Nil): String = {
     val serialSum = if (results.nonEmpty) results.map(_._2).sum else 0.0
     val value = wall.getOrElse(serialSum)
     def ent(kv: (String, Double)): String = s""""${kv._1}":${fmt("%.2f", kv._2)}"""
@@ -140,6 +148,15 @@ object Bench {
       // verdict #1a: contended per-query times depend on co-scheduling;
       // two runs with equal hashes ran the same packing)
       qhash.map(h => s""""qorder":"$h",""").getOrElse("") +
+      // per-pass codegen attribution (warmup, pass 1, pass 2): a timed
+      // pass that compiles close to the warmup's count is recompiling its
+      // plans, and growing jit_mb is the JIT re-warming the new classes
+      (if (codegen.isEmpty) "" else {
+        def arr(f: PassCodegen => String) = codegen.map(f).mkString("[", ",", "]")
+        s""""cg_n":${arr(_.compiles.toString)},""" +
+          s""""cg_ms":${arr(c => fmt("%.0f", c.compileMs))},""" +
+          s""""jit_mb":${arr(c => fmt("%.1f", c.jitMb))},"""
+      }) +
       s""""n":${results.size},"workers":$workers,"serial_sum":${fmt("%.2f", serialSum)},"""
     val warmJson = warm.sortBy(_._1).map(ent).mkString(""""warm":{""", ",", "},")
     // warm_norm: per-query regression ratio vs the PREVIOUS round's
@@ -165,6 +182,30 @@ object Bench {
     val qs = kept.sortBy(_._1).map(ent).mkString("{", ",", "}")
     head + warmJson + normJson +
       s""""omitted":$omitted,"rest":${fmt("%.2f", rest)},"queries":$qs""" + tail0
+  }
+
+  /** One pass's codegen attribution: generated classes Spark compiled
+    * during the pass (a cache miss each), the Janino milliseconds they
+    * took, and the JIT code cache in use when the pass ended.
+    */
+  private[graft] final case class PassCodegen(compiles: Long, compileMs: Double,
+      jitMb: Double)
+
+  /** Run `body` and attribute its codegen. The counters are JVM-wide and
+    * never reset by Spark, so the deltas cover every query the pass ran.
+    */
+  private[graft] def withCodegen[T](body: => T): (T, PassCodegen) = {
+    import org.apache.spark.metrics.source.CodegenMetrics
+    import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
+    def compiles = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    val (n0, ns0) = (compiles, CodeGenerator.compileTime)
+    val r = body
+    val jitBytes = java.lang.management.ManagementFactory.getMemoryPoolMXBeans
+      .toArray(Array.empty[java.lang.management.MemoryPoolMXBean])
+      .filter(p => p.getName.startsWith("CodeHeap") || p.getName == "CodeCache")
+      .map(_.getUsage.getUsed).sum
+    (r, PassCodegen(compiles - n0, (CodeGenerator.compileTime - ns0) / 1e6,
+      jitBytes / 1048576.0))
   }
 
   /** Box-normalized cross-round warm ratios: for each query warm-sampled
@@ -316,7 +357,8 @@ object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    // spill-safety knobs when heap-per-core is small (see MemoryDiscipline)
+    // the codegen cache policy, plus spill-safety knobs when heap-per-core
+    // is small (see MemoryDiscipline)
     val spark = graft.plans.ShuffleDiscipline.gateLocal(
       graft.plans.MemoryDiscipline.spillSafe(SparkSession.builder()
       .master(s"local[$cpus]")
@@ -433,6 +475,8 @@ object Bench {
     // the extensions injector; no need to trust its thread-safety), then
     // each worker drains the shared queue on its own session + FAIR pool.
     val sessions = Vector.fill(nWorkers)(spark.newSession())
+    def cgLog(c: PassCodegen): String =
+      s"cg_n=${c.compiles} cg_ms=${fmt("%.0f", c.compileMs)} jit_mb=${fmt("%.1f", c.jitMb)}"
     def parallelPass(): (Double, Map[String, Double]) = {
       val queue = new java.util.concurrent.ConcurrentLinkedQueue[String]()
       runOrder.foreach(queue.add)
@@ -464,8 +508,12 @@ object Bench {
     // visible instead of vanishing (standard warmup-iterations protocol:
     // the claim under test is run-to-run reproducibility of a warm
     // suite, and cold-start cost is published separately, not mixed in).
-    val (warmupWall, _) = parallelPass()
-    println(s"BENCH-WARMUP ${fmt("%.2f", warmupWall)}")
+    // The warmup absorbs codegen only because the codegen cache holds every
+    // class this pass compiles, for every worker session and every stream's
+    // cloned session (MemoryDiscipline.CodegenCachePolicy); the timed
+    // passes then hit it, and their cg_n on the line shows the misses left.
+    val ((warmupWall, _), cgWarmup) = withCodegen(parallelPass())
+    println(s"BENCH-WARMUP ${fmt("%.2f", warmupWall)} ${cgLog(cgWarmup)}")
     // per-stream in-pass batch counts (r16, verdict #3): printed per pass
     // so a contended stream inflation decomposes into "more triggers" vs
     // "slower triggers" from the run log — batch counts are pinned by the
@@ -497,8 +545,8 @@ object Bench {
     // brings run-to-run wall spread inside the ~15% reproducibility bar
     // the same way calibrate() needed min-of-4 (both estimate unimpeded
     // time, and interference is one-sided noise).
-    val (wall1, pass1) = parallelPass()
-    println(s"BENCH-WALL-PASS1 ${fmt("%.2f", wall1)}")
+    val ((wall1, pass1), cgPass1) = withCodegen(parallelPass())
+    println(s"BENCH-WALL-PASS1 ${fmt("%.2f", wall1)} ${cgLog(cgPass1)}")
     dumpStreamBatches("pass1")
     // reset to pass-1's STARTING state before pass 2 (r11 advice): the
     // parallel workers leak table caches into the shared cache manager,
@@ -506,8 +554,8 @@ object Bench {
     // min-merge then prefers contaminated samples — the exact warm-phase
     // contamination documented below, applied between the two passes
     resetPassState()
-    val (wall2, pass2) = parallelPass()
-    println(s"BENCH-WALL-PASS2 ${fmt("%.2f", wall2)}")
+    val ((wall2, pass2), cgPass2) = withCodegen(parallelPass())
+    println(s"BENCH-WALL-PASS2 ${fmt("%.2f", wall2)} ${cgLog(cgPass2)}")
     dumpStreamBatches("pass2")
     // Pass-spread attribution (r14 verdict #4): the committed r14 line
     // carried a 33% pass-1→pass-2 inflation of which calibration drift
@@ -647,6 +695,7 @@ object Bench {
     // where shuffle scratch actually lived (ShuffleDiscipline's tmpfs gate
     // is box-conditional; the artifact must record which dir won)
     val localDir = spark.sparkContext.getConf.get("spark.local.dir", "spark-default")
+    val cgPasses = Seq(cgWarmup, cgPass1, cgPass2)
     val fullJson = "{\"total\":" + fmt("%.6f", wall) + ",\"wall_pass1\":" +
       fmt("%.6f", wall1) + ",\"wall_pass2\":" + fmt("%.6f", wall2) +
       ",\"fixtures_s\":" + fmt("%.6f", fixturesS) +
@@ -659,6 +708,9 @@ object Bench {
       ",\"cal_par_end\":" + fmt("%.6f", calParEnd) +
       ",\"local_dir\":\"" + localDir + "\"" +
       ",\"qorder\":\"" + qhash + "\"" +
+      ",\"cg_n\":[" + cgPasses.map(_.compiles).mkString(",") + "]" +
+      ",\"cg_ms\":[" + cgPasses.map(c => fmt("%.1f", c.compileMs)).mkString(",") + "]" +
+      ",\"jit_mb\":[" + cgPasses.map(c => fmt("%.1f", c.jitMb)).mkString(",") + "]" +
       ",\"serial_sum\":" + fmt("%.6f", serialSum) + ",\"workers\":" + nWorkers +
       ",\"cal\":" + fmt("%.6f", cal) + ",\"sf\":\"" + sfDir +
       "\",\"warm\":" + m(warm) + ",\"warm_norm\":" + m(warmNorm) +
@@ -682,7 +734,7 @@ object Bench {
       calParWarm = Some(calParWarm), heapGb = Some(heapGb),
       fixtureErrs = Some(fixtureErrs),
       localDir = Some(if (localDir.startsWith("/dev/shm")) "shm" else localDir),
-      qhash = Some(qhash))
+      qhash = Some(qhash), codegen = cgPasses)
     spark.stop()
     println(line)
   }

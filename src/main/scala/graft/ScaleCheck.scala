@@ -1112,7 +1112,8 @@ object ScaleCheck {
           "default after minutes of corpus build. Re-run with " +
           "SPARK_DRIVER_MEM=32g sbt \"runMain graft.ScaleCheck ...\"")
     }
-    // spill-safety knobs when heap-per-core is small (see MemoryDiscipline).
+    // the codegen cache policy, plus spill-safety knobs when heap-per-core
+    // is small (see MemoryDiscipline).
     // Deliberately NO ShuffleDiscipline.gateLocal here: >1000x runs hold
     // 16-29 GB of live shuffle that must stay on disk, off the JVM's RAM
     val spark = graft.plans.MemoryDiscipline.spillSafe(SparkSession.builder()

@@ -302,10 +302,24 @@ object Dedup {
     // 28.1s vs per-doc 64.7s, and the per-doc gap grows with g^2 while
     // the collapsed path is output-bound).
     val groups = identityGroups(agg)
-    val candidates = ppjoinCandidatesFromAgg(groups, threshold)
-      .localCheckpoint(true)
+    val candidates = freezeOnDisk(ppjoinCandidatesFromAgg(groups, threshold))
     ppjoinVerifyExpand(groups, candidates, threshold)
   }
+
+  /** Eager local checkpoint of one of ppjoinPairs' stage frames, stored
+    * DISK_ONLY: the frozen rows live in the block manager's local files,
+    * not as deserialized rows on the heap. A MEMORY_AND_DISK checkpoint
+    * outlives several young collections while the later stages read it,
+    * so it is tenured, and its blocks are only released once a full GC
+    * lets the ContextCleaner see the dead checkpoint — every call left its
+    * frames in the old generation, and repeated calls raised the
+    * process's resident peak round by round. The frames hold one row per
+    * document or candidate pair and each is read only a few times, so
+    * reading them back from local files costs little.
+    */
+  private def freezeOnDisk(df: DataFrame): DataFrame =
+    df.localCheckpoint(eager = true,
+      org.apache.spark.storage.StorageLevel.DISK_ONLY)
 
   /** ppjoinPairs' verify + expansion stage over the collapsed group frame —
     * factored out so ScaleCheck can time the verify term alone (the
@@ -356,7 +370,7 @@ object Dedup {
         slice(col("members"), col("i") + lit(2), size(col("members")))).as("id2"))
       .withColumn("jaccard", lit(1.0))
       .select("id1", "id2", "jaccard")
-    expanded.unionByName(within).localCheckpoint(true)
+    freezeOnDisk(expanded.unionByName(within))
   }
 
   /** The identity-collapse frame: one row per DISTINCT shingle set —
@@ -368,10 +382,9 @@ object Dedup {
     * the verify join and both expansion joins off one frozen frame.
     */
   private[graft] def identityGroups(agg: DataFrame): DataFrame =
-    agg.groupBy(col("sorted"), col("len"))
+    freezeOnDisk(agg.groupBy(col("sorted"), col("len"))
       .agg(min(col("id")).as("id"),
-        sort_array(collect_list(col("id"))).as("members"))
-      .localCheckpoint(true)
+        sort_array(collect_list(col("id"))).as("members")))
 
   /** ppjoinPairs' shared per-document frame: (id, len, sorted) where
     * `sorted` is the doc's shingles as (df, gid) structs in the global
@@ -389,15 +402,17 @@ object Dedup {
     // Shingle stream WITHOUT the fat set column (ids + one shingle per row).
     val ex = sh.select(col("id"), size(col("s")).as("len"),
       explode(col("s")).as("g"))
-      // ONE explicit shingle-keyed exchange feeding BOTH consumers: the
-      // df aggregate and the df-attach probe each need ex hashed by g,
-      // but a plain groupBy plans partial aggregation below its exchange,
-      // so the two exchange subtrees differ and ReuseExchange can never
-      // dedupe them — the exploded stream (46M string-keyed rows at the
-      // 100x ScaleCheck corpus) would shuffle TWICE. Repartitioning first
-      // makes both subtrees the identical repartition, the aggregate runs
-      // post-shuffle (partial+final collapse in place, no new exchange),
-      // and the join needs no exchange on either side.
+      // Shingle-keyed repartition: the df aggregate and the df-attach
+      // probe both read ex hashed by g, so the aggregate runs post-shuffle
+      // (partial+final in place, no exchange of its own) and the join adds
+      // no exchange on either side. The two consumers do NOT share one
+      // exchange, though (explain() confirms): column pruning pushes the
+      // aggregate's need for g alone below the repartition, so its side
+      // explodes s and ships g only, while the probe side ships (id, len,
+      // g) under an inferred isnotnull(g) filter. The subtrees differ,
+      // ReuseExchange cannot merge them, and the exploded stream shuffles
+      // twice — once narrow (g) and once wide (id, len, g); the traced
+      // benchmark corpus_dedup round shows the pair as two shuffle jobs.
       .repartition(col("g"))
     val dfreq = ex.groupBy("g").agg(count(lit(1)).as("df"))
       .withColumn("gid", monotonically_increasing_id())
@@ -408,19 +423,16 @@ object Dedup {
     // the whole exploded stream within each exchange partition, the
     // aggregate sorts each document's own tiny array.
     // struct(df, gid) sorts field-wise = exactly (df, gid).
-    // shuffle_hash on the dfreq side: the df-attach join CANNOT reuse the
-    // aggregate's exchange (partial aggregation makes the agg-side
-    // subtree carry pre-combined rows, so ReuseExchange never matches),
-    // and the default SortMergeJoin then sorts the full exploded stream
-    // by shingle STRING — at the 100x ScaleCheck corpus that's a 46M-row
-    // string sort on the probe side. Hash-building the distinct-shingle
-    // side (its per-partition share is distinct/numPartitions — bounded
-    // at any corpus by scaling the shuffle) skips both sorts.
-    ex.join(dfreq.hint("shuffle_hash"), "g")
+    // shuffle_hash on the dfreq side: without it the planner's default
+    // SortMergeJoin sorts the full exploded stream by shingle STRING — at
+    // the 100x ScaleCheck corpus that's a 46M-row string sort on the probe
+    // side. Hash-building the distinct-shingle side (its per-partition
+    // share is distinct/numPartitions — bounded at any corpus by scaling
+    // the shuffle) skips both sorts.
+    freezeOnDisk(ex.join(dfreq.hint("shuffle_hash"), "g")
       .groupBy("id").agg(
         array_sort(collect_list(struct(col("df"), col("gid")))).as("sorted"),
-        first(col("len")).as("len"))
-      .localCheckpoint(true)
+        first(col("len")).as("len")))
   }
 
   /** ppjoinPairs' candidate stage over the ppjoinAgg frame — factored out
@@ -555,8 +567,9 @@ object Dedup {
   /** crossJaccardJoin's shared per-(side, doc) rank frame — ppjoinAgg
     * generalized by the side tag (one doc may appear on BOTH sides under
     * the same id: refs drawn from the corpus — so the grouping key is
-    * (side, id)); single g-keyed exchange, hash-built dfreq side, frozen
-    * gid assignment via the eager checkpoint.
+    * (side, id)); g-keyed repartition (pruned into a narrow and a wide
+    * exchange, as in ppjoinAgg), hash-built dfreq side, frozen gid
+    * assignment via the eager checkpoint.
     */
   private[graft] def crossJaccardAgg(both: DataFrame): DataFrame = {
     val ex = both.select(col("side"), col("id"), size(col("s")).as("len"),

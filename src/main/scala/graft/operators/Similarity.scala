@@ -363,12 +363,19 @@ object Similarity {
   /** The session's shuffle partition count and the (rows, dim) of a
     * projected vector frame — the inputs collisionJoinPartitions needs.
     * Two cheap jobs over the caller-persisted frame (count + one-row
-    * head); an empty frame sizes as dim 0 -> session floor.
+    * head); an empty frame, or a null first vector (size(null) is null
+    * under ANSI), sizes as dim 0 -> session floor.
     */
   private def vectorStats(vecs: DataFrame, vecCol: String): (Long, Int) = {
     val n = vecs.count()
+    (n, firstDim(vecs, vecCol).getOrElse(0))
+  }
+
+  /** Length of the first row's vector; None when the frame is empty or
+    * that vector is null. */
+  private def firstDim(vecs: DataFrame, vecCol: String): Option[Int] = {
     val d = vecs.select(size(col(vecCol)).as("d")).head(1)
-    (n, if (d.nonEmpty) d(0).getInt(0) else 0)
+    if (d.nonEmpty && !d(0).isNullAt(0)) Some(d(0).getInt(0)) else None
   }
 
   /** Diagnostics-only alias for ScaleCheck's stage cells (keeps
@@ -605,10 +612,7 @@ object Similarity {
     val parts = {
       val nl = l.count()
       val nr = r.count()
-      val d = l.select(size(col("lv")).as("d")).head(1)
-      val dim = if (d.nonEmpty) d(0).getInt(0)
-        else { val dr = r.select(size(col("rv")).as("d")).head(1)
-          if (dr.nonEmpty) dr(0).getInt(0) else 0 }
+      val dim = firstDim(l, "lv").orElse(firstDim(r, "rv")).getOrElse(0)
       // nl + nr wide rows per table across the two exchanges combined —
       // the same 2 x n x tables volume the self-join model uses
       collisionJoinPartitions(sessionParts, (nl + nr + 1) / 2,

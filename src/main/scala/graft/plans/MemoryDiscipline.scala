@@ -2,7 +2,12 @@ package graft.plans
 
 import org.apache.spark.sql.SparkSession
 
-/** Heap-proportional spill-safety knobs — the fix for a JVM-death mode the
+/** The session memory policy every benchmarked and gated session shares:
+  * heap-proportional spill-safety knobs, plus a generated-class cache that
+  * holds the program's plan working set ([[CodegenCachePolicy]]) and
+  * Tungsten pages sized to the program's small tasks ([[pageBytes]]).
+  *
+  * Spill safety is the fix for a JVM-death mode the
   * memory-pressure stress (graft.MemStress) reproduced deterministically:
   * when a hash aggregate spills and then merges its spill files, every
   * open [[org.apache.spark.util.collection.unsafe.sort.UnsafeSorterSpillReader]]
@@ -48,6 +53,54 @@ object MemoryDiscipline {
   private[graft] def bytesPerCore(cores: Int): Long =
     Runtime.getRuntime.maxMemory() / math.max(cores, 1)
 
+  /** Entries in Spark's JVM-wide generated-class cache
+    * (`spark.sql.codegen.cache.maxEntries`). Spark's default of 100 is far
+    * below this program's plan working set, so every repeated plan paid
+    * Janino compilation and a fresh JIT warm-up again. Measured as the
+    * `CodegenMetrics.METRIC_COMPILATION_TIME.getCount` delta over one
+    * Bench warm-up pass at sf0.1 (local[4], 8g heap, 233 queries, under
+    * [[CodegenCachePolicy]] so nothing is evicted): 3209 distinct classes.
+    * 8192 is the smallest power of two with at least 2x headroom over it.
+    *
+    * Spark reads the size once, when the JVM first generates code, so it
+    * only takes effect on a session built before any plan has run.
+    */
+  private[graft] val CodegenCacheEntries: Int = 8192
+
+  /** Spark settings that let one JVM compile each plan once, whatever the
+    * heap: the cache size above, and one executor-side classloader for all
+    * sessions. The cache is keyed by (context classloader, source), and
+    * Spark 4's per-session artifact isolation gives every session its own
+    * executor classloader — each Bench worker session and each streaming
+    * query's cloned session — so tasks compiled the same plan again in
+    * every session. The program adds no session artifacts (jars, files),
+    * so isolation has nothing to isolate here.
+    */
+  private[graft] val CodegenCachePolicy: Map[String, String] = Map(
+    "spark.sql.codegen.cache.maxEntries" -> CodegenCacheEntries.toString,
+    "spark.sql.artifact.isolation.enabled" -> "false")
+
+  /** Tungsten page size (`spark.buffer.pageSize`) for a heap of
+    * `heapBytes`: 1 MiB, unless one task could then not address the whole
+    * heap through TaskMemoryManager's 8192-entry page table; then the
+    * smallest power of two that can.
+    *
+    * Spark's default divides the heap by cores and a safety factor of 16
+    * (16 MiB at 3g and 4 cores, its 64 MiB cap from about 8g), and every
+    * hash aggregate, sorter and hashed relation takes at least one whole
+    * page per task, zeroed, however few rows its partition holds. The
+    * program's operator calls run many small tasks, so those pages were
+    * mostly empty; they were live at young collections, got tenured, and
+    * stayed in the old generation until a full GC. Each repeated call
+    * raised the resident peak: on the benchmark's corpus_dedup workload
+    * (3g heap, local[4]) a second round added about 400 MB to it. With
+    * 1 MiB pages, and ppjoinPairs' checkpoints on disk, it adds 110-220 MB.
+    */
+  private[graft] def pageBytes(heapBytes: Long): Long = {
+    val need = math.max(1L << 20, (heapBytes + 8191) / 8192)
+    java.lang.Long.highestOneBit(need - 1) << 1
+  }
+
   private val SpillSafetyPair =
     Map("spark.unsafe.sorter.spill.read.ahead.enabled" -> "false",
       "spark.shuffle.spill.diskWriteBufferSize" -> (128 * 1024).toString)
@@ -71,11 +124,17 @@ object MemoryDiscipline {
         else Map.empty
     }
 
-  /** Apply the spill-safety knobs to `builder` when this JVM's heap-per-
-    * core sits under the safe boundary; identity otherwise. Call with the
-    * same core count passed to `local[n]`.
+  /** Apply the session memory policy to `builder`: always the
+    * [[CodegenCachePolicy]] and this JVM's [[pageBytes]]; the spill-safety
+    * knobs too when its heap-per-core sits under the safe boundary. Call
+    * with the same core count passed to `local[n]`.
     */
   def spillSafe(builder: SparkSession.Builder,
-      cores: Int): SparkSession.Builder =
-    knobs(cores).foldLeft(builder) { case (b, (k, v)) => b.config(k, v) }
+      cores: Int): SparkSession.Builder = {
+    val pages = Map("spark.buffer.pageSize" ->
+      pageBytes(Runtime.getRuntime.maxMemory()).toString)
+    (CodegenCachePolicy ++ pages ++ knobs(cores)).foldLeft(builder) {
+      case (b, (k, v)) => b.config(k, v)
+    }
+  }
 }

@@ -185,6 +185,43 @@ class BenchLineSpec extends AnyFunSuite {
       bare.get("fixture_errs") == null)
   }
 
+  test("per-pass codegen attribution rides the line inside the budget") {
+    // a full-suite shape: every optional field provided, 233 queries, the
+    // widest warm set and the capped warm_norm — the packing must still
+    // hold the 1900-char budget and the sum invariant
+    val results = (1 to 233).map(i => s"x_query_name_$i" -> (0.1 + i * 0.03))
+    val warm = results.takeRight(22).map { case (k, v) => k -> v / 2 }
+    val passes = Seq(Bench.PassCodegen(3512, 81234.5, 112.25),
+      Bench.PassCodegen(97, 2050.0, 115.0), Bench.PassCodegen(95, 1990.4, 115.5))
+    val line = Bench.officialLine(results, "/data/testdata/sf0.1", warm,
+      wall = Some(150.0), workers = 8, cal = Some(0.7),
+      warmNorm = warm.take(12).map { case (k, _) => k -> 1.05 },
+      calPar = Some(0.4), wallPasses = Some((150.0, 152.0)),
+      fixtures = Some(8.0), warmup = Some(400.0), memKnobs = Some(true),
+      calParEnd = Some(0.41), calParWarm = Some(0.42), heapGb = Some(89.0),
+      fixtureErrs = Some(0), localDir = Some("shm"), qhash = Some("a1b2c3d4"),
+      codegen = passes)
+    assert(line.length <= 1960, s"line ${line.length} chars")
+    val node = parse(line)
+    def arr(f: String) = {
+      import scala.jdk.CollectionConverters._
+      node.get(f).elements().asScala.map(_.asDouble()).toSeq
+    }
+    assert(arr("cg_n") == Seq(3512.0, 97.0, 95.0))
+    assert(arr("cg_ms") == Seq(81235.0, 2050.0, 1990.0))
+    assert(arr("jit_mb") == Seq(112.3, 115.0, 115.5))
+    val qs = qmap(node, "queries")
+    assert(qs.nonEmpty && qs.size + node.get("omitted").asInt() == 233)
+    val sum = qs.values.sum + node.get("rest").asDouble()
+    assert(math.abs(sum - node.get("serial_sum").asDouble()) <= 0.005 * (qs.size + 2) + 0.01)
+    val bare = parse(Bench.officialLine(results, "/x"))
+    assert(bare.get("cg_n") == null && bare.get("jit_mb") == null)
+    // the live counters: running a block reports non-negative deltas and a
+    // JIT code cache that is in use (this JVM has compiled the test code)
+    val (v, pc) = Bench.withCodegen(21 * 2)
+    assert(v == 42 && pc.compiles >= 0 && pc.compileMs >= 0 && pc.jitMb > 0)
+  }
+
   test("readPrevBench prefers cal_par_warm over cal_par when present") {
     val dir = java.nio.file.Files.createTempDirectory("benchprevwarm")
     try {

@@ -27,6 +27,10 @@ object SparkSpec {
         "graft.plans.JoinBlowupListener")
       .config("spark.sql.streaming.streamingQueryListeners",
         "graft.plans.StreamStateGuard")
+      // the production codegen cache policy, without the rest of
+      // MemoryDiscipline.spillSafe: the spill pair depends on heap-per-core
+      // and would change what the spill specs exercise
+      .config(graft.plans.MemoryDiscipline.CodegenCachePolicy)
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s

@@ -127,4 +127,20 @@ class AnnJoinSpec extends SparkSpec {
     assert(qids.forall(_ >= 500L), "right-side id leaked into qid")
     assert(vids.forall(_ < 500L), "left-side id leaked into vid")
   }
+
+  test("a null first vector sizes the bucket join from the session floor instead of throwing") {
+    import spark.implicits._
+    val base = ring(20, 8)
+    // one partition with the null row first: the dimension probe reads it
+    // (size(null) is null under ANSI, so an unguarded getInt throws)
+    val withNull = ((99L, null: Seq[Double]) +: base).toDF("id", "v").coalesce(1)
+    val knn = Similarity.knnJoin(withNull, "id", "v", k = 2)
+      .select("qid", "vid").as[(Long, Long)].collect()
+    assert(knn.nonEmpty && knn.forall(p => p._1 != 99L && p._2 != 99L))
+    // both sides null-first: the probe falls through left, then right, to 0
+    val ann = Similarity.annJoin(withNull, withNull, "id", "v", k = 1)
+      .select("qid", "vid", "sim").as[(Long, Long, Double)].collect()
+    assert(ann.map(_._1).toSet === base.map(_._1).toSet)
+    assert(ann.forall(r => r._2 != 99L && r._3 == 1.0), "twin not top-1")
+  }
 }
