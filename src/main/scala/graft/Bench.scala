@@ -356,25 +356,11 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    // the codegen cache policy, plus spill-safety knobs when heap-per-core
-    // is small (see MemoryDiscipline)
-    val spark = graft.plans.ShuffleDiscipline.gateLocal(
-      graft.plans.MemoryDiscipline.spillSafe(SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
+    val spark = graft.plans.GateSession.gateSf(cpus)
       // concurrent bench jobs fair-share the cores (one pool per worker)
       // instead of FIFO head-of-line blocking behind the big queries
       .config("spark.scheduler.mode", "FAIR")
-      // benched plans run under the same scale-killer linter as Verify
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .config("spark.sql.queryExecutionListeners",
-        "graft.plans.JoinBlowupListener")
-      .config("spark.sql.streaming.streamingQueryListeners",
-        "graft.plans.StreamStateGuard"), cpus.toInt))
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // Untimed warmup: absorb JVM/codegen/scheduler startup AND first-touch
@@ -399,7 +385,7 @@ object Bench {
     // whether MemoryDiscipline's spill-safety pair governs this run —
     // recorded on the line as mem_knobs (r12 verdict #2: 8g/32 cores =
     // 256 MiB/core earns the knobs silently; the artifact must say so)
-    val memKnobs = graft.plans.MemoryDiscipline.knobs(cpus.toInt).nonEmpty
+    val memKnobs = graft.plans.MemoryDiscipline.knobs(cpus).nonEmpty
     // binary GiB so the line's heap_gb matches the -Xmx nominal the
     // cross-round notes reason about (r14 advice: /1e9 published 8.6 for
     // an -Xmx8g heap, 34.4 for 32g)
@@ -461,7 +447,7 @@ object Bench {
     }
     val byName = SparkEntry.queries
     val names = byName.keys.toSeq.sorted
-    val nWorkers = math.max(2, math.min(8, cpus.toInt / 4))
+    val nWorkers = math.max(2, math.min(8, cpus / 4))
     // One queue order for the whole run (hoisted r16 — same behavior:
     // pastTimes() reads the PREVIOUS run's bench_full.json, which does not
     // change until this run exits, so all three passes always used the

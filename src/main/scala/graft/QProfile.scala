@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerStageCompleted}
-import org.apache.spark.sql.SparkSession
 
 /** Optimization-round instrumentation: run ONE query end to end (after an
   * untimed warm run of the same query so numbers are steady-state) and print
@@ -20,20 +19,8 @@ object QProfile {
     // here profiled under a different session geometry — shuffle
     // partitions, parIfNarrow threshold — than the bench being decomposed);
     // wide-core profiling requires an explicit SPARK_GRAFT_CPUS
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = graft.plans.ShuffleDiscipline.gateLocal(
-      graft.plans.MemoryDiscipline.spillSafe(SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .config("spark.sql.queryExecutionListeners",
-        "graft.plans.JoinBlowupListener")
-      .config("spark.sql.streaming.streamingQueryListeners",
-        "graft.plans.StreamStateGuard"), cpus.toInt))
-      .getOrCreate()
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
+    val spark = graft.plans.GateSession.gateSf(cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
     case class J(id: Int, desc: String, t0: Long, var t1: Long = 0L,

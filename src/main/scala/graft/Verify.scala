@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -10,22 +9,8 @@ object Verify {
     val (sfDir, outDir) = (args(0), args(1))
     val only: Option[Set[String]] =
       if (args.length > 2) Some(args(2).split(",").toSet) else None
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    // spill-safety knobs when heap-per-core is small (see MemoryDiscipline)
-    val spark = graft.plans.ShuffleDiscipline.gateLocal(
-      graft.plans.MemoryDiscipline.spillSafe(SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // the full query suite runs under the scale-killer plan linter
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .config("spark.sql.queryExecutionListeners",
-        "graft.plans.JoinBlowupListener")
-      .config("spark.sql.streaming.streamingQueryListeners",
-        "graft.plans.StreamStateGuard"), cpus.toInt))
-      .getOrCreate()
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
+    val spark = graft.plans.GateSession.gateSf(cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries

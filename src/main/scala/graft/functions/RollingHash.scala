@@ -271,9 +271,10 @@ object GraftFunctions {
     call_function("graft_might_contain", bloom, v)
 }
 
-/** Cluster-wide injection point: SparkSession.builder()
-  * .withExtensions(new GraftExtensions) — or
-  * spark.sql.extensions=graft.functions.GraftExtensions.
+/** Cluster-wide injection point: `.withExtensions(new GraftExtensions)`
+  * on a session builder — or
+  * spark.sql.extensions=graft.functions.GraftExtensions (what
+  * graft.plans.GateSession sets).
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   import GraftFunctions.{intArg => ia}

@@ -398,7 +398,7 @@ object VectorOps {
     * the centroid-major loop loads each codebook row once per block of m
     * queries instead of once per query, amortizing the 2 MB codebook's
     * cache traffic m-fold — the per-row kernel is L3-bandwidth-bound at
-    * nlist 4096 (KernelDiag: ~220 us/row per-row pruned vs ~145 batched,
+    * nlist 4096 (NOTES round 9: ~220 us/row per-row pruned vs ~145 batched,
     * identical assignments). Math is BIT-IDENTICAL to nearest2Centroids'
     * clean fast path: same ascending-dimension single-accumulator dot,
     * same dot/(sqrt(na)*norm) expression, same strict-> tie scan in
@@ -554,7 +554,7 @@ object VectorOps {
       // primitive arrays once per executor, not once per row, and the
       // query vector's norm is hoisted out of the per-centroid loop —
       // together ~3x on the n x nlist assignment pass that dominates
-      // semantic dedup at large n (SemDiag, 100x ScaleCheck corpus).
+      // semantic dedup at large n (NOTES round 9, 100x ScaleCheck corpus).
       // Bit-identical to the general path on clean input: same ascending
       // accumulation order, same dot/(sqrt(na)*sqrt(nb)) expression.
       val len = vec.numElements()

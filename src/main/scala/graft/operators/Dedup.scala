@@ -54,7 +54,7 @@ object Dedup {
     // Persist the banded rows: the self-join's two sides are alias-renamed
     // copies of this subtree, and exchange reuse does NOT unify them — the
     // 64-hash signature pass (the numHashes x shingles kernel) would run
-    // TWICE (MinhashDiag at the 100x corpus: 9.1s for the join stage vs
+    // TWICE (NOTES round 9, 100x corpus: 9.1s for the join stage vs
     // 3.3s for one banding pass). The candidate set is materialized
     // eagerly (it is banding SURVIVORS — tiny) so the banded cache can be
     // released before the verify joins run.
@@ -263,7 +263,7 @@ object Dedup {
     * J >= t needs overlap >= t/(1+t)*(|x|+|y|) — occurrences that can't
     * reach it are dropped BEFORE the pair ever exists. Measured at the
     * 100x ScaleCheck corpus this is the difference between a 4.7M- and
-    * a ~1M-pair verify stream (PpjoinDiag), and the verify join-back is
+    * a ~1M-pair verify stream (NOTES round 9), and the verify join-back is
     * the operator's dominant stage — the ranks ride the join for free
     * since the prefix already computed them.
     *
@@ -297,8 +297,8 @@ object Dedup {
     // struct array ITSELF, not a fingerprint — a 64-bit hash would trade
     // the operator's zero-false-anything contract for a collision
     // lottery — and the exchange is ONE corpus pass of the same arrays
-    // the verify join already ships per candidate pair (PpjoinDiag
-    // --skew, 50k distinct + 8k-copy block = 32M true pairs: collapsed
+    // the verify join already ships per candidate pair (NOTES round 9,
+    // skewed corpus, 50k distinct + 8k-copy block = 32M true pairs: collapsed
     // 28.1s vs per-doc 64.7s, and the per-doc gap grows with g^2 while
     // the collapsed path is output-bound).
     val groups = identityGroups(agg)
@@ -651,32 +651,6 @@ object Dedup {
     } finally vecs.unpersist()
   }
 
-  /** The PRE-r16 verify stage over a (id1, id2) candidate frame and a
-    * projected (id, v) vector frame — vectors attached by two hinted
-    * join-backs. DIAGNOSTIC-ONLY since the r16 shape change (production
-    * embeddingNearDup scores inside the bucket join); kept as the
-    * old-shape A/B reference for ScaleCheck's historical cells.
-    */
-  private[graft] def embeddingVerify(candidates: DataFrame, vecs: DataFrame,
-      threshold: Double): DataFrame =
-    embeddingVerifyPlanForDiag(candidates, vecs, threshold)
-      .localCheckpoint(true)
-
-  /** embeddingVerify WITHOUT the eager checkpoint — plan-inspection only
-    * (the checkpoint truncates explain output to an RDD scan). */
-  private[graft] def embeddingVerifyPlanForDiag(candidates: DataFrame,
-      vecs: DataFrame, threshold: Double): DataFrame = {
-    import graft.functions.GraftFunctions.graft_cosine
-    candidates
-      .join(vecs.select(col("id").as("id1"), col("v").as("v1"))
-        .hint("shuffle_hash"), "id1")
-      .join(vecs.select(col("id").as("id2"), col("v").as("v2"))
-        .hint("shuffle_hash"), "id2")
-      .withColumn("cosine", graft_cosine(col("v1"), col("v2")))
-      .where(col("cosine") >= threshold)
-      .select("id1", "id2", "cosine")
-  }
-
   /** SemDeDup-style semantic near-dup pairs (Abbas et al., arXiv:2303.09540):
     * k-means CLUSTERS are the candidate buckets instead of LSH tables — the
     * right trade when the corpus has real cluster structure (LSH planes are
@@ -863,7 +837,7 @@ object Dedup {
       // survivors, not candidates. Measured at the 100x ScaleCheck
       // corpus: the ids-only shape shuffled 19.5M candidate pairs into
       // two vector joins (~40s); this shape exchanges 2n vector-bearing
-      // rows (~200 MB) and streams the pairs (SemDiag decomposition).
+      // rows (~200 MB) and streams the pairs (NOTES round 8).
       val a = bucketed.select(col("cid"), col("sig"), col("sub"),
         col("id").as("id1"), col("cv").as("v1"))
       val b = bucketed.select(col("cid"), col("sig"), col("sub"),

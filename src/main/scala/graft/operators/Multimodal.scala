@@ -45,7 +45,7 @@ object Multimodal {
 
   // ImageIO defaults to a DISK-backed stream cache: every encode/decode
   // creates and deletes a temp file, which for thumbnail-sized payloads
-  // costs more than the codec itself (MediaDiag: 161 -> 67 us per
+  // costs more than the codec itself (NOTES round 9: 161 -> 67 us per
   // render+decode round-trip with the cache off). Media payloads here are
   // bounded (asImageTable thumbnails, sampled GIF frames), so the
   // in-memory stream path is strictly better; set once per JVM at first
@@ -96,7 +96,7 @@ object Multimodal {
     val freq = 200.0 + math.floorMod(docId, 400L)
     // canonical 44-byte RIFF/WAVE header written directly — byte-identical
     // to AudioSystem.write's output for PCM, without the stream/provider
-    // machinery that costs ~50 us per call (AudioDiag: the sine loop is
+    // machinery that costs ~50 us per call (NOTES round 9: the sine loop is
     // ~2 us; the codec plumbing was the render). attenuateWav keeps the
     // real codec round-trip — that's where the fixture's "through the
     // JDK codec" claim lives.
@@ -130,7 +130,7 @@ object Multimodal {
     * (sampleRate, blockAlign, dataOffset, dataLength), or None for
     * ANYTHING the strict parse doesn't recognize — callers fall back to
     * the JDK codec (AIFF/AU, compressed encodings, exotic chunk layouts).
-    * Rationale (AudioDiag): AudioSystem.getAudioInputStream costs ~45 us
+    * Rationale (NOTES round 9): AudioSystem.getAudioInputStream costs ~45 us
     * per call in provider/stream machinery against ~7 us for the whole
     * Goertzel kernel — on a corpus-sized hash the codec plumbing WAS the
     * row. A container chunk walk is what production fingerprinters do;

@@ -269,17 +269,6 @@ object Similarity {
       .select("qid", "qv", "cid")
   }
 
-  /** Hyperplane-LSH candidate pairs over a projected (id, v:array<double>)
-    * frame, OR-amplified across numTables tables: a candidate is any two
-    * ids sharing ANY table's bucket. Only (id, t, bucket) keys ride the
-    * explode + self-join exchange here. r16 note: production callers
-    * (Dedup.embeddingNearDup, knnJoin) moved to lshVectorCollisions —
-    * measured at 100x+, the pairs x vector join-back this ids-only shape
-    * forces costs MORE than letting the vector ride the banded exchange
-    * once occupancy x tables outgrows tables (pairs/n = 69 vs tables =
-    * 12 at the knn schedule). This derivation remains for pair-count
-    * diagnostics, where ids-only is exactly right.
-    */
   /** Plane count so the EXPECTED bucket occupancy n/2^planes lands in
     * (target/2, target]. Occupancy is the false-candidate budget: within-
     * bucket pair work per table is ~n*occupancy/2, so holding occupancy
@@ -311,7 +300,7 @@ object Similarity {
     * join at 11.0s / 11.4 pairs per ingest row vs 8.2s / 10.6 at the
     * geomean schedule (14, 11); two planes deeper still (18, 15) pays
     * more in hashing and banded-row volume than the 2.8-pairs/row stream
-    * saves (IngestDiag A/B/D/G).
+    * saves (NOTES round 9).
     */
   def adaptivePlanesBipartite(nl: Long, nr: Long, targetOccupancy: Int,
       minPlanes: Int = 8, maxPlanes: Int = 24): Int =
@@ -371,107 +360,17 @@ object Similarity {
     (n, firstDim(vecs, vecCol).getOrElse(0))
   }
 
+  /** Fail fast on an unpersisted input to a multi-pass operator stage:
+    * without the cache each pass re-runs the frame's whole lineage. */
+  private def requirePersisted(df: DataFrame, name: String): Unit =
+    require(df.storageLevel != org.apache.spark.storage.StorageLevel.NONE,
+      s"$name must be persisted: the collision join reads it in several passes")
+
   /** Length of the first row's vector; None when the frame is empty or
     * that vector is null. */
   private def firstDim(vecs: DataFrame, vecCol: String): Option[Int] = {
     val d = vecs.select(size(col(vecCol)).as("d")).head(1)
     if (d.nonEmpty && !d(0).isNullAt(0)) Some(d(0).getInt(0)) else None
-  }
-
-  /** Diagnostics-only alias for ScaleCheck's stage cells (keeps
-    * lshVectorCollisions package-private to operators for real callers). */
-  private[graft] def lshVectorCollisionsForDiag(vecs: DataFrame,
-      numPlanes: Int, numTables: Int, maxOccupancy: Int = 0,
-      contentSeededSplit: Boolean = false,
-      adaptiveParts: Boolean = true,
-      targetPartitionBytes: Long = 128L << 20): DataFrame =
-    lshVectorCollisions(vecs, numPlanes, numTables, maxOccupancy,
-      contentSeededSplit, adaptiveParts, targetPartitionBytes)
-
-  /** Diagnostics-only alias for KnnDiag (keeps lshCandidatePairs package-
-    * private to operators for real callers). */
-  private[graft] def lshCandidatePairsForDiag(vecs: DataFrame, numPlanes: Int,
-      numTables: Int, maxOccupancy: Int = 0,
-      contentSeededSplit: Boolean = false): DataFrame =
-    lshCandidatePairs(vecs, numPlanes, numTables, maxOccupancy,
-      contentSeededSplit)
-
-  /** Managed variant for ScaleCheck's knn stage cells: the stage timing
-    * must release the banded cache inside the cand stage, as knnJoin
-    * does.
-    */
-  private[graft] def lshCandidatePairsForDiagManaged(vecs: DataFrame,
-      numPlanes: Int, numTables: Int, maxOccupancy: Int,
-      contentSeededSplit: Boolean = false): (DataFrame, () => Unit) =
-    lshCandidatePairsManaged(vecs, numPlanes, numTables, maxOccupancy,
-      contentSeededSplit)
-
-  private[operators] def lshCandidatePairs(vecs: DataFrame, numPlanes: Int,
-      numTables: Int, maxOccupancy: Int = 0,
-      contentSeededSplit: Boolean = false): DataFrame =
-    lshCandidatePairsManaged(vecs, numPlanes, numTables, maxOccupancy,
-      contentSeededSplit)._1
-
-  /** lshCandidatePairs plus a release handle for its banded cache: the
-    * banded subtree feeds the occupancy aggregate AND both self-join
-    * sides, which exchange reuse does not unify (alias-renamed copies) —
-    * without the persist the signature pass runs up to three times.
-    * r16: DIAGNOSTIC-ONLY — production (knnJoin / embeddingNearDup) moved
-    * to lshVectorCollisions (score inside the bucket join); this ids-only
-    * derivation remains the ScaleCheck pair-count cell (the distinct-pair
-    * population is identical by construction) and the old-shape A/B
-    * reference.
-    */
-  private[operators] def lshCandidatePairsManaged(vecs: DataFrame,
-      numPlanes: Int, numTables: Int, maxOccupancy: Int = 0,
-      contentSeededSplit: Boolean = false): (DataFrame, () => Unit) = {
-    import graft.functions.GraftFunctions.graft_hyperplanes
-    // Occupancy-split seed: by default the row id (pairs split apart in
-    // one table recollide in the others — fine for probabilistic recall
-    // contracts). `contentSeededSplit` seeds by a hash of the VECTOR
-    // instead: bit-identical vectors then share every sub-bucket by
-    // construction, so exact-recovery contracts over identical content
-    // (x_embed_dedup's n_expected == n_found) survive with the cap ON.
-    // The bound degrades only on the irreducible term: a bucket that is
-    // one giant identical-content group can't be split, but its C(g,2)
-    // pairs are the operator's OUTPUT, not avoidable work.
-    val keyed =
-      if (contentSeededSplit) vecs.withColumn("__ck", xxhash64(col("v")))
-      else vecs.withColumn("__ck", col("id"))
-    val banded0 = keyed.select(col("id"), col("__ck"),
-      posexplode(graft_hyperplanes(col("v"), numPlanes, numTables))
-        .as(Seq("t", "bucket")))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // Skew guard: adaptivePlanes bounds the EXPECTED occupancy, but real
-    // embedding corpora cluster — one hot orthant can hold a bucket whose
-    // occupancy^2 pair work dwarfs the rest of the table. Buckets over
-    // maxOccupancy are split by a per-table secondary hash of the seed
-    // into ~maxOccupancy-sized sub-buckets, bounding within-bucket work at
-    // n*maxOccupancy/2 per table WORST-case, not just in expectation. A
-    // pair split apart in one table still collides in the others (the
-    // sub-hash is seeded by t, so splits decorrelate across tables) — the
-    // same OR-amplification that absorbs ordinary bucket misses. The
-    // oversized-bucket list is tiny (it is the skew tail after the filter),
-    // so AQE plans the annotation join as a broadcast.
-    val banded =
-      if (maxOccupancy <= 0) banded0.withColumn("sub", lit(0L))
-      else {
-        val over = banded0.groupBy("t", "bucket")
-          .agg(count(lit(1)).as("occ"))
-          .where(col("occ") > maxOccupancy)
-        banded0.join(broadcast(over), Seq("t", "bucket"), "left")
-          .withColumn("sub", when(col("occ").isNull, lit(0L)).otherwise(
-            pmod(xxhash64(col("__ck"), col("t")),
-              ceil(col("occ") / maxOccupancy).cast("long"))))
-          .drop("occ")
-      }
-    val a = banded.select(col("t"), col("bucket"), col("sub"), col("id").as("id1"))
-    val b = banded.select(col("t"), col("bucket"), col("sub"), col("id").as("id2"))
-    val pairs = a.join(b, Seq("t", "bucket", "sub"))
-      .where(col("id1") < col("id2"))
-      .select("id1", "id2")
-      .dropDuplicates("id1", "id2")
-    (pairs, () => { banded0.unpersist(blocking = false); () })
   }
 
   /** Per-collision LSH self-join rows (id1, id2, v1, v2): every distinct
@@ -507,16 +406,30 @@ object Similarity {
     * 1000x). The bucket join is left UNHINTED: the planner's sort-merge
     * spills gracefully, measured equal to a shuffle_hash hint at 100x,
     * and hash-building wide n*tables rows per partition is the one shape
-    * that could OOM at >1000x. Occupancy split identical to
-    * lshCandidatePairsManaged (same __ck seed, same t-seeded sub hash,
-    * same cap), so the collision set equals the old candidate set before
-    * its dedup — bit-identical downstream results.
+    * that could OOM at >1000x.
+    *
+    * Skew guard: adaptivePlanes bounds the EXPECTED occupancy, but real
+    * embedding corpora cluster — one hot orthant can hold a bucket whose
+    * occupancy^2 pair work dwarfs the rest of the table. Buckets over
+    * maxOccupancy are split by a per-table secondary hash of a seed into
+    * ~maxOccupancy-sized sub-buckets, bounding within-bucket work at
+    * n*maxOccupancy/2 per table worst-case. A pair split apart in one
+    * table still collides in the others (the sub-hash is seeded by t, so
+    * splits decorrelate across tables). The seed is the row id, or with
+    * `contentSeededSplit` a hash of the VECTOR: bit-identical vectors
+    * then share every sub-bucket by construction, so exact-recovery
+    * contracts over identical content (x_embed_dedup's n_expected ==
+    * n_found) survive with the cap on.
+    *
+    * Precondition: `vecs` is persisted (checked) — the size probe, the
+    * occupancy aggregate and both join sides each re-read it.
     */
-  private[operators] def lshVectorCollisions(vecs: DataFrame, numPlanes: Int,
+  private[graft] def lshVectorCollisions(vecs: DataFrame, numPlanes: Int,
       numTables: Int, maxOccupancy: Int = 0,
       contentSeededSplit: Boolean = false,
       adaptiveParts: Boolean = true,
       targetPartitionBytes: Long = 128L << 20): DataFrame = {
+    requirePersisted(vecs, "vecs")
     import graft.functions.GraftFunctions.graft_hyperplanes
     def banded(): DataFrame = vecs.select(col("id"),
       (if (contentSeededSplit) xxhash64(col("v")) else col("id")).as("__ck"),
@@ -566,14 +479,23 @@ object Similarity {
   }
 
   /** Bipartite analog of [[lshVectorCollisions]]: per-collision (lid, rid,
-    * lv, rv) rows across the two sides, not deduplicated. Combined
-    * occupancy and the t-seeded sub hash match bipartiteCandidatesManaged
-    * exactly, so the collision set equals the old candidate set before
-    * its dedup.
+    * lv, rv) rows across projected (lid, lv) / (rid, rv) frames, not
+    * deduplicated. Skew buckets split on the COMBINED occupancy with the
+    * same t-seeded sub hash; with `contentSeededSplit` a cross-side pair
+    * of bit-identical vectors (the twin-contract population) shares every
+    * sub-bucket by construction, which makes the exact twin gate
+    * structural rather than probabilistic and lets the cap drop
+    * aggressively (the cap bounds the cohabitant pair stream, the
+    * bipartite curve's cost axis).
+    *
+    * Precondition: `l` and `r` are persisted (checked) — the counts, the
+    * occupancy aggregate and the join sides each re-read them.
     */
-  private[operators] def bipartiteVectorCollisions(l: DataFrame, r: DataFrame,
+  private[graft] def bipartiteVectorCollisions(l: DataFrame, r: DataFrame,
       numPlanes: Int, numTables: Int, maxOccupancy: Int,
       contentSeededSplit: Boolean = false): DataFrame = {
+    requirePersisted(l, "l")
+    requirePersisted(r, "r")
     import graft.functions.GraftFunctions.graft_hyperplanes
     def banded(df: DataFrame, idName: String, vecName: String): DataFrame =
       df.select(col(idName).as("id"),
@@ -674,8 +596,8 @@ object Similarity {
     } finally vecs.unpersist()
   }
 
-  /** The symmetric heap tail shared by knnJoin and the old-shape verify:
-    * each undirected scored pair (id1, id2, sim) feeds BOTH endpoints'
+  /** knnJoin's symmetric heap tail (also timed alone by ScaleCheck's
+    * verify stage): each undirected scored pair (id1, id2, sim) feeds BOTH endpoints'
     * heaps via one inline explode — r7's self-unionByName evaluated the
     * whole upstream subtree twice (ReuseExchange dedupes the shuffles,
     * not the post-join map work), doubling the dominant per-pair cost.
@@ -687,26 +609,6 @@ object Similarity {
       struct(col("id2").as("qid"), col("id1").as("vid"), col("sim")))).as("e"))
       .select(col("e.qid").as("qid"), col("e.vid").as("vid"), col("e.sim").as("sim"))
     topKPerQuery(sym, k)
-  }
-
-  /** The PRE-r16 verify + heap stage over a (id1, id2) candidate frame and
-    * a projected (id, v) vector frame — vectors attached by two hinted
-    * join-backs. DIAGNOSTIC-ONLY since the r16 shape change (production
-    * knnJoin scores inside the bucket join — see lshVectorCollisions);
-    * kept as the old-shape A/B reference for KnnDiag and ScaleCheck's
-    * historical cells.
-    */
-  private[graft] def knnVerifyTopK(candidates: DataFrame, vecs: DataFrame,
-      k: Int): DataFrame = {
-    import graft.functions.GraftFunctions.graft_cosine
-    val scored = candidates
-      .join(vecs.select(col("id").as("id1"), col("v").as("v1"))
-        .hint("shuffle_hash"), "id1")
-      .join(vecs.select(col("id").as("id2"), col("v").as("v2"))
-        .hint("shuffle_hash"), "id2")
-      .withColumn("sim", round(graft_cosine(col("v1"), col("v2")), 4))
-      .select("id1", "id2", "sim")
-    symmetricTopK(scored, k)
   }
 
   /** Bipartite ANN join: top-k RIGHT-side cosine neighbors for EVERY left
@@ -746,71 +648,6 @@ object Similarity {
         .groupBy("qid", "vid").agg(max("sim").as("sim"))
       topKPerQuery(scored, k).localCheckpoint(true)
     } finally { l.unpersist(); r.unpersist() }
-  }
-
-  /** annJoin's candidate generation, factored so ScaleCheck can publish
-    * the cross-side pair count per scale (the cost axis of the bipartite
-    * curve, same diagnostics discipline as lshCandidatePairsForDiag).
-    * Expects projected (lid, lv) / (rid, rv) frames.
-    */
-  private[graft] def bipartiteCandidates(l: DataFrame, r: DataFrame,
-      numPlanes: Int, numTables: Int, maxOccupancy: Int,
-      contentSeededSplit: Boolean = false): DataFrame =
-    bipartiteCandidatesManaged(l, r, numPlanes, numTables, maxOccupancy,
-      contentSeededSplit)._1
-
-  /** bipartiteCandidates plus a release handle for the two banded caches —
-    * same multi-consumption as lshCandidatePairsManaged (the combined
-    * occupancy aggregate plus each side's join input re-evaluate the
-    * signature pass without the persist).
-    */
-  private[operators] def bipartiteCandidatesManaged(l: DataFrame,
-      r: DataFrame, numPlanes: Int, numTables: Int, maxOccupancy: Int,
-      contentSeededSplit: Boolean = false): (DataFrame, () => Unit) = {
-    import graft.functions.GraftFunctions.graft_hyperplanes
-    // contentSeededSplit: the occupancy sub-hash is seeded by the VECTOR
-    // hash, not the row id — a cross-side pair of bit-identical vectors
-    // (the twin-contract population) then shares every sub-bucket by
-    // construction, instead of relying on other tables' OR to recover a
-    // split pair. That turns the exact twin gate from probabilistic back
-    // to structural AND lets the cap drop aggressively (the cap is what
-    // bounds the cohabitant pair stream, the bipartite curve's cost axis).
-    def banded(df: DataFrame, idName: String, vecName: String): DataFrame =
-      df.select(col(idName).as("id"),
-        (if (contentSeededSplit) xxhash64(col(vecName)) else col(idName))
-          .as("ck"),
-        posexplode(graft_hyperplanes(col(vecName), numPlanes, numTables))
-          .as(Seq("t", "bucket")))
-    val lb0 = banded(l, "lid", "lv")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val rb0 = banded(r, "rid", "rv")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val (lb, rb) =
-      if (maxOccupancy <= 0) (lb0.withColumn("sub", lit(0L)),
-        rb0.withColumn("sub", lit(0L)))
-      else {
-        val over = lb0.unionByName(rb0).groupBy("t", "bucket")
-          .agg(count(lit(1)).as("occ"))
-          .where(col("occ") > maxOccupancy)
-        def split(df: DataFrame): DataFrame =
-          df.join(broadcast(over), Seq("t", "bucket"), "left")
-            .withColumn("sub", when(col("occ").isNull, lit(0L)).otherwise(
-              pmod(xxhash64(col("ck"), col("t")),
-                ceil(col("occ") / maxOccupancy).cast("long"))))
-            .drop("occ")
-        (split(lb0), split(rb0))
-      }
-    val pairs = lb
-      .select(col("t"), col("bucket"), col("sub"), col("id").as("lid"))
-      .join(rb.select(col("t"), col("bucket"), col("sub"), col("id").as("rid")),
-        Seq("t", "bucket", "sub"))
-      .select("lid", "rid")
-      .dropDuplicates("lid", "rid")
-    (pairs, () => {
-      lb0.unpersist(blocking = false)
-      rb0.unpersist(blocking = false)
-      ()
-    })
   }
 
   /** Scalar int8 quantization of an array<double> vector: per-vector

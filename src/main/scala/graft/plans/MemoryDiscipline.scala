@@ -7,8 +7,8 @@ import org.apache.spark.sql.SparkSession
   * holds the program's plan working set ([[CodegenCachePolicy]]) and
   * Tungsten pages sized to the program's small tasks ([[pageBytes]]).
   *
-  * Spill safety is the fix for a JVM-death mode the
-  * memory-pressure stress (graft.MemStress) reproduced deterministically:
+  * Spill safety is the fix for a JVM-death mode a memory-pressure stress
+  * run reproduced deterministically (NOTES round 12):
   * when a hash aggregate spills and then merges its spill files, every
   * open [[org.apache.spark.util.collection.unsafe.sort.UnsafeSorterSpillReader]]
   * allocates read-ahead buffers of

@@ -15,7 +15,7 @@ import org.apache.spark.sql.SparkSession
   * MB).
   *
   * Fix: point `spark.local.dir` at a tmpfs scratch dir (/dev/shm) for the
-  * gate-SF mains (Bench/Verify/profiling diags), where file metadata cost
+  * gate-SF mains (Bench/Verify/QProfile/PlanDump), where file metadata cost
   * disappears and the bytes trivially fit. Measured A/B on x_knn_join
   * (warm, local[32], 2 runs each): default /tmp 5.5s -> tmpfs 2.3-3.0s.
   *

@@ -184,7 +184,7 @@ object CorpusQueries {
       // halves), then an 8-term integer polynomial per lane mod the
       // Mersenne prime 2^31-1, lanes packed into a 62-bit key. The
       // previous shape re-concatenated each 8-gram and md5'd the ~50-byte
-      // string — SpanDiag at the 100x corpus measured the gram stream at
+      // string — NOTES round 9, at the 100x corpus, measured the gram stream at
       // 7.4s with md5 and 6.5s even with xxhash64 (the STRING BUILDING,
       // not the digest, was the cost); per-token hash + polynomial runs
       // the same stream in 2.9s. All arithmetic is overflow-safe BIGINT

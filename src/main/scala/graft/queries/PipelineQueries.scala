@@ -1075,7 +1075,7 @@ object PipelineQueries {
       // CONTENT-seeded (r9): a twin pair is bit-identical, so no split
       // can separate it — the sim-1.0 gate is structural, not an OR-over-
       // tables recovery — which is what lets the cap drop 64 -> 16
-      // (BipDiag A/B/C/D at the 100x corpus: pairs 80 -> 52 per left row,
+      // (NOTES round 9, four schedules at the 100x corpus: pairs 80 -> 52 per left row,
       // annJoin 31.0s -> 14.9s; the denser occ-2/17-plane schedule cut
       // pairs to 39/row but paid more in banding than it saved).
       val planes = Similarity.adaptivePlanes(n, targetOccupancy = 4)
@@ -1112,7 +1112,7 @@ object PipelineQueries {
     // the symmetric sizing when the sides are equal. The naive per-side
     // alternative (planes from the index occupancy alone) was measured
     // WORSE at 10:1 asymmetry — 11.0s vs 8.2s at the 100x corpus, 11.4 vs
-    // 10.6 pairs/ingest row (IngestDiag; the pair stream, not the
+    // 10.6 pairs/ingest row (NOTES round 9; the pair stream, not the
     // hashing, is what the extra planes buy down). Gates are the
     // bipartite pair: every ingest twin of an index member must surface
     // at sim 1.0 (structural under the content-seeded cap), and >=18/20
@@ -1473,7 +1473,7 @@ object PipelineQueries {
       // (not the verifier's 2), tables from the 0.98-recall contract on
       // the planted cosine-0.97 pairs. r8 retune: the r7 occupancy-16 /
       // planes+1 schedule grew candidate pairs 22.6x at 10x data
-      // (KnnDiag decomposition); this one holds pair growth ~linear while
+      // (NOTES round 8); this one holds pair growth ~linear while
       // the sf0.01/sf0.1 gate SFs stay at the same 8/8 the gate was
       // calibrated on.
       val planes = Similarity.adaptivePlanes(n, targetOccupancy = 8)

@@ -142,7 +142,7 @@ object EventStreams extends Serializable {
     *
     * Sentinel tolerance: both sides keep `sentinel` rows so a far-future
     * sentinel advances BOTH watermark operators. The trap this dodges
-    * (measured, StreamJoinDiag): a post-watermark `c_type === 'click'`
+    * (measured, NOTES round 8): a post-watermark `c_type === 'click'`
     * filter gets PUSHED BELOW the EventTimeWatermark node by Catalyst, so
     * the sentinel never reaches the click-side watermark — the global
     * (min) watermark pins at the last real click and the final outer

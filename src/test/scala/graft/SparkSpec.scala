@@ -14,22 +14,12 @@ trait SparkSpec extends AnyFunSuite {
 
 object SparkSpec {
   lazy val session: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[8]")
+    // the gate mains' shared settings (plan linter, listeners, UTC, ...)
+    // plus the production codegen cache policy, without the rest of
+    // MemoryDiscipline.spillSafe: the spill pair depends on heap-per-core
+    // and would change what the spill specs exercise
+    val s = graft.plans.GateSession.base(8)
       .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // every spec runs under the scale-killer plan linter (plans.PlanGuard)
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .config("spark.sql.queryExecutionListeners",
-        "graft.plans.JoinBlowupListener")
-      .config("spark.sql.streaming.streamingQueryListeners",
-        "graft.plans.StreamStateGuard")
-      // the production codegen cache policy, without the rest of
-      // MemoryDiscipline.spillSafe: the spill pair depends on heap-per-core
-      // and would change what the spill specs exercise
       .config(graft.plans.MemoryDiscipline.CodegenCachePolicy)
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")

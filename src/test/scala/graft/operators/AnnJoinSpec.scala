@@ -31,47 +31,49 @@ class AnnJoinSpec extends SparkSpec {
     }
   }
 
-  test("r16 scored-bucket-join shape is output-identical to the old ids-only + join-back shape") {
-    // the r16 restructure moved scoring inside the bucket join and pair
-    // dedup after it; this pins set-equality against the retained
-    // old-shape helpers on a corpus with twins (sim 1.0), near-pairs and
-    // occupancy-cap pressure, for both knnJoin and embeddingNearDup
+  test("ring with twins: near-dup pairs and knn sims match brute-force cosine") {
+    // a corpus with exact twins (sim 1.0), near-pairs and occupancy-cap
+    // pressure: embeddingNearDup must return exactly the pairs at
+    // brute-force cosine >= 0.99, every knnJoin row must carry the
+    // brute-force cosine rounded to 4 places, and every twin must be its
+    // partner's top-1 at 1.0
     import spark.implicits._
     val base = ring(60, 8)
     val twins = base.take(20).map { case (i, v) => (i + 1000L, v) }
-    val vecsDf = (base ++ twins).toDF("id", "v")
+    val all = base ++ twins
+    val vecsDf = all.toDF("id", "v")
     val planes = 6; val tables = 8; val cap = 8 // cap low enough to fire
-    val proj = vecsDf.select(col("id").cast("long").as("id"),
-      col("v").cast("array<double>").as("v"))
-      .persist()
-    try {
-      // knn: new production operator vs old-shape reference tail
-      val newKnn = Similarity.knnJoin(vecsDf, "id", "v", k = 3,
-        numPlanes = planes, numTables = tables, maxOccupancy = cap)
-      val (oldCand, release) = Similarity.lshCandidatePairsManaged(
-        proj, planes, tables, cap)
-      val oldKnn = Similarity.knnVerifyTopK(oldCand, proj, 3)
-      assert(newKnn.except(oldKnn).count() === 0)
-      assert(oldKnn.except(newKnn).count() === 0)
-      release()
-      // near-dup: new production operator vs old-shape verify
-      val newDup = Dedup.embeddingNearDup(vecsDf, "id", "v",
-        threshold = 0.99, numPlanes = planes, numTables = tables,
-        maxOccupancy = cap, contentSeededSplit = true)
-      val (oldCand2, release2) = Similarity.lshCandidatePairsManaged(
-        proj, planes, tables, cap, contentSeededSplit = true)
-      val oldDup = Dedup.embeddingVerify(oldCand2, proj, 0.99)
-      assert(newDup.except(oldDup).count() === 0)
-      assert(oldDup.except(newDup).count() === 0)
-      release2()
-      // the collision stream's distinct pairs ARE the old candidate set
-      val collDistinct = Similarity.lshVectorCollisionsForDiag(
-        proj, planes, tables, cap).select("id1", "id2").distinct()
-      val cands = Similarity.lshCandidatePairsForDiag(
-        proj, planes, tables, cap)
-      assert(collDistinct.except(cands).count() === 0)
-      assert(cands.except(collDistinct).count() === 0)
-    } finally proj.unpersist()
+    val byId = all.toMap
+    def cosine(a: Seq[Double], b: Seq[Double]): Double = {
+      val dot = a.zip(b).map { case (x, y) => x * y }.sum
+      dot / (math.sqrt(a.map(x => x * x).sum) * math.sqrt(b.map(x => x * x).sum))
+    }
+    def round4(x: Double): Double =
+      BigDecimal(x).setScale(4, BigDecimal.RoundingMode.HALF_UP).toDouble
+
+    val truth = (for {
+      (i, a) <- all; (j, b) <- all if i < j && cosine(a, b) >= 0.99
+    } yield (i, j)).toSet
+    val dup = Dedup.embeddingNearDup(vecsDf, "id", "v", threshold = 0.99,
+      numPlanes = planes, numTables = tables, maxOccupancy = cap,
+      contentSeededSplit = true)
+      .select("id1", "id2").as[(Long, Long)].collect()
+    assert(dup.length === dup.toSet.size, "duplicate near-dup pairs")
+    assert(dup.toSet === truth)
+
+    val knn = Similarity.knnJoin(vecsDf, "id", "v", k = 3,
+      numPlanes = planes, numTables = tables, maxOccupancy = cap)
+      .select("qid", "vid", "sim").as[(Long, Long, Double)].collect()
+    assert(knn.nonEmpty)
+    for ((q, v, sim) <- knn)
+      assert(sim === round4(cosine(byId(q), byId(v))), s"($q, $v) sim $sim")
+    val byQ = knn.groupBy(_._1)
+    // ids i and i + 40 share a vector too, so a twin ties at 1.0 for top-1
+    for ((t, _) <- twins; (q, partner) <- Seq((t - 1000L, t), (t, t - 1000L))) {
+      val rows = byQ.getOrElse(q, Array.empty[(Long, Long, Double)])
+      assert(rows.map(_._3).maxOption.contains(1.0), s"$q has no 1.0 neighbor")
+      assert(rows.contains((q, partner, 1.0)), s"twin $partner not top-1 for $q")
+    }
   }
 
   test("collisionJoinPartitions: session floor, linear growth, cap") {
@@ -91,29 +93,44 @@ class AnnJoinSpec extends SparkSpec {
   test("adaptive collision parallelism engaged: outputs identical under a 1-partition session") {
     // force the derived count past the session's so the explicit
     // same-key repartition engages, and pin output equality vs the
-    // non-adaptive path (partitioning must never change results)
-    val prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "1")
+    // non-adaptive path (partitioning must never change results). A
+    // child session: the shared one's conf stays untouched.
+    val one = spark.newSession()
+    one.conf.set("spark.sql.shuffle.partitions", "1")
+    import one.implicits._
+    val vecsDf = ring(50, 8).toDF("id", "v")
+    val proj = vecsDf.select(col("id").cast("long").as("id"),
+      col("v").cast("array<double>").as("v")).persist()
     try {
-      import spark.implicits._
-      val vecsDf = ring(50, 8).toDF("id", "v")
-      val proj = vecsDf.select(col("id").cast("long").as("id"),
-        col("v").cast("array<double>").as("v")).persist()
-      try {
-        // 1 KiB target forces the derived count far past the 1-partition
-        // session, so the explicit repartition is actually in the plan
-        val adaptive = Similarity.lshVectorCollisionsForDiag(
-          proj, 6, 8, 8, targetPartitionBytes = 1024L)
-        assert(adaptive.rdd.getNumPartitions > 1,
-          "adaptive repartition did not engage")
-        val adaptiveSet = adaptive.select("id1", "id2").distinct()
-        val fixed = Similarity.lshVectorCollisionsForDiag(
-          proj, 6, 8, 8, adaptiveParts = false)
-          .select("id1", "id2").distinct()
-        assert(adaptiveSet.except(fixed).count() === 0)
-        assert(fixed.except(adaptiveSet).count() === 0)
-      } finally proj.unpersist()
-    } finally spark.conf.set("spark.sql.shuffle.partitions", prev)
+      // 1 KiB target forces the derived count far past the 1-partition
+      // session, so the explicit repartition is actually in the plan
+      val adaptive = Similarity.lshVectorCollisions(
+        proj, 6, 8, 8, targetPartitionBytes = 1024L)
+      assert(adaptive.rdd.getNumPartitions > 1,
+        "adaptive repartition did not engage")
+      val adaptiveSet = adaptive.select("id1", "id2").distinct()
+      val fixed = Similarity.lshVectorCollisions(
+        proj, 6, 8, 8, adaptiveParts = false)
+        .select("id1", "id2").distinct()
+      assert(adaptiveSet.except(fixed).count() === 0)
+      assert(fixed.except(adaptiveSet).count() === 0)
+    } finally proj.unpersist()
+  }
+
+  test("the collision joins fail fast on unpersisted input") {
+    import spark.implicits._
+    val vecs = ring(10, 8).toDF("id", "v")
+    val self = intercept[IllegalArgumentException](
+      Similarity.lshVectorCollisions(vecs, 6, 8))
+    assert(self.getMessage.contains("vecs must be persisted"))
+    val l = vecs.select(col("id").as("lid"), col("v").as("lv")).persist()
+    try {
+      // other rows: a renamed projection of vecs would resolve to l's cache
+      val r = ring(12, 8).toDF("rid", "rv")
+      val cross = intercept[IllegalArgumentException](
+        Similarity.bipartiteVectorCollisions(l, r, 6, 8, 0))
+      assert(cross.getMessage.contains("r must be persisted"))
+    } finally l.unpersist()
   }
 
   test("annJoin: left and right are genuinely asymmetric (no self pairs, right-only ids)") {

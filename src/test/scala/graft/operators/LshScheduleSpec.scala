@@ -4,8 +4,8 @@ import graft.SparkSpec
 import org.apache.spark.sql.functions._
 
 /** The r8 LSH schedule retune, pinned: adaptivePlanes' occupancy targeting,
-  * tablesForRecall's Charikar recall contract, and lshCandidatePairs'
-  * worst-case occupancy split. These are the knobs the knn/dedup 100x scale
+  * tablesForRecall's Charikar recall contract, and the LSH collision
+  * join's worst-case occupancy split. These are the knobs the knn/dedup 100x scale
   * curves stand on (SCALECHECK.json) — a regression here shows up as a
   * quadratic pair count long before any oracle fails.
   */
@@ -76,13 +76,15 @@ class LshScheduleSpec extends SparkSpec {
     // magnitudes keep ids distinct; hyperplane signs ignore magnitude.
     val n = 240
     val hot = (0 until n).map(i => (i.toLong, Array(1.0, 2.0, 3.0, 4.0 + i)))
-      .toDF("id", "v")
+      .toDF("id", "v").persist()
     val tables = 4
-    val uncapped = Similarity.lshCandidatePairsForDiag(hot, 8, tables).count()
+    def pairs(maxOccupancy: Int) =
+      Similarity.lshVectorCollisions(hot, 8, tables, maxOccupancy)
+        .select("id1", "id2").distinct()
+    val uncapped = pairs(0).count()
     assert(uncapped == n.toLong * (n - 1) / 2) // full clique, every pair
     val m = 120 // forces ceil(240/120) = 2 sub-buckets per table
-    val capped = Similarity.lshCandidatePairsForDiag(hot, 8, tables,
-      maxOccupancy = m)
+    val capped = pairs(m)
     val cappedCount = capped.count()
     // per-table work is bounded by 2 sub-buckets of ~n/2: at most
     // 2 * (n/2 choose 2) pairs per table (+ hash slack), OR'd over tables.
@@ -97,6 +99,7 @@ class LshScheduleSpec extends SparkSpec {
     // the clique reachable — check coverage rather than any single pair
     assert(cappedCount >= uncapped / 2,
       s"cap destroyed recall: $cappedCount of $uncapped pairs survive")
+    hot.unpersist()
   }
 
   test("content-seeded occupancy split never separates identical vectors") {
@@ -112,10 +115,11 @@ class LshScheduleSpec extends SparkSpec {
     val distinct = (60 until 240).map { i =>
       (i.toLong, Array(1.0, 2.0, 3.0, 104.0 + i))
     }
-    val hot = (groups ++ distinct).toDF("id", "v")
+    val hot = (groups ++ distinct).toDF("id", "v").persist()
     for (cap <- Seq(4, 16, 60)) {
-      val capped = Similarity.lshCandidatePairsForDiag(hot, 8, 4,
+      val capped = Similarity.lshVectorCollisions(hot, 8, 4,
         maxOccupancy = cap, contentSeededSplit = true)
+        .select("id1", "id2").distinct()
       val identicalPairs = capped
         .where(col("id1") < 60 && col("id2") < 60 &&
           (col("id1") / 3).cast("long") === (col("id2") / 3).cast("long"))
@@ -123,6 +127,7 @@ class LshScheduleSpec extends SparkSpec {
       assert(identicalPairs == 60L,
         s"cap=$cap recovered $identicalPairs of 60 identical pairs")
     }
+    hot.unpersist()
   }
 
   test("knnJoin emits each undirected pair to both endpoints, no self-edges") {
