@@ -400,26 +400,25 @@ object Bench {
     // so those costs land here instead of on whichever timed pass ran
     // first (the r12 artifact's 409s-vs-150s pass gap was exactly this
     // class of cost, indistinguishable from a regression).
-    val tFx0 = System.nanoTime()
+    // The scratch dir is a Tmp dir, the filesystem the queries' own
+    // fixtures write to.
     var fixtureErrs = 0
-    val fxScratch = java.nio.file.Files.createTempDirectory("graft-bench-fx")
-    graft.queries.PipelineQueries.streamFixtureWriters(spark, sfDir)
-      .toSeq.sortBy(_._1).foreach { case (name, write) =>
-        try write(fxScratch.resolve(name).toString)
-        catch { case e: Throwable =>
-          fixtureErrs += 1
-          println(s"BENCH-FX-ERR $name ${e.getClass.getSimpleName}: " +
-            String.valueOf(e.getMessage).take(120))
+    val fixturesS = graft.queries.Tmp.scoped("graft-bench-fx") { fxScratch =>
+      val tFx0 = System.nanoTime()
+      graft.queries.PipelineQueries.streamFixtureWriters(spark, sfDir)
+        .toSeq.sortBy(_._1).foreach { case (name, write) =>
+          try write(fxScratch.resolve(name).toString)
+          catch { case e: Throwable =>
+            fixtureErrs += 1
+            println(s"BENCH-FX-ERR $name ${e.getClass.getSimpleName}: " +
+              String.valueOf(e.getMessage).take(120))
+          }
         }
-      }
-    // clock stops BEFORE the scratch cleanup (r13 advice): the recursive
-    // delete is harness housekeeping, not fixture-machinery cost, and it
-    // was inflating the published fixtures_s
-    val fixturesS = (System.nanoTime() - tFx0) / 1e9
-    try java.nio.file.Files.walk(fxScratch)
-      .sorted(java.util.Comparator.reverseOrder())
-      .forEach(p => { java.nio.file.Files.deleteIfExists(p); () })
-    catch { case _: Throwable => () }
+      // clock stops BEFORE the scratch cleanup (r13 advice): the recursive
+      // delete is harness housekeeping, not fixture-machinery cost, and it
+      // was inflating the published fixtures_s
+      (System.nanoTime() - tFx0) / 1e9
+    }
     println(s"BENCH-FIXTURES ${fmt("%.2f", fixturesS)} errs=$fixtureErrs")
     // Fixed-work CPU calibration, timed in the untimed preamble (after the
     // JVM is warm, before any measured query) — rides the line as `cal`.

@@ -103,15 +103,18 @@ object ScaleCheck {
 
   /** Streaming-path members (r6 judge #5): real foreachBatch sinks over the
     * replicated corpus. Caveat on reading their ratios: each query's timed
-    * path INCLUDES writing its own source fixture (a corpus-sized
-    * coalesce(1) parquet write) — strictly linear in data — so the ratio
-    * is an upper bound on how the micro-batch machinery itself scales
-    * (decomposition in NOTES round 8). r10 adds the watermark-
-    * choreographed family (r9 verdict #3: the bench's top parallel-cost
-    * queries had no curves): their user_id filters keep the STREAMED
-    * population copy-0-constant under replication, so the fixture cell
-    * (median-split source scan, data-linear) is the row's whole growth
-    * term and the remainder measures the micro-batch machinery flat.
+    * path INCLUDES writing its own source fixture — strictly linear in
+    * data — so the ratio is an upper bound on how the micro-batch
+    * machinery itself scales (decomposition in NOTES round 8). The
+    * fixture cell times that share alone: it calls the query's own writer
+    * (PipelineQueries.streamFixtureWriters), so it covers every generation,
+    * mtime stamp and sentinel the query writes, on the same Tmp
+    * filesystem. r10 adds the watermark-choreographed family (r9 verdict
+    * #3: the bench's top parallel-cost queries had no curves): their
+    * user_id filters keep the STREAMED population copy-0-constant under
+    * replication, so the fixture cell (the split-point scan plus the
+    * writes, data-linear) is the row's whole growth term and the
+    * remainder measures the micro-batch machinery flat.
     */
   private val Streaming = Seq("x_stream_index_probe", "x_stream_upsert",
     "x_stream_window", "x_stream_join_outer", "x_stream_join_full",
@@ -1284,26 +1287,25 @@ object ScaleCheck {
     val basePairs = if (runPairs) pairCounts(spark, src, toRun.contains) else Nil
     val bigPairs = if (runPairs) pairCounts(spark, out, toRun.contains) else Nil
     if (factor > 100) reclaimShuffles()
-    // fixture decomposition for the streaming family: time the source
-    // fixture write alone (strictly linear in data) at each scale, so the
-    // artifact separates the fixture share from the micro-batch machinery
-    // in the published streaming ratios
+    // fixture decomposition for the streaming family: time the query's
+    // own source-fixture writer alone (strictly linear in data) at each
+    // scale, in a Tmp dir like the query's, so the artifact separates the
+    // fixture share from the micro-batch machinery in the published
+    // streaming ratios
     def fixtureTimes(dir: String): Seq[(String, Double)] =
       graft.queries.PipelineQueries.streamFixtureWriters(spark, dir).toSeq
         .filter { case (name, _) => toRun.contains(name) }
         .map { case (name, write) =>
-          val scratch = java.nio.file.Files.createTempDirectory("graft-fixture")
-          def one(): Double = {
-            val t0 = System.nanoTime()
-            write(scratch.resolve("src").toString)
-            (System.nanoTime() - t0) / 1e9
+          val t = graft.queries.Tmp.scoped("graft-fixture") { scratch =>
+            def one(): Double = {
+              val t0 = System.nanoTime()
+              write(scratch.resolve("src").toString)
+              (System.nanoTime() - t0) / 1e9
+            }
+            // single pass past 100x (the timed-row discipline: minutes per
+            // run at those corpora, and the cell is order-of-growth)
+            if (factor > 100) one() else math.min(one(), one())
           }
-          // single pass past 100x (the timed-row discipline: minutes per
-          // run at those corpora, and the cell is order-of-growth)
-          val t = if (factor > 100) one() else math.min(one(), one())
-          java.nio.file.Files.walk(scratch)
-            .sorted(java.util.Comparator.reverseOrder())
-            .forEach(p => { java.nio.file.Files.deleteIfExists(p); () })
           println(f"SCALECHECK fixture $name $dir $t%.2fs")
           (name, t)
         }

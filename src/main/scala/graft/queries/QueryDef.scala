@@ -99,4 +99,15 @@ object Tmp {
     created.add(p)
     p
   }
+
+  /** Run `body` in a fresh temp dir and delete the dir when it returns.
+    * Bench and verify sweeps re-run the fixture-writing queries every
+    * round, and their sources, checkpoints and state tables would
+    * otherwise pile up in tmpfs. A query's result must not read the dir
+    * lazily: detach it first (localCheckpoint, or collected rows).
+    */
+  def scoped[T](prefix: String)(body: java.nio.file.Path => T): T = {
+    val p = dir(prefix)
+    try body(p) finally delete(p)
+  }
 }

@@ -1125,8 +1125,7 @@ object RelationalQueries {
         |FROM documents WHERE doc_id % 3 <> 2
         |GROUP BY 1 ORDER BY bucket""".stripMargin) { (s, dir) =>
       val docs = Tables(s, dir, "documents").select("doc_id", "lang")
-      val tmp = Tmp.dir("graft-corrupt")
-      try {
+      Tmp.scoped("graft-corrupt") { tmp =>
         val path = tmp.resolve("t")
         java.nio.file.Files.createDirectories(path)
         for (b <- 0 to 2) {
@@ -1149,7 +1148,7 @@ object RelationalQueries {
             sum(col("doc_id") % 999983).as("id_checksum"))
           .orderBy("bucket")
           .localCheckpoint(true) // detach from tmp before the delete below
-      } finally PipelineQueries.deleteRecursively(tmp)
+      }
     },
 
     // Dynamic partition overwrite: rewrite ONE lang partition in place
@@ -1167,8 +1166,7 @@ object RelationalQueries {
         |FROM documents GROUP BY lang ORDER BY lang""".stripMargin) { (s, dir) =>
       val docs = Tables(s, dir, "documents")
         .select(col("doc_id"), col("text"), col("lang"))
-      val tmp = Tmp.dir("graft-dpo")
-      try {
+      Tmp.scoped("graft-dpo") { tmp =>
         val path = tmp.resolve("t").toString
         docs.write.partitionBy("lang").mode("overwrite").parquet(path)
         // backfill exactly the fr partition with the v2 text
@@ -1183,7 +1181,7 @@ object RelationalQueries {
             sum(col("doc_id") % 999983).as("id_checksum"))
           .orderBy("lang")
           .localCheckpoint(true) // detach from tmp before the delete below
-      } finally PipelineQueries.deleteRecursively(tmp)
+      }
     },
 
     // Schema evolution on read: two parquet generations with different
@@ -1201,8 +1199,7 @@ object RelationalQueries {
         |  SELECT doc_id, lang FROM documents WHERE doc_id % 2 = 1
         |) GROUP BY 1 ORDER BY lang_bucket""".stripMargin) { (s, dir) =>
       val docs = Tables(s, dir, "documents")
-      val tmp = Tmp.dir("graft-schev")
-      try {
+      Tmp.scoped("graft-schev") { tmp =>
         val path = tmp.resolve("t").toString
         docs.where(col("doc_id") % 2 === 0)
           .select(col("doc_id"), length(col("text")).as("n_chars"))
@@ -1217,7 +1214,7 @@ object RelationalQueries {
             sum(col("doc_id") % 999983).as("id_checksum"))
           .orderBy("lang_bucket")
           .localCheckpoint(true) // detach from tmp before the delete below
-      } finally PipelineQueries.deleteRecursively(tmp)
+      }
     },
 
     Q("x_union_by_name",

@@ -1,6 +1,6 @@
 package graft.queries
 
-import org.scalatest.funsuite.AnyFunSuite
+import graft.SparkSpec
 
 /** Driver-contract registry invariants. The concrete failure this guards
   * against happened in round 8: a second Q("x_bucketed_join") added in a
@@ -9,7 +9,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * source defined and an existing query's implementation was replaced
   * without any test noticing.
   */
-class RegistrySpec extends AnyFunSuite {
+class RegistrySpec extends SparkSpec {
 
   private def registries: Seq[(String, Seq[Q])] = Seq(
     "CoreQueries" -> CoreQueries.all,
@@ -32,5 +32,14 @@ class RegistrySpec extends AnyFunSuite {
     val oracles = graft.SparkEntry.oracleSql
     assert(oracles.keySet.subsetOf(names))
     assert(oracles.values.forall(_.trim.nonEmpty))
+  }
+
+  test("every fixture writer is keyed by a registered query") {
+    // ScaleCheck and Bench look fixture cells up by query name; a key
+    // that names no query times a writer nothing runs
+    val keys = PipelineQueries.streamFixtureWriters(spark, sf0001).keySet
+    assert(keys.nonEmpty)
+    assert(keys.subsetOf(graft.SparkEntry.queries.keySet),
+      s"unregistered fixture keys: ${keys -- graft.SparkEntry.queries.keySet}")
   }
 }

@@ -65,6 +65,20 @@ class StreamingSpec extends SparkSpec {
       "no outer rows emitted — the flushing sentinel contract broke")
   }
 
+  test("x_stream_window's streamed hourly counts == the batch aggregate") {
+    // the window query streams two time-split generations and one
+    // far-future sentinel; every real window must be emitted (the
+    // sentinel's watermark closes them all) with exact integer cents
+    val out = graft.SparkEntry.queries("x_stream_window")(spark, sf0001)
+    val ev = Tables(spark, sf0001, "events").where(col("user_id") < 40)
+      .select(col("user_id"), col("ts").cast("timestamp").as("ts"),
+        col("event_type"), col("value"))
+    val batch = EventStreams.hourlyCountsCents(ev)
+    assert(out.exceptAll(batch).isEmpty && batch.exceptAll(out).isEmpty,
+      "streamed hourly counts != batch hourly counts (a window dropped?)")
+    assert(out.where(col("event_type") === "sentinel").isEmpty)
+  }
+
   test("StreamStateGuard batch counters tag by fixture dir and drain per pass") {
     graft.plans.StreamStateGuard.drainBatchCounts() // isolate from earlier tests
     val dir = java.nio.file.Files.createTempDirectory("graft-bcount")
