@@ -4,8 +4,10 @@ import org.apache.spark.sql.SparkSession
 
 /** The session memory policy every benchmarked and gated session shares:
   * heap-proportional spill-safety knobs, plus a generated-class cache that
-  * holds the program's plan working set ([[CodegenCachePolicy]]) and
-  * Tungsten pages sized to the program's small tasks ([[pageBytes]]).
+  * holds the program's plan working set ([[CodegenCachePolicy]]),
+  * Tungsten pages sized to the program's small tasks ([[pageBytes]]), and
+  * streaming checkpoint files written without Hadoop's forked shells
+  * ([[graft.streaming.StateBackend.CheckpointFilePolicy]]).
   *
   * Spill safety is the fix for a JVM-death mode a memory-pressure stress
   * run reproduced deterministically (NOTES round 12):
@@ -125,15 +127,17 @@ object MemoryDiscipline {
     }
 
   /** Apply the session memory policy to `builder`: always the
-    * [[CodegenCachePolicy]] and this JVM's [[pageBytes]]; the spill-safety
-    * knobs too when its heap-per-core sits under the safe boundary. Call
-    * with the same core count passed to `local[n]`.
+    * [[CodegenCachePolicy]], the checkpoint file policy and this JVM's
+    * [[pageBytes]]; the spill-safety knobs too when its heap-per-core sits
+    * under the safe boundary. Call with the same core count passed to
+    * `local[n]`.
     */
   def spillSafe(builder: SparkSession.Builder,
       cores: Int): SparkSession.Builder = {
     val pages = Map("spark.buffer.pageSize" ->
       pageBytes(Runtime.getRuntime.maxMemory()).toString)
-    (CodegenCachePolicy ++ pages ++ knobs(cores)).foldLeft(builder) {
+    (CodegenCachePolicy ++ graft.streaming.StateBackend.CheckpointFilePolicy ++
+        pages ++ knobs(cores)).foldLeft(builder) {
       case (b, (k, v)) => b.config(k, v)
     }
   }
