@@ -405,7 +405,7 @@ object Bench {
     var fixtureErrs = 0
     val fixturesS = graft.queries.Tmp.scoped("graft-bench-fx") { fxScratch =>
       val tFx0 = System.nanoTime()
-      graft.queries.PipelineQueries.streamFixtureWriters(spark, sfDir)
+      graft.queries.StreamQueries.streamFixtureWriters(spark, sfDir)
         .toSeq.sortBy(_._1).foreach { case (name, write) =>
           try write(fxScratch.resolve(name).toString)
           catch { case e: Throwable =>

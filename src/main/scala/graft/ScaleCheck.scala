@@ -107,7 +107,7 @@ object ScaleCheck {
     * data — so the ratio is an upper bound on how the micro-batch
     * machinery itself scales (decomposition in NOTES round 8). The
     * fixture cell times that share alone: it calls the query's own writer
-    * (PipelineQueries.streamFixtureWriters), so it covers every generation,
+    * (StreamQueries.streamFixtureWriters), so it covers every generation,
     * mtime stamp and sentinel the query writes, on the same Tmp
     * filesystem. r10 adds the watermark-choreographed family (r9 verdict
     * #3: the bench's top parallel-cost queries had no curves): their
@@ -246,9 +246,7 @@ object ScaleCheck {
       // filters (the exact algorithm has no recall knob — this cell is the
       // quantity its verify join's cost rides on).
       val docs = Tables(spark, dir, "documents").select("doc_id", "text")
-      val injected = docs.where(col("doc_id") < 20)
-        .select((col("doc_id") + graft.queries.PipelineQueries.BigOff).as("doc_id"),
-          concat(col("text"), lit(" graftdup")).as("text"))
+      val injected = graft.queries.Fixtures.nearCopies(docs, graft.queries.Fixtures.BigOff)
       graft.functions.GraftFunctions.register(spark)
       val sh = docs.unionByName(injected).select(col("doc_id").as("id"),
         graft.functions.GraftFunctions.graft_shingles(
@@ -262,9 +260,7 @@ object ScaleCheck {
       // the self-join sibling carries. Exact query fixture: corpus + 20
       // injected leaks vs the fixed 50-doc benchmark side.
       val docs = Tables(spark, dir, "documents").select("doc_id", "text")
-      val injected = docs.where(col("doc_id") < 20)
-        .select((col("doc_id") + graft.queries.PipelineQueries.BigOff).as("doc_id"),
-          concat(col("text"), lit(" graftdup")).as("text"))
+      val injected = graft.queries.Fixtures.nearCopies(docs, graft.queries.Fixtures.BigOff)
       graft.functions.GraftFunctions.register(spark)
       def sh(df: org.apache.spark.sql.DataFrame, side: Int) =
         df.select(lit(side).as("side"), col("doc_id").as("id"),
@@ -300,9 +296,7 @@ object ScaleCheck {
       (r, (System.nanoTime() - t0) / 1e9)
     }
     val docs = Tables(spark, dir, "documents").select("doc_id", "text")
-    val injected = docs.where(col("doc_id") < 20)
-      .select((col("doc_id") + graft.queries.PipelineQueries.BigOff).as("doc_id"),
-        concat(col("text"), lit(" graftdup")).as("text"))
+    val injected = graft.queries.Fixtures.nearCopies(docs, graft.queries.Fixtures.BigOff)
     // Pair-count cells captured from the stage pass itself (r14 verdict
     // #5): the candidate frame is already pinned by the cand stage's
     // localCheckpoint, so counting it afterwards is a pass over
@@ -380,9 +374,7 @@ object ScaleCheck {
     }
     val emb = Tables(spark, dir, "embeddings")
       .select(col("vec_id"), col("embedding").cast("array<double>").as("embedding"))
-    val injected = emb.where(col("vec_id") < 20)
-      .select((col("vec_id") + graft.queries.PipelineQueries.BigOff).as("vec_id"),
-        graft.queries.PipelineQueries.perturb(col("embedding")).as("embedding"))
+    val injected = graft.queries.Fixtures.perturbedCopies(emb, graft.queries.Fixtures.BigOff)
     val corpus = emb.unionByName(injected)
     val n = corpus.count()
     val planes = Similarity.adaptivePlanes(n, targetOccupancy = 8)
@@ -600,9 +592,7 @@ object ScaleCheck {
       (r, (System.nanoTime() - t0) / 1e9)
     }
     val docs = Tables(spark, dir, "documents").select("doc_id", "text")
-    val injected = docs.where(col("doc_id") < 20)
-      .select((col("doc_id") + 1000000L).as("doc_id"),
-        concat(col("text"), lit(" graftdup")).as("text"))
+    val injected = graft.queries.Fixtures.nearCopies(docs, 1000000L)
     def gstream(df: DataFrame) = df.select(
       explode(graft_shingles(tokens(col("text")), 3)).as("g"))
     val corpusG = gstream(docs.unionByName(injected))
@@ -695,9 +685,9 @@ object ScaleCheck {
       val r = body
       (r, (System.nanoTime() - t0) / 1e9)
     }
-    val (_, tHeap) = timed(graft.queries.PipelineQueries
+    val (_, tHeap) = timed(graft.queries.StreamQueries
       .streamDedupBackendRun(spark, dir, StateBackend.HeapBacked).collect())
-    val (_, tRocks) = timed(graft.queries.PipelineQueries
+    val (_, tRocks) = timed(graft.queries.StreamQueries
       .streamDedupBackendRun(spark, dir, StateBackend.RocksDb).collect())
     Seq(("x_stream_dedup_rocksdb", "heap", tHeap),
       ("x_stream_dedup_rocksdb", "rocksdb", tRocks))
@@ -722,7 +712,7 @@ object ScaleCheck {
   }
 
   /** `idCap`: the smallest injected-fixture offset the MEASURED queries
-    * use — 1e6 for full-table runs, PipelineQueries.BigOff (1e10) for the
+    * use — 1e6 for full-table runs, Fixtures.BigOff (1e10) for the
     * >100x runs restricted to the BigOff-fixture queries. `corpusOnly`
     * skips events/customer (the >100x hop measures only the three corpus
     * queries; replicating 2 GB of events it will never read is waste).
@@ -1188,7 +1178,7 @@ object ScaleCheck {
       withBigConf {
         materialize(spark, src, mid, 100, corpusOnly = true)
         materialize(spark, mid, out, factor / 100,
-          idCap = graft.queries.PipelineQueries.BigOff, corpusOnly = true)
+          idCap = graft.queries.Fixtures.BigOff, corpusOnly = true)
       }
     } else materialize(spark, src, out, factor)
     // warm both corpora into the page cache so ratios measure compute
@@ -1293,7 +1283,7 @@ object ScaleCheck {
     // fixture share from the micro-batch machinery in the published
     // streaming ratios
     def fixtureTimes(dir: String): Seq[(String, Double)] =
-      graft.queries.PipelineQueries.streamFixtureWriters(spark, dir).toSeq
+      graft.queries.StreamQueries.streamFixtureWriters(spark, dir).toSeq
         .filter { case (name, _) => toRun.contains(name) }
         .map { case (name, write) =>
           val t = graft.queries.Tmp.scoped("graft-fixture") { scratch =>

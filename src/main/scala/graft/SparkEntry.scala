@@ -14,7 +14,9 @@ object SparkEntry {
 
   private def registry: Seq[Q] =
     CoreQueries.all ++ RelationalQueries.all ++ ApproxQueries.all ++
-      PipelineQueries.all ++ CorpusQueries.all
+      DedupQueries.all ++ VectorQueries.all ++ TextQueries.all ++
+      MediaQueries.all ++ PipelineQueries.all ++ SketchQueries.all ++
+      StreamQueries.all ++ GraphQueries.all ++ CorpusQueries.all
 
   /** Flagship query on /root/testdata/sf0.001; driver smoke-checks rows>0. */
   def entry(spark: SparkSession): DataFrame =

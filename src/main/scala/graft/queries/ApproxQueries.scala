@@ -91,10 +91,9 @@ object ApproxQueries {
       val total = li.count()
       val sampled = li.sample(withReplacement = false, 0.1, seed = 42).count()
       val tol = 6.0 * math.sqrt(0.1 * 0.9 / total)
-      val violations = if (math.abs(sampled.toDouble / total - 0.1) > tol) 1L else 0L
-      Gate.check(violations == 0L,
-        s"10% Bernoulli sample took $sampled of $total (tol ±${tol * 100}%)")
-      Seq((total, violations)).toDF("n_total", "n_violations")
+      Seq((total, Gate.violations((math.abs(sampled.toDouble / total - 0.1) <= tol) ->
+        s"10% Bernoulli sample took $sampled of $total (tol ±${tol * 100}%)")))
+        .toDF("n_total", "n_violations")
     },
 
     // R2: take_sample — exact-size sample (rdd.rs:717-783). Derived
@@ -146,25 +145,25 @@ object ApproxQueries {
         val cf = splits.map(countFp)
         (cf, cf.map(_._1))
       }
-      val notPartitioned: Long = if (total <= 100000L) {
+      val partitioned: (Boolean, String) = if (total <= 100000L) {
         def byRow(df: org.apache.spark.sql.DataFrame, as: String) =
           df.groupBy(keys.map(col): _*).agg(count(lit(1)).as(as))
-        byRow(li, "n_all")
+        val bad = byRow(li, "n_all")
           .join(byRow(splits(0), "n_a"), keys, "left")
           .join(byRow(splits(1), "n_b"), keys, "left")
           .where(coalesce(col("n_a"), lit(0L)) + coalesce(col("n_b"), lit(0L))
             =!= col("n_all"))
           .count()
+        (bad == 0L) -> s"randomSplit multiset-partition violations $bad"
       } else {
-        if (countFps(0)._2 + countFps(1)._2 == liFp) 0L else 1L
+        (countFps(0)._2 + countFps(1)._2 == liFp) ->
+          "randomSplit multiset fingerprint differs from the input's"
       }
-      val violations = notPartitioned +
-        (if (counts.sum == total) 0L else 1L) +
-        (if (math.abs(counts(0).toDouble / total - 0.7) <= 0.05) 0L else 1L)
-      Gate.check(violations == 0L,
-        s"randomSplit sizes ${counts.mkString(",")} of $total, " +
-          s"multiset-partition violations $notPartitioned")
-      Seq((total, violations)).toDF("n_total", "n_violations")
+      Seq((total, Gate.violations(partitioned,
+        (counts.sum == total) -> s"randomSplit sizes ${counts.mkString(",")} of $total",
+        (math.abs(counts(0).toDouble / total - 0.7) <= 0.05) ->
+          s"randomSplit first split ${counts(0)} of $total is not 70% ± 5%")))
+        .toDF("n_total", "n_violations")
     },
 
     // count_approx (rdd.rs:1030-1056; partial/count_evaluator.rs) — the final
@@ -202,9 +201,8 @@ object ApproxQueries {
         approx_count_distinct(col("l_orderkey"), rsd = 0.02).as("approx")).first()
       val (exact, approx) = (r.getLong(0), r.getLong(1))
       val relErr = math.abs(approx - exact).toDouble / exact
-      Gate.check(relErr <= 0.06, // 3x rsd — generous, deterministic sketch
-        s"HLL estimate $approx vs exact $exact: rel_err $relErr exceeds 3x rsd")
-      Seq((exact, if (relErr <= 0.06) 0L else 1L))
+      Seq((exact, Gate.violations((relErr <= 0.06) -> // 3x rsd — generous, deterministic sketch
+        s"HLL estimate $approx vs exact $exact: rel_err $relErr exceeds 3x rsd")))
         .toDF("exact", "n_violations")
     }
   )

@@ -533,8 +533,7 @@ object CoreQueries {
     Q("x_partitioned_write",
       """SELECT count(*) AS n_clicks, round(sum(value), 2) AS sum_value
         |FROM events WHERE event_type = 'click'""".stripMargin) { (s, dir) =>
-      val tmp = Tmp.dir("graft-partw")
-      try {
+      Tmp.scoped("graft-partw") { tmp =>
         Tables(s, dir, "events")
           .write.mode("overwrite").partitionBy("event_type")
           .parquet(tmp.toString)
@@ -552,10 +551,6 @@ object CoreQueries {
         Gate.check(out.first().getLong(0) == direct,
           s"pruned scan (${out.first().getLong(0)}) != direct partition read ($direct)")
         out
-      } finally {
-        import java.nio.file.Files
-        Files.walk(tmp).sorted(java.util.Comparator.reverseOrder())
-          .forEach(p => { Files.deleteIfExists(p); () })
       }
     },
 
@@ -569,10 +564,9 @@ object CoreQueries {
         |FROM lineitem JOIN orders ON l_orderkey = o_orderkey
         |WHERE l_orderkey % 5 = 0 AND o_orderkey % 5 = 0
         |GROUP BY o_orderstatus ORDER BY o_orderstatus""".stripMargin) { (s, dir) =>
-      val tmp = Tmp.dir("graft-buck")
       s.sql("DROP TABLE IF EXISTS graft_orders_b")
       s.sql("DROP TABLE IF EXISTS graft_lineitem_b")
-      try {
+      Tmp.scoped("graft-buck") { tmp => try {
         // deterministic 1/5 subset: the demo is the LAYOUT (bucketed scans
         // join with no exchange), not the write throughput
         Tables(s, dir, "orders").where(pmod(col("o_orderkey"), lit(5)) === 0)
@@ -602,10 +596,7 @@ object CoreQueries {
       } finally {
         s.sql("DROP TABLE IF EXISTS graft_orders_b")
         s.sql("DROP TABLE IF EXISTS graft_lineitem_b")
-        import java.nio.file.Files
-        Files.walk(tmp).sorted(java.util.Comparator.reverseOrder())
-          .forEach(p => { Files.deleteIfExists(p); () })
-      }
+      } }
     },
 
     // Bucket PRUNING on read: an equality filter on the bucket column
@@ -619,9 +610,8 @@ object CoreQueries {
         |CAST(sum(CAST(round(o_totalprice * 100, 0) AS BIGINT)) AS BIGINT)
         |  AS sum_cents
         |FROM orders WHERE o_orderkey = 32""".stripMargin) { (s, dir) =>
-      val tmp = Tmp.dir("graft-bprune")
       s.sql("DROP TABLE IF EXISTS graft_orders_bp")
-      try {
+      Tmp.scoped("graft-bprune") { tmp => try {
         Tables(s, dir, "orders")
           .write.mode("overwrite").option("path", tmp.resolve("o").toString)
           .bucketBy(8, "o_orderkey")
@@ -647,12 +637,7 @@ object CoreQueries {
               "one bucket")
           out
         } finally s.conf.set(key, prev)
-      } finally {
-        s.sql("DROP TABLE IF EXISTS graft_orders_bp")
-        import java.nio.file.Files
-        Files.walk(tmp).sorted(java.util.Comparator.reverseOrder())
-          .forEach(p => { Files.deleteIfExists(p); () })
-      }
+      } finally s.sql("DROP TABLE IF EXISTS graft_orders_bp") }
     },
 
     // Extension: range-sorted write — repartitionByRange + sortWithinPartitions

@@ -4,7 +4,7 @@ import graft.Tables
 import graft.operators.Bpe
 import org.apache.spark.sql.functions._
 
-/** Corpus-preparation extensions beyond PipelineQueries: global ordinal
+/** Corpus-preparation extensions beyond the other families: global ordinal
   * assignment, cross-document span-level dedup, URL parsing, one-pass
   * profiling, and BPE tokenizer-merge training. All DuckDB-oracled except
   * BPE (iterative argmax is not SQL-expressible; it is self-GATING
@@ -24,7 +24,7 @@ object CorpusQueries {
     * full-text exchange there costs less than the residual imbalance —
     * ScaleCheck's materialized corpora and a 100 TB deployment arrive in
     * >= cores splits, where the helper stays a no-op (unlike the
-    * unconditional PipelineQueries.par, whose cost is already priced
+    * unconditional Fixtures.par, whose cost is already priced
     * into committed SCALECHECK cells). df.rdd is one extra physical
     * planning of the scan subtree, paid once per query build — measured
     * in the per-query floor, not the kernel path.
@@ -303,9 +303,7 @@ object CorpusQueries {
       import graft.functions.TextFunctions.tokens
       val kCap = 1024
       val docs = Tables(s, dir, "documents").select("doc_id", "text")
-      val injected = docs.where(col("doc_id") < 20)
-        .select((col("doc_id") + 1000000L).as("doc_id"),
-          concat(col("text"), lit(" graftdup")).as("text"))
+      val injected = Fixtures.nearCopies(docs, 1000000L)
       def gstream(df: org.apache.spark.sql.DataFrame) = df.select(
         explode(graft_shingles(tokens(col("text")), 3)).as("g"))
       // NOT persisted: caching the corpus-sized exploded gram stream costs
@@ -802,10 +800,9 @@ object CorpusQueries {
         val heavy = words.groupBy("w").agg(count(lit(1)).as("c"))
           .where(col("c") >= thresh).collect().map(_.getString(0)).toSet
         val missedSet = heavy -- cand
-        Gate.check(heavy.nonEmpty, "no true heavy hitters — attestation is vacuous")
-        Gate.check(missedSet.isEmpty,
-          s"freqItems missed true heavy hitters: ${missedSet.take(5)}")
-        missedSet.size.toLong
+        Gate.violations(
+          heavy.nonEmpty -> "no true heavy hitters — attestation is vacuous",
+          missedSet.isEmpty -> s"freqItems missed true heavy hitters: ${missedSet.take(5)}")
       } else {
         // bench-scale: the full-vocabulary groupBy stays gate-side, but the
         // bench row keeps a MEASUREMENT (r6 advice): exact counts for just
@@ -819,9 +816,8 @@ object CorpusQueries {
           .groupBy("w").agg(count(lit(1)).as("c"))
           .collect().map(_.getString(0)).toSet
         val phantom = cand -- present
-        Gate.check(phantom.isEmpty,
+        Gate.violations(phantom.isEmpty ->
           s"freqItems emitted tokens absent from the corpus: ${phantom.take(5)}")
-        phantom.size.toLong
       }
       Seq((n, missed)).toDF("n_tokens", "n_missed")
     },
@@ -925,10 +921,10 @@ object CorpusQueries {
           if (lossless && structural) 0L else 1L)
       }.reduce((a, b) => (a._1 + b._1, a._2 + b._2, a._3 + b._3, a._4 + b._4))
       val (nTokens, totalChars, totalBpe, bad) = stats
-      Gate.check(bad == 0, s"$bad held-out words fail lossless/structural encode")
-      Gate.check(nTokens <= totalBpe && totalBpe <= totalChars,
-        s"encoded total $totalBpe outside [$nTokens, $totalChars]")
-      Seq((nTokens, totalChars, 0L))
+      Seq((nTokens, totalChars, Gate.violations(
+        (bad == 0) -> s"$bad held-out words fail lossless/structural encode",
+        (nTokens <= totalBpe && totalBpe <= totalChars) ->
+          s"encoded total $totalBpe outside [$nTokens, $totalChars]")))
         .toDF("n_tokens", "total_chars", "n_violations")
     }
   )

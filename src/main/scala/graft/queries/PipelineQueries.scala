@@ -1,1956 +1,14 @@
 package graft.queries
 
 import graft.Tables
-import graft.functions.TextFunctions
-import graft.operators.{Dedup, Multimodal, ProductQuantizer, Similarity}
-import java.nio.file.Path
-import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery}
-import org.apache.spark.sql.types.StructType
 
-/** Training-data pipeline extensions (builder prompt): deduplication,
-  * similarity search, multimodal columns, text analysis — each over the
-  * documents/embeddings fixture tables, DuckDB-oracled where the math is
-  * engine-portable, rows-only (stats rows, never empty) where it relies on
-  * Spark-internal hashing.
+/** Relational pipeline extensions: splits and sampling, cohorts and
+  * funnels, range / as-of / fuzzy joins, gap-fill, sessions, SCD2, upserts.
   */
 object PipelineQueries {
 
-  /** Injected-fixture id offset for the three queries ScaleCheck measures
-    * past 100x (x_jaccard_join, x_cross_dedup, x_knn_join). The rest of
-    * the suite injects at +1e6/+2e6, which caps structure-preserving
-    * replication at ~100x of sf0.1 (ids must stay below the offsets or
-    * the injected fixtures collide with replica ids); these three carry
-    * the steepest curves, so THEIR fixtures live at +1e10 to leave id
-    * headroom for the 1000x and 10000x corpora (10000x replica ids top
-    * out near 1.05e8 under the two-hop power-of-two stride; 1e8 — the
-    * r12 offset — would collide there). The offset appears verbatim in
-    * each query's oracle SQL via string interpolation — one constant,
-    * both arms.
-    */
-  private[graft] val BigOff = 10000000000L
-
-  /** The documents/embeddings fixtures are single parquet files — one scan
-    * partition — which serializes the sketch kernels onto one core. At
-    * 100 TB the input arrives in thousands of splits; locally we restore
-    * parallelism explicitly before compute-heavy operators.
-    */
-  private def par(df: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
-    df.repartition(df.sparkSession.sparkContext.defaultParallelism)
-
-  /** A file-source stream's input directory, written one generation at a
-    * time: the first write overwrites, later ones append. The streaming
-    * file source orders files by modification time, and a filesystem with
-    * coarse mtime granularity can tie two sequential writes. For the
-    * watermark-ordered fixtures (a later file must never carry data older
-    * than the watermark an earlier file established), ordering has to be
-    * explicit, not an artifact of write timing. So each generation's files
-    * are stamped after every earlier generation's: in part-file name order,
-    * 1 s apart, and the next generation starts at least 60 s later. Name
-    * order is range-partition order (the 5-digit task index), so a
-    * range-sharded generation is stamped oldest-first.
-    */
-  private[queries] final class OrderedSource(val path: String) {
-    private val stamped = scala.collection.mutable.Set.empty[String]
-    private var generations = 0
-    private var clock = System.currentTimeMillis()
-
-    /** Write `df` as the next generation; returns its file count. */
-    def write(df: DataFrame): Int = {
-      df.write.mode(if (generations == 0) "overwrite" else "append").parquet(path)
-      generations += 1
-      val fresh = new java.io.File(path).listFiles()
-        .filter(f => f.isFile && f.getName.startsWith("part-") && !stamped(f.getName))
-        .sortBy(_.getName)
-      fresh.zipWithIndex.foreach { case (f, i) =>
-        stamped += f.getName
-        java.nio.file.Files.setLastModifiedTime(f.toPath,
-          java.nio.file.attribute.FileTime.fromMillis(clock + i * 1000L))
-      }
-      clock += math.max(60000L, fresh.length * 1000L)
-      fresh.length
-    }
-
-    /** `df` RANGE-partitioned on ts into sorted shards, as one generation:
-      * shard k+1's minimum ts >= shard k's maximum ts, so the file source
-      * ingests them oldest-first and the watermark only ever advances at
-      * shard boundaries — no row arrives behind it. The shard count scales
-      * with `rows` (see timeShardCount).
-      */
-    def writeRanged(df: DataFrame, rows: Long): Int =
-      write(df.repartitionByRange(timeShardCount(rows), col("ts"))
-        .sortWithinPartitions("ts"))
-
-    /** This source as a stream of `schema` rows, `maxFiles` files per
-      * trigger.
-      */
-    def stream(s: SparkSession, schema: StructType, maxFiles: Int): DataFrame =
-      s.readStream.schema(schema).option("maxFilesPerTrigger", maxFiles)
-        .parquet(path)
-  }
-
-  /** The two-generation source fixture of the stream queries whose result
-    * does not depend on arrival order: `df` split by `firstHalf`. Each half
-    * is written with the SOURCE's own split count — no corpus exchange
-    * (the r9 repartition form still paid a full shuffle per half; the
-    * source's layout is already the sharding a real stream has, and the r8
-    * coalesce(1) form made the fixture write 81% of x_stream_upsert's
-    * published 100x total). `write` returns the larger generation's file
-    * count, so a consumer that sets maxFilesPerTrigger to it ingests about
-    * one generation per trigger.
-    */
-  private final case class TwoGen(df: DataFrame, firstHalf: Column) {
-    def write(src: OrderedSource): Int = {
-      val first = src.write(df.where(firstHalf))
-      math.max(1, math.max(first, src.write(df.where(!firstHalf))))
-    }
-  }
-
-  /** Median and latest event time of `ev`: the watermark fixtures' split
-    * point and the base their sentinels are placed from.
-    */
-  private def medianAndMax(ev: DataFrame): (Long, Long) = {
-    val b = ev.agg(expr("approx_percentile(unix_millis(ts), 0.5)"),
-      max(unix_millis(col("ts")))).first()
-    (b.getLong(0), b.getLong(1))
-  }
-
-  /** A watermark query's source fixture: `ev`'s rows before the split
-    * point as generation 0, the rest as generation 1, then one far-future
-    * sentinel row (user -1, type "sentinel", zero value) per offset past
-    * the latest event, each its own generation. A sentinel advances the
-    * watermark past every real event; the queries drop it by user or
-    * type. `sorted` writes each half as ONE time-sorted file: the restart
-    * queries' operators drop (or throw on) rows behind the watermark, and
-    * on a corpus that is not incidentally time-ordered (ScaleCheck's
-    * replicated tables) an unsorted file would trail its own watermark.
-    * Otherwise each half is one coalesced file. `split` returns the split
-    * point and the latest event time.
-    */
-  private final case class TimeSplit(ev: DataFrame, sorted: Boolean,
-      sentinelOffsetsMs: Seq[Long],
-      split: DataFrame => (Long, Long) = medianAndMax) {
-    /** Write the fixture to `src`, calling `between` after generation 0
-      * (the restart queries stop their first instance there); returns the
-      * split point.
-      */
-    def write(src: OrderedSource, between: () => Unit = () => ()): Long = {
-      val (mid, maxMs) = split(ev)
-      def half(df: DataFrame) = src.write(
-        if (sorted) df.repartition(1).sortWithinPartitions("ts") else df.coalesce(1))
-      half(ev.where(unix_millis(col("ts")) < mid))
-      between()
-      half(ev.where(unix_millis(col("ts")) >= mid))
-      import ev.sparkSession.implicits._
-      sentinelOffsetsMs.foreach(off => src.write(
-        Seq((-1L, new java.sql.Timestamp(maxMs + off), "sentinel", 0.0))
-          .toDF("user_id", "ts", "event_type", "value")
-          .select(ev.columns.toSeq.map(col): _*).coalesce(1)))
-      mid
-    }
-  }
-
-  /** Events of the users below `users`, ts as a timestamp: the watermark
-    * queries' streamed population. The user filter keeps it
-    * copy-0-constant under ScaleCheck replication.
-    */
-  private def userEvents(s: SparkSession, dir: String, users: Int,
-      withValue: Boolean): DataFrame =
-    Tables(s, dir, "events").where(col("user_id") < users)
-      .select(Seq(col("user_id"), col("ts").cast("timestamp").as("ts"),
-        col("event_type")) ++ (if (withValue) Seq(col("value")) else Nil): _*)
-
-  /** Shard-count rule shared by the ranged fixture writer and its
-    * consumers (the consuming stream sizes maxFilesPerTrigger and shuffle
-    * partitions off the same number). A single sorted file serializes the
-    * sort onto one core at replicated corpora; 16 shards bound the
-    * micro-batch count the consuming stream pays.
-    */
-  private def timeShardCount(rows: Long): Int =
-    math.max(2L, math.min(16L, rows / 250000L)).toInt
-
-  /** Start the stream `writer` describes, drain every available file and
-    * stop it — the one place the file-source queries run a stream to
-    * completion. The section runs at `partitions` shuffle partitions: a
-    * streaming agg instantiates one state store PER shuffle partition per
-    * micro-batch, so 4, not 32, for the few-thousand-row subsets. See
-    * withShufflePartitions for `noDataBatches`.
-    */
-  private def runToCompletion(s: SparkSession, ckpt: Path, partitions: Int = 4,
-      noDataBatches: Boolean = true)(writer: => DataStreamWriter[_]): StreamingQuery =
-    withShufflePartitions(s, partitions, noDataBatches) {
-      val q = writer.option("checkpointLocation", ckpt.toString).start()
-      try q.processAllAvailable() finally q.stop()
-      q
-    }
-
-  /** `ds` into a memory sink named `prefix` plus a UUID, so concurrent
-    * bench passes never share a table; read it back with
-    * `s.table(query.name)`.
-    */
-  private def memorySink[T](ds: Dataset[T], prefix: String,
-      mode: String = "append"): DataStreamWriter[T] =
-    ds.writeStream.format("memory").outputMode(mode)
-      .queryName(prefix + java.util.UUID.randomUUID().toString.replace("-", ""))
-
-  /** The sketch-in-stream queries' shared body: `fx` streamed as its two
-    * generations through a real foreachBatch sink that appends each
-    * micro-batch's per-day `sketches` to a state table. Returns the stored
-    * partials, one row per (day, micro-batch); the queries answer from
-    * them WITHOUT rescanning raw events.
-    */
-  private def dayPartials(s: SparkSession, tmp: Path, fx: TwoGen)(
-      sketches: Column*): DataFrame = {
-    val src = new OrderedSource(tmp.resolve("src").toString)
-    val state = tmp.resolve("state").toString
-    val genFiles = fx.write(src)
-    runToCompletion(s, tmp.resolve("ckpt")) {
-      src.stream(s, s.read.parquet(src.path).schema, genFiles)
-        .writeStream.foreachBatch { (batch: DataFrame, _: Long) =>
-          batch.groupBy(date_trunc("day", col("ts")).as("day"))
-            .agg(sketches.head, sketches.tail: _*)
-            .write.mode("append").parquet(state)
-          ()
-        }
-    }
-    s.read.parquet(state)
-  }
-
-  /** Gate shared by the order-insensitive stream sketches (CMS, HLL,
-    * KMV): each day's merged-of-stream-partials (`merged` over the stored
-    * partials) must equal the direct-over-raw sketch (`direct` over `ev`)
-    * BYTE-FOR-BYTE, as `same` compares them, and at least one day must
-    * hold more than one partial, or the cross-batch merge was never
-    * exercised. Returns the day count and the violation count.
-    */
-  private def mergedEqualsDirect(stored: DataFrame, ev: DataFrame,
-      merged: Seq[Column], direct: Seq[Column], same: Column): (Long, Long) = {
-    val perDay = stored.groupBy("day").agg(count(lit(1)).as("n_partials"), merged: _*)
-    val dayRows = perDay.join(
-        ev.groupBy(date_trunc("day", col("ts")).as("day")).agg(direct.head, direct.tail: _*),
-        "day")
-      .select(col("n_partials"), same.as("same")).collect()
-    val nDays = dayRows.length.toLong
-    val nMulti = dayRows.count(_.getAs[Long]("n_partials") > 1)
-    val mismatch = dayRows.count(r => !r.getAs[Boolean]("same"))
-    Gate.check(mismatch == 0,
-      s"$mismatch/$nDays days: merged-of-stream-partials != direct sketch")
-    Gate.check(nMulti >= 1,
-      "no day accumulated >1 partial — cross-batch merge not exercised")
-    (nDays, mismatch.toLong + (if (nMulti >= 1) 0L else 1L))
-  }
-
-  /** x_stream_upsert's source: the latest-wins projection, split at
-    * mid-month.
-    */
-  private def upsertSource(s: SparkSession, dir: String) = TwoGen(
-    Tables(s, dir, "events").select(col("event_id"), col("ts"), col("user_id"),
-      col("event_type"), round(col("value") * 100, 0).cast("long").as("cents")),
-    dayofmonth(col("ts")) <= 15)
-
-  private def indexProbeSource(s: SparkSession, dir: String) =
-    TwoGen(Tables(s, dir, "embeddings"), pmod(col("vec_id"), lit(2)) === 0)
-
-  private def quantileSource(s: SparkSession, dir: String) = TwoGen(
-    Tables(s, dir, "events").select(col("ts"),
-      round(col("value") * 100, 0).cast("long").cast("double").as("v")),
-    dayofmonth(col("ts")) <= 15)
-
-  /** (ts, user_id) split by USER parity, not by day: every day's events
-    * straddle both generations, so every day's sketch genuinely
-    * accumulates across micro-batch boundaries.
-    */
-  private def userParitySource(s: SparkSession, dir: String) = TwoGen(
-    Tables(s, dir, "events").select(col("ts"), col("user_id")),
-    pmod(col("user_id"), lit(2)) === 0)
-
-  private def windowSource(s: SparkSession, dir: String) =
-    TimeSplit(userEvents(s, dir, 40, withValue = true), sorted = false,
-      Seq(10800000L))
-
-  private def joinOuterSource(s: SparkSession, dir: String) =
-    TimeSplit(userEvents(s, dir, 40, withValue = false), sorted = false,
-      Seq(10800000L, 21600000L))
-
-  private def joinFullSource(s: SparkSession, dir: String) =
-    TimeSplit(userEvents(s, dir, 30, withValue = false), sorted = false,
-      Seq(10800000L, 21600000L))
-
-  private def restartAggSource(s: SparkSession, dir: String) =
-    TimeSplit(userEvents(s, dir, 25, withValue = true), sorted = true,
-      Seq(10800000L))
-
-  /** x_stream_sessionize_restart's session gap: 8 hours (see the query). */
-  private val RestartGapMs = 8L * 3600000L
-
-  private def sessionizeRestartSource(s: SparkSession, dir: String) =
-    TimeSplit(userEvents(s, dir, 35, withValue = true), sorted = true,
-      Seq(2 * RestartGapMs + 3600000L))
-
-  /** x_stream_join_restart's source. Its split point is placed AT the
-    * latest strictly-ordered matched pair (click strictly before purchase,
-    * data-derived, so it exists at every gate SF), not at the median; see
-    * the query.
-    */
-  private def joinRestartSource(s: SparkSession, dir: String) =
-    TimeSplit(userEvents(s, dir, 20, withValue = false), sorted = true,
-      Seq(10800000L, 21600000L), split = ev => {
-        val clicks = ev.where(col("event_type") === "click")
-          .select(col("user_id").as("cu"), col("ts").as("cts"))
-        val purchases = ev.where(col("event_type") === "purchase")
-          .select(col("user_id").as("pu"), col("ts").as("pts"))
-        // read the max as an Option: an absent strictly-ordered matched
-        // pair at some future SF/filter must surface as a diagnosable
-        // fixture-precondition failure, not an opaque NPE off a null
-        // aggregate (r11 advice)
-        val midRow = purchases.join(clicks,
-            col("cu") === col("pu") &&
-              col("cts") >= col("pts") - expr("INTERVAL 30 MINUTES") &&
-              col("cts") < col("pts"))
-          .agg(max(unix_millis(col("pts")))).first()
-        Gate.check(!midRow.isNullAt(0),
-          "fixture precondition failed: no click strictly before a " +
-            "purchase within 30min for any user_id < 20 — the straddle " +
-            "phase boundary cannot be placed at this SF/filter")
-        (midRow.getLong(0),
-          ev.agg(max(unix_millis(col("ts")))).first().getLong(0))
-      })
-
-  /** x_stream_dedup_rocksdb's events, their latest event time and their
-    * unique-id count. The shard count keys on DISTINCT ids: with duplicate
-    * ids a total-rows count would give the write a different shard
-    * geometry.
-    */
-  private def dedupRocksEvents(s: SparkSession, dir: String): (DataFrame, Long, Long) = {
-    val ev = Tables(s, dir, "events")
-      .select(col("event_id"), col("ts").cast("timestamp").as("ts"),
-        col("event_type"))
-    val stats = ev.agg(max(unix_millis(col("ts"))),
-      countDistinct(col("event_id"))).first()
-    (ev, stats.getLong(0), stats.getLong(1))
-  }
-
-  /** Per-query fixture writers/forcers keyed by query name — ScaleCheck
-    * times these to publish the fixture-construction share of each scale
-    * ratio (the part of the timed path that is strictly linear in data
-    * and exists only because the query builds its own input), and Bench
-    * runs each once before its timed passes. A stream entry calls the
-    * SAME fixture function, on the same source definition, that its
-    * query calls, so a fixture cell times the query's own writer: every
-    * generation, its mtime stamps and its sentinels (corpus-independent,
-    * so they add a constant). For x_stream_dedup_rocksdb that is phase
-    * A's ranged write. x_media_dedup's entry forces the per-document PNG
-    * RENDER — in production the image bytes exist, so the render is
-    * fixture, and it dominates the query's 100x point (~linear
-    * decode-per-row work); the audio and video entries do the same.
-    */
-  private[graft] def streamFixtureWriters(s: SparkSession,
-      dir: String): Map[String, String => Unit] = {
-    def fx(write: OrderedSource => Any): String => Unit =
-      src => { write(new OrderedSource(src)); () }
-    import s.implicits._
-    Map(
-      "x_stream_upsert" -> fx(upsertSource(s, dir).write(_)),
-      "x_stream_index_probe" -> fx(indexProbeSource(s, dir).write(_)),
-      "x_stream_dedup_rocksdb" -> fx { src =>
-        val (ev, _, nUnique) = dedupRocksEvents(s, dir)
-        src.writeRanged(ev, nUnique)
-      },
-      "x_media_dedup" -> (_ => {
-        Multimodal.asImageTable(Tables(s, dir, "documents"))
-          .map(_.payload.length.toLong).reduce(_ + _)
-        ()
-      }),
-      "x_audio_dedup" -> (_ => {
-        Multimodal.asAudioTable(Tables(s, dir, "documents"))
-          .map(_.payload.length.toLong).reduce(_ + _)
-        ()
-      }),
-      "x_video_dedup" -> (_ => {
-        Multimodal.asVideoTable(Tables(s, dir, "documents"))
-          .map(_.payload.length.toLong).reduce(_ + _)
-        ()
-      }),
-      "x_stream_quantile" -> fx(quantileSource(s, dir).write(_)),
-      "x_stream_window" -> fx(windowSource(s, dir).write(_)),
-      "x_stream_join_outer" -> fx(joinOuterSource(s, dir).write(_)),
-      "x_stream_join_full" -> fx(joinFullSource(s, dir).write(_)),
-      "x_stream_restart_agg" -> fx(restartAggSource(s, dir).write(_)),
-      "x_stream_sessionize_restart" -> fx(sessionizeRestartSource(s, dir).write(_)),
-      "x_stream_join_restart" -> fx(joinRestartSource(s, dir).write(_)),
-      "x_stream_kmv" -> fx(userParitySource(s, dir).write(_)))
-  }
-
-  /** Run `body` with spark.sql.shuffle.partitions temporarily lowered —
-    * for small-subset streaming sections, where every shuffle partition
-    * costs a state-store instance per micro-batch.
-    *
-    * noDataBatches=false additionally turns off watermark-advance-only
-    * micro-batches for the section (r15 optimization, guide §1.2: remove
-    * passes that compute nothing). ONLY for queries whose choreography
-    * already provides a flushing DATA trigger after every watermark
-    * advance (the two-sentinel stream-stream joins): their scaladocs
-    * were written assuming no-data batches never fire ("with a file
-    * source and no new file, that batch would never run"), so the engine
-    * default was running one extra full trigger per data batch — rows=0,
-    * measured 2.0-2.5 s each under contention — purely to advance a
-    * watermark the next sentinel advances anyway. Queries with a SINGLE
-    * sentinel (window/restart_agg/sessionize) DO rely on the trailing
-    * no-data batch to emit their last cohort and keep the default.
-    */
-  private[queries] def withShufflePartitions[T](s: org.apache.spark.sql.SparkSession,
-      n: Int, noDataBatches: Boolean = true)(body: => T): T = {
-    val key = "spark.sql.shuffle.partitions"
-    val ndKey = "spark.sql.streaming.noDataMicroBatches.enabled"
-    val prev = s.conf.get(key)
-    val prevNd = s.conf.get(ndKey)
-    s.conf.set(key, n.toString)
-    s.conf.set(ndKey, noDataBatches.toString)
-    try body finally {
-      s.conf.set(key, prev)
-      s.conf.set(ndKey, prevNd)
-    }
-  }
-
-  /** x_stream_dedup_rocksdb's full two-phase body, provider-parametric:
-    * the query runs it on RocksDB; ScaleCheck times the heap/RocksDB PAIR
-    * on the same corpus so the published row prices the backend tax
-    * instead of asserting it (r12 verdict #5 — STRESSCHECK had the 3g pair
-    * and the 1200m jvm_dead counterfactual, but the standard-heap
-    * crossover was unmeasured).
-    */
-  private[graft] def streamDedupBackendRun(s: SparkSession, dir: String,
-      provider: String): DataFrame = Tmp.scoped("graft-sdrocks") { tmp =>
-    import graft.streaming.StateBackend
-    val src = new OrderedSource(tmp.resolve("src").toString)
-    val out = tmp.resolve("out").toString
-    val (ev, maxMs, nUnique) = dedupRocksEvents(s, dir)
-    // batch/parallelism geometry scales with the corpus (the other
-    // stream queries pin tiny user_id<N populations; this one streams
-    // the WHOLE events table so the state stays stress-sized): ~4
-    // micro-batches regardless of scale, one state-store instance per
-    // core once the corpus is big enough to use them
-    val shards = timeShardCount(nUnique)
-    def runInstance(): Unit = StateBackend.withProvider(s, provider) {
-      val q = runToCompletion(s, tmp.resolve("ckpt"), math.min(32, shards * 2)) {
-        src.stream(s, ev.schema, math.max(1, shards / 4))
-          .withWatermark("ts", "60 minutes")
-          .dropDuplicatesWithinWatermark("event_id")
-          .writeStream.format("parquet").option("path", out)
-          .outputMode("append")
-      }
-      Gate.check(provider != StateBackend.RocksDb ||
-        StateBackend.rocksDbEngaged(q),
-        "RocksDB provider configured but no rocksdb state metrics " +
-          "reported — the heap provider ran instead")
-    }
-    // phase A: the whole corpus as RANGE-partitioned time-sorted shards
-    // (the dedup operator late-filters rows behind the watermark, so
-    // arrival order must follow event time — but a single sorted file
-    // serializes a 10M-row sort onto one core at the 100x corpus, and
-    // was the dominant term of this row's first 13.3x ScaleCheck
-    // ratio). Range shard k+1's min ts >= shard k's max ts, and the
-    // watermark only advances at batch boundaries, so per-shard
-    // ingestion stays late-row-free at any corpus order. Every
-    // event_id is first-seen here.
-    src.writeRanged(ev, nUnique)
-    runInstance()
-    val aRows = s.read.parquet(out).count()
-    Gate.check(aRows == nUnique,
-      s"phase A emitted $aRows of $nUnique unique events")
-    // phase B, after the kill: duplicates of the last-30-minutes slice
-    // (>= reloaded watermark maxTs-60min, so NOT late — droppable only
-    // via reloaded state) + one genuinely fresh sentinel row
-    import s.implicits._
-    src.write(ev.where(unix_millis(col("ts")) >= maxMs - 1800000L)
-      .unionByName(Seq((-1L,
-        new java.sql.Timestamp(maxMs + 7200000L), "sentinel"))
-        .toDF("event_id", "ts", "event_type"))
-      .repartition(1).sortWithinPartitions("ts"))
-    runInstance()
-    val all = s.read.parquet(out)
-    val bRows = all.count() - aRows
-    Gate.check(bRows == 1L,
-      s"phase B emitted $bRows rows, expected exactly the sentinel — " +
-        "in-horizon duplicates were not dropped by reloaded state")
-    all.where(col("event_type") =!= "sentinel")
-      .groupBy("event_type").agg(count(lit(1)).as("n_unique"))
-      .orderBy("event_type").localCheckpoint(true)
-  }
-
-  /** Recovery count shared by the media near-dup gates (two-tier protocol,
-    * r12): for each injected pair (a, a + 1e6) with a < 20, the copy is
-    * recovered when both sides share an exact-signature group (`groups`:
-    * (id, rep)) OR their representatives appear in the near-pair list
-    * (`near`: (id1, id2, ...) with id1 < id2).
-    */
-  private def recoveredViaGroupOrNear(groups: org.apache.spark.sql.DataFrame,
-      near: org.apache.spark.sql.DataFrame): Long = {
-    val cand = groups.where(col("id") < 20)
-      .select(col("id").as("a"), col("rep").as("ra"))
-      .join(groups.where(col("id") >= 1000000L)
-        .select((col("id") - 1000000L).as("a"), col("rep").as("rb")), "a")
-    val sameGroup = cand.where(col("ra") === col("rb")).count()
-    val viaNear = cand.where(col("ra") =!= col("rb"))
-      .join(near, least(col("ra"), col("rb")) === col("id1")
-        && greatest(col("ra"), col("rb")) === col("id2"))
-      .count()
-    sameGroup + viaNear
-  }
-
-  /** Deterministic near-duplicate perturbation for self-attestation:
-    * alternating +/-25% per-dim scale => cosine ~0.97 to the source —
-    * above the 0.95 dedup threshold but far enough from 1.0 that LSH
-    * buckets genuinely differ per table.
-    */
-  private[graft] def perturb(vec: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
-    transform(vec, (x, i) =>
-      x * (lit(1.0) + lit(0.25) * when(pmod(i, lit(2)) === 0, lit(1.0))
-        .otherwise(lit(-1.0))))
-
-  /** Gate-scale switch for the ANN family's exact attestation arms (the
-    * x_freq_items discipline, r6 judge directive): brute-force truth sets,
-    * composed re-searches and full re-rank checks run only when the corpus
-    * is at most this many rows — which holds at the driver's sf0.01
-    * correctness gate (embeddings = 500 rows) and not at bench SF (2000)
-    * or the ScaleCheck corpora, where the query times the OPERATOR. The
-    * contracts stay driver-visible because CORRECTNESS gates at sf0.01.
-    */
-  private val AnnExactVerifyMaxRows = 1000L
-
-  /** Shared DSIR weight model (x_dsir / x_dsir_sample): per-token
-    * integer-quantized log importance ratios against the src0 target
-    * domain. `sc` is (doc_id, lr) over every RAW (non-target) token; the
-    * bucket tables are B=256-row broadcasts, so the corpus makes exactly
-    * two passes (one grouped count to fit, one broadcast-join to score).
-    */
-  private val dsirWeightsSql: String =
-    """WITH tok AS (SELECT doc_id, source,
-      |  unnest(list_filter(string_split(lower(text), ' '), x -> x <> '')) AS t
-      |  FROM documents),
-      |tb AS (SELECT doc_id, source,
-      |  CAST(concat('0x', substr(md5(t), 1, 7)) AS BIGINT) % 256 AS b FROM tok),
-      |bg AS (SELECT b, count(*) FILTER (WHERE source = 'src0') AS ct,
-      |  count(*) FILTER (WHERE source <> 'src0') AS cr FROM tb GROUP BY b),
-      |tot AS (SELECT CAST(sum(ct) AS BIGINT) AS tt,
-      |  CAST(sum(cr) AS BIGINT) AS tr FROM bg),
-      |lr AS (SELECT bg.b, CAST(floor(ln(((bg.ct + 1.0) * (tot.tr + 256)) /
-      |  ((bg.cr + 1.0) * (tot.tt + 256))) * 1000000) AS BIGINT) AS lr
-      |  FROM bg CROSS JOIN tot),
-      |sc AS (SELECT tb.doc_id, lr.lr FROM tb JOIN lr USING (b)
-      |  WHERE tb.source <> 'src0')
-      |""".stripMargin
-
-  private def dsirTokenScores(s: org.apache.spark.sql.SparkSession,
-      dir: String): org.apache.spark.sql.DataFrame = {
-    val B = 256
-    val tb = Tables(s, dir, "documents")
-      .select(col("doc_id"), col("source"),
-        explode(split(lower(col("text")), " ")).as("t"))
-      .where(col("t") =!= "")
-      .select(col("doc_id"), col("source"),
-        pmod(conv(substring(md5(col("t").cast("binary")), 1, 7), 16, 10)
-          .cast("long"), lit(B)).as("b"))
-    val bg = tb.groupBy("b").agg(
-      count(when(col("source") === "src0", 1)).as("ct"),
-      count(when(col("source") =!= "src0", 1)).as("cr"))
-    val tot = bg.agg(sum("ct").as("tt"), sum("cr").as("tr"))
-    val lr = bg.crossJoin(broadcast(tot))
-      .withColumn("lr", floor(log(
-        ((col("ct") + lit(1.0)) * (col("tr") + lit(B))) /
-          ((col("cr") + lit(1.0)) * (col("tt") + lit(B)))) * lit(1000000))
-        .cast("long"))
-      .select("b", "lr")
-    tb.where(col("source") =!= "src0")
-      .join(broadcast(lr), "b")
-      .select("doc_id", "lr")
-  }
-
   val all: Seq[Q] = Seq(
-
-    // -- Deduplication --------------------------------------------------
-
-    // Exact dedup by content fingerprint (hash-groupBy).
-    Q("x_dedup_exact",
-      """SELECT source, count(*) AS n_docs, count(DISTINCT md5(lower(text))) AS n_unique
-        |FROM documents GROUP BY source ORDER BY source""".stripMargin) { (s, dir) =>
-      Tables(s, dir, "documents").groupBy("source")
-        .agg(count(lit(1)).as("n_docs"),
-          countDistinct(TextFunctions.fingerprintMd5(col("text"))).as("n_unique"))
-        .orderBy("source")
-    },
-
-    // Exact dedup keep-first materialization: survivor count must equal the
-    // distinct-fingerprint count.
-    Q("x_dedup_exact_keep_first",
-      """SELECT count(*) AS n_survivors FROM
-        |(SELECT min(doc_id) FROM documents GROUP BY md5(lower(text))) t""".stripMargin) { (s, dir) =>
-      val deduped = Dedup.exact(Tables(s, dir, "documents"), "doc_id", "text")
-      deduped.agg(count(lit(1)).as("n_survivors"))
-    },
-
-    // Cross-document BOILERPLATE paragraph removal — the CCNet/RefinedWeb
-    // corpus-cleaning pass between exact dedup (whole document) and
-    // near-dup: paragraphs recurring across more than 10% of documents
-    // (headers/footers/banners) are template noise; strip the PARAGRAPH,
-    // keep the document, reassemble in original order. The fixture
-    // injects two boilerplate paragraphs (a footer on every 3rd doc, a
-    // header on every 5th) into the REAL documents — plain SQL, so the
-    // oracle recomputes the whole rewritten corpus text-for-text: the
-    // df threshold, the removal, the order-preserving reassembly, and
-    // the docs-that-lost-nothing all pin exactly. The 10% threshold is
-    // corpus-relative (count/10), so the contract is scale-invariant
-    // under ScaleCheck replication.
-    Q("x_boilerplate_removal",
-      """WITH injected AS (SELECT doc_id,
-        |  CASE WHEN doc_id % 5 = 0 THEN 'copyright example corp all rights reserved'
-        |    || chr(10) || chr(10) ELSE '' END || text ||
-        |  CASE WHEN doc_id % 3 = 0 THEN chr(10) || chr(10) ||
-        |    'subscribe to our newsletter for weekly updates' ELSE '' END AS text
-        |  FROM documents),
-        |paras AS (SELECT doc_id,
-        |  unnest(string_split(text, chr(10)||chr(10))) AS para,
-        |  unnest(generate_series(1, len(string_split(text, chr(10)||chr(10))))) AS idx
-        |  FROM injected),
-        |bp AS (SELECT para FROM paras GROUP BY para
-        |  HAVING count(DISTINCT doc_id) > (SELECT count(*)//10 FROM documents)),
-        |kept AS (SELECT p.doc_id, p.para, p.idx FROM paras p
-        |  LEFT JOIN bp ON p.para = bp.para WHERE bp.para IS NULL),
-        |rebuilt AS (SELECT doc_id, string_agg(para, chr(10)||chr(10) ORDER BY idx) AS text
-        |  FROM kept GROUP BY doc_id)
-        |SELECT d.doc_id, coalesce(r.text, '') AS text
-        |FROM documents d LEFT JOIN rebuilt r ON d.doc_id = r.doc_id
-        |ORDER BY d.doc_id""".stripMargin) { (s, dir) =>
-      val docs = Tables(s, dir, "documents")
-      val maxDf = docs.count() / 10
-      val injected = docs.select(col("doc_id"),
-        concat(
-          when(col("doc_id") % 5 === 0,
-            lit("copyright example corp all rights reserved\n\n"))
-            .otherwise(lit("")),
-          col("text"),
-          when(col("doc_id") % 3 === 0,
-            lit("\n\nsubscribe to our newsletter for weekly updates"))
-            .otherwise(lit(""))).as("text"))
-      graft.operators.Boilerplate
-        .removeParagraphs(par(injected), "doc_id", "text", maxDf)
-        .orderBy("doc_id")
-    },
-
-    // MinHash+LSH near-dup. NEAR-copies (one token appended => jaccard
-    // ~0.98) of the 20 lowest-id long-enough docs are injected with id+1e6
-    // and every known pair must be recovered. Promoted to a full oracle
-    // (r5): DuckDB recomputes n_expected (the injected-copy population is
-    // plain SQL over documents) and pins n_found to that same count — the
-    // recall contract jaccard-0.98 pairs must meet at 16x4 banding. The
-    // banding internals (pair counts, avg jaccard) stay gate-side only:
-    // they depend on Spark's xxhash64, which SQL can't reproduce.
-    Q("x_dedup_minhash",
-      """SELECT CAST(count(*) AS BIGINT) AS n_expected,
-        |CAST(count(*) AS BIGINT) AS n_found FROM documents
-        |WHERE doc_id < 20 AND len(string_split(text, ' ')) >= 20""".stripMargin) { (s, dir) =>
-      val docs = par(Tables(s, dir, "documents")).select("doc_id", "text")
-      val injected = docs
-        .where(col("doc_id") < 20 && size(split(col("text"), " ")) >= 20)
-        .select((col("doc_id") + 1000000L).as("doc_id"),
-          concat(col("text"), lit(" graftdup")).as("text"))
-      val nExpected = injected.count()
-      val pairs = Dedup.minhashPairs(docs.unionByName(injected), "doc_id", "text",
-        shingleK = 3, numHashes = 64, numBands = 16, threshold = 0.8)
-      Gate(pairs.agg(count(lit(1)).as("n_dup_pairs"),
-        coalesce(round(avg("jaccard"), 4), lit(0.0)).as("avg_jaccard"),
-        lit(nExpected).as("n_expected"),
-        coalesce(sum(when(col("id1") < 20 &&
-          col("id2") === col("id1") + 1000000L, 1L)), lit(0L)).as("n_found")),
-        col("n_expected") > 0 && col("n_found") === col("n_expected"),
-        "minhash LSH must recover every injected near-copy pair")
-        .select(col("n_expected"), col("n_found"))
-    },
-
-    // SimHash near-dup: 20 EXACT copies injected (identical signature =>
-    // hamming 0, must land in every band bucket). Promoted to a full
-    // oracle (r5) on the same contract-as-output shape as x_dedup_minhash:
-    // exact copies have hamming 0 by construction, so recovery is a hard
-    // requirement, not a recall target.
-    Q("x_dedup_simhash",
-      """SELECT CAST(count(*) AS BIGINT) AS n_expected,
-        |CAST(count(*) AS BIGINT) AS n_found FROM documents
-        |WHERE doc_id < 20""".stripMargin) { (s, dir) =>
-      val docs = par(Tables(s, dir, "documents")).select("doc_id", "text")
-      val injected = docs.where(col("doc_id") < 20)
-        .select((col("doc_id") + 1000000L).as("doc_id"), col("text"))
-      val nExpected = injected.count()
-      val pairs = Dedup.simhashPairs(docs.unionByName(injected), "doc_id", "text",
-        maxHamming = 3)
-      Gate(pairs.agg(count(lit(1)).as("n_dup_pairs"),
-        coalesce(round(avg("hamming"), 4), lit(0.0)).as("avg_hamming"),
-        lit(nExpected).as("n_expected"),
-        coalesce(sum(when(col("id1") < 20 &&
-          col("id2") === col("id1") + 1000000L, 1L)), lit(0L)).as("n_found")),
-        col("n_expected") > 0 && col("n_found") === col("n_expected"),
-        "simhash must recover every injected exact-copy pair (hamming 0)")
-        .select(col("n_expected"), col("n_found"))
-    },
-
-    // Exact 3-gram Jaccard over consecutive-id pairs — fully portable math,
-    // so it gets a real oracle (DuckDB list lambdas).
-    Q("x_ngram_jaccard",
-      """WITH tok AS (SELECT doc_id, string_split(lower(text), ' ') AS t FROM documents),
-        |sh AS (SELECT doc_id, CASE WHEN len(t) >= 3 THEN
-        |  list_distinct(list_transform(generate_series(1, len(t)-2),
-        |    i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2]))
-        |  ELSE [array_to_string(t, ' ')] END AS s FROM tok)
-        |SELECT a.doc_id AS id1, b.doc_id AS id2,
-        |round(CAST(len(list_intersect(a.s, b.s)) AS DOUBLE)
-        |  / len(list_distinct(list_concat(a.s, b.s))), 4) AS jaccard
-        |FROM sh a JOIN sh b ON b.doc_id = a.doc_id + 1
-        |ORDER BY id1""".stripMargin) { (s, dir) =>
-      val docs = par(Tables(s, dir, "documents"))
-      val pairs = docs.select(col("doc_id").as("id1"),
-        (col("doc_id") + 1).as("id2"))
-      Dedup.jaccardOfPairs(pairs, docs, "doc_id", "text", shingleK = 3)
-        .select(col("id1"), col("id2"), round(col("jaccard"), 4).as("jaccard"))
-        .orderBy("id1")
-    },
-
-    // EXACT set-similarity self-join (prefix-filtered, AllPairs/PPJoin
-    // family): every pair with 3-gram Jaccard >= 0.8 — deterministic, so
-    // the oracle is the FULL pair list with values, brute-forced in DuckDB
-    // through an unfiltered shared-shingle inverted join (an exact
-    // candidate superset; the engine's prefix filter must lose nothing
-    // against it). 20 injected near-copies (one appended token, J ~ m/(m+1))
-    // guarantee the result is non-trivially populated at every SF.
-    Q("x_jaccard_join",
-      s"""WITH corpus AS (
-        |  SELECT doc_id, lower(text) AS text FROM documents
-        |  UNION ALL
-        |  SELECT doc_id + $BigOff, lower(text) || ' graftdup' FROM documents
-        |  WHERE doc_id < 20),
-        |tok AS (SELECT doc_id, string_split(text, ' ') AS t FROM corpus),
-        |sh AS (SELECT doc_id, CASE WHEN len(t) >= 3 THEN
-        |  list_distinct(list_transform(generate_series(1, len(t)-2),
-        |    i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2]))
-        |  ELSE [array_to_string(t, ' ')] END AS s FROM tok),
-        |inv AS (SELECT doc_id, unnest(s) AS g FROM sh),
-        |cand AS (SELECT DISTINCT a.doc_id AS id1, b.doc_id AS id2
-        |  FROM inv a JOIN inv b ON a.g = b.g AND a.doc_id < b.doc_id)
-        |SELECT c.id1, c.id2,
-        |round(CAST(len(list_intersect(x.s, y.s)) AS DOUBLE)
-        |  / len(list_distinct(list_concat(x.s, y.s))), 4) AS jaccard
-        |FROM cand c JOIN sh x ON x.doc_id = c.id1 JOIN sh y ON y.doc_id = c.id2
-        |WHERE CAST(len(list_intersect(x.s, y.s)) AS DOUBLE)
-        |  / len(list_distinct(list_concat(x.s, y.s))) >= 0.8
-        |ORDER BY id1, id2""".stripMargin) { (s, dir) =>
-      val docs = par(Tables(s, dir, "documents")).select("doc_id", "text")
-      val injected = docs.where(col("doc_id") < 20)
-        .select((col("doc_id") + BigOff).as("doc_id"),
-          concat(col("text"), lit(" graftdup")).as("text"))
-      Dedup.ppjoinPairs(docs.unionByName(injected), "doc_id", "text",
-        shingleK = 3, threshold = 0.8)
-        .select(col("id1"), col("id2"),
-          round(col("jaccard"), 4).as("jaccard"))
-        .orderBy("id1", "id2")
-    },
-
-    // Cross-corpus near-dedup (decontamination): flag every corpus
-    // document whose 3-gram Jaccard with ANY reference document is >=
-    // 0.8 — the "remove training docs near-duplicate of an eval
-    // benchmark" pipeline op. EXACT bipartite prefix join
-    // (Dedup.crossJaccardJoin, the R-S AllPairs/PPJoin form): zero false
-    // negatives, which is the property decontamination actually needs —
-    // a missed benchmark leak is a poisoned eval, so probabilistic LSH
-    // recall is the wrong contract here. Fixture: refs = docs with id <
-    // 50 drawn FROM the corpus (verbatim leak: every ref matches itself
-    // at J = 1) plus 20 injected " graftdup" near-copies of ref docs
-    // (paraphrased leak at J ~ 0.86-0.99 for long docs). The oracle
-    // re-enumerates the full (corpus x refs) truth in DuckDB and pins
-    // the complete pair LIST with jaccards — organic borderline pairs
-    // included, which only an exact join can promise to match.
-    Q("x_cross_dedup",
-      s"""WITH corpus AS (
-        |  SELECT doc_id, lower(text) AS text FROM documents
-        |  UNION ALL
-        |  SELECT doc_id + $BigOff, lower(text) || ' graftdup' FROM documents
-        |  WHERE doc_id < 20),
-        |refs AS (SELECT doc_id, lower(text) AS text FROM documents
-        |  WHERE doc_id < 50),
-        |tc AS (SELECT doc_id, string_split(text, ' ') AS t FROM corpus),
-        |sc AS (SELECT doc_id, CASE WHEN len(t) >= 3 THEN
-        |  list_distinct(list_transform(generate_series(1, len(t)-2),
-        |    i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2]))
-        |  ELSE [array_to_string(t, ' ')] END AS s FROM tc),
-        |tr AS (SELECT doc_id, string_split(text, ' ') AS t FROM refs),
-        |sr AS (SELECT doc_id, CASE WHEN len(t) >= 3 THEN
-        |  list_distinct(list_transform(generate_series(1, len(t)-2),
-        |    i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2]))
-        |  ELSE [array_to_string(t, ' ')] END AS s FROM tr),
-        |ic AS (SELECT doc_id, unnest(s) AS g FROM sc),
-        |ir AS (SELECT doc_id, unnest(s) AS g FROM sr),
-        |cand AS (SELECT DISTINCT a.doc_id AS id1, b.doc_id AS id2
-        |  FROM ic a JOIN ir b ON a.g = b.g)
-        |SELECT c.id1, c.id2,
-        |round(CAST(len(list_intersect(x.s, y.s)) AS DOUBLE)
-        |  / len(list_distinct(list_concat(x.s, y.s))), 4) AS jaccard
-        |FROM cand c JOIN sc x ON x.doc_id = c.id1
-        |  JOIN sr y ON y.doc_id = c.id2
-        |WHERE CAST(len(list_intersect(x.s, y.s)) AS DOUBLE)
-        |  / len(list_distinct(list_concat(x.s, y.s))) >= 0.8
-        |ORDER BY id1, id2""".stripMargin) { (s, dir) =>
-      val docs = par(Tables(s, dir, "documents")).select("doc_id", "text")
-      val injected = docs.where(col("doc_id") < 20)
-        .select((col("doc_id") + BigOff).as("doc_id"),
-          concat(col("text"), lit(" graftdup")).as("text"))
-      val refs = docs.where(col("doc_id") < 50)
-        .select(col("doc_id").as("ref_id"), col("text").as("ref_text"))
-      Dedup.crossJaccardJoin(docs.unionByName(injected), "doc_id", "text",
-        refs, "ref_id", "ref_text", shingleK = 3, threshold = 0.8)
-        .select(col("id1"), col("id2"),
-          round(col("jaccard"), 4).as("jaccard"))
-        .orderBy("id1", "id2")
-    },
-
-    // Distributed connected components (large-star/small-star) over a
-    // deterministic chain graph: doc i ~ doc i+1 within each decade, so the
-    // true clusters have a CLOSED FORM the SQL oracle states directly —
-    // an end-to-end oracle on the iterative distributed algorithm itself
-    // (chains are its worst convergence case; cliques its best).
-    Q("x_cluster_cc",
-      """SELECT doc_id AS id, doc_id - doc_id % 10 AS cluster
-        |FROM documents ORDER BY id""".stripMargin) { (s, dir) =>
-      val d = Tables(s, dir, "documents").select("doc_id")
-      // cap at the real max id: if the table ever ends mid-decade, the last
-      // doc must not edge to a nonexistent neighbor (the oracle has no such
-      // row); a doc left with no edge at all still labels itself below.
-      // 8 shuffle partitions: CC runs ~4 rounds x several aggregate-sized
-      // jobs over a doc-count-sized edge list — scheduler floor, not data.
-      val maxId = d.agg(max("doc_id")).first().getLong(0)
-      withShufflePartitions(s, 8) {
-        val edges = d.where(pmod(col("doc_id"), lit(10)) =!= 9 &&
-            col("doc_id") < maxId)
-          .select(col("doc_id").as("a"), (col("doc_id") + 1).as("b"))
-        val labels = graft.operators.ConnectedComponents.clusters(edges, "a", "b")
-        d.join(labels, col("doc_id") === col("id"), "left")
-          .select(col("doc_id").as("id"),
-            coalesce(col("cluster"), col("doc_id")).as("cluster"))
-          .orderBy("id")
-      }
-    },
-
-    // Canonical-document selection — the step AFTER clustering in every
-    // dedup pipeline: each near-dup cluster keeps ONE representative
-    // (here: longest text, doc_id tie-break) and sheds the rest. Runs
-    // the REAL distributed path (chain-decade edges -> large-star/
-    // small-star CC -> per-cluster max_by) while the closed-form
-    // clusters make the full (cluster, canonical, size) table
-    // SQL-derivable — a row-level oracle over the selection itself, not
-    // just counts. max_by on a (length, id) struct == arg_max on the
-    // composite integer key in DuckDB (length*1e7 + id, collision-free
-    // below 1e7 ids).
-    Q("x_dedup_canonical",
-      """SELECT doc_id - doc_id % 10 AS cluster,
-        |CAST(arg_max(doc_id, length(text) * 10000000 + doc_id) AS BIGINT)
-        |  AS canonical_id,
-        |count(*) AS n_members
-        |FROM documents GROUP BY 1 ORDER BY cluster""".stripMargin) { (s, dir) =>
-      val docs = Tables(s, dir, "documents").select("doc_id", "text")
-      val maxId = docs.agg(max("doc_id")).first().getLong(0)
-      withShufflePartitions(s, 8) {
-        val edges = docs.where(pmod(col("doc_id"), lit(10)) =!= 9 &&
-            col("doc_id") < maxId)
-          .select(col("doc_id").as("a"), (col("doc_id") + 1).as("b"))
-        val labels = graft.operators.ConnectedComponents.clusters(edges, "a", "b")
-        docs.join(labels, col("doc_id") === col("id"), "left")
-          .select(col("doc_id"),
-            coalesce(col("cluster"), col("doc_id")).as("cluster"),
-            (length(col("text")).cast("long") * 10000000L + col("doc_id"))
-              .as("keyv"))
-          .groupBy("cluster")
-          .agg(max_by(col("doc_id"), col("keyv")).as("canonical_id"),
-            count(lit(1)).as("n_members"))
-          .orderBy("cluster")
-      }
-    },
-
-    // Leakage-safe train/val/test split — near-dup clusters are the unit
-    // of assignment (a pair straddling splits leaks paraphrases into the
-    // held-out set). Runs the REAL distributed path (chain-decade edges ->
-    // large-star/small-star CC -> per-CLUSTER md5-hex bucketing at
-    // 80/10/10) while the closed-form clusters make every output row
-    // SQL-derivable: both engines compute the identical md5 of the
-    // identical salt||cluster bytes and compare the same 4 lowercase hex
-    // chars against the same thresholds (0.8*16^4 = 0xcccc, 0.9*16^4 =
-    // 0xe666) — a full row-level oracle over the assignment itself,
-    // including group atomicity (the oracle's split is a function of
-    // cluster alone, so a straddling cluster is a hash mismatch).
-    Q("x_leakage_split",
-      """SELECT doc_id AS id, doc_id - doc_id % 10 AS cluster,
-        |CASE WHEN substring(md5('graft' ||
-        |    CAST(doc_id - doc_id % 10 AS VARCHAR)), 1, 4) < 'cccc'
-        |  THEN 'train'
-        |WHEN substring(md5('graft' ||
-        |    CAST(doc_id - doc_id % 10 AS VARCHAR)), 1, 4) < 'e666'
-        |  THEN 'val'
-        |ELSE 'test' END AS split
-        |FROM documents ORDER BY id""".stripMargin) { (s, dir) =>
-      val d = Tables(s, dir, "documents").select("doc_id")
-      val maxId = d.agg(max("doc_id")).first().getLong(0)
-      withShufflePartitions(s, 8) {
-        val edges = d.where(pmod(col("doc_id"), lit(10)) =!= 9 &&
-            col("doc_id") < maxId)
-          .select(col("doc_id").as("a"), (col("doc_id") + 1).as("b"))
-        graft.operators.LeakageSplit.assign(d, "doc_id", edges, "a", "b",
-            salt = "graft")
-          .orderBy("id")
-      }
-    },
-
-    // Pairs -> clusters -> representatives: the full dedup pipeline. Chains
-    // of near-copies (src ~ copy1 ~ copy2, one more token per hop) are
-    // injected; transitive clustering must put all three in ONE cluster even
-    // if the src~copy2 similarity alone were below threshold. GATED, and
-    // promoted to a full oracle (r5): the chain population is plain SQL
-    // over documents, and transitivity demands every one of the 2-per-chain
-    // copies land in its source's cluster — so DuckDB pins n_found to
-    // n_expected.
-    Q("x_dedup_clusters",
-      """SELECT CAST(2 * count(*) AS BIGINT) AS n_expected,
-        |CAST(2 * count(*) AS BIGINT) AS n_found FROM documents
-        |WHERE doc_id < 20 AND length(text) > 200""".stripMargin) { (s, dir) =>
-      val docs = par(Tables(s, dir, "documents")).select("doc_id", "text")
-      def copies(off: Long, suffix: String) = docs
-        .where(col("doc_id") < 20 && length(col("text")) > 200)
-        .select((col("doc_id") + off).as("doc_id"),
-          concat(col("text"), lit(suffix)).as("text"))
-      val l1 = copies(1000000L, " zzqx")
-      val l2 = copies(2000000L, " zzqx yyqk")
-      val nChains = l1.count()
-      val pairs = Dedup.minhashPairs(docs.unionByName(l1).unionByName(l2),
-        "doc_id", "text", shingleK = 3, numHashes = 64, numBands = 16,
-        threshold = 0.8)
-      // pair graph is tiny (near-dup pairs only) — CC rounds are scheduler-
-      // bound at 32 shuffle partitions
-      val labels = withShufflePartitions(s, 8) {
-        graft.operators.ConnectedComponents.clusters(pairs, "id1", "id2")
-      }
-      // each copy must land in its source's cluster (not merely any cluster:
-      // organic near-dups may merge chains, so compare against the source's
-      // own label rather than a closed-form min)
-      val srcLab = labels.select(col("id").as("src"), col("cluster").as("src_cluster"))
-      val okCopies = labels.where(col("id") >= 1000000L)
-        .withColumn("src", pmod(col("id"), lit(1000000L)))
-        .join(srcLab, "src")
-        .where(col("cluster") === col("src_cluster"))
-        .count()
-      Gate.check(nChains > 0 && okCopies == 2 * nChains,
-        s"cluster dedup linked only $okCopies/${2 * nChains} chained copies to their source")
-      import s.implicits._
-      Seq((2 * nChains, okCopies)).toDF("n_expected", "n_found")
-    },
-
-    // Embedding-cosine near-dup via OR-amplified hyperplane LSH: 20
-    // perturbed copies (alternating +/-25% per-dim scale => cosine ~0.97,
-    // above the 0.95 threshold but far enough from 1.0 that buckets
-    // genuinely differ per table) are injected with id+1e6. Promoted to a
-    // full oracle (r5): recovery is probabilistic (~0.99 per pair OR-ed
-    // over 8 tables), so the oracle pins the SQL-computable population and
-    // a violation count the >=18/20 recall contract makes exactly 0 —
-    // n_found itself stays gate-side (its exact value is hash-seed luck).
-    Q("x_dedup_embedding",
-      """SELECT CAST(count(*) AS BIGINT) AS n_expected,
-        |CAST(0 AS BIGINT) AS n_violations FROM embeddings
-        |WHERE vec_id < 20""".stripMargin) { (s, dir) =>
-      val emb = par(Tables(s, dir, "embeddings"))
-        .select(col("vec_id"), col("embedding").cast("array<double>").as("embedding"))
-      val injected = emb.where(col("vec_id") < 20)
-        .select((col("vec_id") + 1000000L).as("vec_id"),
-          perturb(col("embedding")).as("embedding"))
-      val n = emb.count()
-      // Plane count scales with the CORPUS, not a constant: fixed planes
-      // mean bucket occupancy grows linearly with n and the within-bucket
-      // pair work quadratically — measured 17x time at 10x data before
-      // this (ScaleCheck r6). r8 retune from the r7 pair-count decomposition
-      // (pairs grew 22.6x at 10x under the occupancy-16 / planes+1-tables
-      // schedule): a VERIFIER wants occupancy ~2 — every sub-threshold
-      // cohabitant is verify waste, recall comes from the signature — and
-      // the table count comes from the 0.98-recall contract at the 0.95
-      // threshold (Similarity.tablesForRecall), not planes+1. At the
-      // sf0.01 gate this lands on the SAME planes=8/tables=8 the old
-      // schedule used, so gate behavior is bit-identical there.
-      val planes = Similarity.adaptivePlanes(n, targetOccupancy = 2)
-      val tables = Similarity.tablesForRecall(planes, cosine = 0.95)
-      val pairs = Dedup.embeddingNearDup(emb.unionByName(injected),
-        "vec_id", "embedding", threshold = 0.95,
-        numPlanes = planes, numTables = tables)
-      // >= 18/20: each injected pair survives a single hyperplane table with
-      // p ~0.4 and the 8-table OR lifts that to ~0.99 — one unlucky pair is
-      // within seed variance, a broken kernel scores ~0.
-      Gate(pairs.agg(count(lit(1)).as("n_dup_pairs"),
-        lit(20L).as("n_expected"),
-        coalesce(sum(when(col("id1") < 20 &&
-          col("id2") === col("id1") + 1000000L, 1L)), lit(0L)).as("n_found")),
-        col("n_found") >= 18,
-        "embedding LSH must recover >=18/20 injected cosine-0.97 pairs")
-        .select(col("n_expected"),
-          (col("n_found") < 18).cast("long").as("n_violations"))
-    },
-
-    // SemDeDup-style SEMANTIC dedup (Abbas et al. arXiv:2303.09540): k-means
-    // clusters as the candidate buckets instead of data-oblivious LSH
-    // tables — the curation pass that removes "same meaning, different
-    // words" duplicates at a high cosine threshold. 20 injected copies at
-    // +/-10% alternating per-dim scale (cosine ~0.995, above the 0.99
-    // threshold; direction moves ~5.7 degrees, so cluster assignment is
-    // genuinely at risk on a Voronoi face — which the operator's top-2
-    // multi-assignment exists to absorb). Oracle pins the SQL-computable
-    // population and a violation count the >=18/20 recall contract makes
-    // exactly 0; n_found itself stays gate-side (centroid-seed luck).
-    // Schedule: nlist ~ n/48 caps at 4096 — fit cost n*nlist per Lloyd's
-    // pass, candidate cost n*(2n/nlist), so the cap trades fit time for
-    // occupancy exactly where the maxOccupancy split takes over the bound.
-    Q("x_semdedup",
-      """SELECT CAST(count(*) AS BIGINT) AS n_expected,
-        |CAST(0 AS BIGINT) AS n_violations FROM embeddings
-        |WHERE vec_id < 20""".stripMargin) { (s, dir) =>
-      val emb = par(Tables(s, dir, "embeddings"))
-        .select(col("vec_id"), col("embedding").cast("array<double>").as("embedding"))
-      val injected = emb.where(col("vec_id") < 20)
-        .select((col("vec_id") + 1000000L).as("vec_id"),
-          transform(col("embedding"), (x, i) =>
-            x * (lit(1.0) + lit(0.10) * when(pmod(i, lit(2)) === 0, lit(1.0))
-              .otherwise(lit(-1.0)))).as("embedding"))
-      val n = emb.count()
-      val nlist = math.max(16L, math.min(4096L, n / 48)).toInt
-      val pairs = Dedup.semanticNearDup(emb.unionByName(injected),
-        "vec_id", "embedding", threshold = 0.99,
-        nlist = nlist, iterations = 3, maxOccupancy = 384)
-      // >=18/20: a pair misses only if the copy's 5.7-degree rotation exits
-      // BOTH of the source's top-2 clusters AND both of its own — the
-      // multi-assignment overlap makes that a tail event; a broken
-      // assignment or pair kernel scores ~0.
-      Gate(pairs.agg(count(lit(1)).as("n_dup_pairs"),
-        lit(20L).as("n_expected"),
-        coalesce(sum(when(col("id1") < 20 &&
-          col("id2") === col("id1") + 1000000L, 1L)), lit(0L)).as("n_found")),
-        col("n_found") >= 18,
-        "semantic dedup must recover >=18/20 injected cosine-0.995 pairs")
-        .select(col("n_expected"),
-          (col("n_found") < 18).cast("long").as("n_violations"))
-    },
-
-    // SemDeDup pruned-corpus materialization — the paper's actual output:
-    // pairs -> connected components -> keep the min-id representative per
-    // duplicate group, everything else drops. Composes semanticNearDup
-    // with the same CC machinery x_dedup_clusters proves for minhash.
-    // The fixture is fully characterized (DuckDB brute force: ZERO
-    // organic cosine>=0.99 pairs at every SF), so the gates pin the set
-    // algebra exactly: survivors + dropped == corpus+injected, only
-    // injected ids (>=1e6) ever drop, every dropped id's keeper is its
-    // own source, and >=18/20 injected copies are pruned.
-    Q("x_semdedup_prune",
-      """SELECT CAST(count(*) AS BIGINT) AS n_corpus,
-        |CAST(0 AS BIGINT) AS n_violations FROM embeddings""".stripMargin) { (s, dir) =>
-      val emb = par(Tables(s, dir, "embeddings"))
-        .select(col("vec_id"), col("embedding").cast("array<double>").as("embedding"))
-      val injected = emb.where(col("vec_id") < 20)
-        .select((col("vec_id") + 1000000L).as("vec_id"),
-          transform(col("embedding"), (x, i) =>
-            x * (lit(1.0) + lit(0.10) * when(pmod(i, lit(2)) === 0, lit(1.0))
-              .otherwise(lit(-1.0)))).as("embedding"))
-      val corpus = emb.unionByName(injected)
-      val n = emb.count()
-      val nlist = math.max(16L, math.min(4096L, n / 48)).toInt
-      val pairs = Dedup.semanticNearDup(corpus, "vec_id", "embedding",
-        threshold = 0.99, nlist = nlist, iterations = 3, maxOccupancy = 384)
-      val reps = graft.operators.ConnectedComponents.representatives(
-        corpus.select("vec_id"), "vec_id", pairs, "id1", "id2")
-        .localCheckpoint(true)
-      val stats = reps.agg(
-        count(lit(1)).as("total"),
-        coalesce(sum(when(col("is_representative"), 1L)), lit(0L)).as("survivors"),
-        coalesce(sum(when(!col("is_representative"), 1L)), lit(0L)).as("dropped"),
-        coalesce(sum(when(!col("is_representative") &&
-          col("vec_id") < 1000000L, 1L)), lit(0L)).as("organic_drops"),
-        coalesce(sum(when(!col("is_representative") &&
-          col("cluster") =!= col("vec_id") - 1000000L, 1L)), lit(0L))
-          .as("wrong_keeper")).collect()(0)
-      val (total, survivors, dropped) =
-        (stats.getLong(0), stats.getLong(1), stats.getLong(2))
-      Gate.check(total == n + 20 && survivors + dropped == total,
-        s"prune set algebra broken: total=$total survivors=$survivors dropped=$dropped")
-      Gate.check(stats.getLong(3) == 0,
-        s"${stats.getLong(3)} organic rows pruned (fixture has zero organic pairs)")
-      Gate.check(stats.getLong(4) == 0,
-        s"${stats.getLong(4)} dropped copies kept by a non-source representative")
-      Gate.check(dropped >= 18, s"only $dropped/20 injected copies pruned")
-      import s.implicits._
-      Seq((n, if (dropped >= 18) 0L else 1L)).toDF("n_corpus", "n_violations")
-    },
-
-    // -- Similarity search ---------------------------------------------
-
-    // Brute-force cosine top-10 for 5 query vectors — portable math, real
-    // oracle via DuckDB list_cosine_similarity (double-cast both sides).
-    Q("x_ann_bruteforce",
-      """SELECT q.vec_id AS qid, e.vec_id AS vid,
-        |round(list_cosine_similarity(CAST(e.embedding AS DOUBLE[]),
-        |  CAST(q.embedding AS DOUBLE[])), 4) AS sim
-        |FROM embeddings q, embeddings e WHERE q.vec_id < 5
-        |QUALIFY row_number() OVER (PARTITION BY q.vec_id
-        |  ORDER BY sim DESC, e.vec_id) <= 10
-        |ORDER BY qid, sim DESC, vid""".stripMargin) { (s, dir) =>
-      val emb = par(Tables(s, dir, "embeddings"))
-      Similarity.bruteForceTopK(emb, emb.where(col("vec_id") < 5),
-        "vec_id", "embedding", k = 10)
-        .orderBy(col("qid"), col("sim").desc, col("vid"))
-    },
-
-    // LSH-bucketed approximate variant (the at-scale path), self-attesting:
-    // LSH retrieves NEAR neighbors, so the recall metric uses queries that
-    // have one — 20 perturbed copies (cosine ~0.97) plus 5 BLENDED probes
-    // (source + 0.5x another corpus vector => cosine ~0.89, direction moved
-    // by a real vector rather than per-dim scaling — the organic-neighbor
-    // regime). (Recall@10 against organic brute-force truth stays the wrong
-    // yardstick: this fixture's rank-2..10 "neighbors" sit at cosine ~0.3,
-    // which no LSH family is meant to bucket together.) GATED: expected
-    // collision over 8 OR-ed tables is ~0.99 per perturbed and ~0.94 per
-    // blended probe; <22/25 means the kernel broke (a broken one scores ~0).
-    // Promoted to a full oracle (r5): the probe population (20 perturbed +
-    // 5 blended) is plain SQL over embeddings, and the >=22/25 recall
-    // contract becomes a violation count the oracle pins to 0.
-    Q("x_ann_lsh",
-      """SELECT CAST(count(*) FILTER (WHERE vec_id < 20)
-        |  + count(*) FILTER (WHERE vec_id < 5) AS BIGINT) AS n_expected,
-        |CAST(0 AS BIGINT) AS n_violations FROM embeddings""".stripMargin) { (s, dir) =>
-      val emb = par(Tables(s, dir, "embeddings"))
-        .select(col("vec_id"), col("embedding").cast("array<double>").as("embedding"))
-      val perturbed = emb.where(col("vec_id") < 20)
-        .select((col("vec_id") + 1000000L).as("vec_id"),
-          perturb(col("embedding")).as("embedding"))
-      val others = emb.where(col("vec_id") >= 100 && col("vec_id") < 105)
-        .select((col("vec_id") - 100).as("vec_id"), col("embedding").as("other"))
-      val blended = emb.where(col("vec_id") < 5).join(others, "vec_id")
-        .select((col("vec_id") + 2000000L).as("vec_id"),
-          zip_with(col("embedding"), col("other"),
-            (a, b) => a + lit(0.5) * b).as("embedding"))
-      val queries = perturbed.unionByName(blended)
-      val topk = Similarity.lshTopK(emb, queries, "vec_id", "embedding",
-        k = 10, numPlanes = 8, numTables = 8)
-      val nFound = topk.where(col("vid") === col("qid") - 1000000L ||
-        col("vid") === col("qid") - 2000000L).count()
-      Gate.check(nFound >= 22,
-        s"LSH top-k recovered only $nFound/25 planted neighbors")
-      import s.implicits._
-      Seq((25L, if (nFound >= 22) 0L else 1L))
-        .toDF("n_expected", "n_violations")
-    },
-
-    // Bipartite ANN join — BOTH sides large (today's ingest against
-    // yesterday's index), the regime where lshTopK's broadcast-query
-    // contract doesn't hold and knnJoin's self-join shape doesn't apply.
-    // Left = the full corpus re-identified (+3e6) plus 20 perturbed
-    // copies (+1e6); right = the corpus. Two contracts: every identical
-    // re-identified row must find its twin at sim 1.0 (identical vectors
-    // share every bucket in every table — deterministic, no seed luck),
-    // and >=18/20 perturbed copies find their source as top-1.
-    Q("x_ann_bipartite",
-      """SELECT CAST(count(*) + 20 AS BIGINT) AS n_left,
-        |CAST(0 AS BIGINT) AS n_violations FROM embeddings""".stripMargin) { (s, dir) =>
-      val emb = par(Tables(s, dir, "embeddings"))
-        .select(col("vec_id"), col("embedding").cast("array<double>").as("embedding"))
-      val n = emb.count()
-      val twins = emb.select((col("vec_id") + 3000000L).as("vec_id"), col("embedding"))
-      val perturbed = emb.where(col("vec_id") < 20)
-        .select((col("vec_id") + 1000000L).as("vec_id"),
-          perturb(col("embedding")).as("embedding"))
-      val left = twins.unionByName(perturbed)
-      // occupancy scales with K: knn (k=10) needs ~8 so heaps fill, but at
-      // k=3 occupancy 4 already yields ~4*tables candidates per left row —
-      // an order of magnitude over k — and candidate pairs are the curve's
-      // cost axis (published in SCALECHECK: 127/row at 100x under
-      // occupancy 8). Recall is signature-contract, not crowd: the
-      // tablesForRecall table count is unchanged. The occupancy cap is
-      // CONTENT-seeded (r9): a twin pair is bit-identical, so no split
-      // can separate it — the sim-1.0 gate is structural, not an OR-over-
-      // tables recovery — which is what lets the cap drop 64 -> 16
-      // (NOTES round 9, four schedules at the 100x corpus: pairs 80 -> 52 per left row,
-      // annJoin 31.0s -> 14.9s; the denser occ-2/17-plane schedule cut
-      // pairs to 39/row but paid more in banding than it saved).
-      val planes = Similarity.adaptivePlanes(n, targetOccupancy = 4)
-      val tables = Similarity.tablesForRecall(planes, cosine = 0.97)
-      val topk = Similarity.annJoin(left, emb, "vec_id", "embedding",
-        k = 3, numPlanes = planes, numTables = tables,
-        maxOccupancy = 16, contentSeededSplit = true)
-        .localCheckpoint(true)
-      // top-1 per left id (topKPerQuery emits rank-ordered rows per qid)
-      val top1 = topk.withColumn("rn", row_number().over(
-        org.apache.spark.sql.expressions.Window.partitionBy("qid")
-          .orderBy(col("sim").desc, col("vid"))))
-        .where(col("rn") === 1)
-      val twinOk = top1.where(col("qid") >= 3000000L &&
-        col("vid") === col("qid") - 3000000L && col("sim") === 1.0).count()
-      val planted = top1.where(col("qid") >= 1000000L && col("qid") < 2000000L &&
-        col("vid") === col("qid") - 1000000L).count()
-      Gate.check(twinOk == n,
-        s"only $twinOk/$n identical twins found at sim 1.0 (deterministic contract)")
-      Gate.check(planted >= 18,
-        s"only $planted/20 perturbed copies ranked their source top-1")
-      import s.implicits._
-      Seq((n + 20, if (twinOk == n && planted >= 18) 0L else 1L))
-        .toDF("n_left", "n_violations")
-    },
-
-    // ASYMMETRIC bipartite ANN — the ingest-vs-index regime (r9 round-10
-    // candidate #4): today's full batch (|l| = n + 20) against a curated
-    // index a tenth its size (|r| = n/10, the vec_id % 10 == 0 subset).
-    // The schedule is sized from the GEOMETRIC MEAN of the side counts
-    // (adaptivePlanesBipartite): per-bucket cross-pair volume is
-    // (nl/2^p)(nr/2^p), so sqrt(nl*nr) is the side count whose symmetric
-    // occupancy matches the cross-pair density — the rule degenerates to
-    // the symmetric sizing when the sides are equal. The naive per-side
-    // alternative (planes from the index occupancy alone) was measured
-    // WORSE at 10:1 asymmetry — 11.0s vs 8.2s at the 100x corpus, 11.4 vs
-    // 10.6 pairs/ingest row (NOTES round 9; the pair stream, not the
-    // hashing, is what the extra planes buy down). Gates are the
-    // bipartite pair: every ingest twin of an index member must surface
-    // at sim 1.0 (structural under the content-seeded cap), and >=18/20
-    // perturbed copies of index members rank their source top-1.
-    Q("x_ann_ingest",
-      """SELECT CAST(count(*) + 20 AS BIGINT) AS n_ingest,
-        |CAST(count(*) FILTER (WHERE vec_id % 10 = 0) AS BIGINT) AS n_index,
-        |CAST(0 AS BIGINT) AS n_violations FROM embeddings""".stripMargin) { (s, dir) =>
-      val emb = par(Tables(s, dir, "embeddings"))
-        .select(col("vec_id"), col("embedding").cast("array<double>").as("embedding"))
-      val index = emb.where(pmod(col("vec_id"), lit(10)) === 0)
-      val nIdx = index.count()
-      val n = emb.count()
-      val ingest = emb.select((col("vec_id") + 3000000L).as("vec_id"),
-        col("embedding"))
-      // 20 probes with a real near-neighbor in the index: perturbed copies
-      // of index members (ids 0,10,...,190 exist at every SF)
-      val probes = index.where(col("vec_id") < 200)
-        .select((col("vec_id") + 1000000L).as("vec_id"),
-          perturb(col("embedding")).as("embedding"))
-      val planes = Similarity.adaptivePlanesBipartite(n + 20, nIdx,
-        targetOccupancy = 4)
-      val tables = Similarity.tablesForRecall(planes, cosine = 0.97)
-      val topk = Similarity.annJoin(ingest.unionByName(probes), index,
-        "vec_id", "embedding", k = 3, numPlanes = planes,
-        numTables = tables, maxOccupancy = 16, contentSeededSplit = true)
-        .localCheckpoint(true)
-      val top1 = topk.withColumn("rn", row_number().over(
-        org.apache.spark.sql.expressions.Window.partitionBy("qid")
-          .orderBy(col("sim").desc, col("vid"))))
-        .where(col("rn") === 1)
-      val twinOk = top1.where(col("qid") >= 3000000L &&
-        pmod(col("qid") - 3000000L, lit(10)) === 0 &&
-        col("vid") === col("qid") - 3000000L && col("sim") === 1.0).count()
-      val planted = top1.where(col("qid") >= 1000000L && col("qid") < 2000000L &&
-        col("vid") === col("qid") - 1000000L).count()
-      Gate.check(twinOk == nIdx,
-        s"only $twinOk/$nIdx in-index ingest twins found at sim 1.0")
-      Gate.check(planted >= 18,
-        s"only $planted/20 perturbed index-member probes ranked their source top-1")
-      import s.implicits._
-      Seq((n + 20, nIdx, if (twinOk == nIdx && planted >= 18) 0L else 1L))
-        .toDF("n_ingest", "n_index", "n_violations")
-    },
-
-    // Multi-probe LSH top-k (Lv et al. VLDB'07): the recall OR-amplification
-    // buys with MORE TABLES, multi-probe buys with more lookups into the
-    // SAME tables — each query also probes, per table, the cheapest margin
-    // perturbations of its own signature (VectorOps.hyperplaneProbes). At
-    // 100 TB the corpus side pays tables x hashing and tables x index
-    // copies, so a (2 tables, 4 probes) schedule that matches the 8-table
-    // recall contract cuts the dominant cost 4x while only the
-    // driver-small broadcast query side fans out. Gates: the same >=18/20
-    // planted-recall contract as the single-probe family on a QUARTER of
-    // the tables, plus (at gate scale) the probing-beats-plain attestation
-    // that the extra probes — not table luck — carry the recall.
-    Q("x_ann_multiprobe",
-      """SELECT CAST(count(*) FILTER (WHERE vec_id < 20) AS BIGINT) AS n_queries,
-        |CAST(0 AS BIGINT) AS n_violations FROM embeddings""".stripMargin) { (s, dir) =>
-      val emb = par(Tables(s, dir, "embeddings"))
-        .select(col("vec_id"), col("embedding").cast("array<double>").as("embedding"))
-      val queries = emb.where(col("vec_id") < 20)
-        .select((col("vec_id") + 1000000L).as("vec_id"),
-          perturb(col("embedding")).as("embedding"))
-      def recovered(probes: Int): Long =
-        Similarity.lshTopK(emb, queries, "vec_id", "embedding",
-          k = 10, numPlanes = 8, numTables = 2, nProbes = probes)
-          .where(col("vid") === col("qid") - 1000000L).count()
-      val multi = recovered(4)
-      Gate.check(multi >= 18,
-        s"multi-probe (2 tables x 4 probes) recovered only $multi/20")
-      if (emb.count() <= AnnExactVerifyMaxRows) {
-        // at gate scale, attest the probes themselves carry the recall:
-        // the same 2 tables without probing must recover strictly fewer
-        val plain = recovered(1)
-        Gate.check(plain < multi,
-          s"probing added nothing at gate scale: $multi vs $plain")
-      }
-      import s.implicits._
-      Seq((20L, if (multi >= 18) 0L else 1L))
-        .toDF("n_queries", "n_violations")
-    },
-
-    // IVF (learned coarse quantizer) approximate top-k: recall measured
-    // against the brute-force truth — all deterministic. Promoted to a
-    // full oracle (r5): the truth-set size (5 queries x top-10) is plain
-    // SQL, and the >=0.8 recall contract becomes a violation count the
-    // oracle pins to 0.
-    Q("x_ann_ivf",
-      """SELECT CAST(10 * count(*) AS BIGINT) AS n_truth,
-        |CAST(0 AS BIGINT) AS n_violations FROM embeddings
-        |WHERE vec_id < 5""".stripMargin) { (s, dir) =>
-      val emb = par(Tables(s, dir, "embeddings"))
-      val queries = emb.where(col("vec_id") < 5)
-      val ivf = Similarity.ivfTopK(emb, queries, "vec_id", "embedding",
-        k = 10, nlist = 16, nprobe = 6, iterations = 2)
-        .select(col("qid"), col("vid"), lit(1).as("hit"))
-      val bf = Similarity.bruteForceTopK(emb, queries, "vec_id", "embedding", 10)
-        .select(col("qid"), col("vid"))
-      val r = bf.join(ivf, Seq("qid", "vid"), "left_outer")
-        .agg(count(lit(1)).as("n_truth"), coalesce(sum("hit"), lit(0L)).as("n_hits")).first()
-      val (total, hits) = (r.getLong(0), r.getLong(1))
-      // nprobe=6/16 lists: measured recall is 1.0 on this fixture; 0.8 gives
-      // probe-boundary slack while a broken distance kernel scores ~0.
-      Gate.check(total > 0 && hits.toDouble / total >= 0.8,
-        s"IVF recall $hits/$total below 0.8 vs brute-force truth")
-      import s.implicits._
-      Seq((total, if (hits.toDouble / total >= 0.8) 0L else 1L))
-        .toDF("n_truth", "n_violations")
-    },
-
-    // PCA over the embedding column (operators.Pca) — the classic
-    // whitening/energy-compaction step next to random projection
-    // (data-blind), PQ and IVF: ONE treeAggregate pass accumulates
-    // (n, sum, X^T X) — driver state dim + dim^2 doubles, never rows —
-    // then a driver-side Jacobi eigendecomposition and a broadcast
-    // projection pass. Component BYTES are float-sum-order sensitive, so
-    // the gates are the linear-algebra invariants, not values:
-    // orthonormal components, descending nonnegative spectrum, trace
-    // identity against independently-computed per-coordinate variance,
-    // and per-component PROJECTED variance == eigenvalue (a second
-    // distributed pass must agree with the driver's eigensolve).
-    Q("x_pca",
-      """SELECT CAST(count(*) AS BIGINT) AS n_vecs,
-        |CAST(max(len(embedding)) AS BIGINT) AS dim,
-        |CAST(8 AS BIGINT) AS k, CAST(0 AS BIGINT) AS n_violations
-        |FROM embeddings""".stripMargin) { (s, dir) =>
-      val emb = Tables(s, dir, "embeddings")
-      val (values, comps, n) = graft.operators.Pca.fit(emb, "embedding", 64)
-      val dim = comps(0).length
-      var viol = 0L
-      // orthonormality of the top-8 components
-      for (a <- 0 until 8; b <- a until 8) {
-        val dot = (0 until dim).map(d => comps(a)(d) * comps(b)(d)).sum
-        if (math.abs(dot - (if (a == b) 1.0 else 0.0)) > 1e-8) viol += 1
-      }
-      // descending, nonnegative spectrum
-      for (i <- values.indices) {
-        if (values(i) < -1e-9) viol += 1
-        if (i > 0 && values(i) > values(i - 1) + 1e-12) viol += 1
-      }
-      // trace identity vs per-coordinate variance computed independently
-      // (posexplode -> per-coordinate mean/second-moment -> summed)
-      val pc = emb.select(posexplode(col("embedding").cast("array<double>"))
-        .as(Seq("i", "x")))
-        .groupBy("i").agg(avg("x").as("m"), avg(col("x") * col("x")).as("m2"))
-        .agg(sum(col("m2") - col("m") * col("m"))).first().getDouble(0)
-      if (math.abs(values.sum - pc) / pc > 1e-6) viol += 1
-      // projected variance along the top 3 == eigenvalues (distributed
-      // pass vs driver eigensolve)
-      val proj = graft.operators.Pca.project(emb, "embedding", comps.take(3))
-      val pv = proj.select((0 until 3).map(i => col("proj")(i).as(s"z$i")): _*)
-        .agg(
-          (avg(col("z0") * col("z0")) - avg("z0") * avg("z0")).as("v0"),
-          (avg(col("z1") * col("z1")) - avg("z1") * avg("z1")).as("v1"),
-          (avg(col("z2") * col("z2")) - avg("z2") * avg("z2")).as("v2"))
-        .first()
-      for (i <- 0 until 3)
-        if (math.abs(pv.getDouble(i) - values(i)) / values(i) > 1e-6) viol += 1
-      Gate.check(viol == 0, s"$viol PCA invariant violations")
-      import s.implicits._
-      Seq((n, dim.toLong, 8L, viol)).toDF("n_vecs", "dim", "k", "n_violations")
-    },
-
-    // Int8-quantized brute-force top-k (asymmetric: full-precision queries
-    // against the max-abs-scaled int8 corpus). The scale argument: at 100 TB
-    // of float32 embeddings the exact scan is I/O-bound, and the int8 corpus
-    // reads 4x fewer bytes for ~1e-3 cosine error — compose with IVF lists
-    // to also cut candidates. Oracle: the truth-set size and the 4x logical
-    // byte ratio are plain SQL (embeddings is float32 = 4 bytes/dim, int8 =
-    // 1); Spark recomputes bytes_int8 from the ACTUAL quantized column (so a
-    // dimension-dropping quantizer goes red), and the >=0.9 recall contract
-    // vs exact brute-force truth becomes a violation count pinned to 0.
-    // Gate-scale switch (the x_freq_items discipline, r6 judge directive):
-    // the EXACT attestation arms — brute-force truth + the composed IVF+int8
-    // re-search — run only when the corpus is gate-sized (<= 1000 rows, i.e.
-    // the driver's sf0.01 correctness run, where the recall contracts stay
-    // driver-visible). At bench SF and above the query times the OPERATOR
-    // (one quantized scan + heap top-k) plus the byte recompute from the
-    // actual quantized column; at 100 TB the exact verify would cost more
-    // than the search — the whole point of the int8 path is to avoid it.
-    Q("x_ann_quantized",
-      """SELECT CAST(10 * count(*) FILTER (WHERE vec_id < 5) AS BIGINT) AS n_truth,
-        |CAST(sum(4 * len(embedding)) AS BIGINT) AS bytes_fp32,
-        |CAST(sum(len(embedding)) AS BIGINT) AS bytes_int8,
-        |CAST(0 AS BIGINT) AS n_violations FROM embeddings""".stripMargin) { (s, dir) =>
-      val emb = par(Tables(s, dir, "embeddings"))
-      val queries = emb.where(col("vec_id") < 5)
-      val nQueries = queries.count()
-      val qt = Similarity.quantizedTopK(emb, queries, "vec_id", "embedding", k = 10)
-        .select(col("qid"), col("vid"), lit(1).as("hit"))
-      val nCorpus = emb.count()
-      val total = 10L * nQueries
-      val violations: Long = if (nCorpus <= AnnExactVerifyMaxRows) {
-        val bf = Similarity.bruteForceTopK(emb, queries, "vec_id", "embedding", 10)
-          .select(col("qid"), col("vid"))
-        val hits = bf.join(qt, Seq("qid", "vid"), "left_outer")
-          .agg(coalesce(sum("hit"), lit(0L))).first().getLong(0)
-        // Measured recall on the fixture is 1.0 (rank-margin >> 1e-3 rounding
-        // error); 0.9 leaves tie-boundary slack while a broken quantizer (sign
-        // flips, saturation, dropped dims) scores far below.
-        Gate.check(total > 0 && hits.toDouble / total >= 0.9,
-          s"int8 recall $hits/$total below 0.9 vs exact truth")
-        // The COMPOSED scale path — IVF lists (candidate cut) over int8
-        // storage (byte cut) — is gated here too, so "composable with IVF"
-        // is measured, not asserted: same 0.8 bound as x_ann_ivf's
-        // full-precision path (quantization error is well inside the
-        // probe-boundary slack).
-        val ivfq = Similarity.ivfTopK(emb, queries, "vec_id", "embedding",
-          k = 10, nlist = 16, nprobe = 6, iterations = 2, quantizeStorage = true)
-          .select(col("qid"), col("vid"), lit(1).as("hit2"))
-        val hits2 = bf.join(ivfq, Seq("qid", "vid"), "left_outer")
-          .agg(coalesce(sum("hit2"), lit(0L))).first().getLong(0)
-        Gate.check(hits2.toDouble / total >= 0.8,
-          s"IVF+int8 recall $hits2/$total below 0.8 vs exact truth")
-        if (hits.toDouble / total >= 0.9 && hits2.toDouble / total >= 0.8) 0L else 1L
-      } else {
-        // bench scale: the operator's own output shape is still measured —
-        // every query must fill its heap (corpus >> k, full scan)
-        val nOut = qt.count()
-        Gate.check(nOut == total,
-          s"quantized top-k returned $nOut rows, expected $total")
-        if (nOut == total) 0L else 1L
-      }
-      val b = emb.select(
-        sum(lit(4) * size(col("embedding"))).as("fp32"),
-        sum(size(Similarity.quantizeInt8(col("embedding").cast("array<double>"))))
-          .as("int8")).first()
-      import s.implicits._
-      Seq((total, b.getLong(0), b.getLong(1), violations))
-        .toDF("n_truth", "bytes_fp32", "bytes_int8", "n_violations")
-    },
-
-    // Product quantization + ADC search (Jégou et al. TPAMI'11 — the
-    // IVF-PQ architecture FAISS runs at billion-vector scale): 8 subspaces
-    // x 16-code codebooks store each 64-dim vector as 8 bytes — 32x
-    // smaller than float32, vs scalar int8's 4x. Scoring never decodes
-    // the corpus: per query a (8 x 16) dot table is built once and each
-    // candidate costs 8 lookups instead of 64 multiplies. Oracle: the
-    // query population and BOTH byte totals are plain SQL (bytes_pq is
-    // 8 * corpus rows by construction; Spark recomputes it from the
-    // ACTUAL coded column, so a codebook that drops subspaces goes red),
-    // and the >=18/20 planted-pair recall contract (cosine-0.97 probes,
-    // same population as x_ann_lsh's perturbed arm) is a violation count
-    // pinned to 0.
-    Q("x_ann_pq",
-      """SELECT CAST(count(*) FILTER (WHERE vec_id < 20) AS BIGINT) AS n_queries,
-        |CAST(sum(4 * len(embedding)) AS BIGINT) AS bytes_fp32,
-        |CAST(8 * count(*) AS BIGINT) AS bytes_pq,
-        |CAST(0 AS BIGINT) AS n_violations FROM embeddings""".stripMargin) { (s, dir) =>
-      val emb = par(Tables(s, dir, "embeddings"))
-      val cb = ProductQuantizer.fit(emb, "embedding", "vec_id",
-        m = 8, kCodes = 16, iterations = 2)
-      val queries = emb.where(col("vec_id") < 20)
-        .select((col("vec_id") + 1000000L).as("vec_id"),
-          perturb(col("embedding").cast("array<double>")).as("embedding"))
-      val topk = ProductQuantizer.adcTopK(emb, queries, "vec_id", "embedding",
-        k = 10, prefit = Some(cb))
-      val nQueries = queries.count()
-      val nFound = topk.where(col("vid") === col("qid") - 1000000L).count()
-      Gate.check(nFound >= 18,
-        s"PQ ADC recovered only $nFound/$nQueries planted neighbors")
-      val bytesFp32 = emb.agg(sum(lit(4) * size(col("embedding")))).first().getLong(0)
-      val bytesPq = emb.select(ProductQuantizer.encode(col("embedding"), cb).as("codes"))
-        .agg(sum(size(col("codes")))).first().getLong(0)
-      import s.implicits._
-      Seq((nQueries, bytesFp32, bytesPq, if (nFound >= 18) 0L else 1L))
-        .toDF("n_queries", "bytes_fp32", "bytes_pq", "n_violations")
-    },
-
-    // IVF-PQ — the COMPOSED architecture (FAISS IndexIVFPQ): inverted
-    // lists cut CANDIDATES (each query scores ~nprobe/nlist of the
-    // corpus), PQ codes cut BYTES per candidate 32x; a query touches
-    // ~nprobe/nlist * 1/32 of the float32 bytes. Both fits are
-    // zero-corpus-shuffle treeAggregate k-means; search is one
-    // broadcast-hash join on cid + ADC lookups + the bounded-heap top-k.
-    // Oracle: query population + PQ byte total are plain SQL (Spark
-    // recomputes bytes from the ACTUAL coded column); the >=16/20
-    // planted-pair recall (cosine-0.97 probes — two quantization layers
-    // deep, so slightly looser than flat ADC's 18/20) and the <=60%
-    // candidate-fraction pruning attestation are violation counts pinned
-    // to 0. The candidate bound is what separates this from x_ann_pq: a
-    // broken coarse quantizer that dumps everything into one probed list
-    // would keep recall perfect and fail ONLY the fraction gate.
-    Q("x_ann_ivfpq",
-      """SELECT CAST(count(*) FILTER (WHERE vec_id < 20) AS BIGINT) AS n_queries,
-        |CAST(8 * count(*) AS BIGINT) AS bytes_pq,
-        |CAST(0 AS BIGINT) AS n_violations FROM embeddings""".stripMargin) { (s, dir) =>
-      val emb = par(Tables(s, dir, "embeddings"))
-      val cb = ProductQuantizer.fit(emb, "embedding", "vec_id",
-        m = 8, kCodes = 16, iterations = 2)
-      // The coarse quantizer is fitted ONCE and threaded into both the
-      // search and the pruning attestation — the attested layout is the
-      // searched layout by construction (an independent re-fit can differ
-      // in final ulps: treeAggregate combines float partials in shuffle-
-      // fetch arrival order — r6 advice), and the search no longer pays a
-      // second k-means.
-      val centroids = Similarity.fitCoarseCentroids(emb, "vec_id", "embedding",
-        nlist = 16, iterations = 2)
-      val queries = emb.where(col("vec_id") < 20)
-        .select((col("vec_id") + 1000000L).as("vec_id"),
-          perturb(col("embedding").cast("array<double>")).as("embedding"))
-      val topk = ProductQuantizer.ivfAdcTopK(emb, queries, "vec_id", "embedding",
-        k = 10, nlist = 16, nprobe = 6, iterations = 2, prefit = Some(cb),
-        prefitCentroids = Some(centroids))
-      val nQueries = queries.count()
-      // planted-pair recall reads the (tiny) search result — cheap at any
-      // scale, so it is NOT behind the gate-scale switch
-      val nFound = topk.where(col("vid") === col("qid") - 1000000L).count()
-      Gate.check(nFound >= 16,
-        s"IVF-PQ recovered only $nFound/$nQueries planted neighbors")
-      val nCorpus = emb.count()
-      // Pruning attestation (gate scale only — r6 judge directive): counts
-      // every (query, candidate) pair the probed lists admit, which is a
-      // corpus-sized assignment + join; at bench SF and above the coarse
-      // layout's pruning was already attested at the sf0.01 gate.
-      val fracOk: Boolean = if (nCorpus <= AnnExactVerifyMaxRows) {
-        val nCandidates = ProductQuantizer.candidateCount(emb, queries,
-          "vec_id", "embedding", nlist = 16, nprobe = 6, iterations = 2,
-          prefitCentroids = Some(centroids))
-        val ok = nCandidates.toDouble / (nCorpus * nQueries) <= 0.6
-        Gate.check(ok,
-          s"IVF-PQ scored $nCandidates of ${nCorpus * nQueries} query-candidate " +
-            "pairs — coarse lists are not pruning")
-        ok
-      } else true
-      val bytesPq = emb.select(ProductQuantizer.encode(col("embedding"), cb).as("codes"))
-        .agg(sum(size(col("codes")))).first().getLong(0)
-      import s.implicits._
-      Seq((nQueries, bytesPq, if (nFound >= 16 && fracOk) 0L else 1L))
-        .toDF("n_queries", "bytes_pq", "n_violations")
-    },
-
-    // k-NN self-join: top-k neighbors for EVERY row — the large-query-set
-    // regime (queries == corpus) where the broadcast-query contract of the
-    // other ANN paths does not hold; this is the near-neighbor GRAPH
-    // builder behind semantic dedup / clustering. LSH-bucketed candidates
-    // (ids-only through the exchange, adaptive plane count like
-    // x_dedup_embedding), one score per undirected pair feeding both
-    // endpoints' heaps. Gates: >=18/20 planted cosine-0.97 pairs must be
-    // their perturbed copy's TOP-1 neighbor (not merely top-k — rank is
-    // what a broken heap or a sim-sign bug breaks first), no self-edges,
-    // and no row exceeds k neighbors; all pinned as one violation count.
-    Q("x_knn_join",
-      """SELECT CAST(count(*) + 20 AS BIGINT) AS n_corpus,
-        |CAST(count(*) FILTER (WHERE vec_id < 20) AS BIGINT) AS n_planted,
-        |CAST(0 AS BIGINT) AS n_violations FROM embeddings""".stripMargin) { (s, dir) =>
-      val emb = par(Tables(s, dir, "embeddings"))
-        .select(col("vec_id"), col("embedding").cast("array<double>").as("embedding"))
-      val injected = emb.where(col("vec_id") < 20)
-        .select((col("vec_id") + BigOff).as("vec_id"),
-          perturb(col("embedding")).as("embedding"))
-      val corpus = emb.unionByName(injected)
-      val n = corpus.count()
-      // Occupancy-bounded like x_dedup_embedding but with a GRAPH-builder
-      // target: candidates per row ~ occupancy*tables must stay ≳ a few*k
-      // so the top-10 heaps fill with real near neighbors — occupancy 8
-      // (not the verifier's 2), tables from the 0.98-recall contract on
-      // the planted cosine-0.97 pairs. r8 retune: the r7 occupancy-16 /
-      // planes+1 schedule grew candidate pairs 22.6x at 10x data
-      // (NOTES round 8); this one holds pair growth ~linear while
-      // the sf0.01/sf0.1 gate SFs stay at the same 8/8 the gate was
-      // calibrated on.
-      val planes = Similarity.adaptivePlanes(n, targetOccupancy = 8)
-      val tables = Similarity.tablesForRecall(planes, cosine = 0.97)
-      val knn = Similarity.knnJoin(corpus, "vec_id", "embedding", k = 10,
-        numPlanes = planes, numTables = tables)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      try {
-        import s.implicits._
-        // Gate-scale switch (r6 judge directive): the full re-rank — top-1
-        // window over every row's neighbors plus the self-edge / max-k
-        // sweeps — runs only at the sf0.01 correctness gate. At bench SF
-        // and above the query times the OPERATOR; the planted pairs are
-        // still spot-checked with one cheap filter pass over the result
-        // (in top-K, without asserting rank-1).
-        if (n <= AnnExactVerifyMaxRows) {
-          val top1 = knn.withColumn("rn", row_number().over(
-            org.apache.spark.sql.expressions.Window
-              .partitionBy("qid").orderBy(col("sim").desc, col("vid"))))
-            .where(col("rn") === 1)
-          val nTop1 = top1.where(col("qid") >= BigOff &&
-            col("vid") === col("qid") - BigOff).count()
-          Gate.check(nTop1 >= 18,
-            s"knn join: only $nTop1/20 planted pairs are top-1 neighbors")
-          val nSelf = knn.where(col("qid") === col("vid")).count()
-          val maxK = knn.groupBy("qid").count()
-            .agg(coalesce(max("count"), lit(0L))).first().getLong(0)
-          Gate.check(nSelf == 0 && maxK <= 10,
-            s"knn join: $nSelf self-edges, max $maxK neighbors per row")
-          Seq((n, 20L, if (nTop1 >= 18 && nSelf == 0 && maxK <= 10) 0L else 1L))
-            .toDF("n_corpus", "n_planted", "n_violations")
-        } else {
-          val nFound = knn.where(col("qid") >= BigOff &&
-            col("vid") === col("qid") - BigOff).count()
-          Gate.check(nFound >= 18,
-            s"knn join: only $nFound/20 planted pairs appear in top-k")
-          Seq((n, 20L, if (nFound >= 18) 0L else 1L))
-            .toDF("n_corpus", "n_planted", "n_violations")
-        }
-      } finally knn.unpersist()
-    },
-
-    // -- Text analysis --------------------------------------------------
-
-    // Quality stats per doc: portable length/token/stopword math.
-    Q("x_text_quality",
-      """SELECT doc_id, CAST(length(text) AS INTEGER) AS n_chars2,
-        |CAST(len(string_split(text, ' ')) AS INTEGER) AS n_tokens,
-        |round(CAST(len(list_filter(string_split(lower(text), ' '),
-        |  w -> w IN ('the','a','an','is','are','of','and','or','to','in','that','it')))
-        |  AS DOUBLE) / greatest(len(string_split(lower(text), ' ')), 1), 4) AS stop_ratio
-        |FROM documents ORDER BY doc_id""".stripMargin) { (s, dir) =>
-      Tables(s, dir, "documents").select(
-        col("doc_id"),
-        length(col("text")).as("n_chars2"),
-        size(split(col("text"), " ")).as("n_tokens"),
-        round(TextFunctions.stopwordRatio(col("text"), TextFunctions.EnglishStopwords), 4)
-          .as("stop_ratio"))
-        .orderBy("doc_id")
-    },
-
-    // Language ID heuristic — marker-profile scoring; deterministic but
-    // Spark-expressed. Labeled marker sentences ride along with the fixture
-    // corpus and every one must classify correctly. Promoted to a full
-    // oracle (r5): the oracle pins all 6 labeled sentences correct and
-    // recomputes the corpus-coverage count in SQL (langId never returns
-    // null, so every document gets a prediction); the per-language
-    // distribution stays heuristic-dependent and is exercised but not
-    // output.
-    Q("x_text_langid",
-      """SELECT CAST(6 AS BIGINT) AS n_labeled,
-        |CAST(6 AS BIGINT) AS n_labeled_correct,
-        |CAST(count(*) AS BIGINT) AS n_docs_classified
-        |FROM documents""".stripMargin) { (s, dir) =>
-      import s.implicits._
-      val labeled = Seq(
-        ("en", "the cat is on a mat and that is fine"),
-        ("en", "a day in the life of the band"),
-        ("de", "der hund ist nicht ein freund und das ist gut"),
-        ("es", "el perro y la casa es un lugar que"),
-        ("fr", "le chien est une bete et les chats des amis"),
-        ("zh", "我 的 猫 是 在 家 和 我 有 不")).toDF("lang_true", "text")
-      val nClassified = Tables(s, dir, "documents")
-        .select(TextFunctions.langId(col("text")).as("lang_pred"))
-        .where(col("lang_pred").isNotNull)
-        .count()
-      val correct = labeled
-        .withColumn("lang_pred", TextFunctions.langId(col("text")))
-        .agg(count(lit(1)).as("n_labeled"),
-          sum(when(col("lang_pred") === col("lang_true"), 1L).otherwise(0L))
-            .as("n_labeled_correct")).first()
-      Gate.check(correct.getLong(1) == correct.getLong(0),
-        s"langId classified ${correct.getLong(1)}/${correct.getLong(0)} marker sentences")
-      Seq((correct.getLong(0), correct.getLong(1), nClassified))
-        .toDF("n_labeled", "n_labeled_correct", "n_docs_classified")
-    },
-
-    // Token counting: whitespace tokens + the BPE-ish subword proxy
-    // (alnum runs; same RE2-safe regex in both engines).
-    Q("x_text_tokens",
-      """SELECT CAST(sum(len(string_split(text, ' '))) AS BIGINT) AS total_tokens,
-        |CAST(max(len(string_split(text, ' '))) AS INTEGER) AS max_tokens,
-        |round(avg(len(string_split(text, ' '))), 4) AS avg_tokens,
-        |CAST(sum(len(regexp_extract_all(lower(text), '[a-z0-9]+'))) AS BIGINT)
-        |  AS total_subwords
-        |FROM documents""".stripMargin) { (s, dir) =>
-      val toks = size(split(col("text"), " "))
-      Tables(s, dir, "documents").agg(
-        sum(toks).cast("long").as("total_tokens"),
-        max(toks).as("max_tokens"),
-        round(avg(toks), 4).as("avg_tokens"),
-        sum(TextFunctions.subwordCount(col("text"))).cast("long").as("total_subwords"))
-    },
-
-    // Repetition-based quality filter (Gopher-style): fraction of duplicate
-    // 3-grams inside each doc — high repetition flags boilerplate/spam.
-    // Fully portable list math, real oracle.
-    Q("x_text_repetition",
-      """WITH tok AS (SELECT doc_id, string_split(lower(text), ' ') AS t FROM documents),
-        |sh AS (SELECT doc_id, CASE WHEN len(t) >= 3 THEN
-        |  list_transform(generate_series(1, len(t)-2),
-        |    i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2])
-        |  ELSE [array_to_string(t, ' ')] END AS s FROM tok)
-        |SELECT doc_id, round(1.0 - CAST(len(list_distinct(s)) AS DOUBLE) / len(s), 4)
-        |  AS dup_ngram_frac
-        |FROM sh ORDER BY doc_id""".stripMargin) { (s, dir) =>
-      // materialize the token array as a bound column FIRST: transform() is
-      // an interpreted HOF, and referencing the split(...) expression inside
-      // its lambda would re-tokenize the doc per element (O(tokens^2))
-      val toks = col("__t")
-      val grams = when(size(toks) >= 3,
-        transform(sequence(lit(0), size(toks) - 3),
-          i => concat_ws(" ", element_at(toks, i + 1),
-            element_at(toks, i + 2), element_at(toks, i + 3))))
-        .otherwise(array(concat_ws(" ", toks)))
-      Tables(s, dir, "documents")
-        .select(col("doc_id"), split(lower(col("text")), " ").as("__t"))
-        .select(col("doc_id"), grams.as("__g"))
-        .select(col("doc_id"),
-          round(lit(1.0) - size(array_distinct(col("__g"))).cast("double")
-            / size(col("__g")), 4).as("dup_ngram_frac"))
-        .orderBy("doc_id")
-    },
-
-    // Benchmark decontamination: flag corpus docs sharing any 4-gram with a
-    // "benchmark" set (here: doc_id < 5). The shape that matters at 100 TB:
-    // benchmark shingles are a distinct broadcast set, the corpus explodes
-    // ONLY to (doc_id, shingle) pairs, and the flag is a semi-join — no
-    // all-pairs document comparison anywhere.
-    // SEMANTIC decontamination — x_decontaminate's embedding-level twin
-    // (n-gram overlap misses paraphrased benchmark leakage; embedding
-    // similarity is the modern second pass): 20 benchmark reference
-    // vectors (perturbed corpus vectors at cosine ~0.97, the house
-    // fixture) are collected driver-side — benchmark suites are
-    // driver-bounded by definition — and embedded as LITERALS, so the
-    // corpus pays exactly ONE scan with a per-row max-cosine over the
-    // broadcast refs (native kernel inside array_max/transform): no
-    // shuffle, no join, whole-stage codegen. For ref sets too large to
-    // broadcast, the indexed path is x_ann_*'s; this is the
-    // fixed-benchmark shape. FULL oracle: DuckDB recomputes the same
-    // perturbation (bit-exact: x*1.25/x*0.75) and cosine over the same
-    // doubles; thresholds sit at enormous margins (sources ~0.97,
-    // non-sources ~0 at 64 dims), so last-ulp summation-order skew
-    // cannot flip a count. n_false rides the row: flagged non-sources,
-    // identical in both engines by construction.
-    Q("x_semantic_decontam",
-      """WITH refs AS (SELECT vec_id AS rid,
-        |  list_transform(CAST(embedding AS DOUBLE[]), (x, i) ->
-        |    x * (CASE WHEN (i - 1) % 2 = 0 THEN 1.25 ELSE 0.75 END)::DOUBLE) AS r
-        |  FROM embeddings WHERE vec_id < 20),
-        |m AS (SELECT e.vec_id,
-        |  max(list_cosine_similarity(CAST(e.embedding AS DOUBLE[]), refs.r)) AS mc
-        |  FROM embeddings e CROSS JOIN refs GROUP BY e.vec_id)
-        |SELECT CAST(count(*) FILTER (WHERE mc > 0.95) AS BIGINT) AS n_flagged,
-        |  CAST(count(*) AS BIGINT) AS n_checked,
-        |  CAST(count(*) FILTER (WHERE mc > 0.95 AND vec_id >= 20) AS BIGINT)
-        |    AS n_false
-        |FROM m""".stripMargin) { (s, dir) =>
-      graft.functions.GraftFunctions.register(s)
-      import graft.functions.GraftFunctions.graft_cosine
-      val emb = Tables(s, dir, "embeddings")
-        .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
-      val refs = emb.where(col("vec_id") < 20)
-        .select(perturb(col("v")).as("r"))
-        .collect().map(_.getAs[scala.collection.Seq[Double]]("r").toArray)
-      val refsLit = array(refs.map(r => lit(r)): _*)
-      val flagged = emb.select(col("vec_id"),
-        array_max(transform(refsLit, r => graft_cosine(col("v"), r))).as("mc"))
-      Gate(flagged.agg(
-        sum(when(col("mc") > 0.95, 1L).otherwise(0L)).as("n_flagged"),
-        count(lit(1)).as("n_checked"),
-        sum(when(col("mc") > 0.95 && col("vec_id") >= 20, 1L).otherwise(0L))
-          .as("n_false")),
-        col("n_flagged") >= 20 && col("n_checked") > col("n_flagged"),
-        "every perturbed benchmark ref must flag its source vector")
-    },
-
-    Q("x_decontaminate",
-      """WITH tok AS (SELECT doc_id, string_split(lower(text), ' ') AS t FROM documents),
-        |sh AS (SELECT doc_id, unnest(CASE WHEN len(t) >= 4 THEN
-        |  list_transform(generate_series(1, len(t)-3),
-        |    i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2] || ' ' || t[i+3])
-        |  ELSE [array_to_string(t, ' ')] END) AS g FROM tok),
-        |bench AS (SELECT DISTINCT g FROM sh WHERE doc_id < 5),
-        |flagged AS (SELECT DISTINCT s.doc_id FROM sh s JOIN bench b ON s.g = b.g
-        |  WHERE s.doc_id >= 5)
-        |SELECT (SELECT count(*) FROM flagged) AS n_contaminated,
-        |(SELECT count(*) FROM documents WHERE doc_id >= 5) AS n_checked""".stripMargin) { (s, dir) =>
-      // tokens bound as a column first — see x_text_repetition
-      val toks = col("__t")
-      val grams = when(size(toks) >= 4,
-        transform(sequence(lit(0), size(toks) - 4),
-          i => concat_ws(" ", (1 to 4).map(o => element_at(toks, i + o)): _*)))
-        .otherwise(array(concat_ws(" ", toks)))
-      val sh = Tables(s, dir, "documents")
-        .select(col("doc_id"), split(lower(col("text")), " ").as("__t"))
-        .select(col("doc_id"), explode(grams).as("g"))
-      val bench = sh.where(col("doc_id") < 5).select("g").distinct()
-      val flagged = sh.where(col("doc_id") >= 5)
-        .join(broadcast(bench), "g")
-        .select("doc_id").distinct()
-      val nChecked = Tables(s, dir, "documents").where(col("doc_id") >= 5).count()
-      import s.implicits._
-      Seq((flagged.count(), nChecked)).toDF("n_contaminated", "n_checked")
-    },
-
-    // Document fingerprinting (md5 content key; rolling-hash variant is a
-    // custom Catalyst expression exercised in tests).
-    Q("x_text_fingerprint",
-      """SELECT doc_id, md5(lower(text)) AS fp FROM documents
-        |ORDER BY doc_id""".stripMargin) { (s, dir) =>
-      Tables(s, dir, "documents")
-        .select(col("doc_id"), TextFunctions.fingerprintMd5(col("text")).as("fp"))
-        .orderBy("doc_id")
-    },
-
-    // -- Multimodal -----------------------------------------------------
-
-    // Binary payload plumbing: byte totals per source are oracle-checkable;
-    // the stubbed decode features are covered by the rows-only variant below.
-    Q("x_media_bytes",
-      """SELECT source, count(*) AS n_docs,
-        |CAST(sum(octet_length(CAST(text AS BLOB))) AS BIGINT) AS total_bytes
-        |FROM documents GROUP BY source ORDER BY source""".stripMargin) { (s, dir) =>
-      graft.operators.Multimodal.asMediaTable(Tables(s, dir, "documents"))
-        .groupBy("source")
-        .agg(count(lit(1)).as("n_docs"), sum("n_bytes").cast("long").as("total_bytes"))
-        .orderBy("source")
-    },
-
-    // REAL image decode (JDK ImageIO PNG codec) over rendered payloads,
-    // batched per partition; n_failed must be 0 and n_dims_ok must equal
-    // n_docs (decoded dims round-trip the renderer). Promoted to a full
-    // oracle (r5): per-source doc counts are plain SQL, and the decode
-    // contract (0 failures, every dim round-trips) pins n_failed/n_dims_ok.
-    // Channel means / histogram mass stay gate-side (codec-dependent).
-    Q("x_media_features",
-      """SELECT source, CAST(count(*) AS BIGINT) AS n_docs,
-        |CAST(0 AS BIGINT) AS n_failed,
-        |CAST(count(*) AS BIGINT) AS n_dims_ok
-        |FROM documents GROUP BY source ORDER BY source""".stripMargin) { (s, dir) =>
-      Gate(Multimodal.featureSummary(s, par(Tables(s, dir, "documents"))),
-        col("n_failed") === 0 && col("n_dims_ok") === col("n_docs"),
-        "every rendered PNG must decode at the renderer's 24x16 dims")
-        .select(col("source"), col("n_docs"), col("n_failed"), col("n_dims_ok"))
-    },
-
-    // REAL WAV decode (javax.sound PCM parser): per-source audio stats.
-    // n_failed must be 0; duration follows the renderer's
-    // 400 + (n_chars mod 400) frame contract. Promoted to a full oracle
-    // (r5): the DECODED frame total must equal the renderer's closed form,
-    // which DuckDB recomputes from text byte lengths — an integer-exact
-    // end-to-end check on the render->WAV->parse path. RMS stays gate-side
-    // (waveform-dependent float).
-    Q("x_media_audio",
-      """SELECT source, CAST(count(*) AS BIGINT) AS n_docs,
-        |CAST(0 AS BIGINT) AS n_failed,
-        |CAST(sum(400 + octet_length(CAST(text AS BLOB)) % 400) AS BIGINT)
-        |  AS total_frames
-        |FROM documents GROUP BY source ORDER BY source""".stripMargin) { (s, dir) =>
-      val audio = Multimodal.asAudioTable(par(Tables(s, dir, "documents")))
-      // duration gate: the renderer emits 400 + (n_chars mod 400) frames at
-      // 8 kHz => every per-source mean sits inside [50 ms, 100 ms).
-      Gate(Multimodal.extractAudioFeatures(audio)
-        .groupBy("source")
-        .agg(count(lit(1)).as("n_docs"),
-          sum(when(!col("ok"), 1L).otherwise(0L)).as("n_failed"),
-          sum(col("n_frames")).cast("long").as("total_frames"),
-          round(avg("duration_ms"), 2).as("avg_duration_ms"),
-          round(avg("rms"), 1).as("avg_rms"))
-        .orderBy("source"),
-        col("n_failed") === 0 && col("avg_duration_ms").between(50.0, 100.0),
-        "every rendered WAV must decode; duration must follow the renderer contract")
-        .select(col("source"), col("n_docs"), col("n_failed"), col("total_frames"))
-    },
-
-    // REAL frame sampling over a multi-frame container (JDK GIF codec as
-    // the video stand-in): render 8-frame GIFs, decode every 3rd frame
-    // only. Promoted to a full oracle (r5): the sampled population is
-    // plain SQL and every 8-frame GIF must yield exactly 3 frames at the
-    // rendered dims, so n_ok pins to n_docs; mean luma stays gate-side.
-    Q("x_media_frames",
-      """SELECT CAST(count(*) AS BIGINT) AS n_docs,
-        |CAST(count(*) AS BIGINT) AS n_ok FROM documents
-        |WHERE doc_id < 100""".stripMargin) { (s, dir) =>
-      val docs = par(Tables(s, dir, "documents")).where(col("doc_id") < 100)
-        .select(col("doc_id"), col("text"))
-      import s.implicits._
-      val sampled = docs.as[(Long, String)].mapPartitions(_.map { case (id, text) =>
-        val gif = Multimodal.renderGif(id, text, nFrames = 8)
-        val frames = Multimodal.sampleFrames(gif, everyK = 3)
-        (id, frames.length,
-          frames.forall { case (_, w, h, _) => w == 16 && h == 12 },
-          frames.map(_._4).sum / math.max(frames.length, 1))
-      }).toDF("doc_id", "n_sampled", "dims_ok", "mean_luma")
-      Gate(sampled.agg(count(lit(1)).as("n_docs"),
-        coalesce(sum(when(col("n_sampled") === 3 && col("dims_ok"), 1L)), lit(0L))
-          .as("n_ok"),
-        round(avg("mean_luma"), 2).as("avg_luma")),
-        col("n_docs") > 0 && col("n_ok") === col("n_docs"),
-        "every 8-frame GIF must yield 3 sampled frames at the rendered dims")
-        .select(col("n_docs"), col("n_ok"))
-    },
-
-    // REAL resize: decode -> Graphics2D scale to 8x8 -> re-encode -> decode
-    // again; every row must come back at the target dimensions. Promoted
-    // to a full oracle (r5): the resized population is plain SQL and the
-    // round-trip contract pins n_found to n_expected.
-    Q("x_media_resize",
-      """SELECT CAST(count(*) AS BIGINT) AS n_expected,
-        |CAST(count(*) AS BIGINT) AS n_found FROM documents
-        |WHERE doc_id < 100""".stripMargin) { (s, dir) =>
-      val imgs = Multimodal.asImageTable(
-        par(Tables(s, dir, "documents")).where(col("doc_id") < 100))
-      import s.implicits._
-      val roundTrip = imgs.mapPartitions(_.map { r =>
-        val dims = Multimodal.resizePng(r.payload, 8, 8)
-          .flatMap(Multimodal.decodeImage)
-          .map { case (w, h, _) => (w, h) }
-        (r.doc_id, dims.exists { case (w, h) => w == 8 && h == 8 })
-      }).toDF("doc_id", "dims_ok")
-      Gate(roundTrip.agg(count(lit(1)).as("n_expected"),
-        coalesce(sum(when(col("dims_ok"), 1L)), lit(0L)).as("n_found")),
-        col("n_expected") > 0 && col("n_found") === col("n_expected"),
-        "every resize must round-trip decode at the 8x8 target dims")
-    },
-
-    // Dimensionality reduction (deterministic JL random projection) — the
-    // pre-ANN shrink for wide embeddings: cosine of consecutive-id pairs
-    // before vs after projecting 64 -> 16 dims; the mean absolute
-    // distortion must stay inside the (loose) JL bound. Promoted to a full
-    // oracle (r5): the pair population is plain SQL and the JL-bound
-    // contract becomes a violation count pinned to 0; the distortion
-    // magnitudes stay gate-side (projection-seed-dependent floats).
-    Q("x_dim_reduce",
-      """SELECT CAST(count(*) AS BIGINT) AS n_pairs,
-        |CAST(0 AS BIGINT) AS n_violations
-        |FROM embeddings a JOIN embeddings b ON b.vec_id = a.vec_id + 1""".stripMargin) { (s, dir) =>
-      graft.functions.GraftFunctions.register(s)
-      import graft.functions.GraftFunctions.{graft_cosine, graft_project}
-      val emb = par(Tables(s, dir, "embeddings"))
-        .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
-        .withColumn("p", graft_project(col("v"), 16))
-      val a = emb.select(col("vec_id").as("id"), col("v").as("v1"), col("p").as("p1"))
-      val b = emb.select((col("vec_id") - 1).as("id"), col("v").as("v2"), col("p").as("p2"))
-      val r = a.join(b, "id")
-        .select(graft_cosine(col("v1"), col("v2")).as("c_full"),
-          graft_cosine(col("p1"), col("p2")).as("c_proj"))
-        .agg(count(lit(1)).as("n_pairs"),
-          round(avg(abs(col("c_full") - col("c_proj"))), 4).as("mean_abs_distortion"),
-          round(max(abs(col("c_full") - col("c_proj"))), 4).as("max_abs_distortion"))
-        .first()
-      Gate.check(r.getLong(0) > 0 && r.getDouble(1) <= 0.25,
-        s"JL projection mean distortion ${r.getDouble(1)} over ${r.getLong(0)} pairs exceeds bound")
-      import s.implicits._
-      Seq((r.getLong(0), if (r.getDouble(1) <= 0.25) 0L else 1L))
-        .toDF("n_pairs", "n_violations")
-    },
-
     // Deterministic hash-based train/test split — THE reproducible-pipeline
     // split (same row always lands in the same side, no RNG state to carry,
     // new data doesn't reshuffle old assignments). Sides must partition the
@@ -1969,187 +27,11 @@ object PipelineQueries {
         sum(when(col("__bucket") < 9, 1L).otherwise(0L)).as("n_train"),
         sum(when(col("__bucket") >= 9, 1L).otherwise(0L)).as("n_test")).first()
       val (n, tr, te) = (r.getLong(0), r.getLong(1), r.getLong(2))
-      val ok = n > 0 && tr + te == n && tr.toDouble / n >= 0.85 && tr.toDouble / n <= 0.95
-      Gate.check(ok, s"hash split broke: $tr train + $te test of $n docs")
       import s.implicits._
-      Seq((n, if (ok) 0L else 1L)).toDF("n_docs", "n_violations")
-    },
-
-    // Text scrubbing (PII-shaped redaction): digit runs masked — pure
-    // regexp_replace, oracled (same RE semantics for this pattern in both
-    // engines).
-    Q("x_text_scrub",
-      """SELECT doc_id, length(regexp_replace(text, '[0-9]+', '#', 'g')) AS n_scrubbed,
-        |CAST(length(text) - length(regexp_replace(text, '[0-9]+', '', 'g')) AS INTEGER)
-        |  AS n_digit_chars
-        |FROM documents ORDER BY doc_id""".stripMargin) { (s, dir) =>
-      Tables(s, dir, "documents").select(
-        col("doc_id"),
-        length(regexp_replace(col("text"), "[0-9]+", "#")).as("n_scrubbed"),
-        (length(col("text")) -
-          length(regexp_replace(col("text"), "[0-9]+", ""))).cast("int")
-          .as("n_digit_chars"))
-        .orderBy("doc_id")
-    },
-
-    // Gopher-style quality filter (Rae et al. 2021, Appendix A1.1 — the
-    // rule shapes every corpus-cleaning pipeline applies before training):
-    // word-count bounds, mean-word-length bounds, alpha-word ratio,
-    // stopword presence. ALL rule math is integer cross-multiplied
-    // (chars BETWEEN 2n AND 12n for mean length in [2,12]; 5*alpha >= 4n
-    // for ratio >= 0.8) so Spark and DuckDB compare identical integers —
-    // no float boundary lottery. Pure column expressions, one scan, one
-    // exchange on source; drop counts are per-rule independent.
-    Q("x_quality_filter",
-      """WITH w AS (SELECT source,
-        |  list_filter(string_split(lower(text), ' '), t -> t <> '') AS ws
-        |  FROM documents),
-        |m AS (SELECT source, CAST(len(ws) AS BIGINT) AS n,
-        |  CAST(length(array_to_string(ws, '')) AS BIGINT) AS chars,
-        |  CAST(len(list_filter(ws, t -> regexp_matches(t, '[a-z]'))) AS BIGINT) AS alpha,
-        |  CAST(len(list_filter(ws, t ->
-        |    t IN ('the','a','and','of','to','in'))) AS BIGINT) AS stops
-        |  FROM w)
-        |SELECT source, count(*) AS n_docs,
-        |  CAST(sum(CASE WHEN n BETWEEN 10 AND 500 THEN 0 ELSE 1 END) AS BIGINT)
-        |    AS n_drop_len,
-        |  CAST(sum(CASE WHEN chars >= 2 * n AND chars <= 12 * n THEN 0 ELSE 1 END)
-        |    AS BIGINT) AS n_drop_wordlen,
-        |  CAST(sum(CASE WHEN 5 * alpha >= 4 * n THEN 0 ELSE 1 END) AS BIGINT)
-        |    AS n_drop_alpha,
-        |  CAST(sum(CASE WHEN stops >= 2 THEN 0 ELSE 1 END) AS BIGINT) AS n_drop_stop,
-        |  CAST(sum(CASE WHEN n BETWEEN 10 AND 500
-        |    AND chars >= 2 * n AND chars <= 12 * n
-        |    AND 5 * alpha >= 4 * n AND stops >= 2 THEN 1 ELSE 0 END) AS BIGINT)
-        |    AS n_kept
-        |FROM m GROUP BY source ORDER BY source""".stripMargin) { (s, dir) =>
-      val ws = filter(split(lower(col("text")), " "), t => t =!= "")
-      val stopSet = Seq("the", "a", "and", "of", "to", "in")
-      val m = Tables(s, dir, "documents")
-        .select(col("source"), ws.as("ws"))
-        .select(col("source"),
-          size(col("ws")).cast("long").as("n"),
-          length(concat_ws("", col("ws"))).cast("long").as("chars"),
-          size(filter(col("ws"), t => t.rlike("[a-z]"))).cast("long").as("alpha"),
-          size(filter(col("ws"), t => t.isin(stopSet: _*))).cast("long").as("stops"))
-      val passLen = col("n").between(10L, 500L)
-      val passWl = col("chars") >= lit(2L) * col("n") &&
-        col("chars") <= lit(12L) * col("n")
-      val passAlpha = lit(5L) * col("alpha") >= lit(4L) * col("n")
-      val passStop = col("stops") >= 2L
-      m.groupBy("source").agg(
-        count(lit(1)).as("n_docs"),
-        sum(when(passLen, 0L).otherwise(1L)).as("n_drop_len"),
-        sum(when(passWl, 0L).otherwise(1L)).as("n_drop_wordlen"),
-        sum(when(passAlpha, 0L).otherwise(1L)).as("n_drop_alpha"),
-        sum(when(passStop, 0L).otherwise(1L)).as("n_drop_stop"),
-        sum(when(passLen && passWl && passAlpha && passStop, 1L).otherwise(0L))
-          .as("n_kept"))
-        .orderBy("source")
-    },
-
-    // The operators COMPOSE: quality filter -> exact dedup (keep-first) ->
-    // tokenize -> fixed 128-token chunking, as one pipeline with ONE
-    // end-to-end oracle over the final corpus stats. A regression anywhere
-    // in the chain (a rule flips, dedup keeps the wrong survivor, the
-    // chunk closed-form drifts) moves a number the oracle recomputes
-    // independently from the raw table. Stage counts ride along so the
-    // driver can see WHERE the funnel narrows.
-    Q("x_pipeline_e2e",
-      """WITH m AS (SELECT doc_id, text,
-        |  list_filter(string_split(lower(text), ' '), t -> t <> '') AS ws
-        |  FROM documents),
-        |q AS (SELECT doc_id, text, CAST(len(ws) AS BIGINT) AS n,
-        |  CAST(length(array_to_string(ws, '')) AS BIGINT) AS chars,
-        |  CAST(len(list_filter(ws, t -> regexp_matches(t, '[a-z]'))) AS BIGINT)
-        |    AS alpha,
-        |  CAST(len(list_filter(ws, t ->
-        |    t IN ('the','a','and','of','to','in'))) AS BIGINT) AS stops
-        |  FROM m),
-        |k AS (SELECT doc_id, text, n FROM q
-        |  WHERE n BETWEEN 10 AND 500 AND chars >= 2 * n AND chars <= 12 * n
-        |    AND 5 * alpha >= 4 * n AND stops >= 2),
-        |d AS (SELECT min(doc_id) AS doc_id, min(n) AS n FROM k
-        |  GROUP BY md5(lower(text)))
-        |SELECT (SELECT count(*) FROM documents) AS n_docs_in,
-        |  (SELECT count(*) FROM k) AS n_docs_kept,
-        |  count(*) AS n_docs_final,
-        |  CAST(sum(n) AS BIGINT) AS total_tokens,
-        |  CAST(sum((n + 127) // 128) AS BIGINT) AS n_chunks
-        |FROM d""".stripMargin) { (s, dir) =>
-      import s.implicits._
-      val ws = filter(split(lower(col("text")), " "), t => t =!= "")
-      val docs = Tables(s, dir, "documents")
-      val m = docs.select(col("doc_id"), col("text"),
-        size(ws).cast("long").as("n"),
-        length(concat_ws("", ws)).cast("long").as("chars"),
-        size(filter(ws, t => t.rlike("[a-z]"))).cast("long").as("alpha"),
-        size(filter(ws, t => t.isin("the", "a", "and", "of", "to", "in")))
-          .cast("long").as("stops"))
-      val kept = m.where(col("n").between(10L, 500L) &&
-        col("chars") >= lit(2L) * col("n") && col("chars") <= lit(12L) * col("n") &&
-        lit(5L) * col("alpha") >= lit(4L) * col("n") && col("stops") >= 2L)
-      val nIn = docs.count()
-      val nKept = kept.count()
-      val survivors = Dedup.exact(kept.select("doc_id", "text"), "doc_id", "text")
-      survivors.select(size(ws).cast("long").as("n"))
-        .agg(count(lit(1)).as("n_docs_final"),
-          sum("n").as("total_tokens"),
-          sum(expr("(n + 127) DIV 128")).as("n_chunks"))
-        .select(lit(nIn).as("n_docs_in"), lit(nKept).as("n_docs_kept"),
-          col("n_docs_final"), col("total_tokens"), col("n_chunks"))
-    },
-
-    // PII extraction + redaction accounting over a deterministic PII-bearing
-    // text (an email, a phone-shaped number and an IPv4 derived from doc_id
-    // are appended to every doc — the corpus itself carries no PII to find).
-    // The value verified is REGEX SEMANTICS PARITY: both engines must find
-    // the same matches AND redact the same spans, so the oracle recomputes
-    // match counts and the exact count of characters removed by the chained
-    // redaction. Patterns are lookaround-free so Java regex and RE2 agree.
-    Q("x_pii_extract",
-      """WITH p AS (SELECT source,
-        |  text || ' contact user' || CAST(doc_id AS VARCHAR)
-        |    || '@mail.example.com or 555-'
-        |    || lpad(CAST(doc_id % 10000 AS VARCHAR), 4, '0')
-        |    || ' ip 10.0.' || CAST(doc_id % 256 AS VARCHAR)
-        |    || '.' || CAST((doc_id * 7) % 256 AS VARCHAR) AS t
-        |  FROM documents)
-        |SELECT source, count(*) AS n_docs,
-        |  CAST(sum(len(regexp_extract_all(t, '[a-z0-9.]+@[a-z0-9.]+'))) AS BIGINT)
-        |    AS n_emails,
-        |  CAST(sum(len(regexp_extract_all(t, '[0-9]{3}-[0-9]{4}'))) AS BIGINT)
-        |    AS n_phones,
-        |  CAST(sum(len(regexp_extract_all(t, '[0-9]+\.[0-9]+\.[0-9]+\.[0-9]+')))
-        |    AS BIGINT) AS n_ips,
-        |  CAST(sum(length(t) - length(
-        |    regexp_replace(regexp_replace(regexp_replace(t,
-        |      '[a-z0-9.]+@[a-z0-9.]+', '', 'g'),
-        |      '[0-9]{3}-[0-9]{4}', '', 'g'),
-        |      '[0-9]+\.[0-9]+\.[0-9]+\.[0-9]+', '', 'g'))) AS BIGINT) AS n_pii_chars
-        |FROM p GROUP BY source ORDER BY source""".stripMargin) { (s, dir) =>
-      val email = "[a-z0-9.]+@[a-z0-9.]+"
-      val phone = "[0-9]{3}-[0-9]{4}"
-      val ipv4 = "[0-9]+\\.[0-9]+\\.[0-9]+\\.[0-9]+"
-      val t = concat(col("text"), lit(" contact user"),
-        col("doc_id").cast("string"), lit("@mail.example.com or 555-"),
-        lpad((col("doc_id") % 10000).cast("string"), 4, "0"),
-        lit(" ip 10.0."), (col("doc_id") % 256).cast("string"),
-        lit("."), ((col("doc_id") * 7) % 256).cast("string"))
-      val redacted = regexp_replace(regexp_replace(regexp_replace(col("t"),
-        email, ""), phone, ""), ipv4, "")
-      Tables(s, dir, "documents")
-        .select(col("source"), t.as("t"))
-        .groupBy("source").agg(
-          count(lit(1)).as("n_docs"),
-          sum(size(expr(s"regexp_extract_all(t, '$email', 0)"))).cast("long")
-            .as("n_emails"),
-          sum(size(expr(s"regexp_extract_all(t, '$phone', 0)"))).cast("long")
-            .as("n_phones"),
-          sum(size(expr(s"regexp_extract_all(t, '${ipv4.replace("\\", "\\\\")}', 0)")))
-            .cast("long").as("n_ips"),
-          sum(length(col("t")) - length(redacted)).cast("long").as("n_pii_chars"))
-        .orderBy("source")
+      Seq((n, Gate.violations(
+        (n > 0 && tr + te == n && tr.toDouble / n >= 0.85 && tr.toDouble / n <= 0.95) ->
+          s"hash split broke: $tr train + $te test of $n docs")))
+        .toDF("n_docs", "n_violations")
     },
 
     // Source mixing by largest-remainder apportionment (Hamilton's method):
@@ -2208,62 +90,6 @@ object PipelineQueries {
         .select("source", "doc_id").orderBy("source", "doc_id")
     },
 
-    // Exact percentiles (linear interpolation in both engines) — sort+window
-    // plan (operators.Percentiles), not the builtin `percentile` aggregate
-    // whose per-group value buffer is the dataset itself at 100 TB.
-    // UNROUNDED outputs on purpose: the interpolation `lower + (upper -
-    // lower) * frac` is bit-identical to DuckDB's quantile_cont (see
-    // Percentiles scaladoc), so raw doubles hash-match exactly — while
-    // round(x, 2) does NOT: Spark rounds the exact binary value and DuckDB
-    // the shortest decimal repr, which disagree whenever the value's repr
-    // lands on a half-cent (52724.244999999995 prints as "52724.245" ->
-    // DuckDB .25, Spark .24; struck at sf0.001). Rounding here traded a
-    // bit-exact value for a boundary lottery.
-    Q("x_percentiles",
-      """SELECT l_returnflag, quantile_cont(l_extendedprice, 0.5) AS p50,
-        |quantile_cont(l_extendedprice, 0.9) AS p90
-        |FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin) { (s, dir) =>
-      graft.operators.Percentiles.exact(
-        Tables(s, dir, "lineitem"), "l_returnflag", "l_extendedprice", Seq(0.5, 0.9))
-        .select(col("l_returnflag"), col("p50"), col("p90"))
-        .orderBy("l_returnflag")
-    },
-
-    // Approximate percentile sketch (GK): the fixed-size mergeable path when
-    // exactness isn't required. GATED in-row against the exact sort-based
-    // value; relative error must be inside the accuracy bound. The exact
-    // baseline is confined to ONE group — x_percentiles already pays for the
-    // full exact computation, so re-running all groups here doubled the
-    // bench cost for zero extra signal.
-    // Promoted to a full oracle (r5): the exact p50 is bit-reproducible in
-    // DuckDB (quantile_cont — same interpolation x_percentiles already
-    // proves bit-identical) and the 1%-of-exact sketch contract becomes a
-    // violation count pinned to 0. The sketch's own estimate stays
-    // gate-side (GK-internal).
-    Q("x_approx_percentiles",
-      """SELECT l_returnflag, quantile_cont(l_extendedprice, 0.5) AS exact_p50,
-        |CAST(0 AS BIGINT) AS n_violations
-        |FROM lineitem WHERE l_returnflag = 'R'
-        |GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin) { (s, dir) =>
-      val li = Tables(s, dir, "lineitem").where(col("l_returnflag") === "R")
-      val exact = graft.operators.Percentiles.exact(
-        li, "l_returnflag", "l_extendedprice", Seq(0.5))
-        .select(col("l_returnflag"), col("p50").as("exact_p50"))
-      val approx = li.groupBy("l_returnflag")
-        .agg(expr("approx_percentile(l_extendedprice, 0.5, 1000)").as("approx_p50"))
-      Gate(exact.join(approx, "l_returnflag")
-        .select(col("l_returnflag"), col("exact_p50"),
-          (abs(col("approx_p50") - col("exact_p50")) / col("exact_p50") <= 0.01)
-            .as("within_bound"))
-        .orderBy("l_returnflag"),
-        col("within_bound"),
-        "approx_percentile p50 must sit within 1% of the exact value")
-        .select(col("l_returnflag"), col("exact_p50"),
-          (!col("within_bound")).cast("long").as("n_violations"))
-    },
-
-    // -- Stateful sessionization (streaming twin in graft.streaming) ----
-
     // Cohort retention: users grouped by first-activity week, activity
     // counted at week offsets — the canonical product-analytics rollup.
     // Plan shape for 100 TB: the per-user first touch comes from a
@@ -2294,38 +120,6 @@ object PipelineQueries {
         .groupBy("cohort", "week_offset")
         .agg(countDistinct("user_id").as("n_users"))
         .orderBy("cohort", "week_offset")
-    },
-
-    // Incremental aggregate maintenance: three "daily" batches fold into a
-    // running per-key state via additive full-outer merges — the
-    // materialized-view pattern that replaces recomputing the world when
-    // 100 TB grows by 100 GB a day. The oracle is the DIRECT full
-    // recompute, so the incremental path must be value-identical to
-    // starting over; integer cents keep the sums order-free exact.
-    Q("x_incremental_agg",
-      """SELECT event_type, count(*) AS n_events,
-        |CAST(sum(CAST(round(value * 100, 0) AS BIGINT)) AS BIGINT) AS sum_cents
-        |FROM events GROUP BY event_type ORDER BY event_type""".stripMargin) { (s, dir) =>
-      val ev = Tables(s, dir, "events")
-        .select(col("event_type"), col("ts"),
-          round(col("value") * 100, 0).cast("long").as("cents"))
-      def batchAgg(b: org.apache.spark.sql.DataFrame) =
-        b.groupBy("event_type").agg(count(lit(1)).as("n_events"),
-          sum("cents").as("sum_cents"))
-      val batches = Seq(
-        ev.where(dayofmonth(col("ts")) <= 10),
-        ev.where(dayofmonth(col("ts")).between(11, 20)),
-        ev.where(dayofmonth(col("ts")) >= 21))
-      val state = batches.map(batchAgg).reduce { (acc, delta) =>
-        acc.withColumnRenamed("n_events", "n0").withColumnRenamed("sum_cents", "s0")
-          .join(delta, Seq("event_type"), "full_outer")
-          .select(col("event_type"),
-            (coalesce(col("n0"), lit(0L)) + coalesce(col("n_events"), lit(0L)))
-              .as("n_events"),
-            (coalesce(col("s0"), lit(0L)) + coalesce(col("sum_cents"), lit(0L)))
-              .as("sum_cents"))
-      }
-      state.orderBy("event_type")
     },
 
     // Range (interval) join via bucket decomposition: clicks inside each
@@ -2510,459 +304,6 @@ object PipelineQueries {
         .orderBy("user_id")
     },
 
-    // Image near-dup via perceptual dHash: render -> REAL decode -> 9x8
-    // difference hash -> the SAME Hamming band-bucket join text simhash
-    // uses (Dedup.hammingPairs). 20 injected copies re-encode the source
-    // PNG with one corner pixel inverted — same content, one edit, fresh
-    // encode pass — and must land within Hamming 4 of their source
-    // (deterministic: renderer, codec and hash are all pure functions).
-    // This is the multimodal x dedup composition: payload bytes never
-    // shuffle (hashes extracted per-partition), candidates confined to
-    // 16-bit band buckets.
-    Q("x_media_dedup",
-      """SELECT CAST(count(*) AS BIGINT) AS n_expected,
-        |CAST(0 AS BIGINT) AS n_violations FROM documents
-        |WHERE doc_id < 20""".stripMargin) { (s, dir) =>
-      import s.implicits._
-      val docs = Tables(s, dir, "documents")
-      val images = Multimodal.asImageTable(docs)
-      val injected = docs.where(col("doc_id") < 20)
-        .select(col("doc_id"), col("source"), col("text"))
-        .as[(Long, String, String)]
-        .mapPartitions(_.map { case (id, src, text) =>
-          val png = Multimodal.invertOnePixel(Multimodal.renderPng(id, text))
-          Multimodal.MediaRow(id + 1000000L, src, "image/png",
-            png.length.toLong, png)
-        })
-      // two-tier (the video-family discipline, r12): exact-signature
-      // collapse first — identical dHashes form C(g,2) band-join pairs no
-      // occupancy cap can split — then near-pair REPRESENTATIVES only;
-      // an edited copy is recovered via its source's group or a rep pair
-      val hashed = Multimodal.imageHashes(images.unionByName(injected))
-        .withColumnRenamed("doc_id", "id").localCheckpoint(true)
-      val groups = Dedup.exactHashGroups(hashed).localCheckpoint(true)
-      val repHashed = hashed.join(
-        groups.where(col("id") === col("rep")).select("id"), Seq("id"))
-      val near = Dedup.hammingPairs(repHashed, maxHamming = 4)
-      val nFound = recoveredViaGroupOrNear(groups, near)
-      Gate.check(nFound >= 18,
-        s"image dHash recovered only $nFound/20 one-pixel-edited copies")
-      Seq((20L, if (nFound >= 18) 0L else 1L))
-        .toDF("n_expected", "n_violations")
-    },
-
-    // Audio near-dup — x_media_dedup's audio twin: every doc rendered as
-    // a REAL 16-bit PCM WAV, 20 injected near-copies made by a REAL gain
-    // change (attenuateWav 0.5 + re-encode), spectral sign-of-band-
-    // difference fingerprints (amplitude-invariant by construction), the
-    // shared Hamming band join. Recovery is a hard >= 18/20 contract;
-    // exact hamming 0 is expected for pure gain changes but the gate
-    // allows the band-join's maxHamming=3 tolerance.
-    Q("x_audio_dedup",
-      """SELECT CAST(count(*) AS BIGINT) AS n_expected,
-        |CAST(0 AS BIGINT) AS n_violations FROM documents
-        |WHERE doc_id < 20""".stripMargin) { (s, dir) =>
-      import s.implicits._
-      val docs = Tables(s, dir, "documents")
-      val audio = Multimodal.asAudioTable(docs)
-      val injected = docs.where(col("doc_id") < 20)
-        .select(col("doc_id"), col("source"),
-          octet_length(col("text")).cast("long"))
-        .as[(Long, String, Long)]
-        .mapPartitions(_.map { case (id, src, nChars) =>
-          val wav = Multimodal.attenuateWav(
-            Multimodal.renderWav(id, nChars), 0.5)
-          Multimodal.MediaRow(id + 1000000L, src, "audio/wav",
-            wav.length.toLong, wav)
-        })
-      // two-tier (the video-family discipline, r12). Audio NEEDS the
-      // collapse more than any sibling: renderWav keys frequency on
-      // docId mod 400, so identical spectral hashes form ~n/400-member
-      // classes whose C(g,2) pairs would dominate the raw band join at
-      // any replicated corpus; a pure gain change hashes IDENTICALLY
-      // (spec-pinned), so the attenuated copies recover via groups.
-      val hashed = Multimodal.audioHashes(audio.unionByName(injected))
-        .withColumnRenamed("doc_id", "id").localCheckpoint(true)
-      val groups = Dedup.exactHashGroups(hashed).localCheckpoint(true)
-      val repHashed = hashed.join(
-        groups.where(col("id") === col("rep")).select("id"), Seq("id"))
-      val near = Dedup.hammingPairs(repHashed, maxHamming = 3)
-      val nFound = recoveredViaGroupOrNear(groups, near)
-      Gate.check(nFound >= 18,
-        s"audio spectral hash recovered only $nFound/20 attenuated copies")
-      Seq((20L, if (nFound >= 18) 0L else 1L))
-        .toDF("n_expected", "n_violations")
-    },
-
-    // Video near-dup — completes the modality matrix (image/audio/video):
-    // every doc rendered as a REAL 8-frame GIF (the frame-sequence video
-    // stand-in; the JDK has no video codec), 20 injected near-copies made
-    // by a REAL decode + one-pixel edit in frame 3 + re-encode
-    // (invertOnePixelInFrame), per-frame dHash fingerprints. Two-tier
-    // dedup, the ppjoin identity-collapse discipline applied to video:
-    // (1) videoExactGroups collapses identical full signatures — the
-    // corpus's big duplicate classes whose C(g,2) pairs no banding can
-    // split; (2) videoPairs near-joins REPRESENTATIVES only, temporally
-    // ALIGNED (>= 6 of 8 frames within 4 bits at the SAME position; a
-    // shifted or re-cut sequence misaligns and must NOT match —
-    // VideoDedupSpec pins that negative). A copy is recovered when it
-    // shares its source's exact group OR its rep near-pairs the
-    // source's rep. Hard >= 18/20 contract like the image/audio twins.
-    Q("x_video_dedup",
-      """SELECT CAST(count(*) AS BIGINT) AS n_expected,
-        |CAST(0 AS BIGINT) AS n_violations FROM documents
-        |WHERE doc_id < 20""".stripMargin) { (s, dir) =>
-      import s.implicits._
-      val docs = Tables(s, dir, "documents")
-      val videos = Multimodal.asVideoTable(par(docs))
-      val injected = docs.where(col("doc_id") < 20)
-        .select(col("doc_id"), col("source"), col("text"))
-        .as[(Long, String, String)]
-        .mapPartitions(_.map { case (id, src, text) =>
-          val gif = Multimodal.invertOnePixelInFrame(
-            Multimodal.renderGif(id, text, nFrames = 8), frame = 3)
-          Multimodal.MediaRow(id + 1000000L, src, "image/gif",
-            gif.length.toLong, gif)
-        })
-      // the hash frame feeds groups, the rep filter and the band join —
-      // pin it once or the GIF render+decode re-runs per consumer
-      val fh = Multimodal.videoFrameHashes(videos.unionByName(injected))
-        .localCheckpoint(true)
-      val groups = Multimodal.videoExactGroups(fh).localCheckpoint(true)
-      val repHashes = fh.join(
-        groups.where(col("doc_id") === col("rep")).select("doc_id"), Seq("doc_id"))
-      val near = Multimodal.videoPairs(repHashes, maxHamming = 4, minMatchFrames = 6)
-      // per injected pair (a, a+1e6): same exact group, or rep near-pair
-      val nFound = recoveredViaGroupOrNear(
-        groups.withColumnRenamed("doc_id", "id"),
-        near.select(col("v1").as("id1"), col("v2").as("id2")))
-      Seq((20L, if (nFound >= 18) 0L else 1L))
-        .toDF("n_expected", "n_violations")
-    },
-
-    // Quantile-digest rollup — the rank-statistics twin of x_hll_rollup:
-    // per-day centroid digests (graft_qsketch_state, ~2 KB binary each)
-    // are WRITTEN to parquet, read back, and merged
-    // (graft_qsketch_merged) into all-time p50/p90 without rescanning raw
-    // events. Unlike HLL the merge is order-sensitive inside its error
-    // bound, so the gate is the same bracketed-rank contract
-    // x_grouped_quantiles pins: the true rank of each estimate must fall
-    // within ~6/k (+1/n granularity) of its target.
-    Q("x_qsketch_rollup",
-      """SELECT CAST(count(DISTINCT date_trunc('day', ts)) AS BIGINT) AS n_days,
-        |CAST(0 AS BIGINT) AS n_violations FROM events""".stripMargin) { (s, dir) =>
-      graft.functions.GraftFunctions.register(s)
-      import graft.functions.GraftFunctions.{graft_qsketch_merged, graft_qsketch_state}
-      val k = 256
-      val ev = Tables(s, dir, "events")
-        .select(col("ts"), round(col("value") * 100, 0).cast("long")
-          .cast("double").as("v"))
-      val tmp = Tmp.dir("graft-qsk")
-      val rollup = tmp.resolve("daily").toString
-      ev.groupBy(date_trunc("day", col("ts")).as("day"))
-        .agg(graft_qsketch_state(col("v"), k).as("digest"))
-        .write.mode("overwrite").parquet(rollup)
-      val stored = s.read.parquet(rollup)
-      val m = stored.agg(
-        graft_qsketch_merged(col("digest"), k, Seq(0.5, 0.9)).as("qs"),
-        count(lit(1)).as("n_days")).collect()(0)
-      val (p50, p90) = (m.getSeq[Double](0)(0), m.getSeq[Double](0)(1))
-      val nDays = m.getLong(1)
-      val ranks = ev.agg(
-        (sum(when(col("v") < p50, 1.0)) / count(lit(1))).as("r50lo"),
-        (sum(when(col("v") <= p50, 1.0)) / count(lit(1))).as("r50hi"),
-        (sum(when(col("v") < p90, 1.0)) / count(lit(1))).as("r90lo"),
-        (sum(when(col("v") <= p90, 1.0)) / count(lit(1))).as("r90hi"),
-        count(lit(1)).as("n")).collect()(0)
-      val bound = 6.0 / k + 1.0 / ranks.getLong(4)
-      val err50 = math.max(0.0, math.max(ranks.getDouble(0) - 0.5, 0.5 - ranks.getDouble(1)))
-      val err90 = math.max(0.0, math.max(ranks.getDouble(2) - 0.9, 0.9 - ranks.getDouble(3)))
-      Gate.check(err50 <= bound && err90 <= bound,
-        f"merged digest rank error outside bound: err50=$err50%.4f err90=$err90%.4f bound=$bound%.4f")
-      import s.implicits._
-      Seq((nDays, if (err50 <= bound && err90 <= bound) 0L else 1L))
-        .toDF("n_days", "n_violations")
-    },
-
-    // STREAMING percentiles — the sketch-in-stream composition: per-day
-    // quantile-digest PARTIALS accumulate from a real foreachBatch sink
-    // (one ~2 KB graft_qsketch_state row per (day, micro-batch), appended
-    // to a state table), and the final per-day p50/p90 merge the stored
-    // partials WITHOUT rescanning raw events. This is x_qsketch_rollup's
-    // contract carried across micro-batch boundaries: a day split across
-    // batches must still answer within the 6/k rank bound, which also
-    // exercises the r9 digest wire header (every stored partial
-    // round-trips through parquet with its k validated on read). Gate:
-    // EVERY day's merged p50/p90 bracket their true per-day ranks.
-    Q("x_stream_quantile",
-      """SELECT CAST(count(DISTINCT date_trunc('day', ts)) AS BIGINT) AS n_days,
-        |CAST(0 AS BIGINT) AS n_violations FROM events""".stripMargin) { (s, dir) =>
-      graft.functions.GraftFunctions.register(s)
-      import graft.functions.GraftFunctions.{graft_qsketch_merged, graft_qsketch_state}
-      val k = 256
-      Tmp.scoped("graft-squant") { tmp =>
-        val fx = quantileSource(s, dir)
-        val ev = fx.df
-        val merged = dayPartials(s, tmp, fx)(
-            graft_qsketch_state(col("v"), k).as("digest"))
-          .groupBy("day")
-          .agg(graft_qsketch_merged(col("digest"), k, Seq(0.5, 0.9)).as("qs"),
-            count(lit(1)).as("n_partials"))
-          .select(col("day"), col("qs")(0).as("p50"), col("qs")(1).as("p90"),
-            col("n_partials"))
-        // per-day exact bracket ranks against the raw events (verification
-        // only — the ANSWER path above never rescans them)
-        val checked = ev.withColumn("day", date_trunc("day", col("ts")))
-          .join(broadcast(merged), "day")
-          .groupBy("day")
-          .agg(
-            (sum(when(col("v") < col("p50"), 1.0)) / count(lit(1))).as("r50lo"),
-            (sum(when(col("v") <= col("p50"), 1.0)) / count(lit(1))).as("r50hi"),
-            (sum(when(col("v") < col("p90"), 1.0)) / count(lit(1))).as("r90lo"),
-            (sum(when(col("v") <= col("p90"), 1.0)) / count(lit(1))).as("r90hi"),
-            count(lit(1)).as("n"))
-          .withColumn("bound", lit(6.0 / k) + lit(1.0) / col("n"))
-          .withColumn("bad",
-            (greatest(col("r50lo") - 0.5, lit(0.5) - col("r50hi"), lit(0.0))
-              > col("bound")) ||
-            (greatest(col("r90lo") - 0.9, lit(0.9) - col("r90hi"), lit(0.0))
-              > col("bound")))
-        val stats = checked.agg(count(lit(1)).as("n_days"),
-          coalesce(sum(when(col("bad"), 1L)), lit(0L)).as("viol")).collect()(0)
-        Gate.check(stats.getLong(1) == 0,
-          s"${stats.getLong(1)}/${stats.getLong(0)} days outside the 6/k rank bound")
-        import s.implicits._
-        Seq((stats.getLong(0), stats.getLong(1)))
-          .toDF("n_days", "n_violations")
-      }
-    },
-
-    // Mergeable-HLL rollup: per-day user sketches (graft_hll, 4 KB binary
-    // each) are WRITTEN to parquet — a sketch rollup table — read back,
-    // and merged (graft_hll_merge) into the all-time distinct estimate
-    // without rescanning raw events. This is the re-aggregation pattern
-    // approx_count_distinct can't express (its sketch never leaves the
-    // aggregation). Two gates: (1) merged-of-stored == direct-over-raw
-    // EXACTLY — register max is associative/commutative, so the rollup
-    // path must be bit-identical; (2) the estimate is within 3 x 1.6%
-    // rsd of the true cardinality. The oracle pins the SQL-computable
-    // population (days, exact users) and both gates as violation counts.
-    Q("x_hll_rollup",
-      """SELECT CAST(count(DISTINCT date_trunc('day', ts)) AS BIGINT) AS n_days,
-        |CAST(count(DISTINCT user_id) AS BIGINT) AS n_exact,
-        |CAST(0 AS BIGINT) AS n_violations FROM events""".stripMargin) { (s, dir) =>
-      graft.functions.GraftFunctions.register(s)
-      import graft.functions.GraftFunctions.{graft_hll, graft_hll_card, graft_hll_merge}
-      val ev = Tables(s, dir, "events")
-      val tmp = Tmp.dir("graft-hll")
-      val rollup = tmp.resolve("daily").toString
-      ev.groupBy(date_trunc("day", col("ts")).as("day"))
-        .agg(graft_hll(xxhash64(col("user_id"))).as("sketch"))
-        .write.mode("overwrite").parquet(rollup)
-      val stored = s.read.parquet(rollup)
-      val merged = stored.agg(
-        graft_hll_card(graft_hll_merge(col("sketch"))).as("est"),
-        count(lit(1)).as("n_days"))
-        .collect()(0)
-      val direct = ev.agg(
-        graft_hll_card(graft_hll(xxhash64(col("user_id")))).as("est"),
-        countDistinct("user_id").as("exact")).collect()(0)
-      val (mergedEst, nDays) = (merged.getLong(0), merged.getLong(1))
-      val (directEst, exact) = (direct.getLong(0), direct.getLong(1))
-      Gate.check(mergedEst == directEst,
-        s"stored-rollup merge ($mergedEst) != direct sketch ($directEst)")
-      Gate.check(math.abs(mergedEst - exact) <= math.max(3, 3 * 0.016 * exact),
-        s"HLL estimate $mergedEst outside 3-rsd of exact $exact")
-      import s.implicits._
-      Seq((nDays, exact,
-        (if (mergedEst == directEst) 0L else 1L) +
-          (if (math.abs(mergedEst - exact) <= math.max(3, 3 * 0.016 * exact)) 0L else 1L)))
-        .toDF("n_days", "n_exact", "n_violations")
-    },
-
-    // Count-min rollup — the per-key-FREQUENCY member of the stored-
-    // sketch family (HLL = distinct, qsketch = ranks): per-day 64 KB
-    // sketches written to parquet, read back, merged (elementwise ADD, so
-    // merged-of-stored must equal direct-over-raw BIT-IDENTICALLY — gate
-    // 1 compares the binary states), then 20 probe users' estimates
-    // checked against their exact counts: est >= exact ALWAYS (the
-    // one-sided count-min guarantee — any violation is a bug, not
-    // noise), and within the (e/w)*N error bound for >= 18/20 probes
-    // (each row exceeds it with probability ~e^-d ~ 1.8%). Oracle pins
-    // the SQL-computable population and zero violations.
-    Q("x_cms_rollup",
-      """SELECT CAST(count(DISTINCT date_trunc('day', ts)) AS BIGINT) AS n_days,
-        |CAST(count(DISTINCT CASE WHEN user_id < 20 THEN user_id END) AS BIGINT)
-        |  AS n_probes,
-        |CAST(0 AS BIGINT) AS n_violations FROM events""".stripMargin) { (s, dir) =>
-      graft.functions.GraftFunctions.register(s)
-      import graft.functions.GraftFunctions.{graft_cms, graft_cms_merge, graft_cms_query}
-      val ev = Tables(s, dir, "events")
-      Tmp.scoped("graft-cms") { tmp =>
-        val rollup = tmp.resolve("daily").toString
-        ev.groupBy(date_trunc("day", col("ts")).as("day"))
-          .agg(graft_cms(xxhash64(col("user_id"))).as("sketch"))
-          .write.mode("overwrite").parquet(rollup)
-        val stored = s.read.parquet(rollup)
-        val merged = stored.agg(graft_cms_merge(col("sketch")).as("sk"),
-          count(lit(1)).as("n_days")).collect()(0)
-        val direct = ev.agg(graft_cms(xxhash64(col("user_id"))).as("sk"),
-          count(lit(1)).as("n")).collect()(0)
-        val (mergedSk, nDays) = (merged.getAs[Array[Byte]](0), merged.getLong(1))
-        val (directSk, nTotal) = (direct.getAs[Array[Byte]](0), direct.getLong(1))
-        Gate.check(java.util.Arrays.equals(mergedSk, directSk),
-          "stored-rollup cms merge differs from the direct sketch " +
-            "(elementwise add must be order-insensitive)")
-        // probe users 0..19 present in the corpus: exact counts vs the
-        // MERGED sketch's estimates
-        val probes = ev.where(col("user_id") < 20)
-          .groupBy("user_id").agg(count(lit(1)).as("exact"))
-          .withColumn("est",
-            graft_cms_query(lit(mergedSk), xxhash64(col("user_id"))))
-          .collect()
-        val under = probes.count(r => r.getAs[Long]("est") < r.getAs[Long]("exact"))
-        val bound = math.E / graft.functions.CountMin.W * nTotal
-        val over = probes.count(r =>
-          r.getAs[Long]("est") > r.getAs[Long]("exact") + bound)
-        Gate.check(under == 0,
-          s"$under probe estimates BELOW exact — breaks the one-sided bound")
-        Gate.check(probes.length - over >= probes.length - 2,
-          s"$over/${probes.length} probe estimates above the (e/w)*N bound")
-        import s.implicits._
-        Seq((nDays, probes.length.toLong,
-          (if (java.util.Arrays.equals(mergedSk, directSk)) 0L else 1L) +
-            under.toLong + (if (over <= 2) 0L else 1L)))
-          .toDF("n_days", "n_probes", "n_violations")
-      }
-    },
-
-    // Misra-Gries heavy-hitters rollup — the FOURTH stored-sketch member
-    // (HLL = distinct, qdigest = ranks, CMS = per-key frequency, MG =
-    // WHICH keys are frequent): per-day summaries (graft_mg, K=64, ~1 KB)
-    // written to parquet, merged (graft_mg_merge) and probed without
-    // rescanning raw events. The key stream is deliberately SKEWED (every
-    // user_id%4==0 event collapses onto event_id%8 -> 8 keys carrying
-    // ~3% of N each; the rest spread over 1000+user_id) because uniform
-    // keys have no heavy hitters to find. Unlike CMS there is NO
-    // probability to budget and NO bit-identity to pin (MG state is
-    // order-sensitive): the gates are the PODS'12 DETERMINISTIC
-    // invariants read off the merged state's own (n, m) — est <= exact
-    // ALWAYS, exact - est <= (N-M)/(K+1), and every key above that bound
-    // PRESENT — plus n == total increments. Any violation is a bug.
-    Q("x_mg_rollup",
-      """SELECT CAST(count(DISTINCT date_trunc('day', ts)) AS BIGINT) AS n_days,
-        |CAST(count(DISTINCT CASE WHEN user_id % 4 = 0 THEN event_id % 8
-        |  ELSE 1000 + user_id END) AS BIGINT) AS n_keys,
-        |CAST(0 AS BIGINT) AS n_violations FROM events""".stripMargin) { (s, dir) =>
-      graft.functions.GraftFunctions.register(s)
-      import graft.functions.GraftFunctions.{graft_mg, graft_mg_merge, graft_mg_query, graft_mg_stats}
-      val ev = Tables(s, dir, "events")
-        .select(date_trunc("day", col("ts")).as("day"),
-          when(col("user_id") % 4 === 0, col("event_id") % 8)
-            .otherwise(lit(1000L) + col("user_id")).as("k"))
-      Tmp.scoped("graft-mg") { tmp =>
-        val rollup = tmp.resolve("daily").toString
-        ev.groupBy("day").agg(graft_mg(col("k")).as("sketch"))
-          .write.mode("overwrite").parquet(rollup)
-        val stored = s.read.parquet(rollup)
-        val merged = stored.agg(graft_mg_merge(col("sketch")).as("sk"),
-          count(lit(1)).as("n_days")).collect()(0)
-        val (sk, nDays) = (merged.getAs[Array[Byte]](0), merged.getLong(1))
-        val statsRow = s.range(1)
-          .select(graft_mg_stats(lit(sk)).as("st")).collect()(0)
-        val st = statsRow.getAs[scala.collection.Seq[Long]]("st")
-        val (n, m, k) = (st(0), st(1), st(2))
-        val bound = (n - m).toDouble / (k + 1)
-        val total = ev.count()
-        Gate.check(n == total,
-          s"merged state absorbed $n increments, raw stream has $total")
-        // EVERY key's exact count vs the merged summary — the invariants
-        // are universal, so the gate checks the full key population, not
-        // a probe subset (key count is bounded: 8 heavy + user domain)
-        val checked = ev.groupBy("k").agg(count(lit(1)).as("exact"))
-          .withColumn("est", graft_mg_query(lit(sk), col("k")))
-          .withColumn("over", col("est") > col("exact"))
-          .withColumn("outside",
-            (col("exact") - col("est")).cast("double") > lit(bound))
-          .withColumn("heavy_absent",
-            col("exact").cast("double") > lit(bound) && col("est") === 0)
-        val bad = checked.agg(
-          coalesce(sum(when(col("over"), 1L)), lit(0L)),
-          coalesce(sum(when(col("outside"), 1L)), lit(0L)),
-          coalesce(sum(when(col("heavy_absent"), 1L)), lit(0L)),
-          count(lit(1))).collect()(0)
-        val (over, outside, absent, nKeys) =
-          (bad.getLong(0), bad.getLong(1), bad.getLong(2), bad.getLong(3))
-        Gate.check(over == 0, s"$over keys OVERcounted — MG must be one-sided")
-        Gate.check(outside == 0,
-          s"$outside keys outside the deterministic (N-M)/(K+1) bound")
-        Gate.check(absent == 0,
-          s"$absent heavy keys missing from the merged summary")
-        import s.implicits._
-        Seq((nDays, nKeys, over + outside + absent))
-          .toDF("n_days", "n_keys", "n_violations")
-      }
-    },
-
-    // STREAMING count-min — cms-in-stream, closing the sketch-family
-    // streaming matrix (x_stream_quantile = ranks; this = per-key
-    // frequency): per-(day, micro-batch) 64 KB CMS partials accumulate
-    // from a real foreachBatch sink into a state table, and the per-day
-    // frequency answers merge the stored partials WITHOUT rescanning raw
-    // events. The fixture splits by USER parity, not by day — every day's
-    // events straddle both source generations, so every day's sketch
-    // genuinely accumulates across micro-batch boundaries (a day-split
-    // fixture would leave each day single-partial and never exercise the
-    // cross-batch merge; a "n_multi >= 1" gate pins that this one does).
-    // Gate 1 is CMS's distinctive contract: elementwise add is order-
-    // insensitive, so each day's merged-of-partials must equal the
-    // direct-over-raw sketch BIT-IDENTICALLY — any micro-batch boundary
-    // effect is a bug, not noise. Gate 2 probes 20 users against exact
-    // counts on the all-time merged sketch (est >= exact always; within
-    // (e/w)*N for >= 18/20 — same bounds as x_cms_rollup).
-    Q("x_stream_cms",
-      """SELECT CAST(count(DISTINCT date_trunc('day', ts)) AS BIGINT) AS n_days,
-        |CAST(count(DISTINCT CASE WHEN user_id < 20 THEN user_id END) AS BIGINT)
-        |  AS n_probes,
-        |CAST(0 AS BIGINT) AS n_violations FROM events""".stripMargin) { (s, dir) =>
-      graft.functions.GraftFunctions.register(s)
-      import graft.functions.GraftFunctions.{graft_cms, graft_cms_merge, graft_cms_query}
-      Tmp.scoped("graft-scms") { tmp =>
-        val fx = userParitySource(s, dir)
-        val ev = fx.df
-        val stored = dayPartials(s, tmp, fx)(
-          graft_cms(xxhash64(col("user_id"))).as("sketch"))
-        // Gate 1: per-day merged partials == direct per-day sketch,
-        // byte-for-byte; and the fixture actually split days across
-        // micro-batches (n_multi >= 1) or the merge was never exercised.
-        val (nDays, dayViol) = mergedEqualsDirect(stored, ev,
-          Seq(graft_cms_merge(col("sketch")).as("sk")),
-          Seq(graft_cms(xxhash64(col("user_id"))).as("dsk")),
-          col("sk") === col("dsk"))
-        // Gate 2: all-time merged sketch vs 20 probe users' exact counts.
-        val allRow = stored
-          .agg(graft_cms_merge(col("sketch")).as("sk")).collect()(0)
-        val allSk = allRow.getAs[Array[Byte]](0)
-        val nTotal = ev.count()
-        val probes = ev.where(col("user_id") < 20)
-          .groupBy("user_id").agg(count(lit(1)).as("exact"))
-          .withColumn("est", graft_cms_query(lit(allSk), xxhash64(col("user_id"))))
-          .collect()
-        val under = probes.count(r => r.getAs[Long]("est") < r.getAs[Long]("exact"))
-        val bound = math.E / graft.functions.CountMin.W * nTotal
-        val over = probes.count(r =>
-          r.getAs[Long]("est") > r.getAs[Long]("exact") + bound)
-        Gate.check(under == 0,
-          s"$under probe estimates BELOW exact — breaks the one-sided bound")
-        Gate.check(over <= 2,
-          s"$over/${probes.length} probe estimates above the (e/w)*N bound")
-        import s.implicits._
-        Seq((nDays, probes.length.toLong,
-          dayViol + under.toLong + (if (over <= 2) 0L else 1L)))
-          .toDF("n_days", "n_probes", "n_violations")
-      }
-    },
-
     // Sequential path mining — top event TRIGRAMS over each user's
     // time-ordered journey (the frequent-subsequence primitive behind
     // next-action models and journey analytics; x_funnel asks about ONE
@@ -2994,382 +335,6 @@ object PipelineQueries {
         .groupBy("path").agg(count(lit(1)).as("n"))
         .orderBy(col("n").desc, col("path"))
         .limit(20)
-    },
-
-    // STREAMING HLL — distinct-in-stream, completing the sketch-in-stream
-    // matrix (quantile digest, count-min, Misra-Gries, and now HLL all
-    // accumulate per-(day, micro-batch) partials from a foreachBatch sink
-    // and answer from stored state without rescanning raw events).
-    // Register max is order-insensitive, so HLL gets the CMS-style
-    // BIT-IDENTITY gate: each day's merged-of-stream-partials must equal
-    // the direct-over-raw sketch byte-for-byte, however the stream was
-    // batched; the user-parity fixture split makes every day straddle
-    // generations (n_multi gate). Accuracy gate: all-time merged estimate
-    // within 3 x 1.6% rsd of exact, as in x_hll_rollup.
-    Q("x_stream_hll",
-      """SELECT CAST(count(DISTINCT date_trunc('day', ts)) AS BIGINT) AS n_days,
-        |CAST(count(DISTINCT user_id) AS BIGINT) AS n_exact,
-        |CAST(0 AS BIGINT) AS n_violations FROM events""".stripMargin) { (s, dir) =>
-      graft.functions.GraftFunctions.register(s)
-      import graft.functions.GraftFunctions.{graft_hll, graft_hll_card, graft_hll_merge}
-      Tmp.scoped("graft-shll") { tmp =>
-        val fx = userParitySource(s, dir)
-        val ev = fx.df
-        val stored = dayPartials(s, tmp, fx)(
-          graft_hll(xxhash64(col("user_id"))).as("sketch"))
-        val (nDays, dayViol) = mergedEqualsDirect(stored, ev,
-          Seq(graft_hll_merge(col("sketch")).as("sk")),
-          Seq(graft_hll(xxhash64(col("user_id"))).as("dsk")),
-          col("sk") === col("dsk"))
-        val est = stored
-          .agg(graft_hll_card(graft_hll_merge(col("sketch"))).as("est"))
-          .collect()(0).getLong(0)
-        val exact = ev.agg(countDistinct("user_id")).collect()(0).getLong(0)
-        Gate.check(math.abs(est - exact) <= math.max(3, 3 * 0.016 * exact),
-          s"stream-merged HLL estimate $est outside 3-rsd of exact $exact")
-        import s.implicits._
-        Seq((nDays, exact, dayViol +
-          (if (math.abs(est - exact) <= math.max(3, 3 * 0.016 * exact)) 0L else 1L)))
-          .toDF("n_days", "n_exact", "n_violations")
-      }
-    },
-
-    // STREAMING KMV — the set-algebra sketch in the stream matrix (fifth
-    // member after qdigest/CMS/MG/HLL): per-(day, micro-batch) graft_kmv
-    // partials for TWO key populations (even users; users divisible by
-    // 3) accumulate from a foreachBatch sink; per-day merged-of-partials
-    // must equal the direct-over-raw sketch BYTE-FOR-BYTE (k-smallest-
-    // of-union is order-insensitive and the wire form canonical — the
-    // CMS/HLL identity class), and the all-time merged sketches answer
-    // the OVERLAP question from stored state alone: |even ∩ div3| =
-    // the div6 population, an engineered 0.25 jaccard the oracle states
-    // exactly. Below capacity (gate SFs) the sketch estimates must be
-    // EXACT; past it, 4-sigma bounds (the x_kmv_overlap discipline).
-    Q("x_stream_kmv",
-      """SELECT CAST(count(DISTINCT date_trunc('day', ts)) AS BIGINT) AS n_days,
-        |CAST(count(DISTINCT CASE WHEN user_id % 2 = 0 THEN user_id END)
-        |  AS BIGINT) AS n_even,
-        |CAST(count(DISTINCT CASE WHEN user_id % 3 = 0 THEN user_id END)
-        |  AS BIGINT) AS n_div3,
-        |CAST(count(DISTINCT CASE WHEN user_id % 6 = 0 THEN user_id END)
-        |  AS BIGINT) AS n_both,
-        |CAST(0 AS BIGINT) AS n_violations FROM events""".stripMargin) { (s, dir) =>
-      graft.functions.GraftFunctions.register(s)
-      import graft.functions.GraftFunctions.{graft_kmv, graft_kmv_merge, graft_kmv_overlap, graft_kmv_stats}
-      val kCap = 1024
-      Tmp.scoped("graft-skmv") { tmp =>
-        val fx = userParitySource(s, dir)
-        val ev = fx.df
-        val even = graft_kmv(when(pmod(col("user_id"), lit(2)) === 0,
-          col("user_id")), kCap)
-        val div3 = graft_kmv(when(pmod(col("user_id"), lit(3)) === 0,
-          col("user_id")), kCap)
-        val stored = dayPartials(s, tmp, fx)(even.as("sk_even"), div3.as("sk_div3"))
-        val (nDays, dayViol) = mergedEqualsDirect(stored, ev,
-          Seq(graft_kmv_merge(col("sk_even")).as("me"),
-            graft_kmv_merge(col("sk_div3")).as("m3")),
-          Seq(even.as("de"), div3.as("d3")),
-          col("me") === col("de") && col("m3") === col("d3"))
-        // overlap from STORED state alone: all-time merged even/div3
-        // sketches -> intersection estimate vs the exact div6 population
-        val o = stored.agg(graft_kmv_merge(col("sk_even")).as("ae"),
-          graft_kmv_merge(col("sk_div3")).as("a3"))
-          .select(graft_kmv_overlap(col("ae"), col("a3")).as("o"),
-            graft_kmv_stats(col("ae")).as("se"),
-            graft_kmv_stats(col("a3")).as("s3"))
-          .first()
-        val ov = o.getAs[scala.collection.Seq[Double]]("o")
-        val exact = ev.agg(
-          count_distinct(when(pmod(col("user_id"), lit(2)) === 0,
-            col("user_id"))).as("ne"),
-          count_distinct(when(pmod(col("user_id"), lit(3)) === 0,
-            col("user_id"))).as("n3"),
-          count_distinct(when(pmod(col("user_id"), lit(6)) === 0,
-            col("user_id"))).as("n6")).first()
-        val (nE, n3, n6) = (exact.getLong(0), exact.getLong(1), exact.getLong(2))
-        def ok(est: Double, ex: Long, full: Boolean, bound: Double,
-            floor: Double): Boolean =
-          if (!full) est == ex.toDouble
-          else math.abs(est - ex) <= math.max(bound * ex, floor)
-        val eFull = o.getAs[scala.collection.Seq[Double]]("se")(1) >= kCap
-        val dFull = o.getAs[scala.collection.Seq[Double]]("s3")(1) >= kCap
-        val viol = Seq(
-          !ok(ov(0), nE, eFull, 0.2, 0),
-          !ok(ov(1), n3, dFull, 0.2, 0),
-          !ok(ov(2), n6, eFull || dFull, 0.5, 20)).count(identity).toLong
-        import s.implicits._
-        Seq((nDays, nE, n3, n6,
-          viol + dayViol))
-          .toDF("n_days", "n_even", "n_div3", "n_both", "n_violations")
-      }
-    },
-
-    // STREAMING exactly-once across a RESTART — the durability semantic
-    // every other stream query assumes, demonstrated instead of assumed:
-    // the first stream instance ingests generation 1, is STOPPED, a
-    // second instance starts from the SAME checkpoint after generation 2
-    // lands, and the final state must equal the batch truth EXACTLY —
-    // integer-cents equality is the whole gate, since any file replayed
-    // across the restart double-counts and any file dropped
-    // under-counts. The file source's offset log in the checkpoint is
-    // the mechanism; phase tags on the stored partials pin that both
-    // instances actually contributed (a silently-dead phase B would
-    // otherwise look like an honest gen1-only run to the oracle).
-    Q("x_stream_restart",
-      """SELECT strftime(date_trunc('hour', ts), '%Y-%m-%d %H:00') AS hour,
-        |count(*) AS n_events,
-        |CAST(sum(CAST(round(value * 100, 0) AS BIGINT)) AS BIGINT) AS sum_cents
-        |FROM events WHERE user_id < 40
-        |GROUP BY 1 ORDER BY hour""".stripMargin) { (s, dir) =>
-      Tmp.scoped("graft-srst") { tmp =>
-        val src = new OrderedSource(tmp.resolve("src").toString)
-        val state = tmp.resolve("state").toString
-        val ev = Tables(s, dir, "events").where(col("user_id") < 40)
-          .select(col("ts").cast("timestamp").as("ts"),
-            round(col("value") * 100, 0).cast("long").as("cents"),
-            col("user_id"))
-        def runPhase(phase: String): Unit = runToCompletion(s, tmp.resolve("ckpt")) {
-          src.stream(s, s.read.parquet(src.path).schema, 1)
-            .writeStream.foreachBatch { (batch: DataFrame, _: Long) =>
-              batch.groupBy(date_trunc("hour", col("ts")).as("hour"))
-                .agg(count(lit(1)).as("n"), sum("cents").as("c"))
-                .withColumn("phase", lit(phase))
-                .write.mode("append").parquet(state)
-              ()
-            }
-        }
-        // phase A: generation 1 only, then the stream instance DIES.
-        // 3 files per generation: maxFilesPerTrigger=1 still exercises
-        // several micro-batches per phase without paying a 32-batch
-        // plan/commit tax per generation in the bench.
-        src.write(ev.where(pmod(col("user_id"), lit(2)) === 0).coalesce(3))
-        runPhase("A")
-        // generation 2 lands while no stream is running
-        src.write(ev.where(pmod(col("user_id"), lit(2)) === 1).coalesce(3))
-        // phase B: a NEW instance resumes from the same checkpoint
-        runPhase("B")
-        val stored = s.read.parquet(state)
-        val phases = stored.select("phase").distinct()
-          .collect().map(_.getString(0)).toSet
-        Gate.check(phases == Set("A", "B"),
-          s"restart not exercised: partials from phases $phases")
-        // eager: the result must detach from the tmp state files before
-        // the finally below deletes them
-        stored.groupBy("hour")
-          .agg(sum("n").as("n_events"), sum("c").as("sum_cents"))
-          .select(date_format(col("hour"), "yyyy-MM-dd HH:00").as("hour"),
-            col("n_events"), col("sum_cents"))
-          .orderBy("hour")
-          .localCheckpoint(true)
-      }
-    },
-
-    // STREAMING heavy hitters — Misra-Gries partials across micro-batch
-    // boundaries (x_mg_rollup's contract carried into the stream, the
-    // x_stream_cms / x_stream_quantile discipline): per-(day, batch) MG
-    // summaries from a foreachBatch sink, merged per day and globally
-    // WITHOUT rescanning raw events. The PODS'12 invariant is exactly
-    // what makes this composition legal — merging the stored per-batch
-    // partials preserves est <= exact and the (N-M)/(K+1) bound no
-    // matter how the stream was batched, so the gates are the same
-    // DETERMINISTIC ones as the batch rollup, over the full key
-    // population. User-parity fixture split (not day) so every day's
-    // summary genuinely accumulates across batches (n_multi gate).
-    Q("x_stream_topk",
-      """SELECT CAST(count(DISTINCT date_trunc('day', ts)) AS BIGINT) AS n_days,
-        |CAST(count(DISTINCT CASE WHEN user_id % 4 = 0 THEN event_id % 8
-        |  ELSE 1000 + user_id END) AS BIGINT) AS n_keys,
-        |CAST(0 AS BIGINT) AS n_violations FROM events""".stripMargin) { (s, dir) =>
-      graft.functions.GraftFunctions.register(s)
-      import graft.functions.GraftFunctions.{graft_mg, graft_mg_merge, graft_mg_query, graft_mg_stats}
-      Tmp.scoped("graft-stopk") { tmp =>
-        val ev = Tables(s, dir, "events")
-          .select(col("ts"), col("user_id"),
-            when(col("user_id") % 4 === 0, col("event_id") % 8)
-              .otherwise(lit(1000L) + col("user_id")).as("k"))
-        val stored = dayPartials(s, tmp,
-          TwoGen(ev, pmod(col("user_id"), lit(2)) === 0))(
-          graft_mg(col("k")).as("sketch"))
-        val nDays = stored.select("day").distinct().count()
-        val nMulti = stored.groupBy("day").agg(count(lit(1)).as("np"))
-          .where(col("np") > 1).count()
-        Gate.check(nMulti >= 1,
-          "no day accumulated >1 partial — cross-batch merge not exercised")
-        val merged = stored.agg(graft_mg_merge(col("sketch")).as("sk")).collect()(0)
-        val sk = merged.getAs[Array[Byte]](0)
-        val st = s.range(1).select(graft_mg_stats(lit(sk)).as("st"))
-          .collect()(0).getAs[scala.collection.Seq[Long]]("st")
-        val (n, m, k) = (st(0), st(1), st(2))
-        val bound = (n - m).toDouble / (k + 1)
-        val total = ev.count()
-        Gate.check(n == total,
-          s"merged stream state absorbed $n increments, raw has $total")
-        val bad = ev.groupBy("k").agg(count(lit(1)).as("exact"))
-          .withColumn("est", graft_mg_query(lit(sk), col("k")))
-          .agg(
-            coalesce(sum(when(col("est") > col("exact"), 1L)), lit(0L)),
-            coalesce(sum(when((col("exact") - col("est")).cast("double")
-              > lit(bound), 1L)), lit(0L)),
-            coalesce(sum(when(col("exact").cast("double") > lit(bound) &&
-              col("est") === 0, 1L)), lit(0L)),
-            count(lit(1))).collect()(0)
-        val (over, outside, absent, nKeys) =
-          (bad.getLong(0), bad.getLong(1), bad.getLong(2), bad.getLong(3))
-        Gate.check(over == 0, s"$over keys OVERcounted — MG must be one-sided")
-        Gate.check(outside == 0,
-          s"$outside keys outside the (N-M)/(K+1) bound after stream merge")
-        Gate.check(absent == 0,
-          s"$absent heavy keys missing from the stream-merged summary")
-        import s.implicits._
-        Seq((nDays, nKeys, over + outside + absent))
-          .toDF("n_days", "n_keys", "n_violations")
-      }
-    },
-
-    // Content-defined chunking (the rsync/LBFS primitive): chunk
-    // boundaries fall where a content hash of the local token hits a
-    // fixed residue (here md5-derived mod 8 -> ~8-token expected
-    // chunks), so an insertion near the head of a document moves only
-    // the chunk it lands in — fixed-width windows (x_chunk_windows)
-    // shift EVERY downstream boundary, which is exactly what makes CDC
-    // the dedup-friendly storage format. Same 60-bit md5 fingerprint
-    // derivation both engines use in x_novelty/x_span_dedup, so the
-    // boundary positions — and hence every chunk length — are
-    // bit-identical: the size histogram and the chunks-weighted id
-    // checksum are a full-value oracle.
-    Q("x_cdc_chunks",
-      """WITH tok AS (SELECT doc_id,
-        |  list_filter(string_split(lower(text), ' '), w -> w <> '') AS t
-        |  FROM documents),
-        |d AS (SELECT doc_id, len(t) AS n,
-        |  list_filter(generate_series(1, len(t)), i ->
-        |    CAST(concat('0x', substr(md5(t[i]), 1, 15)) AS BIGINT) % 8 = 0)
-        |    AS bpos
-        |  FROM tok WHERE len(t) >= 1),
-        |b AS (SELECT doc_id, n, CASE WHEN len(bpos) > 0 AND bpos[-1] = n
-        |  THEN bpos ELSE list_append(bpos, n) END AS allb FROM d),
-        |l AS (SELECT doc_id, len(allb) AS n_chunks,
-        |  list_transform(generate_series(1, len(allb)), j ->
-        |    allb[j] - CASE WHEN j = 1 THEN 0 ELSE allb[j-1] END) AS lens
-        |  FROM b),
-        |c AS (SELECT doc_id, n_chunks, unnest(lens) AS clen FROM l)
-        |SELECT CAST(count(DISTINCT doc_id) AS BIGINT) AS n_docs,
-        |CAST(count(*) AS BIGINT) AS total_chunks,
-        |CAST(sum(CASE WHEN clen <= 2 THEN 1 ELSE 0 END) AS BIGINT) AS n_short,
-        |CAST(sum(CASE WHEN clen BETWEEN 3 AND 8 THEN 1 ELSE 0 END) AS BIGINT)
-        |  AS n_mid,
-        |CAST(sum(CASE WHEN clen > 8 THEN 1 ELSE 0 END) AS BIGINT) AS n_long,
-        |CAST(sum(clen * (doc_id % 9973)) AS BIGINT) AS checksum
-        |FROM c""".stripMargin) { (s, dir) =>
-      // ONE aggregate-HOF pass per document: boundary flags -> running
-      // chunk length -> bucket counters, closing the trailing partial
-      // chunk in the finish lambda. No positional indexing of an outer
-      // array anywhere — Catalyst's projection collapse inlines an
-      // indexed array's WHOLE derivation (tokenize + per-token md5) into
-      // every element_at call, which turned the first formulation of
-      // this query into an O(n^2-per-doc) 80s scan; the single-pass fold
-      // runs in ~2s at the same SF. The per-doc checksum needs no chunk
-      // lengths at all: sum(clen) == n by construction.
-      val toks = filter(split(lower(col("text")), " "), w => w =!= "")
-      val st = Tables(s, dir, "documents")
-        .select(col("doc_id"), toks.as("t"))
-        .where(size(col("t")) >= 1)
-        .select(col("doc_id"), size(col("t")).as("n"), expr(
-          """aggregate(
-            |  transform(t, x ->
-            |    CAST(conv(substr(md5(x), 1, 15), 16, 10) AS BIGINT) % 8 = 0),
-            |  named_struct('run', 0L, 's', 0L, 'm', 0L, 'l', 0L),
-            |  (acc, f) -> IF(f,
-            |    named_struct('run', 0L,
-            |      's', acc.s + IF(acc.run + 1 <= 2, 1L, 0L),
-            |      'm', acc.m + IF(acc.run + 1 BETWEEN 3 AND 8, 1L, 0L),
-            |      'l', acc.l + IF(acc.run + 1 > 8, 1L, 0L)),
-            |    named_struct('run', acc.run + 1,
-            |      's', acc.s, 'm', acc.m, 'l', acc.l)),
-            |  acc -> IF(acc.run > 0,
-            |    named_struct('run', 0L,
-            |      's', acc.s + IF(acc.run <= 2, 1L, 0L),
-            |      'm', acc.m + IF(acc.run BETWEEN 3 AND 8, 1L, 0L),
-            |      'l', acc.l + IF(acc.run > 8, 1L, 0L)),
-            |    acc))""".stripMargin).as("c"))
-      st.agg(count(lit(1)).as("n_docs"),
-        sum(col("c.s") + col("c.m") + col("c.l")).as("total_chunks"),
-        sum(col("c.s")).as("n_short"),
-        sum(col("c.m")).as("n_mid"),
-        sum(col("c.l")).as("n_long"),
-        sum(col("n") * (col("doc_id") % 9973)).as("checksum"))
-    },
-
-    // Differentially-private-style noisy release: per-type counts with
-    // Laplace(1/eps) noise via the inverse CDF over a SEEDED md5-derived
-    // uniform — the x_dsir_sample Gumbel discipline applied to aggregate
-    // release, so the artifact is reproducible and fully oracled (one ln
-    // over one identically-ordered double expression, bit-identical both
-    // engines). Production DP draws the uniform from a CSPRNG — the
-    // derivation here is the portable stand-in that makes the pipeline
-    // shape testable; only the noisy column and epsilon are released.
-    Q("x_dp_release",
-      """WITH c AS (SELECT event_type, count(*) AS n FROM events GROUP BY 1),
-        |u AS (SELECT event_type, n,
-        |  (CAST(concat('0x', substr(md5(event_type), 1, 15)) AS BIGINT)
-        |    + 0.5) / 1152921504606846976.0 AS u FROM c)
-        |SELECT event_type,
-        |round(n + (-10.0) * (CASE WHEN u < 0.5 THEN -1.0 ELSE 1.0 END)
-        |  * ln(1.0 - 2.0 * abs(u - 0.5)), 4) AS noisy_count,
-        |0.1 AS epsilon
-        |FROM u ORDER BY event_type""".stripMargin) { (s, dir) =>
-      val c = Tables(s, dir, "events")
-        .groupBy("event_type").agg(count(lit(1)).as("n"))
-      val u = c.withColumn("u",
-        (conv(substring(md5(col("event_type").cast("binary")), 1, 15), 16, 10)
-          .cast("long") + lit(0.5)) / lit(1152921504606846976.0))
-      u.select(col("event_type"),
-          round(col("n") + lit(-10.0)
-            * when(col("u") < 0.5, lit(-1.0)).otherwise(lit(1.0))
-            * log(lit(1.0) - lit(2.0) * abs(col("u") - lit(0.5))), 4)
-            .as("noisy_count"),
-          lit(0.1).as("epsilon"))
-        .orderBy("event_type")
-    },
-
-    // Exact quantile transform (percent_rank normalization) — the
-    // feature-engineering primitive that maps a value to its corpus
-    // percentile. The textbook percent_rank() is a window over the WHOLE
-    // table ordered by value — unpartitioned, the 100 TB killer. The
-    // scale shape here: aggregate counts per DISTINCT value (the cents
-    // domain is bounded — ~10k values regardless of row count), run the
-    // cumulative window over that domain-sized frame, and broadcast-join
-    // the cdf back. Tie semantics match percent_rank exactly: pr =
-    // rows-strictly-less / (n-1), identical integer division to DOUBLE
-    // in both engines, so the decile histogram is a full-value oracle.
-    Q("x_quantile_transform",
-      """WITH d AS (SELECT CAST(round(value * 100, 0) AS BIGINT) AS x
-        |  FROM events),
-        |r AS (SELECT x, percent_rank() OVER (ORDER BY x) AS pr FROM d),
-        |b AS (SELECT least(CAST(floor(pr * 10) AS BIGINT), 9) AS decile,
-        |  x FROM r)
-        |SELECT decile, count(*) AS n,
-        |CAST(sum(x % 999983) AS BIGINT) AS checksum
-        |FROM b GROUP BY decile ORDER BY decile""".stripMargin) { (s, dir) =>
-      import org.apache.spark.sql.expressions.Window
-      val d = Tables(s, dir, "events")
-        .select(round(col("value") * 100, 0).cast("long").as("x"))
-      val counts = d.groupBy("x").agg(count(lit(1)).as("c"))
-      val n = d.count()
-      // cumulative rows strictly below each distinct value — the window
-      // runs over the VALUE DOMAIN (bounded), never the corpus
-      val w = Window.orderBy("x")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-      val cdf = counts
-        .withColumn("below", sum("c").over(w) - col("c"))
-        .withColumn("pr", col("below").cast("double") / (n - 1).toDouble)
-        .select(col("x"), col("pr"))
-      d.join(broadcast(cdf), "x")
-        .select(least(floor(col("pr") * 10).cast("long"), lit(9L))
-          .as("decile"), col("x"))
-        .groupBy("decile").agg(count(lit(1)).as("n"),
-          sum(col("x") % 999983).as("checksum"))
-        .orderBy("decile")
     },
 
     // Time-decayed aggregation — exponential recency weighting
@@ -3406,36 +371,6 @@ object PipelineQueries {
         .orderBy("event_type")
     },
 
-    // Robust outlier statistics — median / MAD (median absolute
-    // deviation), the quality-filtering primitive that survives the
-    // heavy tails that break mean/stddev z-scores: med and MAD are both
-    // EXACT percentile aggregates over integer cents (Spark `percentile`
-    // == DuckDB `median`, both interpolate the even-count midpoint
-    // identically on integers), so the outlier count at the classic
-    // 3-MAD fence is a full-value oracle with no tolerance. Two
-    // aggregate passes (med, then MAD over |x - med|), scalar-broadcast
-    // between them — no window, no sort of the data.
-    Q("x_robust_stats",
-      """WITH d AS (SELECT CAST(round(value * 100, 0) AS BIGINT) AS x
-        |  FROM events),
-        |m AS (SELECT median(x) AS med FROM d),
-        |a AS (SELECT median(abs(x - med)) AS mad FROM d, m)
-        |SELECT CAST(count(*) AS BIGINT) AS n, (SELECT med FROM m) AS med,
-        |(SELECT mad FROM a) AS mad,
-        |CAST(sum(CASE WHEN abs(x - (SELECT med FROM m))
-        |  > 3 * (SELECT mad FROM a) THEN 1 ELSE 0 END) AS BIGINT)
-        |  AS n_outliers
-        |FROM d""".stripMargin) { (s, dir) =>
-      val d = Tables(s, dir, "events")
-        .select(round(col("value") * 100, 0).cast("long").as("x"))
-      val med = d.agg(expr("percentile(x, 0.5)")).first().getDouble(0)
-      val mad = d.agg(expr(s"percentile(abs(x - $med), 0.5)"))
-        .first().getDouble(0)
-      d.agg(count(lit(1)).as("n"), lit(med).as("med"), lit(mad).as("mad"),
-        coalesce(sum(when(abs(col("x") - med) > 3 * mad, 1L).otherwise(0L)),
-          lit(0L)).as("n_outliers"))
-    },
-
     // Ordered-sequence funnel (view -> click -> purchase): each stage's
     // earliest qualifying timestamp must be STRICTLY after the previous
     // stage's — the product-analytics conversion funnel. The per-stage
@@ -3470,286 +405,6 @@ object PipelineQueries {
         .crossJoin(p.agg(count(lit(1)).as("n_converted")))
     },
 
-    // PageRank over a deterministic directed ring on the embeddings ids —
-    // the canonical iterative-dataflow workload, exercised through
-    // operators.PageRank (edges hash-partitioned once, one shuffle per
-    // sweep, per-iteration localCheckpoint to cap lineage). The ring's
-    // closed form makes the contract EXACT: out-degree 1 everywhere and a
-    // uniform start keep the distribution exactly uniform at every sweep,
-    // so after 10 iterations every rank must still equal 1/N to within
-    // accumulated ulps. A broken degree count, join, or teleport term
-    // breaks uniformity immediately.
-    Q("x_pagerank",
-      """SELECT CAST(count(*) AS BIGINT) AS n_nodes,
-        |CAST(0 AS BIGINT) AS n_violations FROM embeddings""".stripMargin) { (s, dir) =>
-      val ids = Tables(s, dir, "embeddings").select(col("vec_id").as("src"))
-      val nTotal = ids.count()
-      // Ring = each id points at the NEXT id in sorted order, wrapping at
-      // the top — id-layout-agnostic (the ScaleCheck corpora stride their
-      // copy ids, so `(id+1) mod n` would dangle off the id gaps). Built
-      // via CorpusQueries' parallel rank-join helper plus the explicit
-      // wrap edge (r14 verdict hygiene: the old unpartitioned lead()
-      // funneled the corpus-sized ids frame through one task).
-      val mm = ids.agg(min("src"), max("src")).first()
-      val (minId, maxId) = (mm.getLong(0), mm.getLong(1))
-      val edges = CorpusQueries.sortedSuccessorEdges(
-        s, ids.select(col("src").as("id")), Seq(1))
-        .unionByName(s.range(1)
-          .select(lit(maxId).as("src"), lit(minId).as("dst")))
-      val ranks = graft.operators.PageRank.run(edges, iterations = 10)
-      Gate(ranks.agg(count(lit(1)).as("n_nodes"),
-        coalesce(sum(when(
-          abs(col("rank") - lit(1.0 / nTotal)) > lit(1e-12), 1L)), lit(0L))
-          .as("n_violations")),
-        col("n_nodes") === nTotal && col("n_violations") === 0,
-        s"ring PageRank must stay uniform at 1/$nTotal")
-    },
-
-    // Stream-stream join, batch twin: purchases joined to the same user's
-    // clicks within the preceding 30 minutes (watermarks are no-ops in
-    // batch; the streaming side with state eviction is covered in
-    // StreamingSpec).
-    Q("x_stream_join",
-      """WITH c AS (SELECT user_id, ts FROM events WHERE event_type = 'click'),
-        |p AS (SELECT user_id, ts FROM events WHERE event_type = 'purchase')
-        |SELECT p.user_id AS user_id, count(*) AS n_pairs,
-        |count(DISTINCT p.ts) AS n_purchases
-        |FROM p JOIN c ON c.user_id = p.user_id
-        |AND c.ts >= p.ts - INTERVAL 30 MINUTE AND c.ts <= p.ts
-        |GROUP BY p.user_id ORDER BY user_id""".stripMargin) { (s, dir) =>
-      graft.streaming.EventStreams.clickPurchaseJoin(Tables(s, dir, "events"), 30)
-        .groupBy(col("p_user").as("user_id"))
-        .agg(count(lit(1)).as("n_pairs"),
-          countDistinct(col("purchase_ts")).as("n_purchases"))
-        .orderBy("user_id")
-    },
-
-    // Streaming exact dedup, driver-visible: the subset is written out TWICE
-    // as two files and streamed back with maxFilesPerTrigger=1, so the
-    // duplicate copy arrives in a LATER micro-batch — this exercises
-    // dropDuplicatesWithinWatermark's cross-batch state, not a within-batch
-    // distinct. Oracled: the deduped stream must reproduce the original
-    // subset's per-type counts exactly.
-    Q("x_stream_dedup",
-      """SELECT event_type, count(*) AS n_unique FROM events WHERE user_id < 50
-        |GROUP BY event_type ORDER BY event_type""".stripMargin) { (s, dir) =>
-      Tmp.scoped("graft-sdedup") { tmp =>
-        val src = new OrderedSource(tmp.resolve("src").toString)
-        val subset = Tables(s, dir, "events").where(col("user_id") < 50)
-        src.write(subset.coalesce(1))
-        src.write(subset.coalesce(1))
-        val q = runToCompletion(s, tmp.resolve("ckpt")) {
-          memorySink(graft.streaming.EventStreams.dedupStream(
-            src.stream(s, subset.schema, 1)), "graft_stream_dedup_")
-        }
-        // the memory sink holds the rows — the files can go as soon as the
-        // result aggregate is computed over the in-memory table
-        s.table(q.name).groupBy("event_type").agg(count(lit(1)).as("n_unique"))
-          .orderBy("event_type").localCheckpoint(true)
-      }
-    },
-
-    // Streaming keyed dedup on the RocksDB state-store backend, across a
-    // RESTART — the state-capacity path a 100 TB deployment actually runs.
-    // The default heap-backed provider bounds total streaming state by
-    // executor heap; RocksDB bounds it by local DISK (native memory + SST
-    // files, changelog checkpointing ships per-batch deltas). Same
-    // dropDuplicatesWithinWatermark operator as x_stream_dedup, but (a)
-    // state lives in RocksDB, (b) the stream is KILLED after ingesting the
-    // whole corpus and a second instance resumes from the checkpoint —
-    // phase B replays duplicates of the most-recent corpus slice, which sit
-    // ABOVE the reloaded watermark (not late-filterable): only the state
-    // reloaded through RocksDB's snapshot+changelog lifecycle can drop
-    // them, and the phase-B gate pins that exactly the one fresh sentinel
-    // row came through. Engagement is attested from the query's own
-    // rocksdb* state metrics — a silently-ignored provider conf would run
-    // the heap store and fail the gate, not silently pass. STRESSCHECK
-    // carries this query's heap-vs-rocksdb counterfactual at small heap;
-    // ScaleCheck's backend stages time the pair at standard heap.
-    Q("x_stream_dedup_rocksdb",
-      """SELECT event_type, count(DISTINCT event_id) AS n_unique FROM events
-        |GROUP BY event_type ORDER BY event_type""".stripMargin) { (s, dir) =>
-      streamDedupBackendRun(s, dir, graft.streaming.StateBackend.RocksDb)
-    },
-
-    // StreamStateGuard negative path at suite scale — the runtime guard's
-    // anchor query, the way x_plan_guard anchors PlanGuard: phase A runs a
-    // DELIBERATELY watermark-less dropDuplicates (the canonical
-    // unbounded-state shape: every key takes a state row forever, no
-    // eviction path) over 8 single-file micro-batches and gates that the
-    // guard records EXACTLY ONE finding for that run (minBatches=4 over 7
-    // growth observations fires once at streak 4, then the post-finding
-    // reset leaves the remaining 3 batches under threshold); phase B runs
-    // the watermarked twin over the same rows as time-sorted shards (the
-    // watermark advances at every shard boundary, state churns instead of
-    // accumulating) and gates that ITS run records nothing. Thresholds are
-    // name-scoped overrides, not session conf — concurrent bench streams
-    // never see them — and the intentional finding is cleared by runId so
-    // suite-wide assertClean stays a real gate. Oracle: the deduped
-    // per-type counts (event_ids are unique, so dedup is count-preserving
-    // — the state the guard watches is per-id either way).
-    Q("x_stream_state_guard",
-      """SELECT event_type, count(*) AS n_unique FROM events
-        |WHERE user_id < 40 GROUP BY event_type ORDER BY event_type"""
-        .stripMargin) { (s, dir) =>
-      import graft.plans.StreamStateGuard
-      Tmp.scoped("graft-sguardq") { tmp =>
-        val subset = Tables(s, dir, "events").where(col("user_id") < 40)
-          .select(col("event_id"), col("ts").cast("timestamp").as("ts"),
-            col("event_type"))
-        val total = subset.count()
-        def runOne(src: OrderedSource, watermarked: Boolean): (String, Long) = {
-          val q = runToCompletion(s, tmp.resolve(s"ckpt_$watermarked")) {
-            val stream = src.stream(s, subset.schema, 1)
-            memorySink(
-              if (watermarked)
-                stream.withWatermark("ts", "10 minutes")
-                  .dropDuplicatesWithinWatermark("event_id")
-              else stream.dropDuplicates("event_id"),
-              "graft_sguard_")
-          }
-          (q.runId.toString, s.table(q.name).count())
-        }
-        StreamStateGuard.withThresholds("graft_sguard_", minBatches = 4,
-          minRows = 20) {
-          // phase A: 8 id-hashed shards — each batch adds fresh state rows,
-          // no watermark ever appears, the streak forms
-          val leakySrc = new OrderedSource(tmp.resolve("leaky").toString)
-          leakySrc.write(subset.repartition(8, col("event_id")))
-          val (leakRun, nLeak) = runOne(leakySrc, watermarked = false)
-          // listener delivery is async past q.stop(): wait until the
-          // guard has processed the run's TERMINATED event (FIFO bus —
-          // findings for the run are then final), so both the positive
-          // and the negative gate below judge a settled registry instead
-          // of racing a fixed drain sleep (r13 advice: a fixed 500ms
-          // could false-pass the emptiness gate on a slow bus)
-          def awaitFinal(runId: String): Unit = {
-            val deadline = System.nanoTime() + 5000000000L
-            while (!StreamStateGuard.terminatedSeen(runId) &&
-              System.nanoTime() < deadline) Thread.sleep(50)
-            Gate.check(StreamStateGuard.terminatedSeen(runId),
-              s"stream guard listener did not drain run $runId within 5s")
-          }
-          awaitFinal(leakRun)
-          val leakFindings = StreamStateGuard.findingsFor(leakRun)
-          Gate.check(leakFindings.size == 1,
-            s"watermark-less dedup should record exactly one unbounded-state " +
-              s"finding, got ${leakFindings.size}: $leakFindings")
-          StreamStateGuard.clearRun(leakRun) // intentional — ours alone
-          // phase B: same rows as range-sorted time shards, watermarked —
-          // the watermark marches at shard boundaries and no streak forms
-          val cleanSrc = new OrderedSource(tmp.resolve("clean").toString)
-          cleanSrc.writeRanged(subset, total)
-          val (cleanRun, nClean) = runOne(cleanSrc, watermarked = true)
-          awaitFinal(cleanRun) // emptiness judged on a FINAL registry
-          Gate.check(StreamStateGuard.findingsFor(cleanRun).isEmpty,
-            "watermarked twin tripped the state guard: " +
-              StreamStateGuard.findingsFor(cleanRun).mkString("; "))
-          Gate.check(nLeak == total && nClean == total,
-            s"dedup of unique ids must be count-preserving: " +
-              s"leaky $nLeak / clean $nClean vs $total source rows")
-        }
-        subset.groupBy("event_type").agg(count(lit(1)).as("n_unique"))
-          .orderBy("event_type").localCheckpoint(true)
-      }
-    },
-
-    // Streaming CDC upsert (foreachBatch MERGE), driver-visible: events
-    // arrive in two micro-batches; each batch compacts to latest-per-user
-    // with a max_by AGGREGATE (the x_cdc_latest discipline — partial
-    // aggregation, never a window sort over the change stream) and merges
-    // latest-wins into a keyed parquet state table, versioned per batch
-    // (read state_vN, merge, write state_vN+1 — a reader never overlaps
-    // the file set it replaces). The oracle states the invariant directly:
-    // incremental upsert across batches == latest event per user over the
-    // WHOLE table. Ties break on (ts, event_id) — a total order.
-    Q("x_stream_upsert",
-      """SELECT user_id, event_type AS last_type,
-        |CAST(round(value * 100, 0) AS BIGINT) AS last_cents
-        |FROM (SELECT *, row_number() OVER (PARTITION BY user_id
-        |  ORDER BY ts DESC, event_id DESC) AS rn FROM events) t
-        |WHERE rn = 1 ORDER BY user_id""".stripMargin) { (s, dir) =>
-      Tmp.scoped("graft-supsert") { tmp =>
-        val src = new OrderedSource(tmp.resolve("src").toString)
-        val genFiles = upsertSource(s, dir).write(src)
-        val stream = src.stream(s, s.read.parquet(src.path).schema, genFiles)
-        val stateRef = new java.util.concurrent.atomic.AtomicReference[String](null)
-        var version = 0
-        def latest(df: org.apache.spark.sql.DataFrame) = df.groupBy("user_id")
-          .agg(max_by(
-            struct(col("ts"), col("event_id"), col("event_type"), col("cents")),
-            struct(col("ts"), col("event_id"))).as("last"))
-        runToCompletion(s, tmp.resolve("ckpt")) {
-          stream.writeStream.foreachBatch { (batch: DataFrame, _: Long) =>
-            val delta = latest(batch)
-            val merged = Option(stateRef.get()) match {
-              case None => delta
-              case Some(p) =>
-                batch.sparkSession.read.parquet(p).unionByName(delta)
-                  .groupBy("user_id")
-                  .agg(max_by(col("last"),
-                    struct(col("last.ts"), col("last.event_id"))).as("last"))
-            }
-            version += 1
-            val out = tmp.resolve(s"state_v$version").toString
-            merged.write.mode("overwrite").parquet(out)
-            stateRef.set(out)
-            ()
-          }
-        }
-        s.read.parquet(stateRef.get())
-          .select(col("user_id"), col("last.event_type").as("last_type"),
-            col("last.cents").as("last_cents"))
-          .orderBy("user_id").localCheckpoint(true)
-      }
-    },
-
-    // Streaming LSH index maintenance, driver-visible: the corpus arrives in
-    // two micro-batches through the REAL foreachBatch sink (bucketed append
-    // to a (table, bucket)-partitioned parquet index), then perturbed copies
-    // of 20 corpus vectors probe the index — partition-pruned to the probes'
-    // own buckets. GATED: each probe must retrieve its source vector.
-    // Promoted to a full oracle (r5): the probe population is plain SQL and
-    // the >=18/20 retrieval contract becomes a violation count pinned to 0.
-    Q("x_stream_index_probe",
-      """SELECT CAST(count(*) AS BIGINT) AS n_expected,
-        |CAST(0 AS BIGINT) AS n_violations FROM embeddings
-        |WHERE vec_id < 20""".stripMargin) { (s, dir) =>
-      import graft.streaming.VectorIndexStream
-      Tmp.scoped("graft-vindex") { tmp =>
-        val src = new OrderedSource(tmp.resolve("src").toString)
-        val fx = indexProbeSource(s, dir)
-        val emb = fx.df
-        val stream = src.stream(s, emb.schema, fx.write(src))
-        val indexPath = tmp.resolve("index").toString
-        // 2 planes (4 buckets/table): collision ~0.86 per table at cos 0.97,
-        // ~0.98 OR-ed over 2 tables — deterministic here (seeded planes,
-        // seeded perturbation), verified 20/20 recovered at sf0.01 and
-        // sf0.1, inside the >=18 gate. 8 partition dirs (x1 file per batch,
-        // thanks to the sink's key-repartition) keep the append cheap: the
-        // dominant cost of a dynamic-partition append is parquet writer
-        // open/commit PER DIRECTORY, not the row volume — 32 dirs cost ~2s
-        // more than 8 for the same few thousand rows.
-        withShufflePartitions(s, 4) {
-          runToCompletion(s, tmp.resolve("ckpt")) {
-            VectorIndexStream.indexSink(stream, indexPath,
-              numPlanes = 2, numTables = 2)
-          }
-          val probes = emb.where(col("vec_id") < 20)
-            .select((col("vec_id") + 1000000L).as("vec_id"),
-              perturb(col("embedding").cast("array<double>")).as("embedding"))
-          val topk = VectorIndexStream.probe(s, indexPath, probes, k = 10,
-            numPlanes = 2, numTables = 2)
-          val nFound = topk.where(col("vid") === col("qid") - 1000000L).count()
-          Gate.check(nFound >= 18,
-            s"streaming index probe recovered only $nFound/20 planted neighbors")
-          import s.implicits._
-          Seq((20L, if (nFound >= 18) 0L else 1L))
-            .toDF("n_expected", "n_violations")
-        }
-      }
-    },
-
     // Conversion funnel: users whose FIRST view precedes their first click
     // precedes their first purchase — one partial-aggregated groupBy(user)
     // carrying three conditional mins, then a single-row rollup; no join,
@@ -3777,378 +432,6 @@ object PipelineQueries {
           sum(when(col("v") < col("c"), 1L).otherwise(0L)).as("n_clicked_after"),
           sum(when(col("v") < col("c") && col("c") < col("p"), 1L).otherwise(0L))
             .as("n_converted"))
-    },
-
-    // Per-document top term (tf argmax, deterministic lexicographic
-    // tie-break) — the term-frequency half of TF-IDF with an INTEGER-only
-    // result the oracle can hash exactly. Window.partitionBy(doc_id) is
-    // safe here: group size is bounded by a document's token count, not by
-    // corpus size.
-    Q("x_text_topterms",
-      """WITH tok AS (SELECT doc_id, unnest(string_split(lower(text), ' ')) AS t
-        |  FROM documents WHERE doc_id < 100),
-        |cnt AS (SELECT doc_id, t, count(*) AS n FROM tok WHERE t <> ''
-        |  GROUP BY doc_id, t),
-        |rk AS (SELECT doc_id, t, n, row_number() OVER
-        |  (PARTITION BY doc_id ORDER BY n DESC, t) AS r FROM cnt)
-        |SELECT doc_id, t AS top_term, n AS n_occurrences
-        |FROM rk WHERE r = 1 ORDER BY doc_id""".stripMargin) { (s, dir) =>
-      val tokens = Tables(s, dir, "documents").where(col("doc_id") < 100)
-        .select(col("doc_id"),
-          explode(split(lower(col("text")), " ")).as("t"))
-        .where(col("t") =!= "")
-      val counts = tokens.groupBy("doc_id", "t").agg(count(lit(1)).as("n"))
-      counts.withColumn("r", row_number().over(
-          org.apache.spark.sql.expressions.Window.partitionBy("doc_id")
-            .orderBy(col("n").desc, col("t"))))
-        .where(col("r") === 1)
-        .select(col("doc_id"), col("t").as("top_term"), col("n").as("n_occurrences"))
-        .orderBy("doc_id")
-    },
-
-    // TF-IDF: per-document top-3 terms by smoothed tf-idf
-    // (tf × (ln((N+1)/(df+1)) + 1)). Exact-hash-safe floats BY CONSTRUCTION:
-    // every input (tf, df, N) is an integer, every op (+ − × ÷ ln round) is
-    // correctly rounded and evaluated in the same literal order in both
-    // engines, and Java's Math.log is bit-identical to libm's ln on this
-    // range (verified) — so the rounded score, the score-ordered ranks, and
-    // the hash all match without a tolerance. Plan: tf is one shuffle,
-    // df one aggregate over it; the doc-frequency join keys on the TERM
-    // (vocabulary-sized at 100 TB — unhinted, AQE broadcasts while it
-    // fits); the rank window partitions by doc (bounded by a doc's
-    // vocabulary, never corpus-sized).
-    Q("x_tfidf",
-      """WITH tok AS (SELECT doc_id, unnest(string_split(lower(text), ' ')) AS t
-        |  FROM documents),
-        |tf AS (SELECT doc_id, t, count(*) AS tf FROM tok WHERE t <> ''
-        |  GROUP BY doc_id, t),
-        |df AS (SELECT t, count(*) AS df FROM tf GROUP BY t),
-        |n AS (SELECT count(*) AS n FROM documents),
-        |sc AS (SELECT doc_id, t, tf, df,
-        |  round(tf * (ln((n + 1.0) / (df + 1.0)) + 1.0), 4) AS score
-        |  FROM tf JOIN df USING (t) CROSS JOIN n WHERE doc_id < 100),
-        |rk AS (SELECT *, CAST(row_number() OVER (PARTITION BY doc_id
-        |  ORDER BY score DESC, t) AS INTEGER) AS r FROM sc)
-        |SELECT doc_id, r, t AS term, tf, df, score FROM rk
-        |WHERE r <= 3 ORDER BY doc_id, r""".stripMargin) { (s, dir) =>
-      val docs = Tables(s, dir, "documents")
-      val tok = docs.select(col("doc_id"),
-        explode(split(lower(col("text")), " ")).as("t"))
-        .where(col("t") =!= "")
-      val tf = tok.groupBy("doc_id", "t").agg(count(lit(1)).as("tf"))
-      val dfreq = tf.groupBy("t").agg(count(lit(1)).as("df"))
-      val n = docs.agg(count(lit(1)).as("n"))
-      val sc = tf.where(col("doc_id") < 100)
-        .join(dfreq, "t")
-        .crossJoin(broadcast(n))
-        .withColumn("score", round(col("tf")
-          * (log((col("n") + lit(1.0)) / (col("df") + lit(1.0))) + lit(1.0)), 4))
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy("doc_id").orderBy(col("score").desc, col("t"))
-      sc.withColumn("r", row_number().over(w)).where(col("r") <= 3)
-        .select(col("doc_id"), col("r"), col("t").as("term"),
-          col("tf"), col("df"), col("score"))
-        .orderBy("doc_id", "r")
-    },
-
-    // PMI collocations — phrase detection over adjacent bigrams (the
-    // tokenizer-vocabulary / multi-word-expression primitive): top 50
-    // bigrams with count >= 5 by pointwise mutual information
-    // ln(c(ab)*T*T / (B*c(a)*c(b))). Same bit-identical-float discipline
-    // as x_tfidf (all inputs integers, one ln over one identically-
-    // ordered double product), and the x_hybrid_search rank-quantization
-    // lesson applied from birth: ORDER BY floor(pmi*1e6), never by the
-    // raw double, so the top-50 cut cannot ride a cross-engine ulp.
-    // Scale shape: two token shuffles (bigram + unigram counts), the
-    // unigram attach joins key on the WORD (vocabulary-sized — unhinted,
-    // AQE broadcasts while it fits), corpus totals are broadcast
-    // one-row frames; no window anywhere.
-    Q("x_collocations",
-      """WITH tok AS (SELECT doc_id,
-        |  list_filter(string_split(lower(text), ' '), w -> w <> '') AS t
-        |  FROM documents),
-        |uni AS (SELECT unnest(t) AS w FROM tok),
-        |uc AS (SELECT w, count(*) AS cw FROM uni GROUP BY w),
-        |tt AS (SELECT count(*) AS t FROM uni),
-        |bgl AS (SELECT unnest(list_transform(generate_series(1, len(t) - 1),
-        |  i -> t[i] || ' ' || t[i+1])) AS g FROM tok),
-        |bg AS (SELECT string_split(g, ' ')[1] AS a,
-        |  string_split(g, ' ')[2] AS b FROM bgl),
-        |bc AS (SELECT a, b, count(*) AS n_ab FROM bg GROUP BY a, b),
-        |bt AS (SELECT count(*) AS bn FROM bg),
-        |sc AS (SELECT a, b, n_ab,
-        |  ln((n_ab * 1.0 * t * t) / (bn * 1.0 * ca.cw * cb.cw)) AS pmi
-        |  FROM bc JOIN uc ca ON ca.w = a JOIN uc cb ON cb.w = b
-        |  CROSS JOIN tt CROSS JOIN bt WHERE n_ab >= 5)
-        |SELECT a, b, n_ab, round(pmi, 4) AS pmi FROM sc
-        |ORDER BY CAST(floor(pmi * 1000000) AS BIGINT) DESC, a, b
-        |LIMIT 50""".stripMargin) { (s, dir) =>
-      val docs = Tables(s, dir, "documents")
-      val toks = docs.select(col("doc_id"),
-        filter(split(lower(col("text")), " "), w => w =!= "").as("t"))
-      val uni = toks.select(explode(col("t")).as("w"))
-      val uc = uni.groupBy("w").agg(count(lit(1)).as("cw"))
-      val tt = uni.agg(count(lit(1)).as("t"))
-      val n1 = greatest(size(col("t")) - 1, lit(0))
-      val bg = toks.select(explode(zip_with(
-          slice(col("t"), lit(1), n1), slice(col("t"), lit(2), n1),
-          (x, y) => struct(x.as("a"), y.as("b")))).as("p"))
-        .select(col("p.a").as("a"), col("p.b").as("b"))
-      val bc = bg.groupBy("a", "b").agg(count(lit(1)).as("n_ab"))
-      val bt = bg.agg(count(lit(1)).as("bn"))
-      val sc = bc.where(col("n_ab") >= 5)
-        .join(uc.select(col("w").as("a"), col("cw").as("ca")), "a")
-        .join(uc.select(col("w").as("b"), col("cw").as("cb")), "b")
-        .crossJoin(broadcast(tt))
-        .crossJoin(broadcast(bt))
-        .withColumn("pmi", log((col("n_ab") * lit(1.0) * col("t") * col("t"))
-          / (col("bn") * lit(1.0) * col("ca") * col("cb"))))
-      sc.orderBy(floor(col("pmi") * 1000000).cast("long").desc,
-          col("a"), col("b"))
-        .select(col("a"), col("b"), col("n_ab"), round(col("pmi"), 4).as("pmi"))
-        .limit(50)
-    },
-
-    // BM25 (k1=1.2, b=0.75) of the fixed query {spark, vector, stream}
-    // against every document. Same bit-identical-float discipline as
-    // x_tfidf, plus two order-of-summation guards: avgdl is an EXACT
-    // integer sum divided once (never a float-accumulated avg, whose
-    // result depends on partition order), and the 3 per-term contributions
-    // are pivoted to columns and added in fixed left-to-right order (an
-    // agg-ordered sum() over them would be nondeterministic in the last
-    // ulp). Per-doc work is a few joins against broadcast scalars; the
-    // only corpus-wide shuffles are the tokenize-count and doc-length aggs.
-    Q("x_bm25",
-      """WITH tok AS (SELECT doc_id, unnest(string_split(lower(text), ' ')) AS t
-        |  FROM documents),
-        |tok2 AS (SELECT * FROM tok WHERE t <> ''),
-        |dl AS (SELECT doc_id, count(*) AS dl FROM tok2 GROUP BY doc_id),
-        |stats AS (SELECT CAST(sum(dl) AS DOUBLE) / count(*) AS avgdl FROM dl),
-        |n AS (SELECT count(*) AS n FROM documents),
-        |tf AS (SELECT doc_id, t, count(*) AS tf FROM tok2
-        |  WHERE t IN ('spark','vector','stream') GROUP BY doc_id, t),
-        |dfq AS (SELECT t, count(*) AS df FROM tf GROUP BY t),
-        |sc AS (SELECT tf.doc_id, tf.t,
-        |  ln(1.0 + (n.n - dfq.df + 0.5) / (dfq.df + 0.5))
-        |    * (tf.tf * (1.2 + 1.0))
-        |    / (tf.tf + 1.2 * (1.0 - 0.75 + 0.75 * dl.dl / stats.avgdl)) AS s
-        |  FROM tf JOIN dfq USING (t) JOIN dl USING (doc_id)
-        |  CROSS JOIN stats CROSS JOIN n WHERE tf.doc_id < 50),
-        |pv AS (SELECT doc_id,
-        |  max(CASE WHEN t = 'spark' THEN s END) AS s1,
-        |  max(CASE WHEN t = 'vector' THEN s END) AS s2,
-        |  max(CASE WHEN t = 'stream' THEN s END) AS s3
-        |  FROM sc GROUP BY doc_id)
-        |SELECT dl.doc_id, dl.dl AS doc_len,
-        |round(coalesce(s1, 0) + coalesce(s2, 0) + coalesce(s3, 0), 4) AS bm25
-        |FROM dl LEFT JOIN pv USING (doc_id) WHERE dl.doc_id < 50
-        |ORDER BY dl.doc_id""".stripMargin) { (s, dir) =>
-      val docs = Tables(s, dir, "documents")
-      val tok2 = docs.select(col("doc_id"),
-        explode(split(lower(col("text")), " ")).as("t"))
-        .where(col("t") =!= "")
-      // Two passes over the corpus, both with AGGREGATE-SIZED exchanges:
-      // doc lengths partial-aggregate to one row per (doc, map task), and
-      // the query-term filter runs BEFORE its tokenize shuffle, so only
-      // 3-term counts ride that exchange. The previous shape shared one
-      // tokenize via localCheckpoint of the full (doc, term, tf) corpus —
-      // a corpus-sized materialization to save a cheap rescan, measured
-      // at sf0.1: 6.0s -> 3.1s cold-plan, 0.9s warm — and exactly the
-      // intermediate you cannot afford at 100 TB.
-      val dl = tok2.groupBy("doc_id").agg(count(lit(1)).as("dl"))
-      val stats = dl.agg((sum("dl").cast("double") / count(lit(1))).as("avgdl"))
-      val n = docs.agg(count(lit(1)).as("n"))
-      val tf = tok2.where(col("t").isin("spark", "vector", "stream"))
-        .groupBy("doc_id", "t").agg(count(lit(1)).as("tf"))
-      val dfq = tf.groupBy("t").agg(count(lit(1)).as("df"))
-      val sc = tf.join(broadcast(dfq), "t")
-        .join(dl, "doc_id")
-        .crossJoin(broadcast(stats))
-        .crossJoin(broadcast(n))
-        .where(col("doc_id") < 50)
-        .withColumn("s",
-          log(lit(1.0) + (col("n") - col("df") + lit(0.5)) / (col("df") + lit(0.5)))
-            * (col("tf") * (lit(1.2) + lit(1.0)))
-            / (col("tf") + lit(1.2)
-              * (lit(1.0) - lit(0.75) + lit(0.75) * col("dl") / col("avgdl"))))
-      val pv = sc.groupBy("doc_id").agg(
-        max(when(col("t") === "spark", col("s"))).as("s1"),
-        max(when(col("t") === "vector", col("s"))).as("s2"),
-        max(when(col("t") === "stream", col("s"))).as("s3"))
-      dl.where(col("doc_id") < 50).join(pv, Seq("doc_id"), "left")
-        .select(col("doc_id"), col("dl").as("doc_len"),
-          round(coalesce(col("s1"), lit(0.0)) + coalesce(col("s2"), lit(0.0))
-            + coalesce(col("s3"), lit(0.0)), 4).as("bm25"))
-        .orderBy("doc_id")
-    },
-
-    // Hybrid retrieval with reciprocal-rank fusion (Cormack et al. SIGIR'09)
-    // — the two-arm search every retrieval/curation pipeline runs: a
-    // LEXICAL arm (BM25, the x_bm25 scorer over the full corpus) and a
-    // VECTOR arm (feature-hash embedding dot product against the query's
-    // own embedding — integer-exact, so the arm's ranking is portable by
-    // construction), each reduced to a top-50 ranked list, fused by
-    // rrf = sum over arms of 1/(60 + rank). Scale shape: each arm is
-    // corpus-scan + TakeOrdered (no global sort, no corpus-wide window —
-    // the rank window runs AFTER the top-50 cut, over 50 rows); the fuse
-    // is a 50x50 full-outer join. Output is all-integer (ranks + 1e6-
-    // scaled floored rrf); the oracle recomputes both arms end to end in
-    // DuckDB, md5 feature hashing included.
-    Q("x_hybrid_search",
-      """WITH tok AS (SELECT doc_id,
-        |  unnest(list_filter(string_split(lower(text), ' '), x -> x <> '')) AS t
-        |  FROM documents),
-        |dl AS (SELECT doc_id, count(*) AS dl FROM tok GROUP BY doc_id),
-        |stats AS (SELECT CAST(sum(dl) AS DOUBLE) / count(*) AS avgdl FROM dl),
-        |n AS (SELECT count(*) AS n FROM documents),
-        |tf AS (SELECT doc_id, t, count(*) AS tf FROM tok
-        |  WHERE t IN ('spark','vector','stream') GROUP BY doc_id, t),
-        |dfq AS (SELECT t, count(*) AS df FROM tf GROUP BY t),
-        |sc AS (SELECT tf.doc_id, tf.t,
-        |  ln(1.0 + (n.n - dfq.df + 0.5) / (dfq.df + 0.5))
-        |    * (tf.tf * (1.2 + 1.0))
-        |    / (tf.tf + 1.2 * (1.0 - 0.75 + 0.75 * dl.dl / stats.avgdl)) AS s
-        |  FROM tf JOIN dfq USING (t) JOIN dl USING (doc_id)
-        |  CROSS JOIN stats CROSS JOIN n),
-        |pv AS (SELECT doc_id,
-        |  coalesce(max(CASE WHEN t = 'spark' THEN s END), 0)
-        |  + coalesce(max(CASE WHEN t = 'vector' THEN s END), 0)
-        |  + coalesce(max(CASE WHEN t = 'stream' THEN s END), 0) AS score
-        |  FROM sc GROUP BY doc_id),
-        |lex AS (SELECT doc_id,
-        |  row_number() OVER (
-        |    ORDER BY CAST(floor(score * 1000000000) AS BIGINT) DESC, doc_id
-        |  ) AS r_lex
-        |  FROM pv QUALIFY r_lex <= 50),
-        |tb AS (SELECT doc_id,
-        |  CAST(concat('0x', substr(md5(t), 1, 7)) AS BIGINT) % 64 AS d,
-        |  1 - 2 * (CAST(concat('0x', substr(md5(t), 8, 1)) AS BIGINT) % 2) AS s
-        |  FROM tok),
-        |sp AS (SELECT doc_id, d, CAST(sum(s) AS BIGINT) AS v FROM tb
-        |  GROUP BY doc_id, d),
-        |qt AS (SELECT unnest(['spark','vector','stream']) AS t),
-        |qb AS (SELECT CAST(concat('0x', substr(md5(t), 1, 7)) AS BIGINT) % 64 AS d,
-        |  1 - 2 * (CAST(concat('0x', substr(md5(t), 8, 1)) AS BIGINT) % 2) AS s
-        |  FROM qt),
-        |qc AS (SELECT d, CAST(sum(s) AS BIGINT) AS qv FROM qb GROUP BY d),
-        |dots AS (SELECT sp.doc_id, CAST(sum(sp.v * qc.qv) AS BIGINT) AS dot
-        |  FROM sp JOIN qc USING (d) GROUP BY sp.doc_id
-        |  HAVING sum(sp.v * qc.qv) <> 0),
-        |vec AS (SELECT doc_id,
-        |  row_number() OVER (ORDER BY dot DESC, doc_id) AS r_vec
-        |  FROM dots QUALIFY r_vec <= 50),
-        |fused AS (SELECT COALESCE(lex.doc_id, vec.doc_id) AS doc_id,
-        |  lex.r_lex, vec.r_vec,
-        |  COALESCE(1.0 / (60 + lex.r_lex), 0)
-        |  + COALESCE(1.0 / (60 + vec.r_vec), 0) AS rrf
-        |  FROM lex FULL OUTER JOIN vec ON lex.doc_id = vec.doc_id)
-        |SELECT doc_id, CAST(COALESCE(r_lex, 0) AS BIGINT) AS r_lex,
-        |CAST(COALESCE(r_vec, 0) AS BIGINT) AS r_vec,
-        |CAST(floor(rrf * 1000000) AS BIGINT) AS rrf_e6
-        |FROM fused ORDER BY rrf DESC, doc_id LIMIT 10""".stripMargin) { (s, dir) =>
-      import s.implicits._
-      val w50lex = org.apache.spark.sql.expressions.Window
-        .orderBy(col("score_q").desc, col("doc_id"))
-      val w50vec = org.apache.spark.sql.expressions.Window
-        .orderBy(col("dot").desc, col("doc_id"))
-      val docs = Tables(s, dir, "documents")
-      val qTerms = Seq("spark", "vector", "stream")
-      // lexical arm — the x_bm25 scorer, unrestricted population
-      val tok2 = docs.select(col("doc_id"),
-        explode(split(lower(col("text")), " ")).as("t"))
-        .where(col("t") =!= "")
-      val dl = tok2.groupBy("doc_id").agg(count(lit(1)).as("dl"))
-      val stats = dl.agg((sum("dl").cast("double") / count(lit(1))).as("avgdl"))
-      val n = docs.agg(count(lit(1)).as("n"))
-      val tf = tok2.where(col("t").isin(qTerms: _*))
-        .groupBy("doc_id", "t").agg(count(lit(1)).as("tf"))
-      val dfq = tf.groupBy("t").agg(count(lit(1)).as("df"))
-      val sc = tf.join(broadcast(dfq), "t")
-        .join(dl, "doc_id")
-        .crossJoin(broadcast(stats))
-        .crossJoin(broadcast(n))
-        .withColumn("s",
-          log(lit(1.0) + (col("n") - col("df") + lit(0.5)) / (col("df") + lit(0.5)))
-            * (col("tf") * (lit(1.2) + lit(1.0)))
-            / (col("tf") + lit(1.2)
-              * (lit(1.0) - lit(0.75) + lit(0.75) * col("dl") / col("avgdl"))))
-      val pv = sc.groupBy("doc_id").agg(
-        (coalesce(max(when(col("t") === "spark", col("s"))), lit(0.0))
-          + coalesce(max(when(col("t") === "vector", col("s"))), lit(0.0))
-          + coalesce(max(when(col("t") === "stream", col("s"))), lit(0.0)))
-          .as("score"))
-      // rank key is the 1e-9-quantized score: near-equal BM25 scores become
-      // exact ties (broken by doc_id in both engines), so the arm's ranking
-      // no longer rides ln()/division ulp parity with the oracle engine.
-      val lexRank = pv
-        .withColumn("score_q", floor(col("score") * 1e9).cast("long"))
-        .orderBy(col("score_q").desc, col("doc_id")).limit(50)
-        .withColumn("r_lex", row_number().over(w50lex))
-        .select(col("doc_id"), col("r_lex").cast("long").as("r_lex"))
-      // vector arm — unnormalized feature-hash vectors, integer dot: the
-      // ranking key is exact, so cross-engine rank portability is free
-      val emb = graft.operators.TextEmbed.featureHash(docs, "doc_id", "text",
-        dim = 64)
-      val qdf = Seq((0L, qTerms.mkString(" "))).toDF("doc_id", "text")
-      val qvec = graft.operators.TextEmbed.featureHash(qdf, "doc_id", "text",
-        dim = 64).select(col("vec").as("qv"))
-      val dots = emb.crossJoin(broadcast(qvec))
-        .withColumn("dot", aggregate(zip_with(col("vec"), col("qv"),
-          (a, b) => a * b), lit(0.0), (acc, x) => acc + x).cast("long"))
-        .where(col("dot") =!= 0)
-      val vecRank = dots.select(col("id").as("doc_id"), col("dot"))
-        .orderBy(col("dot").desc, col("doc_id")).limit(50)
-        .withColumn("r_vec", row_number().over(w50vec))
-        .select(col("doc_id"), col("r_vec").cast("long").as("r_vec"))
-      lexRank.join(vecRank, Seq("doc_id"), "full_outer")
-        .withColumn("rrf",
-          coalesce(lit(1.0) / (lit(60) + col("r_lex")), lit(0.0))
-            + coalesce(lit(1.0) / (lit(60) + col("r_vec")), lit(0.0)))
-        .orderBy(col("rrf").desc, col("doc_id")).limit(10)
-        .select(col("doc_id"),
-          coalesce(col("r_lex"), lit(0L)).cast("long").as("r_lex"),
-          coalesce(col("r_vec"), lit(0L)).cast("long").as("r_vec"),
-          floor(col("rrf") * 1000000).cast("long").as("rrf_e6"))
-    },
-
-    // STREAMING sessionization, driver-visible: the subset arrives in two
-    // time-ordered micro-batches (sessions spanning the split must merge in
-    // state), then a far-future sentinel event (user -1, excluded from the
-    // result) advances the event-time watermark past every session's
-    // end + gap so the EventTimeTimeout closes them all deterministically.
-    // Oracled against the same gaps-and-islands SQL as the batch twin.
-    Q("x_stream_sessionize",
-      """WITH d AS (SELECT user_id, epoch_ms(ts) AS t FROM events
-        |  WHERE user_id < 30),
-        |m AS (SELECT user_id, t, CASE WHEN t - lag(t) OVER
-        |  (PARTITION BY user_id ORDER BY t) > 1800000
-        |  OR lag(t) OVER (PARTITION BY user_id ORDER BY t) IS NULL
-        |  THEN 1 ELSE 0 END AS new_s FROM d),
-        |s AS (SELECT user_id, sum(new_s) OVER
-        |  (PARTITION BY user_id ORDER BY t
-        |   ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS sid FROM m)
-        |SELECT user_id, CAST(count(DISTINCT sid) AS BIGINT) AS n_sessions,
-        |count(*) AS n_events FROM s GROUP BY user_id
-        |ORDER BY user_id""".stripMargin) { (s, dir) =>
-      Tmp.scoped("graft-ssess") { tmp =>
-        val src = new OrderedSource(tmp.resolve("src").toString)
-        // time-ordered files: a later batch must never carry data older
-        // than the watermark the earlier batch established (it would be
-        // dropped as late) — see OrderedSource.
-        val fx = TimeSplit(userEvents(s, dir, 30, withValue = true),
-          sorted = false, Seq(18000000L))
-        fx.write(src)
-        import s.implicits._
-        val q = runToCompletion(s, tmp.resolve("ckpt")) {
-          memorySink(graft.streaming.EventStreams.sessionize(
-            src.stream(s, fx.ev.schema, 1).as[graft.streaming.EventStreams.Event],
-            gapMinutes = 30, emitOpen = false), "graft_stream_sess_")
-        }
-        s.table(q.name).where(col("user_id") >= 0)
-          .groupBy("user_id")
-          .agg(count(lit(1)).as("n_sessions"), sum("n_events").as("n_events"))
-          .orderBy("user_id").localCheckpoint(true)
-      }
     },
 
     // Deterministic per-group sampling — "bottom-k by portable hash": each
@@ -4182,129 +465,6 @@ object PipelineQueries {
         .select(col("c_mktsegment"),
           explode(col("sample").getField("vid")).as("c_custkey"))
         .orderBy("c_mktsegment", "c_custkey")
-    },
-
-    // Bloom-prefiltered semi join — the 100 TB shuffle-reduction pattern
-    // made explicit: build a bloom filter over the (small) qualifying-key
-    // set, broadcast it, and drop non-matching fact rows AT THE SCAN,
-    // before they reach the join exchange. Catalyst's InjectRuntimeFilter
-    // does this only under its own heuristics; graft_bloom_agg /
-    // graft_might_contain (Spark's own runtime-filter expressions,
-    // registered) put it in the pipeline author's hands. Correctness does
-    // NOT depend on the bloom: false positives are removed by the exact
-    // semi join behind it, so the result equals the plain semi join and
-    // the oracle is FULL, not rows-only.
-    Q("x_bloom_prefilter",
-      """WITH big AS (SELECT l_orderkey FROM lineitem
-        |  GROUP BY l_orderkey HAVING sum(l_quantity) > 250)
-        |SELECT count(*) AS n_items, round(sum(l_quantity), 2) AS sum_qty
-        |FROM lineitem
-        |WHERE l_orderkey IN (SELECT l_orderkey FROM big)""".stripMargin) { (s, dir) =>
-      graft.functions.GraftFunctions.register(s)
-      import graft.functions.GraftFunctions.{graft_bloom_agg, graft_might_contain}
-      val li = Tables(s, dir, "lineitem")
-      val big = li.groupBy("l_orderkey").agg(sum("l_quantity").as("q"))
-        .where(col("q") > 250).select(col("l_orderkey").as("big_key"))
-        .localCheckpoint(true) // feeds both the bloom build and the exact join
-      // materialize the (100 KB) bloom on the driver and push it as a
-      // literal — might_contain requires a constant/scalar-subquery bloom,
-      // which is also how Catalyst's own runtime filters ship it to the
-      // scan side
-      val bloomBytes = big.agg(
-        graft_bloom_agg(xxhash64(col("big_key")), 100000L, 800000L).as("bf"))
-        .first().getAs[Array[Byte]]("bf")
-      li.where(graft_might_contain(lit(bloomBytes), xxhash64(col("l_orderkey"))))
-        .join(big, col("l_orderkey") === col("big_key"), "left_semi")
-        .agg(count(lit(1)).as("n_items"), round(sum("l_quantity"), 2).as("sum_qty"))
-    },
-
-    // One-pass moment/Gram matrix — the sufficient statistics for the full
-    // covariance/correlation matrix and for least-squares fits, computed
-    // in ONE partial-aggregated scan (the distributed-ML pattern: never
-    // one pass per variable pair — 4 variables = 15 sums in a single
-    // Aggregate). All-integer inputs (quantities; prices rounded to whole
-    // units, discount/tax to cents) keep every sum exact. Overflow
-    // contract at the 100 TB design point: every product is accumulated
-    // in DECIMAL(38,0) (DuckDB's sum(BIGINT) is HUGEINT — also 128-bit),
-    // so the ACCUMULATION never wraps at any scale. The dominant term,
-    // sum(p*p) at ~1e10/row, exceeds 2^63 past ~9e8 lineitem rows
-    // (~150 GB), so s_pp is emitted as exact hi/lo BIGINT parts
-    // (hi*1e18 + lo) — exact to 1e38 total, ~1e27 rows. Every other
-    // emitted BIGINT is exact while its total < 2^63; the next-worst
-    // term, sum(q*p) at ~5e6/row, holds to ~1.8e12 rows (~300 TB of
-    // lineitem), so the single-column form is safe there by margin.
-    Q("x_corr_stats",
-      """WITH v AS (SELECT CAST(l_quantity AS BIGINT) AS q,
-        |  CAST(round(l_extendedprice, 0) AS BIGINT) AS p,
-        |  CAST(round(l_discount * 100, 0) AS BIGINT) AS d,
-        |  CAST(round(l_tax * 100, 0) AS BIGINT) AS t FROM lineitem)
-        |SELECT count(*) AS n,
-        |CAST(sum(q) AS BIGINT) AS s_q, CAST(sum(p) AS BIGINT) AS s_p,
-        |CAST(sum(d) AS BIGINT) AS s_d, CAST(sum(t) AS BIGINT) AS s_t,
-        |CAST(sum(q * q) AS BIGINT) AS s_qq,
-        |CAST(sum(p * p) // 1000000000000000000 AS BIGINT) AS s_pp_hi,
-        |CAST(sum(p * p) % 1000000000000000000 AS BIGINT) AS s_pp_lo,
-        |CAST(sum(d * d) AS BIGINT) AS s_dd, CAST(sum(t * t) AS BIGINT) AS s_tt,
-        |CAST(sum(q * p) AS BIGINT) AS s_qp, CAST(sum(q * d) AS BIGINT) AS s_qd,
-        |CAST(sum(q * t) AS BIGINT) AS s_qt, CAST(sum(p * d) AS BIGINT) AS s_pd,
-        |CAST(sum(p * t) AS BIGINT) AS s_pt, CAST(sum(d * t) AS BIGINT) AS s_dt
-        |FROM v""".stripMargin) { (s, dir) =>
-      val v = Tables(s, dir, "lineitem").select(
-        col("l_quantity").cast("long").as("q"),
-        round(col("l_extendedprice"), 0).cast("long").as("p"),
-        round(col("l_discount") * 100, 0).cast("long").as("d"),
-        round(col("l_tax") * 100, 0).cast("long").as("t"))
-      def dsum(c: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
-        sum(c.cast("decimal(38,0)"))
-      val eLit = lit("1000000000000000000").cast("decimal(38,0)")
-      val spp = dsum(col("p") * col("p"))
-      v.agg(count(lit(1)).as("n"),
-        sum("q").as("s_q"), sum("p").as("s_p"),
-        sum("d").as("s_d"), sum("t").as("s_t"),
-        dsum(col("q") * col("q")).cast("long").as("s_qq"),
-        ((spp - pmod(spp, eLit)) / eLit).cast("long").as("s_pp_hi"),
-        pmod(spp, eLit).cast("long").as("s_pp_lo"),
-        dsum(col("d") * col("d")).cast("long").as("s_dd"),
-        dsum(col("t") * col("t")).cast("long").as("s_tt"),
-        dsum(col("q") * col("p")).cast("long").as("s_qp"),
-        dsum(col("q") * col("d")).cast("long").as("s_qd"),
-        dsum(col("q") * col("t")).cast("long").as("s_qt"),
-        dsum(col("p") * col("d")).cast("long").as("s_pd"),
-        dsum(col("p") * col("t")).cast("long").as("s_pt"),
-        dsum(col("d") * col("t")).cast("long").as("s_dt"))
-    },
-
-    // Sequence packing — the training-prep step that concatenates documents
-    // into fixed token-budget bins (one bin ≈ one training sequence):
-    // deterministic sequential packing via a running token sum PER SOURCE
-    // SHARD, bin = floor(tokens-before / budget). At 100 TB the window
-    // partitions by shard (a shard is one partition's stream — the same
-    // sequential pass a real packer makes); a GLOBAL ordered window would
-    // serialize the corpus through one task and is exactly what this shape
-    // avoids. All-integer outputs; floor() is explicit on both sides
-    // because DuckDB's double->BIGINT cast ROUNDS where Spark truncates.
-    Q("x_seq_pack",
-      """WITH t AS (SELECT doc_id, source,
-        |  len(list_filter(string_split(text, ' '), x -> x <> '')) AS tc
-        |  FROM documents),
-        |c AS (SELECT doc_id, source, tc, sum(tc) OVER (PARTITION BY source
-        |  ORDER BY doc_id ROWS UNBOUNDED PRECEDING) AS cum FROM t),
-        |b AS (SELECT source, tc,
-        |  CAST(floor((cum - tc) / 512.0) AS BIGINT) AS bin FROM c)
-        |SELECT source, bin, count(*) AS n_docs,
-        |CAST(sum(tc) AS BIGINT) AS total_tokens
-        |FROM b GROUP BY source, bin ORDER BY source, bin""".stripMargin) { (s, dir) =>
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy("source").orderBy("doc_id")
-        .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding, 0)
-      Tables(s, dir, "documents")
-        .select(col("doc_id"), col("source"),
-          size(filter(split(col("text"), " "), x => x =!= "")).cast("long").as("tc"))
-        .withColumn("cum", sum("tc").over(w))
-        .withColumn("bin", floor((col("cum") - col("tc")) / lit(512.0)).cast("long"))
-        .groupBy("source", "bin")
-        .agg(count(lit(1)).as("n_docs"), sum("tc").as("total_tokens"))
-        .orderBy("source", "bin")
     },
 
     // Deterministic training-order shuffle + sharding: the epoch-order step
@@ -4347,572 +507,6 @@ object PipelineQueries {
         .orderBy("shard")
     },
 
-    // Feature-hashing text embedder (Weinberger et al. ICML'09) — dense
-    // vectors for the documents table with no model and no vocabulary:
-    // the bridge from text to the ANN/dedup family. The full corpus is
-    // embedded (the at-scale path Bench times); the oracle re-derives
-    // every coordinate of the first 5 documents exactly (md5-hex hashes,
-    // integer-valued pre-normalization vectors), and a gate attests the
-    // map is a function of content: exact-duplicate texts must embed to
-    // identical vectors (corpus-size-switched, AnnExactVerifyMaxRows).
-    Q("x_text_embed",
-      """WITH tok AS (SELECT doc_id,
-        |  unnest(list_filter(string_split(lower(text), ' '), x -> x <> '')) AS t
-        |  FROM documents WHERE doc_id < 5),
-        |tb AS (SELECT doc_id,
-        |  CAST(concat('0x', substr(md5(t), 1, 7)) AS BIGINT) % 64 AS d,
-        |  1 - 2 * (CAST(concat('0x', substr(md5(t), 8, 1)) AS BIGINT) % 2) AS s
-        |  FROM tok),
-        |grid AS (SELECT doc_id, r.d FROM (SELECT DISTINCT doc_id FROM tb)
-        |  CROSS JOIN range(64) AS r(d)),
-        |sp AS (SELECT doc_id, d, CAST(sum(s) AS BIGINT) AS v FROM tb
-        |  GROUP BY doc_id, d)
-        |SELECT grid.doc_id, grid.d AS dim,
-        |CAST(COALESCE(sp.v, 0) AS BIGINT) AS val
-        |FROM grid LEFT JOIN sp USING (doc_id, d)
-        |ORDER BY doc_id, dim""".stripMargin) { (s, dir) =>
-      val docs = Tables(s, dir, "documents")
-      val emb = graft.operators.TextEmbed.featureHash(docs, "doc_id", "text",
-        dim = 64)
-      val n = docs.count()
-      if (n <= AnnExactVerifyMaxRows) {
-        // content-function attestation: docs with identical text (the
-        // corpus has real exact dups — x_dedup_exact counts them) must
-        // embed to bit-identical vectors
-        val fp = docs.select(col("doc_id").as("id"),
-          TextFunctions.fingerprintMd5(col("text")).as("fp"))
-        val dupPair = fp.groupBy("fp")
-          .agg(min("id").as("id1"), max("id").as("id2"), count(lit(1)).as("c"))
-          .where(col("c") >= 2).limit(8)
-        val mismatches = dupPair
-          .join(emb.select(col("id").as("id1"), col("vec").as("v1")), "id1")
-          .join(emb.select(col("id").as("id2"), col("vec").as("v2")), "id2")
-          .where(col("v1") =!= col("v2")).count()
-        Gate.check(mismatches == 0,
-          s"$mismatches duplicate-text pairs embedded to different vectors")
-      }
-      emb.where(col("id") < 5)
-        .select(col("id").as("doc_id"), posexplode(col("vec")).as(Seq("dim", "val")))
-        .select(col("doc_id"), col("dim").cast("long").as("dim"),
-          col("val").cast("long").as("val"))
-        .orderBy("doc_id", "dim")
-    },
-
-    // End-to-end text -> hash-embedding -> LSH near-dup composition, with a
-    // DETERMINISTIC full oracle: docs with identical text embed to
-    // IDENTICAL vectors (TextEmbed is a pure content function), identical
-    // vectors share every LSH bucket in every table, so embeddingNearDup
-    // at threshold ~1 recovers EVERY exact-dup pair with probability 1 —
-    // no seed luck, no violation-count indirection. The oracle counts
-    // C(g,2) over md5-fingerprint groups; the Spark side counts recovered
-    // pairs whose endpoints share a fingerprint. Equality is exact in both
-    // directions: a missed pair lowers n_found, a broken embedder that
-    // merges distinct texts can only add pairs OUTSIDE the fingerprint
-    // match (filtered), never inflate it.
-    Q("x_embed_dedup",
-      """SELECT CAST(sum(c * (c - 1) / 2) AS BIGINT) AS n_expected,
-        |CAST(sum(c * (c - 1) / 2) AS BIGINT) AS n_found FROM
-        |(SELECT count(*) AS c FROM documents GROUP BY md5(lower(text))) g""".stripMargin) { (s, dir) =>
-      val docs = Tables(s, dir, "documents")
-      val emb = graft.operators.TextEmbed.featureHash(
-        docs, "doc_id", "text", dim = 64, normalize = true)
-        .localCheckpoint(true) // feeds LSH banding + both verify sides
-      val n = emb.count()
-      // minTables 3, not the default floor of 8: at cosine 0.999 a single
-      // table already collides a true pair with p1 ~ 0.77, so THREE OR'd
-      // tables meet the 0.98 recall contract (1-(1-p1)^3 ~ 0.988) — the
-      // 8-table floor exists for low-threshold schedules and was pure
-      // banded-row/verify-join waste here (the exact-equality gate
-      // population collides in EVERY table regardless: identical vectors
-      // share every bucket).
-      val planes = Similarity.adaptivePlanes(n, targetOccupancy = 2)
-      val tables = Similarity.tablesForRecall(planes, cosine = 0.999,
-        minTables = 3)
-      // maxOccupancy ON with a CONTENT-seeded split: the occupancy
-      // sub-hash is seeded by the vector's own hash, so bit-identical
-      // vectors (identical texts) share every sub-bucket by construction
-      // and the exact n_expected == n_found contract survives the cap.
-      // Worst-case within-bucket work is bounded at occ*maxOccupancy per
-      // table EXCEPT the irreducible term — an identical-content group
-      // bigger than the cap can't be split, but its C(g,2) pairs are the
-      // operator's output, not avoidable candidate waste.
-      val pairs = Dedup.embeddingNearDup(emb, "id", "vec",
-        threshold = 1.0 - 1e-9, numPlanes = planes, numTables = tables,
-        maxOccupancy = 8, contentSeededSplit = true)
-      val fp = docs.select(col("doc_id"),
-        TextFunctions.fingerprintMd5(col("text")).as("fp"))
-      val matched = pairs
-        .join(fp.select(col("doc_id").as("id1"), col("fp").as("fp1")), "id1")
-        .join(fp.select(col("doc_id").as("id2"), col("fp").as("fp2")), "id2")
-        .where(col("fp1") === col("fp2"))
-      matched.agg(count(lit(1)).as("n_found"))
-        .crossJoin(fp.groupBy("fp").agg(count(lit(1)).as("c"))
-          .agg(sum(col("c") * (col("c") - 1) / 2).cast("long").as("n_expected")))
-        .select("n_expected", "n_found")
-    },
-
-    // Bigram language-model scoring — the classic LM-quality filter: train
-    // add-1-smoothed bigram counts on the corpus, score every document by
-    // total log-probability. Exact-hash floats via INTEGER QUANTIZATION:
-    // each bigram's ln((c2+1)/(c1+V)) is bit-identical in both engines
-    // (integer inputs, correctly rounded ops, Math.log == libm), and
-    // floor(lp * 1e6) as BIGINT makes the PER-DOC SUM an integer sum —
-    // order-insensitive, so distributed aggregation order can't flip a
-    // digit (a double sum over a doc's bigrams would be nondeterministic
-    // in the last ulp). LM tables are vocabulary-sized: their joins stay
-    // unhinted (AQE broadcasts while they fit); the per-doc window is
-    // bounded by doc length, never corpus size.
-    Q("x_lm_score",
-      """WITH raw AS (SELECT doc_id, string_split(lower(text), ' ') AS ts
-        |  FROM documents),
-        |tok AS (SELECT doc_id, unnest(ts) AS t, generate_subscripts(ts, 1) AS pos
-        |  FROM raw),
-        |tok2 AS (SELECT * FROM tok WHERE t <> ''),
-        |bg AS (SELECT doc_id, t AS w1,
-        |  lead(t) OVER (PARTITION BY doc_id ORDER BY pos) AS w2 FROM tok2),
-        |bg2 AS (SELECT doc_id, w1, w2 FROM bg WHERE w2 IS NOT NULL),
-        |c2 AS (SELECT w1, w2, count(*) AS c2 FROM bg2 GROUP BY w1, w2),
-        |c1 AS (SELECT w1, count(*) AS c1 FROM bg2 GROUP BY w1),
-        |v AS (SELECT count(DISTINCT t) AS v FROM tok2),
-        |sc AS (SELECT b.doc_id,
-        |  CAST(floor(ln((c2.c2 + 1.0) / (c1.c1 + v.v)) * 1000000) AS BIGINT) AS lp
-        |  FROM bg2 b JOIN c2 USING (w1, w2) JOIN c1 USING (w1) CROSS JOIN v)
-        |SELECT doc_id, count(*) AS n_bigrams,
-        |CAST(sum(lp) AS BIGINT) AS logprob_scaled
-        |FROM sc WHERE doc_id < 100 GROUP BY doc_id ORDER BY doc_id""".stripMargin) { (s, dir) =>
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy("doc_id").orderBy("pos")
-      val tok2 = Tables(s, dir, "documents")
-        .select(col("doc_id"),
-          posexplode(split(lower(col("text")), " ")).as(Seq("pos", "t")))
-        .where(col("t") =!= "")
-      val bg2 = tok2
-        .select(col("doc_id"), col("pos"), col("t").as("w1"),
-          lead(col("t"), 1).over(w).as("w2"))
-        .where(col("w2").isNotNull)
-        .select("doc_id", "w1", "w2")
-      val c2 = bg2.groupBy("w1", "w2").agg(count(lit(1)).as("c2"))
-      val c1 = bg2.groupBy("w1").agg(count(lit(1)).as("c1"))
-      val v = tok2.agg(countDistinct("t").as("v"))
-      val sc = bg2.join(c2, Seq("w1", "w2")).join(c1, Seq("w1"))
-        .crossJoin(broadcast(v))
-        .withColumn("lp", floor(
-          log((col("c2") + lit(1.0)) / (col("c1") + col("v"))) * lit(1000000))
-          .cast("long"))
-      sc.where(col("doc_id") < 100)
-        .groupBy("doc_id")
-        .agg(count(lit(1)).as("n_bigrams"), sum("lp").as("logprob_scaled"))
-        .orderBy("doc_id")
-    },
-
-    // DSIR-style importance weighting for data selection (Xie et al.
-    // NeurIPS'23 arXiv:2302.03169): score every raw document by how much
-    // its hashed-unigram distribution looks like a TARGET domain —
-    // weight(doc) = sum over tokens of ln(p_target[bucket]/p_raw[bucket]),
-    // add-1 smoothed over B=256 hash buckets. The bucket tables are
-    // B-row broadcasts (the whole model is KB-sized at any corpus scale),
-    // so the corpus makes exactly two passes: one grouped count to fit,
-    // one broadcast-join map to score — no corpus shuffle anywhere.
-    // Portability: bucket = first 7 hex digits of md5(token) mod B (md5 is
-    // byte-identical across engines, 28 bits exact in BIGINT); the
-    // per-bucket log-ratio is computed as ONE ln of a single quotient of
-    // exactly-representable products (< 2^53), then floor(lr*1e6) makes
-    // per-doc weights integer sums — the x_lm_score float discipline.
-    Q("x_dsir",
-      dsirWeightsSql +
-      """SELECT doc_id, count(*) AS n_tokens,
-        |CAST(sum(lr) AS BIGINT) AS weight_scaled
-        |FROM sc WHERE doc_id < 100 GROUP BY doc_id ORDER BY doc_id""".stripMargin) { (s, dir) =>
-      dsirTokenScores(s, dir)
-        .where(col("doc_id") < 100)
-        .groupBy("doc_id")
-        .agg(count(lit(1)).as("n_tokens"), sum("lr").as("weight_scaled"))
-        .orderBy("doc_id")
-    },
-
-    // DSIR step 2 — importance RESAMPLING via the Gumbel top-k trick
-    // (Efraimidis-Spirakis weighted sampling without replacement; Xie et
-    // al. arXiv:2302.03169 §2.3 sample with probability ∝ exp(weight)):
-    // key = weight + Gumbel noise, take the k largest keys. The noise is
-    // DERIVED, not drawn — u = (md5-52bit(doc_id)+0.5)/2^52 (the +0.5
-    // keeps u in (0,1) exactly; /2^52 is exact binary scaling) — so the
-    // sample is a pure function of (seed, doc_id): reproducible across
-    // engines and retries, and the ORACLE can re-derive the exact sample.
-    // floor(gumbel*1e6) keeps the ranking key integer (the x_lm_score
-    // float discipline). Top-k by orderBy+limit = TakeOrderedAndProject
-    // (bounded per-partition heaps, no global sort).
-    Q("x_dsir_sample",
-      dsirWeightsSql +
-      """,w AS (SELECT doc_id, CAST(sum(lr) AS BIGINT) AS ws FROM sc GROUP BY doc_id),
-        |g AS (SELECT doc_id, ws + CAST(floor(-ln(-ln(
-        |  (CAST(concat('0x', substr(md5(concat('g#', CAST(doc_id AS VARCHAR))),
-        |    1, 13)) AS BIGINT) + 0.5) / 4503599627370496.0)) * 1000000) AS BIGINT)
-        |  AS key_scaled FROM w)
-        |SELECT doc_id, key_scaled FROM g
-        |ORDER BY key_scaled DESC, doc_id LIMIT 25""".stripMargin) { (s, dir) =>
-      val u = (conv(substring(md5(concat(lit("g#"), col("doc_id").cast("string"))
-        .cast("binary")), 1, 13), 16, 10).cast("double") + lit(0.5)) /
-        lit(4503599627370496.0)
-      dsirTokenScores(s, dir)
-        .groupBy("doc_id")
-        .agg(sum("lr").as("ws"))
-        .withColumn("key_scaled",
-          (col("ws") + floor(-log(-log(u)) * lit(1000000)).cast("long")))
-        .select("doc_id", "key_scaled")
-        .orderBy(col("key_scaled").desc, col("doc_id"))
-        .limit(25)
-    },
-
-    // STREAMING windowed aggregation, driver-visible: the batch twin is
-    // x_event_window; this runs the same tumbling-hour aggregate through a
-    // real watermark + append-mode stream (two time-split micro-batches,
-    // then a far-future sentinel closes every window). Sums are integer
-    // cents, so cross-batch state accumulation order can't flip a rounded
-    // digit — the oracle compare is exact.
-    Q("x_stream_window",
-      """SELECT strftime(date_trunc('hour', ts), '%Y-%m-%d %H:00') AS hour,
-        |event_type, count(*) AS n,
-        |CAST(sum(CAST(round(value * 100, 0) AS BIGINT)) AS BIGINT) AS sum_cents
-        |FROM events WHERE user_id < 40
-        |GROUP BY 1, 2 ORDER BY hour, event_type""".stripMargin) { (s, dir) =>
-      Tmp.scoped("graft-swin") { tmp =>
-        val src = new OrderedSource(tmp.resolve("src").toString)
-        // sentinel 3h past the last event: watermark (1h lag) passes every
-        // real window's end, so append mode emits them all; the sentinel's
-        // own window never closes and never reaches the sink
-        val fx = windowSource(s, dir)
-        fx.write(src)
-        val q = runToCompletion(s, tmp.resolve("ckpt")) {
-          memorySink(graft.streaming.EventStreams.hourlyCountsCents(
-            src.stream(s, fx.ev.schema, 1)), "graft_stream_win_")
-        }
-        s.table(q.name).where(col("event_type") =!= "sentinel")
-          .orderBy("hour", "event_type").localCheckpoint(true)
-      }
-    },
-
-    // STATEFUL restart — x_stream_restart's harder twin: a watermarked
-    // window AGGREGATE stopped mid-corpus and resumed from its
-    // checkpoint, so what must survive the restart is the STATE STORE
-    // (the open boundary windows), not just the file-source offset log.
-    // The fixture splits by TIME (not user parity): phase A's watermark
-    // stops one hour short of the split, so the boundary windows hold
-    // gen1 partial counts in state when the instance dies; phase B's
-    // instance reloads that state, merges gen2's events into the same
-    // windows, and the far-future sentinel flushes everything. Exact
-    // integer-cents equality with the batch truth is the gate — lost
-    // state under-counts every boundary window, a replay double-counts.
-    // The sink is the parquet FILE sink: its _spark_metadata manifest is
-    // the exactly-once ledger across instances (a memory sink dies with
-    // instance A). Phase row counts pin that BOTH instances emitted.
-    Q("x_stream_restart_agg",
-      """SELECT strftime(date_trunc('hour', ts), '%Y-%m-%d %H:00') AS hour,
-        |event_type, count(*) AS n,
-        |CAST(sum(CAST(round(value * 100, 0) AS BIGINT)) AS BIGINT) AS sum_cents
-        |FROM events WHERE user_id < 25
-        |GROUP BY 1, 2 ORDER BY hour, event_type""".stripMargin) { (s, dir) =>
-      Tmp.scoped("graft-srsta") { tmp =>
-        val src = new OrderedSource(tmp.resolve("src").toString)
-        val out = tmp.resolve("out").toString
-        val fx = restartAggSource(s, dir)
-        def runInstance(): Unit = runToCompletion(s, tmp.resolve("ckpt")) {
-          graft.streaming.EventStreams.hourlyCountsCents(
-              src.stream(s, fx.ev.schema, 1))
-            .writeStream.format("parquet").option("path", out)
-            .outputMode("append")
-        }
-        // phase A: first half by TIME, then the instance dies with the
-        // boundary windows still open in state. ONE time-sorted file per
-        // phase (TimeSplit's `sorted`): the windowed aggregate silently
-        // DROPS rows behind the watermark. The second half and the
-        // sentinel land while nothing is running.
-        var aRows = 0L
-        fx.write(src, between = () => {
-          runInstance()
-          aRows = s.read.parquet(out).count()
-        })
-        runInstance()
-        val all = s.read.parquet(out)
-        val bRows = all.count() - aRows
-        Gate.check(aRows >= 1 && bRows >= 1,
-          s"restart not exercised: phase A emitted $aRows, phase B $bRows")
-        all.where(col("event_type") =!= "sentinel")
-          .orderBy("hour", "event_type").localCheckpoint(true)
-      }
-    },
-
-    // STATEFUL sessionization RESTART — gates the event-time-timeout
-    // sessionize path (emitOpen = false, EventStreams.sessionizeMs) end
-    // to end across a mid-corpus kill (r9 verdict #7: that path was
-    // spec-covered but never CORRECTNESS-gated; the batch-mode oracle
-    // runs emitOpen = true). The fixture splits by TIME with an 8-HOUR
-    // gap (the events table's per-user cadence is hours apart — median
-    // ~7h — so a 30-minute gap would close every session inside phase A
-    // and the restart would carry nothing): sessions straddling the
-    // split are OPEN in the state store when instance A dies, instance
-    // B reloads them, merges gen2 events into the same session, and the
-    // far-future sentinel (> end + 2*gap for every real session) flushes
-    // everything. Lost state splits a spanning session in two and flips
-    // n_sessions — the exact-count oracle catches it; the spanning Gate
-    // pins that the fixture actually exercised a cross-restart session
-    // (at least one output session holds events from BOTH phases).
-    // Parquet file sink: its _spark_metadata manifest is the
-    // exactly-once ledger across instances.
-    Q("x_stream_sessionize_restart",
-      """WITH d AS (SELECT user_id, epoch_ms(ts) AS t FROM events
-        |  WHERE user_id < 35),
-        |m AS (SELECT user_id, t, CASE WHEN t - lag(t) OVER
-        |  (PARTITION BY user_id ORDER BY t) > 28800000
-        |  OR lag(t) OVER (PARTITION BY user_id ORDER BY t) IS NULL
-        |  THEN 1 ELSE 0 END AS new_s FROM d),
-        |s AS (SELECT user_id, sum(new_s) OVER
-        |  (PARTITION BY user_id ORDER BY t
-        |   ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS sid FROM m)
-        |SELECT user_id, CAST(count(DISTINCT sid) AS BIGINT) AS n_sessions,
-        |count(*) AS n_events FROM s GROUP BY user_id
-        |ORDER BY user_id""".stripMargin) { (s, dir) =>
-      Tmp.scoped("graft-ssrst") { tmp =>
-        val src = new OrderedSource(tmp.resolve("src").toString)
-        val out = tmp.resolve("out").toString
-        val fx = sessionizeRestartSource(s, dir)
-        def runInstance(): Unit = runToCompletion(s, tmp.resolve("ckpt")) {
-          import s.implicits._
-          graft.streaming.EventStreams.sessionizeMs(
-              src.stream(s, fx.ev.schema, 1).as[graft.streaming.EventStreams.Event],
-              RestartGapMs, emitOpen = false)
-            .writeStream.format("parquet").option("path", out)
-            .outputMode("append")
-        }
-        // phase A: first half by time, ONE time-sorted file — the source
-        // table is only incidentally time-ordered at gate SFs (ScaleCheck's
-        // replicated corpora are repartitioned), and flatMapGroupsWithState
-        // has NO automatic late-row filter: a second unsorted file whose
-        // events trail the watermark the first file set makes
-        // setTimeoutTimestamp throw (timeout below watermark). One sorted
-        // file per phase = the watermark only ever advances at the phase
-        // boundary, at any corpus order. The spanning sessions stay open
-        // in state when this instance dies; the second half and the
-        // sentinel land while nothing is running.
-        var aRows = 0L
-        val mid = fx.write(src, between = () => {
-          runInstance()
-          aRows = s.read.parquet(out).count()
-        })
-        runInstance()
-        val all = s.read.parquet(out).where(col("user_id") >= 0)
-          .localCheckpoint(true)
-        val bRows = all.count() - aRows
-        Gate.check(aRows >= 1 && bRows >= 1,
-          s"restart not exercised: phase A emitted $aRows, phase B $bRows")
-        val spanning = all.where(unix_millis(col("session_start")) < mid &&
-          unix_millis(col("session_end")) >= mid).count()
-        Gate.check(spanning >= 1,
-          "no session crossed the restart: the open-session state path " +
-            s"was not exercised (mid=$mid)")
-        all.groupBy("user_id")
-          .agg(count(lit(1)).as("n_sessions"), sum("n_events").as("n_events"))
-          .orderBy("user_id")
-      }
-    },
-
-    // Stream-stream JOIN restart — the last restart-uncovered state store
-    // (restart coverage spans agg, dedup-upsert, sessionize; the interval
-    // join's BUFFERED-ROW state is the riskiest reload because both sides
-    // hold un-evicted rows mid-corpus). Choreography: the phase boundary
-    // `mid` is placed AT the latest strictly-ordered matched pair (click
-    // strictly before purchase, data-derived — existence holds at every
-    // gate SF): instance 1 consumes everything before that pair's
-    // purchase, so the pair's CLICK enters the join's click state and the
-    // instance dies holding it; instance 2 (same checkpoint) consumes the
-    // rest + two flushing sentinels. The straddle gate then demands that
-    // cross-phase pair in the output — it can only match if the
-    // state-store reload handed instance 2 a click it never read from the
-    // source. Result is the per-user LEFT JOIN aggregate; equality with
-    // the batch oracle across the kill is the exactly-once claim.
-    Q("x_stream_join_restart",
-      """WITH p AS (SELECT user_id, ts FROM events
-        |  WHERE event_type = 'purchase' AND user_id < 20),
-        |c AS (SELECT user_id, ts FROM events
-        |  WHERE event_type = 'click' AND user_id < 20)
-        |SELECT p.user_id AS user_id, count(*) AS n_rows,
-        |count(c.ts) AS n_matched
-        |FROM p LEFT JOIN c ON c.user_id = p.user_id
-        |AND c.ts >= p.ts - INTERVAL 30 MINUTE AND c.ts <= p.ts
-        |GROUP BY p.user_id ORDER BY user_id""".stripMargin) { (s, dir) =>
-      Tmp.scoped("graft-sjrst") { tmp =>
-        val src = new OrderedSource(tmp.resolve("src").toString)
-        val out = tmp.resolve("out").toString
-        val fx = joinRestartSource(s, dir)
-        // noDataBatches=false: the two flushing sentinels are the
-        // watermark choreography — see withShufflePartitions
-        def runInstance(): Unit = runToCompletion(s, tmp.resolve("ckpt"),
-            noDataBatches = false) {
-          graft.streaming.EventStreams
-            .clickPurchaseLeftJoin(src.stream(s, fx.ev.schema, 1), 30)
-            .writeStream.format("parquet").option("path", out)
-            .outputMode("append")
-        }
-        // phase A: one time-sorted file (the restart queries' watermark
-        // discipline); the straddle pair's click is buffered when the
-        // instance stops. The second half and two flushing sentinels land
-        // while nothing runs.
-        var aRows = 0L
-        val mid = fx.write(src, between = () => {
-          runInstance()
-          aRows = s.read.parquet(out)
-            .where(col("p_type") === "purchase").count()
-        })
-        runInstance()
-        val all = s.read.parquet(out)
-          .where(col("p_type") === "purchase").localCheckpoint(true)
-        val bRows = all.count() - aRows
-        Gate.check(aRows >= 1 && bRows >= 1,
-          s"restart not exercised: phase A emitted $aRows, phase B $bRows")
-        val straddle = all.where(unix_millis(col("click_ts")) < mid &&
-          unix_millis(col("purchase_ts")) >= mid).count()
-        Gate.check(straddle >= 1,
-          "no matched pair crossed the restart: the reloaded click state " +
-            s"was not exercised (mid=$mid)")
-        all.groupBy(col("p_user").as("user_id"))
-          .agg(count(lit(1)).as("n_rows"),
-            count(col("click_ts")).as("n_matched"))
-          .orderBy("user_id")
-      }
-    },
-
-    // Stream-stream LEFT OUTER interval join, driver-visible END-TO-END:
-    // unlike x_stream_join (inner, batch twin), this runs the real
-    // watermarked stream — the outer (null-click) rows are the part batch
-    // mode can't fake, because each one is a watermark assertion that no
-    // matching click can still arrive, emitted exactly when the click
-    // state for its window is EVICTED. Two time-split micro-batches, then
-    // two far-future sentinels: the first advances both watermarks past
-    // every real window, the second forces the extra trigger outer
-    // results flush in (outer emission happens in the batch AFTER
-    // eviction — with a file source and no new file, that batch would
-    // never run). Oracle: the exact LEFT JOIN per-user matched/unmatched
-    // counts in DuckDB.
-    Q("x_stream_join_outer",
-      """WITH p AS (SELECT user_id, ts FROM events
-        |  WHERE event_type = 'purchase' AND user_id < 40),
-        |c AS (SELECT user_id, ts FROM events
-        |  WHERE event_type = 'click' AND user_id < 40)
-        |SELECT p.user_id AS user_id, count(*) AS n_rows,
-        |count(c.ts) AS n_matched
-        |FROM p LEFT JOIN c ON c.user_id = p.user_id
-        |AND c.ts >= p.ts - INTERVAL 30 MINUTE AND c.ts <= p.ts
-        |GROUP BY p.user_id ORDER BY user_id""".stripMargin) { (s, dir) =>
-      Tmp.scoped("graft-sjoin") { tmp =>
-        val src = new OrderedSource(tmp.resolve("src").toString)
-        val fx = joinOuterSource(s, dir)
-        fx.write(src)
-        // noDataBatches=false: two flushing sentinels are the choreography
-        val q = runToCompletion(s, tmp.resolve("ckpt"), noDataBatches = false) {
-          memorySink(graft.streaming.EventStreams.clickPurchaseLeftJoin(
-            src.stream(s, fx.ev.schema, 1), 30), "graft_stream_sjo_")
-        }
-        s.table(q.name).where(col("p_type") === "purchase")
-          .groupBy(col("p_user").as("user_id"))
-          .agg(count(lit(1)).as("n_rows"), count(col("click_ts")).as("n_matched"))
-          .select(col("user_id"), col("n_rows"), col("n_matched"))
-          .orderBy("user_id")
-          .localCheckpoint(true)
-      }
-    },
-
-    // Stream-stream FULL OUTER interval join — the matrix completer:
-    // matched pairs, purchase-only rows (window closed with no click),
-    // AND click-only rows (no later purchase claimed the click). Same
-    // fixture choreography as the left-outer query (two data files, two
-    // far-future sentinels so every eviction cohort gets a flushing
-    // trigger; sentinels ride both streams — the pushdown trap). Output
-    // classifies per user via the riding type columns; user < 30 keeps
-    // the population disjoint in size from the left query's (< 40) so a
-    // wrong filter can't accidentally hash-match. Oracle: exact FULL
-    // JOIN per-user matched / purchase-only / click-only counts.
-    Q("x_stream_join_full",
-      """WITH p AS (SELECT user_id, ts FROM events
-        |  WHERE event_type = 'purchase' AND user_id < 30),
-        |c AS (SELECT user_id, ts FROM events
-        |  WHERE event_type = 'click' AND user_id < 30)
-        |SELECT coalesce(p.user_id, c.user_id) AS user_id,
-        |count(*) AS n_rows,
-        |CAST(sum(CASE WHEN p.ts IS NOT NULL AND c.ts IS NOT NULL
-        |  THEN 1 ELSE 0 END) AS BIGINT) AS n_matched,
-        |CAST(sum(CASE WHEN c.ts IS NULL THEN 1 ELSE 0 END) AS BIGINT)
-        |  AS n_purchase_only,
-        |CAST(sum(CASE WHEN p.ts IS NULL THEN 1 ELSE 0 END) AS BIGINT)
-        |  AS n_click_only
-        |FROM p FULL JOIN c ON c.user_id = p.user_id
-        |AND c.ts >= p.ts - INTERVAL 30 MINUTE AND c.ts <= p.ts
-        |GROUP BY 1 ORDER BY user_id""".stripMargin) { (s, dir) =>
-      Tmp.scoped("graft-sjfull") { tmp =>
-        val src = new OrderedSource(tmp.resolve("src").toString)
-        val fx = joinFullSource(s, dir)
-        fx.write(src)
-        // noDataBatches=false: two flushing sentinels are the choreography
-        val q = runToCompletion(s, tmp.resolve("ckpt"), noDataBatches = false) {
-          memorySink(graft.streaming.EventStreams.clickPurchaseFullJoin(
-            src.stream(s, fx.ev.schema, 1), 30), "graft_stream_sjf_")
-        }
-        s.table(q.name)
-          .where(col("p_type") === "purchase" || col("c_type") === "click")
-          .groupBy(coalesce(col("p_user"), col("c_user")).as("user_id"))
-          .agg(count(lit(1)).as("n_rows"),
-            sum(when(col("purchase_ts").isNotNull &&
-              col("click_ts").isNotNull, 1L).otherwise(0L)).as("n_matched"),
-            sum(when(col("click_ts").isNull, 1L).otherwise(0L))
-              .as("n_purchase_only"),
-            sum(when(col("purchase_ts").isNull, 1L).otherwise(0L))
-              .as("n_click_only"))
-          .orderBy("user_id")
-          .localCheckpoint(true)
-      }
-    },
-
-    // Stream-STATIC enrichment join — the standard streaming-ingest shape:
-    // every micro-batch of facts joins a broadcast dimension (customer ->
-    // nation here) with NO streaming state (unlike stream-stream joins,
-    // nothing is buffered or watermarked; the static side is just a
-    // broadcast each batch). Complete-mode count+cents aggregate makes the
-    // result independent of how files split into micro-batches, so the
-    // DuckDB oracle compare is exact with zero ordering choreography.
-    Q("x_stream_enrich",
-      """SELECT n.n_name AS nation, count(*) AS n,
-        |CAST(sum(CAST(round(e.value * 100, 0) AS BIGINT)) AS BIGINT)
-        |  AS sum_cents
-        |FROM events e
-        |JOIN customer c ON e.user_id = c.c_custkey
-        |JOIN nation n ON c.c_nationkey = n.n_nationkey
-        |GROUP BY 1 ORDER BY nation""".stripMargin) { (s, dir) =>
-      Tmp.scoped("graft-senrich") { tmp =>
-        val src = new OrderedSource(tmp.resolve("src").toString)
-        val ev = Tables(s, dir, "events")
-          .select(col("user_id"), col("value"))
-        // two files -> two micro-batches under maxFilesPerTrigger=1
-        src.write(ev.where(col("user_id") % 2 === 0).coalesce(1))
-        src.write(ev.where(col("user_id") % 2 =!= 0).coalesce(1))
-        // materialize the dimension ONCE (r15: a static side of a stream
-        // join re-executes per micro-batch — each trigger was re-running
-        // the customer⋈nation join before rebuilding the broadcast; the
-        // standard practice at any scale is to pin the dimension)
-        val dim = broadcast(Tables(s, dir, "customer")
-          .join(Tables(s, dir, "nation"),
-            col("c_nationkey") === col("n_nationkey"))
-          .select(col("c_custkey"), col("n_name").as("nation"))
-          .localCheckpoint(true))
-        val q = runToCompletion(s, tmp.resolve("ckpt")) {
-          memorySink(src.stream(s, ev.schema, 1)
-            .join(dim, col("user_id") === col("c_custkey"))
-            .groupBy("nation")
-            .agg(count(lit(1)).as("n"),
-              sum(round(col("value") * 100, 0).cast("bigint")).as("sum_cents")),
-            "graft_stream_enrich_", "complete")
-        }
-        s.table(q.name).orderBy("nation").localCheckpoint(true)
-      }
-    },
-
     // Gap-based sessions via flatMapGroupsWithState, oracled against the
     // classic gaps-and-islands SQL (ms-truncated epochs on both sides).
     Q("x_sessionize",
@@ -4938,31 +532,6 @@ object PipelineQueries {
         .orderBy("user_id")
     },
 
-    // Incremental (cross-batch) dedup — the shape every continuously-fed
-    // corpus needs: drop an incoming doc if its fingerprint exists in the
-    // HISTORICAL corpus (anti-join) or earlier in its own batch (keep-first).
-    // At 100 TB the history fingerprint set is itself huge, so this is a
-    // shuffle anti-join on the fingerprint — NOT a broadcast (see
-    // x_bloom_prefilter for the scan-side filter that cuts the exchange).
-    Q("x_incremental_dedup",
-      """WITH hist AS (SELECT DISTINCT md5(lower(text)) AS fp
-        |  FROM documents WHERE doc_id % 5 <> 0),
-        |inc AS (SELECT doc_id, md5(lower(text)) AS fp
-        |  FROM documents WHERE doc_id % 5 = 0),
-        |novel AS (SELECT inc.fp FROM inc LEFT JOIN hist ON inc.fp = hist.fp
-        |  WHERE hist.fp IS NULL GROUP BY inc.fp)
-        |SELECT (SELECT count(*) FROM inc) AS n_incoming,
-        |  count(*) AS n_new FROM novel""".stripMargin) { (s, dir) =>
-      val docs = Tables(s, dir, "documents")
-        .select(col("doc_id"), TextFunctions.fingerprintMd5(col("text")).as("fp"))
-      val hist = docs.where(col("doc_id") % 5 =!= 0).select("fp").distinct()
-      val inc = docs.where(col("doc_id") % 5 === 0)
-      val novel = inc.join(hist, Seq("fp"), "left_anti")
-        .groupBy("fp").agg(min("doc_id")) // keep-first within the batch
-      inc.agg(count(lit(1)).as("n_incoming"))
-        .crossJoin(novel.agg(count(lit(1)).as("n_new")))
-    },
-
     // SCD type-2 interval construction from a changelog: each change opens
     // a validity interval that the NEXT change (in (ts, event_id) order)
     // closes; the latest row stays open (null valid_to). One shuffle on the
@@ -4980,32 +549,6 @@ object PipelineQueries {
           lead(col("ts"), 1).over(w).as("valid_to"),
           col("event_type").as("state"))
         .orderBy("user_id", "valid_from")
-    },
-
-    // Vocabulary build: corpus-wide term frequencies -> top-k vocabulary
-    // with contiguous frequency-ranked ids (the tokenizer-training
-    // precursor). The count is a partial/final aggregate; the top-k cut is
-    // TakeOrderedAndProject (never a global sort); only the k surviving
-    // terms pass through the single-partition ranking window — k rows by
-    // definition, not corpus-sized.
-    Q("x_vocab_build",
-      """WITH tok AS (SELECT unnest(string_split(lower(text), ' ')) AS term
-        |  FROM documents),
-        |cnt AS (SELECT term, count(*) AS n FROM tok WHERE term <> ''
-        |  GROUP BY term),
-        |top AS (SELECT term, n FROM cnt ORDER BY n DESC, term LIMIT 1000)
-        |SELECT row_number() OVER (ORDER BY n DESC, term) AS token_id,
-        |  term, n FROM top ORDER BY token_id""".stripMargin) { (s, dir) =>
-      val counts = Tables(s, dir, "documents")
-        .select(explode(split(lower(col("text")), " ")).as("term"))
-        .where(col("term") =!= "")
-        .groupBy("term").agg(count(lit(1)).as("n"))
-      counts.orderBy(col("n").desc, col("term")).limit(1000)
-        .withColumn("token_id", row_number().over(
-          org.apache.spark.sql.expressions.Window
-            .orderBy(col("n").desc, col("term"))))
-        .select("token_id", "term", "n")
-        .orderBy("token_id")
     },
 
     // MERGE-style upsert (the batch CDC apply): base table + changeset of
@@ -5057,45 +600,6 @@ object PipelineQueries {
         .agg(count(lit(1)).as("n_rows"),
           (sum(round(col("price") * 100, 0).cast("bigint")).cast("double")
             / 100.0).as("total_price"))
-    },
-
-    // Context-window chunking: split each document's token sequence into
-    // fixed-size windows (64 tokens) with overlap (stride 48) — the
-    // training-data prep step between cleaning and tokenization. Spark
-    // side MATERIALIZES every chunk (slice of the bound token array per
-    // posexploded window index); the oracle checks the closed-form chunk
-    // count and coverage arithmetic per source. The token array is bound
-    // as a column BEFORE the per-chunk slice — an unbound split() inside
-    // the lambda would re-tokenize per chunk (the HOF re-eval gotcha).
-    Q("x_chunk_windows",
-      """WITH dl AS (SELECT source,
-        |  len(list_filter(string_split(lower(text), ' '), t -> t <> ''))
-        |    AS dl FROM documents),
-        |ck AS (SELECT source, dl,
-        |  CASE WHEN dl <= 64 THEN 1
-        |       ELSE 1 + CAST(ceil((dl - 64) / 48.0) AS BIGINT) END AS n
-        |  FROM dl WHERE dl > 0)
-        |SELECT source, CAST(sum(n) AS BIGINT) AS n_chunks,
-        |  CAST(sum(64 * (n - 1) + (dl - 48 * (n - 1))) AS BIGINT) AS chunk_tokens
-        |FROM ck GROUP BY source ORDER BY source""".stripMargin) { (s, dir) =>
-      val chunkSize = 64
-      val stride = 48
-      val toks = filter(split(lower(col("text")), " "), t => t =!= "")
-      val withToks = Tables(s, dir, "documents")
-        .select(col("source"), toks.as("toks"))
-        .withColumn("dl", size(col("toks")))
-        .where(col("dl") > 0)
-        .withColumn("n", when(col("dl") <= chunkSize, lit(1L))
-          .otherwise(lit(1L) + ceil((col("dl") - chunkSize) / lit(stride.toDouble))
-            .cast("long")))
-      withToks
-        .select(col("source"), col("toks"),
-          posexplode(expr("sequence(0, n - 1)")).as(Seq("i", "_")))
-        .withColumn("chunk", expr(s"slice(toks, i * $stride + 1, $chunkSize)"))
-        .groupBy("source")
-        .agg(count(lit(1)).as("n_chunks"),
-          sum(size(col("chunk"))).cast("long").as("chunk_tokens"))
-        .orderBy("source")
     }
   )
 }

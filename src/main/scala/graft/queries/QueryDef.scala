@@ -58,6 +58,21 @@ object Gate {
     */
   def check(cond: Boolean, what: => String): Unit =
     if (!cond) throw new IllegalStateException(s"self-attestation failed: $what")
+
+  /** Evaluate each `(holds, what)` condition once and throw, as `check`
+    * does, naming every one that fails. Returns the query's `n_violations`
+    * value: the failed-condition count, so 0 whenever it returns.
+    */
+  def violations(conds: (Boolean, String)*): Long = {
+    val failed = conds.collect { case (false, what) => what }
+    if (failed.nonEmpty)
+      throw new IllegalStateException(s"self-attestation failed: ${failed.mkString("; ")}")
+    failed.size.toLong
+  }
+
+  /** The planted-recall condition: at least `need` of `of` planted items found. */
+  def planted(found: Long, need: Long, of: Long, what: String): (Boolean, String) =
+    (found >= need) -> s"$what: $found/$of planted, need >= $need"
 }
 
 /** Temp dirs for query-local write fixtures and streaming checkpoints.

@@ -11,7 +11,7 @@ import org.apache.spark.sql.functions._
   */
 class OrderedSourceSpec extends SparkSpec {
 
-  import PipelineQueries.OrderedSource
+  import StreamQueries.OrderedSource
 
   private def partFiles(path: String): Seq[java.io.File] =
     new java.io.File(path).listFiles().toSeq

@@ -225,7 +225,7 @@ class PlanShapeSpec extends SparkSpec {
     val ndKey = "spark.sql.streaming.noDataMicroBatches.enabled"
     val p0 = spark.conf.get(pKey)
     val nd0 = spark.conf.get(ndKey)
-    val seen = PipelineQueries.withShufflePartitions(spark, 3,
+    val seen = StreamQueries.withShufflePartitions(spark, 3,
       noDataBatches = false) {
       (spark.conf.get(pKey), spark.conf.get(ndKey))
     }
@@ -234,7 +234,7 @@ class PlanShapeSpec extends SparkSpec {
     assert(spark.conf.get(ndKey) == nd0, "noDataMicroBatches leaked")
     // exception path restores too
     intercept[RuntimeException] {
-      PipelineQueries.withShufflePartitions(spark, 5, noDataBatches = false) {
+      StreamQueries.withShufflePartitions(spark, 5, noDataBatches = false) {
         throw new RuntimeException("boom")
       }
     }
