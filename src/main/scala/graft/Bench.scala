@@ -208,6 +208,24 @@ object Bench {
       jitBytes / 1048576.0))
   }
 
+  /** Processes forked on this machine since boot (the `processes` line of
+    * /proc/stat), where the kernel publishes it. Machine-wide: a delta over
+    * a pass also counts what other programs on the box forked. Without
+    * the native-hadoop library, Hadoop's stock local filesystem forks a
+    * shell per `chmod` ([[graft.plans.PosixRawLocalFileSystem]] avoids
+    * it), so a jump after a Hadoop or Spark upgrade most likely means
+    * those shells are back.
+    */
+  private[graft] def machineForks(): Option[Long] =
+    try forksOf(new String(java.nio.file.Files.readAllBytes(
+      java.nio.file.Paths.get("/proc/stat"))))
+    catch { case _: java.io.IOException => None }
+
+  private[graft] def forksOf(stat: String): Option[Long] =
+    stat.linesIterator.collectFirst {
+      case l if l.startsWith("processes ") => l.stripPrefix("processes ").trim.toLong
+    }
+
   /** Box-normalized cross-round warm ratios: for each query warm-sampled
     * this run that the previous round's committed line also warm-sampled,
     * (warm_now * prevCal / calNow) / warm_prev. cal is a fixed-work loop,
@@ -462,6 +480,10 @@ object Bench {
     val sessions = Vector.fill(nWorkers)(spark.newSession())
     def cgLog(c: PassCodegen): String =
       s"cg_n=${c.compiles} cg_ms=${fmt("%.0f", c.compileMs)} jit_mb=${fmt("%.1f", c.jitMb)}"
+    def forksLog(since: Option[Long]): String = {
+      val n = for (a <- since; b <- machineForks()) yield b - a
+      s"forks=${n.fold("na")(_.toString)} (machine-wide)"
+    }
     def parallelPass(): (Double, Map[String, Double]) = {
       val queue = new java.util.concurrent.ConcurrentLinkedQueue[String]()
       runOrder.foreach(queue.add)
@@ -530,8 +552,9 @@ object Bench {
     // brings run-to-run wall spread inside the ~15% reproducibility bar
     // the same way calibrate() needed min-of-4 (both estimate unimpeded
     // time, and interference is one-sided noise).
+    val forks1 = machineForks()
     val ((wall1, pass1), cgPass1) = withCodegen(parallelPass())
-    println(s"BENCH-WALL-PASS1 ${fmt("%.2f", wall1)} ${cgLog(cgPass1)}")
+    println(s"BENCH-WALL-PASS1 ${fmt("%.2f", wall1)} ${cgLog(cgPass1)} ${forksLog(forks1)}")
     dumpStreamBatches("pass1")
     // reset to pass-1's STARTING state before pass 2 (r11 advice): the
     // parallel workers leak table caches into the shared cache manager,
@@ -539,8 +562,9 @@ object Bench {
     // min-merge then prefers contaminated samples — the exact warm-phase
     // contamination documented below, applied between the two passes
     resetPassState()
+    val forks2 = machineForks()
     val ((wall2, pass2), cgPass2) = withCodegen(parallelPass())
-    println(s"BENCH-WALL-PASS2 ${fmt("%.2f", wall2)} ${cgLog(cgPass2)}")
+    println(s"BENCH-WALL-PASS2 ${fmt("%.2f", wall2)} ${cgLog(cgPass2)} ${forksLog(forks2)}")
     dumpStreamBatches("pass2")
     // Pass-spread attribution (r14 verdict #4): the committed r14 line
     // carried a 33% pass-1→pass-2 inflation of which calibration drift

@@ -6,8 +6,16 @@ import org.apache.spark.sql.SparkSession
   * heap-proportional spill-safety knobs, plus a generated-class cache that
   * holds the program's plan working set ([[CodegenCachePolicy]]),
   * Tungsten pages sized to the program's small tasks ([[pageBytes]]), and
-  * streaming checkpoint files written without Hadoop's forked shells
-  * ([[graft.streaming.StateBackend.CheckpointFilePolicy]]).
+  * local files written without Hadoop's forked shells. Without the
+  * native-hadoop library, Hadoop's local filesystem forks a `chmod` shell
+  * for every file it creates and every directory it makes.
+  * [[LocalFs.Policy]] makes the `file:` filesystem set modes in the JVM;
+  * it covers every FileSystem-API caller, including the checkpoint files
+  * of streaming queries. Those go through the FileSystem API only because
+  * [[graft.streaming.StateBackend.CheckpointFilePolicy]] selects Spark's
+  * FileSystem-based checkpoint file manager: Spark's default manager uses
+  * FileContext, whose local filesystem builds its own stock
+  * `RawLocalFileSystem` and so still forks about 20 shells per file.
   *
   * Spill safety is the fix for a JVM-death mode a memory-pressure stress
   * run reproduced deterministically (NOTES round 12):
@@ -127,8 +135,9 @@ object MemoryDiscipline {
     }
 
   /** Apply the session memory policy to `builder`: always the
-    * [[CodegenCachePolicy]], the checkpoint file policy and this JVM's
-    * [[pageBytes]]; the spill-safety knobs too when its heap-per-core sits
+    * [[CodegenCachePolicy]], the checkpoint file policy, the local
+    * filesystem ([[LocalFs.Policy]]) and this JVM's [[pageBytes]]; the
+    * spill-safety knobs too when its heap-per-core sits
     * under the safe boundary. Call with the same core count passed to
     * `local[n]`.
     */
@@ -137,7 +146,7 @@ object MemoryDiscipline {
     val pages = Map("spark.buffer.pageSize" ->
       pageBytes(Runtime.getRuntime.maxMemory()).toString)
     (CodegenCachePolicy ++ graft.streaming.StateBackend.CheckpointFilePolicy ++
-        pages ++ knobs(cores)).foldLeft(builder) {
+        LocalFs.Policy ++ pages ++ knobs(cores)).foldLeft(builder) {
       case (b, (k, v)) => b.config(k, v)
     }
   }

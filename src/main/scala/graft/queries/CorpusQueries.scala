@@ -528,20 +528,23 @@ object CorpusQueries {
           "bit-identical: k-smallest-of-union, canonical wire form)")
       val (nA, nB, nI, nU) = (row.getAs[Long]("n_a"), row.getAs[Long]("n_b"),
         row.getAs[Long]("n_inter"), row.getAs[Long]("n_union"))
-      def relOk(est: Double, exact: Long, bound: Double, floor: Double = 0.0) =
-        math.abs(est - exact) <= math.max(bound * exact, floor)
+      // below sketch capacity every estimate is exact; past it, each
+      // must sit within its relative bound (or an absolute floor)
       val exactRegime = nA < k && nB < k
-      val viols = Seq(
-        if (nA < k) row.getAs[Double]("est_a") != nA.toDouble
-        else !relOk(row.getAs[Double]("est_a"), nA, 0.35),
-        if (nB < k) row.getAs[Double]("est_b") != nB.toDouble
-        else !relOk(row.getAs[Double]("est_b"), nB, 0.35),
-        if (exactRegime) row.getAs[Double]("est_i") != nI.toDouble
-        else !relOk(row.getAs[Double]("est_i"), nI, 0.5, floor = 20.0),
-        if (exactRegime) row.getAs[Double]("est_u") != nU.toDouble
-        else !relOk(row.getAs[Double]("est_u"), nU, 0.35)).count(identity)
+      def bound(name: String, exact: Long, exactHere: Boolean, rel: Double,
+          floor: Double = 0.0): (Boolean, String) = {
+        val est = row.getAs[Double](name)
+        if (exactHere) (est == exact.toDouble) -> s"$name=$est != exact $exact below k=$k"
+        else (math.abs(est - exact) <= math.max(rel * exact, floor)) ->
+          s"$name=$est off exact $exact by more than $rel relative"
+      }
+      val viols = Gate.violations(
+        bound("est_a", nA, nA < k, 0.35),
+        bound("est_b", nB, nB < k, 0.35),
+        bound("est_i", nI, exactRegime, 0.5, floor = 20.0),
+        bound("est_u", nU, exactRegime, 0.35))
       import s.implicits._
-      Seq((nA, nB, nI, nU, viols.toLong))
+      Seq((nA, nB, nI, nU, viols))
         .toDF("n_a", "n_b", "n_inter", "n_union", "n_viol")
     },
 

@@ -167,15 +167,15 @@ object SketchQueries {
       val ev = Tables(s, dir, "events")
         .select(col("ts"), round(col("value") * 100, 0).cast("long")
           .cast("double").as("v"))
-      val tmp = Tmp.dir("graft-qsk")
-      val rollup = tmp.resolve("daily").toString
-      ev.groupBy(date_trunc("day", col("ts")).as("day"))
-        .agg(graft_qsketch_state(col("v"), k).as("digest"))
-        .write.mode("overwrite").parquet(rollup)
-      val stored = s.read.parquet(rollup)
-      val m = stored.agg(
-        graft_qsketch_merged(col("digest"), k, Seq(0.5, 0.9)).as("qs"),
-        count(lit(1)).as("n_days")).collect()(0)
+      val m = Tmp.scoped("graft-qsk") { tmp =>
+        val rollup = tmp.resolve("daily").toString
+        ev.groupBy(date_trunc("day", col("ts")).as("day"))
+          .agg(graft_qsketch_state(col("v"), k).as("digest"))
+          .write.mode("overwrite").parquet(rollup)
+        s.read.parquet(rollup).agg(
+          graft_qsketch_merged(col("digest"), k, Seq(0.5, 0.9)).as("qs"),
+          count(lit(1)).as("n_days")).collect()(0)
+      }
       val (p50, p90) = (m.getSeq[Double](0)(0), m.getSeq[Double](0)(1))
       val nDays = m.getLong(1)
       val ranks = ev.agg(
@@ -210,16 +210,16 @@ object SketchQueries {
       graft.functions.GraftFunctions.register(s)
       import graft.functions.GraftFunctions.{graft_hll, graft_hll_card, graft_hll_merge}
       val ev = Tables(s, dir, "events")
-      val tmp = Tmp.dir("graft-hll")
-      val rollup = tmp.resolve("daily").toString
-      ev.groupBy(date_trunc("day", col("ts")).as("day"))
-        .agg(graft_hll(xxhash64(col("user_id"))).as("sketch"))
-        .write.mode("overwrite").parquet(rollup)
-      val stored = s.read.parquet(rollup)
-      val merged = stored.agg(
-        graft_hll_card(graft_hll_merge(col("sketch"))).as("est"),
-        count(lit(1)).as("n_days"))
-        .collect()(0)
+      val merged = Tmp.scoped("graft-hll") { tmp =>
+        val rollup = tmp.resolve("daily").toString
+        ev.groupBy(date_trunc("day", col("ts")).as("day"))
+          .agg(graft_hll(xxhash64(col("user_id"))).as("sketch"))
+          .write.mode("overwrite").parquet(rollup)
+        s.read.parquet(rollup).agg(
+          graft_hll_card(graft_hll_merge(col("sketch"))).as("est"),
+          count(lit(1)).as("n_days"))
+          .collect()(0)
+      }
       val direct = ev.agg(
         graft_hll_card(graft_hll(xxhash64(col("user_id")))).as("est"),
         countDistinct("user_id").as("exact")).collect()(0)

@@ -23,8 +23,14 @@ import org.apache.spark.sql.SparkSession
   * without the native-hadoop library Hadoop's local filesystem forks a
   * shell for each `chmod`/`stat`, about 20 processes and 45-50 ms per
   * file. [[CheckpointFilePolicy]] selects Spark's FileSystem-based manager
-  * instead (4 forks, about 10 ms per file); it is part of the session
-  * memory policy, [[graft.plans.MemoryDiscipline.spillSafe]].
+  * instead, which writes through the session's `file:` FileSystem. That
+  * filesystem is [[graft.plans.PosixLocalFileSystem]] ([[graft.plans.LocalFs.Policy]]),
+  * which sets modes in the JVM, so a checkpoint file forks no shell. The
+  * policy stays even so: FileContext's local filesystem builds its own
+  * stock `RawLocalFileSystem`, which the `fs.file.impl` setting does not
+  * reach, and replacing it would take a second delegate class plus a
+  * replacement for its `stat` calls. Both policies are part of the
+  * session memory policy, [[graft.plans.MemoryDiscipline.spillSafe]].
   */
 object StateBackend {
 
@@ -40,9 +46,10 @@ object StateBackend {
   /** Spark settings that write checkpoint files through Hadoop's
     * FileSystem API (`FileSystemBasedCheckpointFileManager`, Spark's own)
     * rather than FileContext. It writes a temporary file and renames it
-    * into place, as FileContext does, with a quarter of the forked shells
-    * on a JVM without native Hadoop; the checkpoint layout, including the
-    * state store's `.changelog.crc` checksum files, is unchanged.
+    * into place, as FileContext does, and on a JVM without native Hadoop
+    * it forks no shell under [[graft.plans.LocalFs.Policy]]; the
+    * checkpoint layout, including the state store's `.changelog.crc`
+    * checksum files, is unchanged.
     *
     * Why it is safe here:
     *   - Every checkpoint this program writes is a local directory, and a

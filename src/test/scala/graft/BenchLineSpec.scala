@@ -222,6 +222,12 @@ class BenchLineSpec extends AnyFunSuite {
     assert(v == 42 && pc.compiles >= 0 && pc.compileMs >= 0 && pc.jitMb > 0)
   }
 
+  test("the pass fork count reads /proc/stat's processes line") {
+    assert(Bench.forksOf("cpu  1 2 3\nctxt 99\nprocesses 12345\nprocs_running 2\n") ==
+      Some(12345L))
+    assert(Bench.forksOf("cpu  1 2 3\n").isEmpty)
+  }
+
   test("readPrevBench prefers cal_par_warm over cal_par when present") {
     val dir = java.nio.file.Files.createTempDirectory("benchprevwarm")
     try {

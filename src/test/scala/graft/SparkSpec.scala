@@ -15,14 +15,16 @@ trait SparkSpec extends AnyFunSuite {
 object SparkSpec {
   lazy val session: SparkSession = {
     // the gate mains' shared settings (plan linter, listeners, UTC, ...)
-    // plus the production codegen cache and checkpoint file policies,
-    // without the rest of MemoryDiscipline.spillSafe: the spill pair
-    // depends on heap-per-core and would change what the spill specs
-    // exercise
+    // plus the production codegen cache, checkpoint file and local
+    // filesystem policies, without the rest of MemoryDiscipline.spillSafe:
+    // the spill pair depends on heap-per-core and would change what the
+    // spill specs exercise. Hadoop caches the file: filesystem per JVM,
+    // so this first session fixes its class for every later one.
     val s = graft.plans.GateSession.base(8)
       .appName("graft-test")
       .config(graft.plans.MemoryDiscipline.CodegenCachePolicy)
       .config(graft.streaming.StateBackend.CheckpointFilePolicy)
+      .config(graft.plans.LocalFs.Policy)
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s
