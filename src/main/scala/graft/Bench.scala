@@ -1,4 +1,5 @@
 package graft
+import graft.plans.QueryRunner
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions.{col, hash, sum}
 
@@ -28,19 +29,16 @@ import org.apache.spark.sql.functions.{col, hash, sum}
   * pass recompiled its plans. `cg_n`/`cg_ms`/`jit_mb` on the line (warmup,
   * pass 1, pass 2) show whether that still holds.
   *
-  * Queries run CONCURRENTLY over a small worker pool (FAIR scheduler, one
-  * isolated `newSession()` per worker). At bench SF
+  * Queries run CONCURRENTLY on [[graft.plans.QueryRunner]], the worker
+  * pool Verify runs its dump on too: one isolated `newSession()` and one
+  * FAIR pool per worker, draining an LPT-ordered queue. At bench SF
   * the suite's cost is dominated by the per-query analysis/scheduling
   * floor (~0.5-0.9s x 162 queries), not compute — local[32] sits mostly
   * idle under serial submission. Parallel submission overlaps that floor;
   * `value` is therefore WALL-CLOCK seconds for the whole suite (the number
   * a user waits), while `serial_sum` preserves the sum of per-query times
   * (contended, so individually noisier — the serial warm reruns in `warm`
-  * are the trustworthy per-query sample). Worker sessions share the
-  * SparkContext and page cache but have isolated SQLConf, so the queries
-  * that temporarily mutate session conf (x_plan_guard's guard cap, the
-  * withShufflePartitions-wrapped streaming/CC sections) cannot race with
-  * neighbors.
+  * are the trustworthy per-query sample).
   */
 object Bench {
 
@@ -293,16 +291,6 @@ object Bench {
       }
     } catch { case _: Throwable => None }
 
-  /** Queue order for the parallel phase: longest-processing-time-first when
-    * a previous run's full timings are on disk (classic LPT makespan
-    * heuristic), else a deterministic name-hash scatter — alphabetical
-    * order would cluster the heavy x_* family into the tail, leaving one
-    * worker to run the slowest query alone at the end.
-    */
-  private[graft] def queueOrder(names: Seq[String], past: Map[String, Double]): Seq[String] =
-    if (past.nonEmpty) names.sortBy(n => (-past.getOrElse(n, 0.0), n))
-    else names.sortBy(n => (scala.util.hashing.MurmurHash3.stringHash(n), n))
-
   /** Fixed-work CPU calibration: a deterministic integer-mix loop (no
     * allocation, no I/O) timed after a JIT warm pass. The SAME work on any
     * box, so the ratio of two rounds' `cal` values is the boxes' relative
@@ -355,31 +343,10 @@ object Bench {
     }.min
   }
 
-  private def pastTimes(): Map[String, Double] =
-    try {
-      val p = java.nio.file.Paths.get("target", "bench_full.json")
-      if (!java.nio.file.Files.exists(p)) Map.empty
-      else {
-        val s = new String(java.nio.file.Files.readAllBytes(p), "UTF-8")
-        val qs = """"queries":\{([^}]*)\}""".r.findFirstMatchIn(s).map(_.group(1)).getOrElse("")
-        if (qs.isEmpty) Map.empty
-        else qs.split(",").flatMap { e =>
-          e.split(":") match {
-            case Array(k, v) => Some(k.replaceAll("\"", "") -> v.toDouble)
-            case _ => None
-          }
-        }.toMap
-      }
-    } catch { case _: Throwable => Map.empty }
-
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
-    val spark = graft.plans.GateSession.gateSf(cpus)
-      // concurrent bench jobs fair-share the cores (one pool per worker)
-      // instead of FIFO head-of-line blocking behind the big queries
-      .config("spark.scheduler.mode", "FAIR")
-      .getOrCreate()
+    val spark = graft.plans.GateSession.gateSf(cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // Untimed warmup: absorb JVM/codegen/scheduler startup AND first-touch
     // file I/O for every table, so per-query numbers measure the queries —
@@ -443,66 +410,46 @@ object Bench {
     val cal = calibrate()
     val calPar = calibratePar()
     println(s"BENCH-CALPAR ${fmt("%.3f", calPar)}")
-    def run1(s: SparkSession, name: String,
-        fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Double = {
+    // Query seconds, or +Inf for a failed run, not elapsed-to-failure (r11
+    // advice): under min-of-2 a transient failure's meaningless fast time
+    // would silently replace the other pass's real measurement. Inf loses
+    // every min-merge; a query failing in BOTH passes is sanitized to -1.0
+    // before output so the JSON line stays parseable.
+    def seconds(name: String, r: Either[Throwable, Double]): Double = r.fold({ e =>
+      println(s"BENCH-ERR $name ${e.getClass.getSimpleName}: " +
+        String.valueOf(e.getMessage).take(160))
+      Double.PositiveInfinity
+    }, identity)
+    val byName = SparkEntry.queries
+    // collect(), not count(): count() lets Catalyst drop a final ORDER BY
+    // (EliminateSorts), undercounting exactly the queries with big sorts
+    // relative to what Verify's materialization pays.
+    def timed(s: SparkSession, name: String): Double = {
       val t0 = System.nanoTime()
-      // collect(), not count(): count() lets Catalyst drop a final ORDER BY
-      // (EliminateSorts), undercounting exactly the queries with big sorts
-      // relative to what Verify's materialization pays.
-      // A failed run returns +Inf, not elapsed-to-failure (r11 advice):
-      // under min-of-2 a transient failure's meaningless fast time would
-      // silently replace the other pass's real measurement. Inf loses
-      // every min-merge; a query failing in BOTH passes is sanitized to
-      // -1.0 before output so the JSON line stays parseable.
-      try { fn(s, sfDir).collect() } catch {
-        case e: Throwable =>
-          println(s"BENCH-ERR $name ${e.getClass.getSimpleName}: " +
-            String.valueOf(e.getMessage).take(160))
-          return Double.PositiveInfinity
-      }
+      byName(name)(s, sfDir).collect()
       (System.nanoTime() - t0) / 1e9
     }
-    val byName = SparkEntry.queries
+    def run1(name: String): Double = seconds(name, QueryRunner.attempt(timed(spark, name)))
     val names = byName.keys.toSeq.sorted
-    val nWorkers = math.max(2, math.min(8, cpus / 4))
-    // One queue order for the whole run (hoisted r16 — same behavior:
-    // pastTimes() reads the PREVIOUS run's bench_full.json, which does not
-    // change until this run exits, so all three passes always used the
-    // same order; hoisting just makes that a fact of the code) and its
-    // hash for the line: contended per-query times depend on which
-    // neighbors a query co-scheduled with, so two runs are per-query
-    // comparable only when their qorder hashes match.
-    val runOrder = queueOrder(names, pastTimes())
+    val nWorkers = QueryRunner.workers(cpus)
+    // One queue order for every pass, and its hash for the line: contended
+    // per-query times depend on which neighbors a query co-scheduled with,
+    // so two runs are per-query comparable only when their qorder hashes
+    // match.
+    val runOrder = QueryRunner.queueOrder(names, QueryRunner.pastTimes())
     val qhash = f"${scala.util.hashing.MurmurHash3.orderedHash(runOrder)}%08x"
-    // Sessions are created on the main thread (session construction runs
-    // the extensions injector; no need to trust its thread-safety), then
-    // each worker drains the shared queue on its own session + FAIR pool.
-    val sessions = Vector.fill(nWorkers)(spark.newSession())
+    val runner = new QueryRunner(spark, nWorkers)
     def cgLog(c: PassCodegen): String =
       s"cg_n=${c.compiles} cg_ms=${fmt("%.0f", c.compileMs)} jit_mb=${fmt("%.1f", c.jitMb)}"
     def forksLog(since: Option[Long]): String = {
       val n = for (a <- since; b <- machineForks()) yield b - a
       s"forks=${n.fold("na")(_.toString)} (machine-wide)"
     }
-    def parallelPass(): (Double, Map[String, Double]) = {
-      val queue = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-      runOrder.foreach(queue.add)
-      val times = new java.util.concurrent.ConcurrentHashMap[String, java.lang.Double]()
+    def pass(): (Double, Map[String, Double]) = {
       val wall0 = System.nanoTime()
-      val threads = sessions.zipWithIndex.map { case (sess, i) =>
-        val t = new Thread(() => {
-          spark.sparkContext.setLocalProperty("spark.scheduler.pool", s"bench-w$i")
-          var name = queue.poll()
-          while (name != null) {
-            times.put(name, run1(sess, name, byName(name)))
-            name = queue.poll()
-          }
-        }, s"bench-worker-$i")
-        t.start(); t
-      }
-      threads.foreach(_.join())
+      val out = runner.run(runOrder)(timed)
       val wall = (System.nanoTime() - wall0) / 1e9
-      (wall, names.map(n => n -> times.getOrDefault(n, 0.0).doubleValue()).toMap)
+      (wall, names.map(n => n -> seconds(n, out(n))).toMap)
     }
     // Untimed full warmup pass (r12 verdict #1a): pass 1 used to double
     // as the JVM's first execution of all 233 query plans — whole-stage
@@ -519,7 +466,7 @@ object Bench {
     // class this pass compiles, for every worker session and every stream's
     // cloned session (MemoryDiscipline.CodegenCachePolicy); the timed
     // passes then hit it, and their cg_n on the line shows the misses left.
-    val ((warmupWall, _), cgWarmup) = withCodegen(parallelPass())
+    val ((warmupWall, _), cgWarmup) = withCodegen(pass())
     println(s"BENCH-WARMUP ${fmt("%.2f", warmupWall)} ${cgLog(cgWarmup)}")
     // per-stream in-pass batch counts (r16, verdict #3): printed per pass
     // so a contended stream inflation decomposes into "more triggers" vs
@@ -553,7 +500,7 @@ object Bench {
     // the same way calibrate() needed min-of-4 (both estimate unimpeded
     // time, and interference is one-sided noise).
     val forks1 = machineForks()
-    val ((wall1, pass1), cgPass1) = withCodegen(parallelPass())
+    val ((wall1, pass1), cgPass1) = withCodegen(pass())
     println(s"BENCH-WALL-PASS1 ${fmt("%.2f", wall1)} ${cgLog(cgPass1)} ${forksLog(forks1)}")
     dumpStreamBatches("pass1")
     // reset to pass-1's STARTING state before pass 2 (r11 advice): the
@@ -563,7 +510,7 @@ object Bench {
     // contamination documented below, applied between the two passes
     resetPassState()
     val forks2 = machineForks()
-    val ((wall2, pass2), cgPass2) = withCodegen(parallelPass())
+    val ((wall2, pass2), cgPass2) = withCodegen(pass())
     println(s"BENCH-WALL-PASS2 ${fmt("%.2f", wall2)} ${cgLog(cgPass2)} ${forksLog(forks2)}")
     dumpStreamBatches("pass2")
     // Pass-spread attribution (r14 verdict #4): the committed r14 line
@@ -656,8 +603,7 @@ object Bench {
     // 1.2-1.5x of the next run's. Pairs with the min-estimator cal: both
     // estimate unimpeded time, so their ratio (warm_norm) is stable.
     var warm = warmNames.map { name =>
-      name -> math.min(run1(spark, name, byName(name)),
-        run1(spark, name, byName(name)))
+      name -> math.min(run1(name), run1(name))
     }.filter(kv => java.lang.Double.isFinite(kv._2)) // both-failed: BENCH-ERR logged
     // Self-settling warm_norm (r10 verdict #1 — the committed artifact
     // diverged from the truth two rounds running): any cell >1.3 against
@@ -680,7 +626,7 @@ object Bench {
       val hot = warmNorm.filter(_._2 > 1.3).map(_._1).toSet
       println(s"BENCH-SETTLE pass ${settle + 1}: resampling ${hot.mkString(",")}")
       warm = warm.map { case (q, t) =>
-        q -> (if (hot(q)) math.min(t, run1(spark, q, byName(q))) else t)
+        q -> (if (hot(q)) math.min(t, run1(q)) else t)
       }
       warmNorm = norm(warm, calParWarm)
       settle += 1

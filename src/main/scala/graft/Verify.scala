@@ -1,7 +1,11 @@
 package graft
+import graft.plans.{GateSession, QueryRunner}
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+  * plus oracle_sql.json, for the DuckDB oracle compare. The queries run
+  * concurrently on [[graft.plans.QueryRunner]], the worker pool Bench
+  * times, so the layout Bench measures is the layout whose results are
+  * checked. */
 object Verify {
   def main(args: Array[String]): Unit = {
     // args: <sfDir> <outDir> [comma-separated query names] — the optional
@@ -10,18 +14,18 @@ object Verify {
     val only: Option[Set[String]] =
       if (args.length > 2) Some(args(2).split(",").toSet) else None
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
-    val spark = graft.plans.GateSession.gateSf(cpus).getOrCreate()
+    val spark = GateSession.gateSf(cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
-    SparkEntry.queries
-      .filter { case (name, _) => only.forall(_.contains(name)) }
-      .foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
-      catch { case e: Throwable =>
-        System.err.println(s"[verify] $name failed: ${e.getMessage}")
+    val queries = SparkEntry.queries
+    val names = queries.keys.filter(n => only.forall(_.contains(n))).toSeq
+    new QueryRunner(spark, QueryRunner.workers(cpus))
+      .run(QueryRunner.queueOrder(names, QueryRunner.pastTimes())) { (s, name) =>
+        queries(name)(s, sfDir).coalesce(1).write.mode("overwrite")
+          .parquet(s"$outDir/$name")
+      }.toSeq.sortBy(_._1).foreach { case (name, r) =>
+        r.left.foreach(e => System.err.println(s"[verify] $name failed: ${e.getMessage}"))
       }
-    }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the
     // driver's json.load fail and silently zero the round's correctness.

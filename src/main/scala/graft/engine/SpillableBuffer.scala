@@ -32,11 +32,6 @@ final class SpillableBuffer[T](maxInMemory: Int) {
   def spilled: Boolean = file != null
   def size: Long = mem.length + spilledCount
 
-  /** The spill file, if any — safe to capture in a cleanup closure without
-    * pinning the buffer (and its heap prefix) itself.
-    */
-  def spillFile: Option[File] = Option(file)
-
   def append(t: T): Unit = {
     require(!isSealed, "append after seal()")
     if (mem.length < maxInMemory) mem += t

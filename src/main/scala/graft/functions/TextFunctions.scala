@@ -11,14 +11,8 @@ import org.apache.spark.sql.functions._
   */
 object TextFunctions {
 
-  /** Space-tokenizer (the fixture corpus is single-space separated;
-    * `tokensWs` handles arbitrary whitespace).
-    */
+  /** Space-tokenizer (the fixture corpus is single-space separated). */
   def tokens(text: Column): Column = split(lower(text), " ")
-  def tokensWs(text: Column): Column = split(lower(text), "\\s+")
-
-  /** Whitespace token count. */
-  def tokenCount(text: Column): Column = size(tokensWs(text))
 
   /** BPE-ish subword count: alphanumeric runs (word/punct boundaries split),
     * the usual cheap proxy for tokenizer load before a real BPE pass.

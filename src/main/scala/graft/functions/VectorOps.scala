@@ -984,10 +984,6 @@ object VectorOps {
     new GenericArrayData(out)
   }
 
-  /** XXH64 of a UTF8String with seed (shared by expressions/tests). */
-  def hashString(s: UTF8String, seed: Long): Long =
-    XXH64.hashUnsafeBytes(s.getBaseObject, s.getBaseOffset, s.numBytes, seed)
-
   private val ShingleSep = UTF8String.fromString(" ")
 
   /** Distinct word k-shingles from a token array. Short docs (< k tokens)

@@ -19,15 +19,4 @@ object Sampling {
       .where(col("__rn") <= n)
       .drop("__rn")
   }
-
-  /** Seeded random stratified sample: n per group, chosen by seeded rand
-    * ordering (deterministic for a fixed seed+partitioning of the input).
-    */
-  def stratifiedSample(df: DataFrame, groupCol: String, n: Int,
-      seed: Long = 42L): DataFrame = {
-    val w = Window.partitionBy(groupCol).orderBy(rand(seed))
-    df.withColumn("__rn", row_number().over(w))
-      .where(col("__rn") <= n)
-      .drop("__rn")
-  }
 }

@@ -5,8 +5,8 @@ import org.apache.spark.sql.SparkSession
 /** The one place graft's gate sessions are configured. Bench, Verify,
   * QProfile, PlanDump and ScaleCheck build on it, and so does the test
   * session, so a listener or extension added here reaches every gated
-  * run and every spec. Each caller adds only its own difference (Bench's
-  * FAIR pools, ScaleCheck's shuffle codec).
+  * run and every spec. Each caller adds only its own difference
+  * (ScaleCheck's shuffle codec).
   *
   * Three layers, each the one below plus one policy:
   *   - [[base]]: geometry and semantics — `local[cores]` with one shuffle
@@ -17,7 +17,9 @@ import org.apache.spark.sql.SparkSession
   *     memory policy. ScaleCheck stops here: its >1000x corpora hold tens
   *     of GB of live shuffle that must stay on disk.
   *   - [[gateSf]]: plus [[ShuffleDiscipline.gateLocal]], shuffle scratch on
-  *     tmpfs, for the mains that run at the gate scale factors.
+  *     tmpfs, and the FAIR scheduler, under which [[QueryRunner]]'s workers
+  *     share the cores instead of queueing behind the biggest query, for
+  *     the mains that run at the gate scale factors.
   */
 object GateSession {
   def base(cores: Int): SparkSession.Builder = SparkSession.builder()
@@ -40,4 +42,5 @@ object GateSession {
 
   def gateSf(cores: Int): SparkSession.Builder =
     ShuffleDiscipline.gateLocal(builder(cores))
+      .config("spark.scheduler.mode", "FAIR")
 }

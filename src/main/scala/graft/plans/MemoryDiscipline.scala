@@ -117,22 +117,10 @@ object MemoryDiscipline {
 
   /** The knobs a given core count earns on this JVM: empty at a healthy
     * heap-per-core ratio, the spill-safety pair under [[SafeBytesPerCore]].
-    *
-    * Override: `GRAFT_MEM_KNOBS=on|off` (env, or the `graft.memKnobs`
-    * system property for tests) forces the pair on or off regardless of
-    * the boundary — the A/B lever for attributing warm-time drift to the
-    * knobs (r12 verdict #1b: 8g/32 cores = 256 MiB/core sits under the
-    * boundary, so every standard bench run earns them silently; the
-    * bisection needs a knobs-off run on the same box).
     */
   private[graft] def knobs(cores: Int): Map[String, String] =
-    sys.env.get("GRAFT_MEM_KNOBS").orElse(sys.props.get("graft.memKnobs")) match {
-      case Some("off") => Map.empty
-      case Some("on") => SpillSafetyPair
-      case _ =>
-        if (bytesPerCore(cores) < SafeBytesPerCore) SpillSafetyPair
-        else Map.empty
-    }
+    if (bytesPerCore(cores) < SafeBytesPerCore) SpillSafetyPair
+    else Map.empty
 
   /** Apply the session memory policy to `builder`: always the
     * [[CodegenCachePolicy]], the checkpoint file policy, the local

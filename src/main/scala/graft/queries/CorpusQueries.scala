@@ -338,14 +338,16 @@ object CorpusQueries {
       val (nC, nR, nShared) = (tot.getLong(0), tot.getLong(1), tot.getLong(2))
       val leak = sk.getAs[scala.collection.Seq[Double]]("leak")
       val ctrl = sk.getAs[scala.collection.Seq[Double]]("ctrl")
-      def relOk(est: Double, exact: Long) =
-        math.abs(est - exact) <= 0.2 * exact
-      val viols = Seq(
-        !relOk(leak(0), nC),
-        !relOk(leak(1), nR),
-        leak(2) <= 0.5 * nR,  // the leak decision must FIRE
-        ctrl(2) >= 0.1 * nR   // the control must stay silent
-      ).count(identity).toLong
+      def within(what: String, est: Double, exact: Long): (Boolean, String) =
+        (math.abs(est - exact) <= 0.2 * exact) ->
+          s"$what estimate $est off exact $exact by more than 0.2 relative"
+      val viols = Gate.violations(
+        within("corpus shingle", leak(0), nC),
+        within("ref shingle", leak(1), nR),
+        (leak(2) > 0.5 * nR) ->
+          s"leak decision did not fire: est_shared ${leak(2)} <= 0.5 x $nR ref shingles",
+        (ctrl(2) < 0.1 * nR) ->
+          s"control not silent: est_shared ${ctrl(2)} >= 0.1 x $nR ref shingles")
       import s.implicits._
       Seq((nC, nR, nShared, viols))
         .toDF("n_corpus", "n_refs", "n_shared", "n_viol")

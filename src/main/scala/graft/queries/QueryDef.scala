@@ -18,8 +18,6 @@ final case class Q(
 object Q {
   def apply(name: String, sql: String)(run: (SparkSession, String) => DataFrame): Q =
     Q(name, run, Some(sql))
-  def rowsOnly(name: String)(run: (SparkSession, String) => DataFrame): Q =
-    Q(name, run, None)
 }
 
 /** Self-GATING attestation for rows-only queries. A rows-only entry only

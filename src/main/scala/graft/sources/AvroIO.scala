@@ -129,7 +129,11 @@ object AvroIO {
 
   // ---- value converters (schema-driven, recursive) ----
 
-  private def toAvroValue(v: Any, dt: DataType, avro: Schema): Any = {
+  private def unsupported(v: Any, dt: DataType): Nothing =
+    throw new IllegalArgumentException(
+      s"AvroIO: unsupported external value of class ${v.getClass.getName} for Spark type ${dt.simpleString}")
+
+  private[sources] def toAvroValue(v: Any, dt: DataType, avro: Schema): Any = {
     if (v == null) return null
     // unwrap union(null, T): converters below want the concrete branch
     val s =
@@ -145,6 +149,7 @@ object AvroIO {
           ts.getTime * 1000L + (ts.getNanos / 1000L) % 1000L
         case inst: java.time.Instant =>
           inst.getEpochSecond * 1000000L + inst.getNano / 1000L
+        case other => unsupported(other, dt)
       }
       case TimestampNTZType =>
         val ldt = v.asInstanceOf[java.time.LocalDateTime]
@@ -153,6 +158,7 @@ object AvroIO {
       case DateType => v match {
         case d: java.sql.Date => d.toLocalDate.toEpochDay.toInt
         case ld: java.time.LocalDate => ld.toEpochDay.toInt
+        case other => unsupported(other, dt)
       }
       case ShortType => v.asInstanceOf[Short].toInt
       case ByteType => v.asInstanceOf[Byte].toInt

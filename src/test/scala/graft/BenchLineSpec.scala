@@ -242,15 +242,6 @@ class BenchLineSpec extends AnyFunSuite {
     }
   }
 
-  test("queue order scatters or LPT-sorts; never drops or duplicates names") {
-    val names = (1 to 100).map(i => s"q$i")
-    val scattered = Bench.queueOrder(names, Map.empty)
-    assert(scattered.sorted == names.sorted && scattered != names.sorted.toSeq)
-    val past = names.zipWithIndex.map { case (n, i) => n -> i.toDouble }.toMap
-    val lpt = Bench.queueOrder(names, past)
-    assert(lpt.head == "q100" && lpt.last == "q1" && lpt.sorted == names.sorted)
-  }
-
   test("warm_norm math: cal ratio rescales into prev-box seconds") {
     // this box is 2x SLOWER (calNow 1.0 vs prevCal 0.5): a raw warm time
     // equal to last round's means the plan got 2x FASTER -> ratio 0.5

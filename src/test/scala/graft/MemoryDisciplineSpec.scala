@@ -31,20 +31,4 @@ class MemoryDisciplineSpec extends AnyFunSuite {
     if (max >= MemoryDiscipline.SafeBytesPerCore)
       assert(MemoryDiscipline.knobs(1) === Map.empty)
   }
-
-  test("GRAFT_MEM_KNOBS override forces the pair on or off") {
-    val max = Runtime.getRuntime.maxMemory()
-    val starvedCores =
-      (max / MemoryDiscipline.SafeBytesPerCore + 1).toInt.max(2)
-    try {
-      sys.props("graft.memKnobs") = "off"
-      assert(MemoryDiscipline.knobs(starvedCores) === Map.empty,
-        "off must win over a starved ratio")
-      sys.props("graft.memKnobs") = "on"
-      assert(MemoryDiscipline.knobs(1).nonEmpty, "on must win over a rich ratio")
-      sys.props("graft.memKnobs") = "auto-nonsense"
-      assert(MemoryDiscipline.knobs(starvedCores).nonEmpty,
-        "unrecognized value falls back to the boundary rule")
-    } finally sys.props.remove("graft.memKnobs")
-  }
 }

@@ -113,4 +113,18 @@ class AvroIOSpec extends SparkSpec {
       AvroIO.write(df, tmpDir())
     }
   }
+
+  test("an unsupported datetime external value names its class and Spark type") {
+    import org.apache.avro.Schema
+    val cases = Seq(
+      (TimestampType, Schema.create(Schema.Type.LONG), "timestamp"),
+      (DateType, Schema.create(Schema.Type.INT), "date"))
+    cases.foreach { case (dt, avro, sparkName) =>
+      val e = intercept[IllegalArgumentException] {
+        AvroIO.toAvroValue(java.lang.Long.valueOf(1L), dt, avro)
+      }
+      assert(e.getMessage.contains("java.lang.Long"), e.getMessage)
+      assert(e.getMessage.contains(s"Spark type $sparkName"), e.getMessage)
+    }
+  }
 }
